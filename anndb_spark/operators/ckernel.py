@@ -1,7 +1,9 @@
 """Compiled level-0 beam-search kernel for the HNSW serving path.
 
-The lock-step NumPy kernel (`hnsw._search_batch_chunk`) is
-bandwidth-efficient but pays ~2 argpartition merges plus several
+Every graph search enters through one batch call,
+`hnsw.HnswGraph.search_fast_batch`, which runs this kernel when it
+loads and the lock-step NumPy kernel (`hnsw._search_batch_chunk`)
+otherwise.  The NumPy kernel is bandwidth-efficient but pays ~2 argpartition merges plus several
 fancy-gathers of interpreter-dispatched work per step per chunk; at
 fashion-mnist scale it tops out around 1.4k q/s/core while the
 reference's native engine does ~1.6k q/s/core (26,112 q/s on 16 vCPU,
@@ -18,9 +20,10 @@ floating-point tie order.
 SERVING parallelism comes from Spark, not threads: the serving plans
 emit (partition, query-chunk) tasks and each task calls this kernel on
 its chunk single-threaded, so 32 local cores (or 1000 executors) scale
-without any C-side threading.  The driver-side single-graph BUILD is
-the one caller that owns a whole machine, so it uses the `_mt` entries
-— OpenMP fan-out over wave items with per-thread scratch — plus fused
+without any C-side threading.  The callers that own a whole machine —
+driver-local serving of a one-graph index and the driver-side
+single-graph BUILD — use the `_mt` entries (OpenMP fan-out over
+queries or wave items with per-thread scratch); the build adds fused
 walk+selection (`hnsw_build_candidates`) and native backlink-prune
 selection (`hnsw_select_from_pool` / `hnsw_select_pool_batch`), which
 replace per-candidate python tuples and per-prune numpy calls (both

@@ -98,17 +98,33 @@ def _dist_many(space: str, mat: np.ndarray, q: np.ndarray) -> np.ndarray:
     return np.abs(np.float32(1.0) - dot / (nm * nq))
 
 
-def _ck_rows(res, inv=None):
-    """(ids, dists) arrays from the C kernel → the kernel's list-of-
-    [(dist, id), ...] contract (−1 slots dropped, optional unsort)."""
-    ids, ds = res
-    out = [
+def _hit_lists(ids: np.ndarray, dists: np.ndarray) -> list[list[tuple[float, int]]]:
+    """Kernel ``(ids, dists)`` arrays → per-row ``[(dist, id), ...]``
+    lists with the −1 pads dropped: the candidate form the build's
+    `_select_neighbors` consumes."""
+    return [
         [(d, i) for d, i in zip(drow, irow) if i >= 0]
-        for drow, irow in zip(ds.tolist(), ids.tolist())
+        for drow, irow in zip(dists.tolist(), ids.tolist())
     ]
-    if inv is not None:
-        out = [out[inv[i]] for i in range(len(out))]
-    return out
+
+
+def _pad_hits(nq: int, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """An all-pad ``(nq, k)`` result: no hits for any query."""
+    return (
+        np.full((nq, k), -1, dtype=np.int64),
+        np.full((nq, k), np.inf, dtype=np.float32),
+    )
+
+
+def _beam_topk(beam_d: np.ndarray, beam_i: np.ndarray, k: int):
+    """Sort each query's beam ascending (stable) and keep ``k`` slots;
+    slots without a finite distance become −1 pads (a row suffix, since
+    they sort last)."""
+    order = np.argsort(beam_d, axis=1, kind="stable")[:, :k]
+    d = np.take_along_axis(beam_d, order, axis=1)
+    i = np.take_along_axis(beam_i, order, axis=1)
+    i[~np.isfinite(d)] = -1
+    return i, d
 
 
 # fork-build plumbing: children inherit the pre-wave graph via fork COW
@@ -122,7 +138,7 @@ _BUILD_FORK_GEMM = None
 
 def _build_fork_cand_work(slice_ids: list[int]):
     g, v, efc = _BUILD_FORK_GRAPH
-    res = g.search_fast_batch(v[slice_ids], k=efc, ef=efc)
+    res = _hit_lists(*g.search_fast_batch(v[slice_ids], k=efc, ef=efc))
     return [
         (x, g._select_neighbors(cand, g.cfg.m, 0, v[x]))
         for x, cand in zip(slice_ids, res)
@@ -673,18 +689,6 @@ class HnswGraph:
                 delattr(self, attr)
         return out
 
-    # -- search (index/hnsw.go:216-247) --------------------------------
-    def search(self, q: np.ndarray, k: int, ef: int | None = None):
-        if self.entrypoint < 0:
-            return []
-        q = np.asarray(q, dtype=np.float32)
-        ef = max(ef or self.cfg.ef, k)
-        cur = self.entrypoint
-        for l in range(self.levels[cur], 0, -1):
-            cur = self._greedy_closest(q, cur, l)
-        res = self._search_level(q, cur, ef, 0)
-        return res[:k]
-
     # -- finalized (read-only) fast search path ------------------------
     def finalize(self):
         """Freeze the graph for search: per-level padded int32 neighbor
@@ -707,71 +711,6 @@ class HnswGraph:
         self.norms2 = np.einsum("ij,ij->i", v, v, dtype=np.float32)
         self.norms = np.sqrt(self.norms2)
         return self
-
-    def _dist_ids(self, ids: np.ndarray, q: np.ndarray, qn2: float, qn: float) -> np.ndarray:
-        space = self.cfg.space
-        sub = self.vectors[ids]
-        dot = sub @ q
-        if space == "euclidean":
-            return np.sqrt(np.maximum(self.norms2[ids] - 2.0 * dot + qn2, 0.0))
-        if space == "cosine":
-            return np.abs(np.float32(1.0) - dot / (self.norms[ids] * qn))
-        return np.abs(sub - q).sum(axis=1, dtype=np.float32)
-
-    def search_fast(self, q: np.ndarray, k: int, ef: int | None = None):
-        """search() over the finalized representation."""
-        if self.entrypoint < 0:
-            return []
-        q = np.asarray(q, dtype=np.float32)
-        qn2 = np.float32(np.dot(q, q))
-        qn = np.float32(np.sqrt(qn2))
-        ef = max(ef or self.cfg.ef, k)
-        cur = self.entrypoint
-        cur_d = float(self._dist_ids(np.array([cur], dtype=np.int32), q, qn2, qn)[0])
-        for lvl in range(self.levels[cur], 0, -1):
-            pad = self.adj_pad.get(lvl)
-            if pad is None:
-                continue
-            while True:
-                nbrs = pad[cur]
-                nbrs = nbrs[nbrs >= 0]
-                if not len(nbrs):
-                    break
-                ds = self._dist_ids(nbrs, q, qn2, qn)
-                j = int(np.argmin(ds))
-                if ds[j] < cur_d:
-                    cur, cur_d = int(nbrs[j]), float(ds[j])
-                else:
-                    break
-        # beam on level 0 (tombstones traversable, never in results)
-        pad = self.adj_pad[0]
-        deleted = self.deleted
-        visited = np.zeros(len(self.levels), dtype=bool)
-        visited[cur] = True
-        candidates = [(cur_d, cur)]
-        results = (
-            [] if (deleted is not None and deleted[cur]) else [(-cur_d, cur)]
-        )
-        while candidates:
-            cd, c = heapq.heappop(candidates)
-            if results and len(results) >= ef and cd > -results[0][0]:
-                break
-            nbrs = pad[c]
-            nbrs = nbrs[nbrs >= 0]
-            fresh = nbrs[~visited[nbrs]]
-            if not len(fresh):
-                continue
-            visited[fresh] = True
-            ds = self._dist_ids(fresh, q, qn2, qn)
-            for n_, nd in zip(fresh.tolist(), ds.tolist()):
-                worst = -results[0][0] if len(results) >= ef else np.inf
-                if nd < worst:
-                    heapq.heappush(candidates, (nd, n_))
-                    if deleted is None or not deleted[n_]:
-                        heapq.heappush(results, (-nd, n_))
-                        if len(results) > ef:
-                            heapq.heappop(results)
-        return sorted((-nd, n_) for nd, n_ in results)[:k]
 
     def quantize(self) -> "HnswGraph":
         """Per-dimension uint8 scalar quantization of the vector matrix
@@ -859,23 +798,32 @@ class HnswGraph:
         Q: np.ndarray,
         k: int,
         ef: int | None = None,
-        chunk: int | None = None,
         threads: int = 1,
-    ):
-        """Batched search_fast: all queries walk the graph in lock-step.
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Batch beam search — the one graph-search entry every server
+        and the build's candidate stage call.
 
-        Per step every live query expands its best few unexpanded beam
-        members; the whole frontier's distances are one gathered einsum
-        and beam maintenance is one argpartition — numpy work scales
-        with Σ pops · cap instead of Python-interpreter steps.  Queries
-        are chunked so the (chunk × n) visited bitmap stays bounded
-        (~200 MB) for large partitions.
+        Returns ``(ids, dists)``: int64 vertex positions and float32
+        distances, both (nq, k), rows in query order, each row
+        ascending.  An id of −1 marks a pad (fewer than k live hits);
+        pads are always a row suffix and their distance is meaningless.
+
+        Inside it picks the seeding (greedy descent on small or flat
+        graphs; on big ones a seed-GEMM against the graph's own
+        upper-level vertices plus a locality sort of the batch), the
+        compiled C beam (``ckernel``) or the lock-step NumPy kernel —
+        the only path on a host without a C compiler — and the
+        tombstone mask: deleted vertices stay traversable but never
+        occupy a result slot.  ``threads`` > 1 fans the C beam over
+        OpenMP threads for callers that own the machine.
         """
-        if self.entrypoint < 0:
-            return [[] for _ in range(Q.shape[0])]
+        nq = len(Q)
+        if self.entrypoint < 0 or not nq:
+            return _pad_hits(nq, k)
         n = len(self.levels)
-        if chunk is None:
-            chunk = int(max(16, min(1024, 2e8 / max(n, 1))))
+        # NumPy kernels chunk the batch so the (chunk × n) visited
+        # bitmap stays bounded (~200 MB) on large partitions
+        chunk = int(max(16, min(1024, 2e8 / n)))
         from anndb_spark.operators import ckernel as _ck
 
         # the compiled per-query beam loop removes the lock-step NumPy
@@ -887,15 +835,24 @@ class HnswGraph:
             "manhattan",
         )
         has_tomb = self.deleted is not None and self.deleted.any()
-        # tombstoned graphs use the two-beam variant (deleted vertices
-        # must stay traversable without occupying result slots)
+        dele = self.deleted if has_tomb else None
+        Qf = np.ascontiguousarray(Q, dtype=np.float32)
+        ef = max(ef or self.cfg.ef, k)
+
+        def numpy_chunks(kern, Qs=Qf, **seeds):
+            """A lock-step NumPy kernel over the batch chunk by chunk."""
+            ids, ds = zip(*(
+                kern(Qs[s : s + chunk], k, ef,
+                     **{a: v[s : s + chunk] for a, v in seeds.items()})
+                for s in range(0, nq, chunk)
+            ))
+            return np.concatenate(ids), np.concatenate(ds)
+
+        # tombstoned graphs without the C kernel use the two-beam NumPy
+        # variant (deleted vertices must stay traversable without
+        # occupying result slots); it runs its own greedy descent
         if has_tomb and not use_ck:
-            out = []
-            for s in range(0, Q.shape[0], chunk):
-                out.extend(
-                    self._search_batch_chunk_tombstone(Q[s : s + chunk], k, ef)
-                )
-            return out
+            return numpy_chunks(self._search_batch_chunk_tombstone)
         if (
             not use_ck
             and n * self.dim >= _QUANT_MIN_ELEMS
@@ -907,29 +864,18 @@ class HnswGraph:
             self.quantize()
         if n < 4096 or self._max_level() == 0:
             if use_ck:
-                Qf = np.ascontiguousarray(Q, dtype=np.float32)
                 ent = _ck.descend(self, Qf)
                 if ent is not None:
                     res = _ck.search_level0(
-                        self,
-                        Qf,
-                        k,
-                        max(ef or self.cfg.ef, k),
-                        ent[0],
-                        deleted=self.deleted if has_tomb else None,
-                        threads=threads,
+                        self, Qf, k, ef, ent[0], deleted=dele, threads=threads
                     )
                     if res is not None:
-                        return _ck_rows(res)
-            out = []
-            kern = (
+                        return res
+            return numpy_chunks(
                 self._search_batch_chunk_tombstone
                 if has_tomb
                 else self._search_batch_chunk
             )
-            for s in range(0, Q.shape[0], chunk):
-                out.extend(kern(Q[s : s + chunk], k, ef))
-            return out
         # big graphs: seeded + locality-sorted search.  The graph's own
         # upper-level vertices are the seed set: one (q × S) GEMM against
         # a small cache-resident matrix replaces the greedy descent
@@ -938,89 +884,28 @@ class HnswGraph:
         # region of the vector matrix — the random-gather working set
         # drops from the whole matrix to a cluster's worth, which is
         # what the (bandwidth-bound) kernel actually pays for.
-        Qf = np.ascontiguousarray(Q, dtype=np.float32)
         entry, entry_d, order, inv = self._seed_entries(Qf, threads=threads)
         if use_ck:
             res = _ck.search_level0(
                 self,
                 np.ascontiguousarray(Qf[order]),
                 k,
-                max(ef or self.cfg.ef, k),
+                ef,
                 entry[order],
-                deleted=self.deleted if has_tomb else None,
+                deleted=dele,
                 threads=threads,
             )
             if res is not None:
-                return _ck_rows(res, inv=inv)
+                return res[0][inv], res[1][inv]
         if has_tomb:
             # C kernel unavailable after all: two-beam NumPy fallback
-            out = []
-            for s in range(0, Q.shape[0], chunk):
-                out.extend(
-                    self._search_batch_chunk_tombstone(Q[s : s + chunk], k, ef)
-                )
-            return out
-        out_sorted = []
-        for s in range(0, Qf.shape[0], chunk):
-            sel = order[s : s + chunk]
-            out_sorted.extend(
-                self._search_batch_chunk(
-                    Qf[sel], k, ef, entry=entry[sel], entry_d=entry_d[sel]
-                )
-            )
-        return [out_sorted[inv[i]] for i in range(Qf.shape[0])]
-
-    def search_fast_batch_arrays(
-        self,
-        Q: np.ndarray,
-        k: int,
-        ef: int | None = None,
-        threads: int = 1,
-    ):
-        """Array-native variant of `search_fast_batch` for callers that
-        keep results columnar: returns ``(ids, dists)`` of shape
-        (nq, k), -1 / FLT_MAX padded (pads are a suffix), rows in query
-        order — identical neighbor sets to `search_fast_batch` (same C
-        kernel, same seeding).  Returns None when the native kernel
-        can't serve this graph (caller falls back to the tuple path);
-        the list-of-tuples conversion it skips measured ~0.19 s for a
-        10k×10 result — 3× the 32-thread kernel wall itself."""
-        from anndb_spark.operators import ckernel as _ck
-
-        if not (
-            _ck.available()
-            and self.cfg.space in ("euclidean", "cosine", "manhattan")
-        ):
-            return None
-        if self.entrypoint < 0:
-            return (
-                np.full((Q.shape[0], k), -1, dtype=np.int64),
-                np.full((Q.shape[0], k), np.float32(np.inf)),
-            )
-        has_tomb = self.deleted is not None and self.deleted.any()
-        dele = self.deleted if has_tomb else None
-        Qf = np.ascontiguousarray(Q, dtype=np.float32)
-        ef = max(ef or self.cfg.ef, k)
-        if len(self.levels) < 4096 or self._max_level() == 0:
-            ent = _ck.descend(self, Qf)
-            if ent is None:
-                return None
-            return _ck.search_level0(
-                self, Qf, k, ef, ent[0], deleted=dele, threads=threads
-            )
-        entry, entry_d, order, inv = self._seed_entries(Qf, threads=threads)
-        res = _ck.search_level0(
-            self,
-            np.ascontiguousarray(Qf[order]),
-            k,
-            ef,
-            entry[order],
-            deleted=dele,
-            threads=threads,
+            return numpy_chunks(self._search_batch_chunk_tombstone)
+        ids, ds = numpy_chunks(
+            self._search_batch_chunk,
+            Qf[order],
+            entry=entry[order],
+            entry_d=entry_d[order],
         )
-        if res is None:
-            return None
-        ids, ds = res
         return ids[inv], ds[inv]
 
     def _seed_entries(self, Qf: np.ndarray, threads: int = 1):
@@ -1268,7 +1153,11 @@ class HnswGraph:
             for b in range(B):
                 sl = slice(b * cap, (b + 1) * cap)
                 f = valid[:, sl] & ~visited[a_col, safe[:, sl]]
-                visited[a_col, safe[:, sl]] |= f
+                # set only the fresh slots: a masked ``|=`` over ``safe``
+                # lets a pad slot (mapped to vertex 0) overwrite a real
+                # vertex 0 in the same row, which then re-enters the beam
+                r, c = np.nonzero(f)
+                visited[a[r], safe[:, sl][r, c]] = True
                 fresh[:, sl] = f
             rows, cols = np.nonzero(fresh)
             d = np.full(nb.shape, INF, dtype=np.float32)
@@ -1327,19 +1216,7 @@ class HnswGraph:
             beam_d = np.where(
                 np.isfinite(beam_d) & (beam_i >= 0), d_ex, np.float32(np.inf)
             )
-        out = []
-        order = np.argsort(beam_d, axis=1, kind="stable")
-        rd = np.take_along_axis(beam_d, order, axis=1)
-        ri = np.take_along_axis(beam_i, order, axis=1)
-        kk = min(k, ef)
-        for qi in range(q):
-            row = [
-                (float(rd[qi, j]), int(ri[qi, j]))
-                for j in range(kk)
-                if np.isfinite(rd[qi, j])
-            ]
-            out.append(row)
-        return out
+        return _beam_topk(beam_d, beam_i, k)
 
     def _search_batch_chunk_tombstone(self, Q: np.ndarray, k: int, ef: int | None):
         Qf = np.ascontiguousarray(Q, dtype=np.float32)
@@ -1348,26 +1225,7 @@ class HnswGraph:
         ef = max(ef or self.cfg.ef, k)
         qn2 = np.einsum("ij,ij->i", Qf, Qf, dtype=np.float32)
         INF = np.float32(np.inf)
-        cur = np.full(q, self.entrypoint, dtype=np.int64)
-        ones = np.ones((q, 1), dtype=bool)
-        cur_d = self._dist_gather(cur[:, None], ones, Qf, qn2)[:, 0]
-        # greedy descent, levels L..1 (hill-climb in lock-step)
-        for lvl in range(int(self.levels[self.entrypoint]), 0, -1):
-            pad = self.adj_pad.get(lvl)
-            if pad is None:
-                continue
-            active = np.ones(q, dtype=bool)
-            while active.any():
-                a = np.where(active)[0]
-                nb = pad[cur[a]]
-                d = self._dist_gather(nb, nb >= 0, Qf[a], qn2[a])
-                j = d.argmin(axis=1)
-                dmin = d[np.arange(len(a)), j]
-                better = dmin < cur_d[a]
-                upd = a[better]
-                cur[upd] = nb[better, j[better]]
-                cur_d[upd] = dmin[better]
-                active[a[~better]] = False
+        cur, cur_d = self._descend_batch(Qf, qn2)
         # beam on level 0: fixed-width array beams (results + candidates);
         # tombstoned vertices feed the candidate beam (traversable — our
         # divergence; the reference skips deleted vertices outright) but
@@ -1410,7 +1268,8 @@ class HnswGraph:
             valid = nb >= 0
             safe = np.where(valid, nb, 0)
             fresh = valid & ~visited[a[:, None], safe]
-            visited[a[:, None], safe] |= fresh
+            r, c = np.nonzero(fresh)  # fresh slots only (see _search_batch_chunk)
+            visited[a[r], safe[r, c]] = True
             # distances for FRESH entries only (one flat ragged einsum) —
             # the dense (alive × cap × d) gather recomputed every visited
             # slot each step, ~10× wasted flops at high dim
@@ -1451,23 +1310,14 @@ class HnswGraph:
                 sel = np.argpartition(md, ef - 1, axis=1)[:, :ef]
                 bdst_d[a] = np.take_along_axis(md, sel, axis=1)
                 bdst_i[a] = np.take_along_axis(mi, sel, axis=1)
-        out = []
-        order = np.argsort(res_d, axis=1, kind="stable")
-        rd = np.take_along_axis(res_d, order, axis=1)
-        ri = np.take_along_axis(res_i, order, axis=1)
-        for qi in range(q):
-            row = [
-                (float(rd[qi, j]), int(ri[qi, j]))
-                for j in range(min(k, ef))
-                if np.isfinite(rd[qi, j])
-            ]
-            out.append(row)
-        return out
+        return _beam_topk(res_d, res_i, k)
 
     def search_brute(self, queries: np.ndarray, k: int):
         """Exact per-partition scoring: one blocked GEMM for all queries
         (the right physical plan when n·q·d is small — coarse partition
-        pruning plus fine brute scan, IVF-style).
+        pruning plus fine brute scan, IVF-style).  Same ``(ids, dists)``
+        contract as `search_fast_batch`: (nq, k), ascending rows, −1 pads
+        as a row suffix (k above the live vertex count, tombstones).
 
         Allocation discipline (the r12 scatter-leg finding, PLANS r12):
         this path runs in 32 concurrent workers, and on a fault-slow
@@ -1488,11 +1338,11 @@ class HnswGraph:
         (pytest-pinned)."""
         v = self.vectors
         n = v.shape[0]
-        if n == 0:
-            return [[] for _ in range(queries.shape[0])]
-        k = min(k, n)
+        nq = len(queries)
+        if n == 0 or not nq:
+            return _pad_hits(nq, k)
+        kk = min(k, n)
         space = self.cfg.space
-        nq = queries.shape[0]
         d = _scratch_mat("brute_d", nq, n)
         if space == "manhattan":
             # blocked |x-y| sum through a reused cube buffer: the old
@@ -1533,17 +1383,16 @@ class HnswGraph:
                 np.abs(d, out=d)
         if self.deleted is not None:
             d[:, self.deleted] = np.inf  # tombstones never score
-        out = []
+        out_i, out_d = _pad_hits(nq, k)
         for qi in range(nq):
             row = d[qi]
-            ids = np.argpartition(row, k - 1)[:k]
+            ids = np.argpartition(row, kk - 1)[:kk]
             ds = row[ids]
             order = np.argsort(ds, kind="stable")
-            keep = np.isfinite(ds[order])
-            out.append(
-                list(zip(ds[order][keep].tolist(), ids[order][keep].tolist()))
-            )
-        return out
+            out_i[qi, :kk] = ids[order]
+            out_d[qi, :kk] = ds[order]
+        out_i[~np.isfinite(out_d)] = -1  # tombstoned slots sort last
+        return out_i, out_d
 
     # -- growth from a batch -------------------------------------------
     @classmethod
@@ -1847,7 +1696,7 @@ class HnswGraph:
         def cand_work(slice_ids: list[int]):
             """Candidate beams + level-0 neighbor selection for a wave
             slice (read-only on the pre-wave graph)."""
-            res = g.search_fast_batch(v[slice_ids], k=efc, ef=efc)
+            res = _hit_lists(*g.search_fast_batch(v[slice_ids], k=efc, ef=efc))
             return [
                 (x, g._select_neighbors(cand, g.cfg.m, 0, v[x]))
                 for x, cand in zip(slice_ids, res)
@@ -3084,6 +2933,153 @@ def tombstone_stats(index: DataFrame) -> DataFrame:
     )
 
 
+def _use_brute(
+    strategy: str, n: int, nq: int, dim: int, threshold: float
+) -> bool:
+    """The one brute-vs-beam rule under every server.
+
+    'brute' and 'beam' force a kernel.  'auto' scans exactly when the
+    n·|Q|·d flops of one partition's GEMM fall under ``threshold``
+    (small fine-partitions after coarse pruning — the IVF shape — where
+    brute is both faster and exact) and walks the graph otherwise (at
+    100 TB per-partition n is millions and beam always wins)."""
+    return strategy == "brute" or (
+        strategy == "auto" and n * nq * dim <= threshold
+    )
+
+
+def _parse_queries(queries, dim: int = 0) -> tuple[np.ndarray, np.ndarray]:
+    """A query batch → (query-id strings, float32 (nq, dim) matrix).
+
+    Accepts ``[(query_id, vector)]`` or the zero-copy ``(ids, matrix)``
+    form for large batches.  An empty batch parses to a (0, dim) matrix
+    (``np.array([])`` is (0,), which no distance kernel can multiply);
+    callers that route by centroids pass their width."""
+    if isinstance(queries, tuple):
+        qids, qmat = queries
+        qmat = np.ascontiguousarray(qmat, dtype=np.float32)
+    else:
+        qids = [qid for qid, _ in queries]
+        qmat = np.array([v for _, v in queries], dtype=np.float32)
+    qid_arr = np.array([str(q) for q in qids], dtype=object)
+    if not len(qid_arr):
+        qmat = np.empty((0, dim), dtype=np.float32)
+    return qid_arr, qmat
+
+
+def _route_queries(
+    qmat: np.ndarray, centroids, nprobe: int, space: str
+) -> dict[int, list[int]]:
+    """IVF routing on the driver (a |Q|×K distance matrix over the
+    small centroid array): {cell id: [query rows]} for each query's
+    ``nprobe`` nearest cells, rows ascending."""
+    from anndb_spark.operators.ivf import _pairwise
+
+    cent = np.ascontiguousarray(centroids, dtype=np.float64)
+    npb = min(nprobe, cent.shape[0])
+    d = _pairwise(qmat.astype(np.float64), cent, space)
+    probes = np.argpartition(d, min(npb - 1, d.shape[1] - 1), axis=1)[:, :npb]
+    by_pid: dict[int, list[int]] = {}
+    for qi, ps in enumerate(probes):
+        for p in ps:
+            by_pid.setdefault(int(p), []).append(qi)
+    return by_pid
+
+
+def _result_layout(with_rank: bool, with_metadata: bool) -> tuple[list[str], str]:
+    """Column names and DDL of a search result; ``rank`` is present
+    where ranks are final in-task (one graph per query)."""
+    types = {
+        "query_id": "STRING",
+        "rank": "INT",
+        "id": "STRING",
+        "score": "FLOAT",
+        "metadata": "MAP<STRING,STRING>",
+    }
+    cols = [
+        c
+        for c in types
+        if (c != "rank" or with_rank) and (c != "metadata" or with_metadata)
+    ]
+    return cols, ", ".join(f"{c} {types[c]}" for c in cols)
+
+
+def _assemble_hits(qids, hits, ids, g, with_metadata: bool, columns=None, arrow=False):
+    """The one result assembler: one kernel call's ``(ids, dists)``
+    over the query batch ``qids`` → the columns ``query_id, rank, id,
+    score[, metadata]``, one row per non-pad hit in (query, rank)
+    order.  Pads are a row suffix, so a hit's rank is its column + 1 —
+    final for a single graph, partial before a multi-graph merge.
+    ``id`` and ``metadata`` index the graph's id list and
+    ``g.item_meta``.
+
+    Task paths get pandas (``columns`` picks the output layout).  The
+    local path gets Arrow (``arrow=True``), the cheap half of the
+    driver↔JVM hop: `createDataFrame(pa.Table)` skips the pandas→Arrow
+    conversion AND lands on Spark's LocalRelation fast path (measured
+    0.14 → 0.10 s for 100k result rows), and `search_index_local`
+    returns the table as-is.  Its string columns are built by Arrow
+    ``take`` over small dictionaries — the graph's id array (converted
+    once per resident graph, cached on it) and the call's query ids —
+    instead of fancy-indexing object arrays and re-converting 100k
+    python strings per call (measured: that assembly cost MORE than the
+    10k-query kernel walk itself on a 1M-row graph)."""
+    hit_ids, hit_d = hits
+    valid = hit_ids >= 0
+    qrow, col = np.nonzero(valid)
+    nid = hit_ids[valid]
+    rank = (col + 1).astype(np.int32)
+    score = hit_d[valid]
+    meta = None
+    if with_metadata:
+        im = g.item_meta
+        meta = [im[i] for i in nid] if im is not None else [None] * len(nid)
+    if not arrow:
+        data = {
+            "query_id": qids[qrow],
+            "rank": rank,
+            "id": np.asarray(ids, dtype=object)[nid],
+            "score": score,
+        }
+        if with_metadata:
+            # object dtype even when empty (pandas types an empty list float64)
+            data["metadata"] = pd.Series(meta, dtype=object)
+        return pd.DataFrame(data, columns=columns)
+    import pyarrow as pa
+
+    pa_ids = getattr(g, "_pa_ids", None)
+    if pa_ids is None or len(pa_ids) != len(ids):
+        pa_ids = pa.array(ids, type=pa.string())
+        try:
+            g._pa_ids = pa_ids  # graph↔ids pairing is stable per cache entry
+        except AttributeError:
+            pass
+    arrays = [
+        pa.array(qids, type=pa.string()).take(pa.array(qrow)),
+        pa.array(rank, type=pa.int32()),
+        pa_ids.take(pa.array(nid)),
+        pa.array(score, type=pa.float32()),
+    ]
+    if with_metadata:
+        arrays.append(pa.array(meta, type=pa.map_(pa.string(), pa.string())))
+    return pa.Table.from_arrays(
+        arrays, names=_result_layout(True, with_metadata)[0]
+    )
+
+
+def _merge_topk(partials: DataFrame, k: int, with_metadata: bool) -> DataFrame:
+    """Global gather: top-k per query over per-graph partials, ties
+    broken by id (the reference's final merge, `storage/dataset.go:374-387`)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
+    return (
+        partials.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*_result_layout(True, with_metadata)[0])
+    )
+
+
 def search_index(
     index: DataFrame,
     vectors: DataFrame | None,
@@ -3109,14 +3105,9 @@ def search_index(
     Either way: per-partition search → partial top-k → global window
     top-k, the reference's scatter/gather (`storage/dataset.go:374-431`).
 
-    ``strategy``:
-      'beam'  — HNSW greedy descent + beam over the finalized graph.
-      'brute' — exact blocked-GEMM scoring of the whole partition.
-      'auto'  — brute when n·|Q|·d flops fall under
-                ``brute_flops_threshold`` (small fine-partitions after
-                coarse pruning — the IVF shape), else beam.  At 100 TB
-                per-partition n is millions and beam always wins; on
-                small partitions brute is both faster and exact.
+    ``strategy``: 'beam' (HNSW greedy descent + beam over the finalized
+    graph), 'brute' (exact blocked-GEMM scoring of the whole partition)
+    or 'auto' (`_use_brute` against ``brute_flops_threshold``).
 
     ``queries``: [(query_id, vector)] — broadcast in the task closure.
     ``cache_token``: stable string enabling the reused-worker graph
@@ -3128,60 +3119,63 @@ def search_index(
     persisted one raises instead of silently mis-scoring.
     """
     cfg = config or get_index_config(index) or HnswConfig()
-    ef = max(ef or cfg.ef, k)
-    qmat_all = np.array([v for _, v in queries], dtype=np.float32)
-    qid_arr = np.array([str(qid) for qid, _ in queries], dtype=object)
-    n_q = len(queries)
-    self_contained = "vec" in index.columns
-    out_cols = ["query_id", "id", "score"] + (["metadata"] if with_metadata else [])
-    out_schema = "query_id STRING, id STRING, score FLOAT" + (
-        ", metadata MAP<STRING,STRING>" if with_metadata else ""
+    qid_arr, qmat = _parse_queries(queries)
+    return _search_grouped(
+        index, vectors, qid_arr, qmat, None, k, max(ef or cfg.ef, k), cfg,
+        strategy, brute_flops_threshold, cache_token, with_metadata,
+        partition_col, id_col, vec_col,
     )
 
-    def run_graph(pid, ids, g):
-        n = len(ids)
-        use_brute = strategy == "brute" or (
-            strategy == "auto" and n * n_q * g.dim <= brute_flops_threshold
-        )
-        res = g.search_brute(qmat_all, k) if use_brute else g.search_fast_batch(qmat_all, k, ef)
-        # columnar assembly (no per-hit Python tuples): |Q|·k rows/task
-        counts = [len(h) for h in res]
-        total = sum(counts)
-        nid = np.fromiter((i for h in res for _, i in h), dtype=np.int64, count=total)
-        dist = np.fromiter((d for h in res for d, _ in h), dtype=np.float32, count=total)
-        ids_arr = np.asarray(ids, dtype=object)
-        data = {
-            "query_id": np.repeat(qid_arr, counts),
-            "id": ids_arr[nid],
-            "score": dist,
-        }
-        if with_metadata:
-            meta = g.item_meta
-            data["metadata"] = (
-                [meta[i] for i in nid] if meta is not None else [None] * total
-            )
-        return pd.DataFrame(data, columns=out_cols)
 
-    def get_graph(pid, idx_pdf, vec_pdf=None):
+def _search_grouped(
+    index: DataFrame,
+    vectors: DataFrame | None,
+    qid_arr: np.ndarray,
+    qmat: np.ndarray,
+    by_pid: dict[int, list[int]] | None,
+    k: int,
+    ef: int,
+    cfg: HnswConfig,
+    strategy: str,
+    brute_flops_threshold: float,
+    cache_token: str | None,
+    with_metadata: bool,
+    partition_col: str = "partition_id",
+    id_col: str = "id",
+    vec_col: str = "vector",
+) -> DataFrame:
+    """The grouped body of `search_index` and `search_index_routed`: one
+    task per index partition searches that graph for every query (or,
+    routed, only the query rows ``by_pid`` sends to it), then
+    `_merge_topk` keeps the global top k."""
+    out_cols, out_ddl = _result_layout(False, with_metadata)
+
+    def run_graph(pid, idx_pdf: pd.DataFrame, vec_pdf=None) -> pd.DataFrame:
+        qsel = None if by_pid is None else by_pid.get(int(pid))
+        if not len(idx_pdf) or (by_pid is not None and not qsel):
+            return pd.DataFrame(columns=out_cols)
         key = (cache_token, int(pid)) if cache_token is not None else None
         hit = _cache_get(key)
-        if hit is not None:
-            return hit
-        ids, g = _graph_from_index(idx_pdf, cfg, vec_pdf)
-        _cache_put(key, ids, g)
-        return ids, g
+        if hit is None:
+            hit = _graph_from_index(idx_pdf, cfg, vec_pdf)
+            _cache_put(key, *hit)
+        ids, g = hit
+        sub, sub_qids = (
+            (qmat, qid_arr) if qsel is None else (qmat[qsel], qid_arr[qsel])
+        )
+        if _use_brute(strategy, len(ids), len(sub), g.dim, brute_flops_threshold):
+            hits = g.search_brute(sub, k)
+        else:
+            hits = g.search_fast_batch(sub, k, ef)
+        return _assemble_hits(sub_qids, hits, ids, g, with_metadata, out_cols)
 
-    if self_contained:
+    if "vec" in index.columns:
 
         def search_self(key, idx_pdf: pd.DataFrame) -> pd.DataFrame:
-            if not len(idx_pdf):
-                return pd.DataFrame(columns=out_cols)
-            pid = key[0]
-            ids, g = get_graph(pid, idx_pdf)
-            return run_graph(pid, ids, g)
+            return run_graph(key[0], idx_pdf)
 
         partials = index.groupBy("partition_id").applyInPandas(
-            search_self, schema=out_schema
+            search_self, schema=out_ddl
         )
     else:
         if vectors is None:
@@ -3198,194 +3192,66 @@ def search_index(
         )
 
         def search_one(vec_pdf: pd.DataFrame, idx_pdf: pd.DataFrame) -> pd.DataFrame:
-            if not len(vec_pdf) or not len(idx_pdf):
-                return pd.DataFrame(columns=["query_id", "id", "score"])
-            pid = int(vec_pdf["partition_id"].iloc[0])
-            ids, g = get_graph(pid, idx_pdf, vec_pdf)
-            return run_graph(pid, ids, g)
+            if not len(vec_pdf):
+                return pd.DataFrame(columns=out_cols)
+            return run_graph(vec_pdf["partition_id"].iloc[0], idx_pdf, vec_pdf)
 
         cogrouped = vsrc.groupBy("partition_id").cogroup(
             index.groupBy("partition_id")
         )
-        partials = cogrouped.applyInPandas(
-            search_one, schema="query_id STRING, id STRING, score FLOAT"
-        )
-    # global gather: top-k per query over the partition partials
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "score", *out_cols[3:])
-    )
+        partials = cogrouped.applyInPandas(search_one, schema=out_ddl)
+    return _merge_topk(partials, k, with_metadata)
 
 
-def _serve_single_graph_local(
-    spark,
-    path: str,
-    pid: int,
-    qid_arr: np.ndarray,
-    qmat: np.ndarray,
+def search_index_routed(
+    index: DataFrame,
+    queries: list[tuple[object, list[float]]],
     k: int,
-    ef: int,
-    cfg: "HnswConfig",
-    strategy: str,
-    brute_flops_threshold: float,
-    cache_token: str | None,
-    index_ver,
-    with_metadata: bool,
-    chunk_q: int,
-    local_brute_flops_max: float = 5e8,
-) -> "pa.Table | None":
-    """Driver-local serving of a ONE-partition saved index.
+    centroids,
+    nprobe: int = 8,
+    ef: int | None = None,
+    config: HnswConfig | None = None,
+    strategy: str = "auto",
+    brute_flops_threshold: float = 1e8,
+    cache_token: str | None = None,
+    with_metadata: bool = False,
+) -> DataFrame:
+    """Cluster-routed ANN search — the IVF×HNSW hybrid, the 100 TB shape.
 
-    When the whole index is a single graph, a Spark job buys nothing:
-    the measured per-job fixed wall on this mode (~0.5-0.65 s noop +
-    ~12 ms/task) is ~10x the compiled kernel's cost for a 10k-query
-    batch (~0.09 ms/query/core).  This is the reference benchmark's own
-    shape — one resident graph searched in-process
-    (`cmd/benchmark/ann-benchmark/main.go:279-307`) — so the facade
-    answers in-process through the same graph kernel the workers run
-    (`HnswGraph.search_fast_batch` -> `ckernel.hnsw_search_level0_mt`
-    with an OpenMP thread per core), reusing the same process-local L1 /
-    host-shared shm L2 caches the task path populates (and publishing to
-    them, so a later multi-partition job finds the graph warm).
+    Build the index over *cluster-assigned* vectors
+    (`ivf.assign_clusters` → `build_index(partition_col='cluster_id')`)
+    so each graph partition is a coarse k-means cell; then each query
+    beam-searches only its ``nprobe`` nearest cells' graphs instead of
+    every partition.  Per-query work drops from P graph walks (the flat
+    `search_index` scatter, `storage/dataset.go:390-432`) to nprobe —
+    and because only probed partitions are scanned, an index persisted
+    ``partitionBy(partition_id)`` turns routing into parquet partition
+    pruning: nprobe/P of the index bytes are read.
 
-    Multi-partition / routed indexes never take this path: there the
-    graphs live on executors by design and the task plan is the scale
-    path.  Results are bit-identical to the task path (same kernel, same
-    per-chunk brute/beam resolution) — pytest-enforced.
+    Routing runs on the driver (`_route_queries`); the pruned index then
+    runs `search_index`'s grouped body, each task searching only its
+    partition's query rows.  Recall is governed by nprobe exactly like
+    IVF (`ivf.search_ivf`), on top of the per-graph beam's ef.
+    ``nprobe >= n_clusters`` degrades to the flat scatter.
     """
-    from anndb_spark.sources import fsutil as _fsu
-
-    full_key = (
-        (cache_token, index_ver, pid) if cache_token is not None else None
-    )
-    hit = _cache_get(full_key)
-    if hit is None and full_key is not None:
-        d = _shm_dir_for(full_key)
-        if d is not None:
-            got = _shm_load(d, cfg)
-            if got is not None:
-                _cache_put(full_key, *got)
-                hit = got
-    if hit is not None:
-        ids, g = hit
-    else:
-        idx_pdf = _fsu.read_parquet_dir(
-            _fsu.join(path, f"partition_id={pid}")
-        ).to_pandas()
-        ids, g = _graph_from_index(idx_pdf, cfg)
-        if full_key is not None:
-            d = _shm_store(full_key, ids, g)
-            if d is not None:
-                got = _shm_load(d, cfg)
-                if got is not None:
-                    ids, g = got
-            _cache_put(full_key, ids, g)
-    # brute/beam resolution must match the task path, which decides per
-    # query-chunk of (at most) queries_per_task rows — use the same
-    # chunk size so "auto" lands on the same strategy
-    use_brute = strategy == "brute" or (
-        strategy == "auto"
-        and len(ids) * min(chunk_q, qmat.shape[0]) * g.dim
-        <= brute_flops_threshold
-    )
-    if use_brute and len(ids) * qmat.shape[0] * g.dim > local_brute_flops_max:
-        # a big exact scan is COMPUTE-bound, not launch-bound — the
-        # task plan chunks it across workers (32-way BLAS) while the
-        # driver's BLAS is pinned to one thread.  Local serving exists
-        # for the beam case, whose OpenMP kernel owns the machine;
-        # return None → caller runs the Spark plan (the graph just
-        # loaded stays cached for it via shm).
-        return None
-    threads = _os_mod.cpu_count() or 1
-    nq = qmat.shape[0]
-    if not use_brute:
-        arr = g.search_fast_batch_arrays(qmat, k, ef, threads=threads)
-        if arr is not None:
-            # columnar end-to-end: no per-hit python tuples anywhere
-            ids_k, d_k = arr
-            valid = ids_k >= 0  # pads are a row suffix → ranks are col+1
-            counts_v = valid.sum(axis=1)
-            nid = ids_k[valid]
-            rank = np.broadcast_to(
-                np.arange(1, ids_k.shape[1] + 1, dtype=np.int32),
-                ids_k.shape,
-            )[valid]
-            qidx = np.repeat(np.arange(nq, dtype=np.int64), counts_v)
-            return _local_result_table(
-                qidx, qid_arr, rank, nid, d_k[valid], g, ids, with_metadata,
-            )
-    res = (
-        g.search_brute(qmat, k)
-        if use_brute
-        else g.search_fast_batch(qmat, k, ef, threads=threads)
-    )
-    counts = [len(h) for h in res]
-    total = sum(counts)
-    nid = np.fromiter(
-        (i for h in res for _, i in h), dtype=np.int64, count=total
-    )
-    dist = np.fromiter(
-        (d for h in res for d, _ in h), dtype=np.float32, count=total
-    )
-    rank = (
-        np.concatenate([np.arange(1, c + 1, dtype=np.int32) for c in counts])
-        if total
-        else np.empty(0, dtype=np.int32)
-    )
-    qidx = np.repeat(np.arange(nq, dtype=np.int64), counts)
-    return _local_result_table(
-        qidx, qid_arr, rank, nid, dist, g, ids, with_metadata,
+    if "vec" not in index.columns:
+        raise ValueError("routed search requires a self-contained index (vec column)")
+    cfg = config or get_index_config(index) or HnswConfig()
+    qid_arr, qmat = _parse_queries(queries, np.shape(centroids)[1])
+    by_pid = _route_queries(qmat, centroids, nprobe, cfg.space)
+    # scan-time pruning: only probed partitions are read at all
+    pruned = index.filter(F.col("partition_id").isin(sorted(by_pid)))
+    return _search_grouped(
+        pruned, None, qid_arr, qmat, by_pid, k, max(ef or cfg.ef, k), cfg,
+        strategy, brute_flops_threshold, cache_token, with_metadata,
     )
 
 
-def _local_result_table(qidx, qid_arr, rank, nid, score, g, ids, with_metadata):
-    """Assemble local-serving results as an Arrow table.
-
-    Arrow end-to-end is the cheap half of the driver↔JVM hop:
-    `createDataFrame(pa.Table)` skips the pandas→Arrow conversion AND
-    lands on Spark's LocalRelation fast path (measured 0.14 → 0.10 s
-    for 100k result rows), and the in-process serving API
-    (`search_index_local`) returns the table as-is — zero extra copies.
-
-    The string columns are built by Arrow ``take`` over small
-    dictionaries — the graph's id array (converted once per resident
-    graph, cached on it) and the call's query-id array (nq entries) —
-    instead of fancy-indexing object arrays and re-converting 100k
-    python strings per call (measured: assembly was costing MORE than
-    the 10k-query kernel walk itself on a 1M-row graph).
-    """
-    import pyarrow as pa
-
-    pa_ids = getattr(g, "_pa_ids", None)
-    if pa_ids is None or len(pa_ids) != len(ids):
-        pa_ids = pa.array(ids, type=pa.string())
-        try:
-            g._pa_ids = pa_ids  # graph↔ids pairing is stable per cache entry
-        except AttributeError:
-            pass
-    arrays = [
-        pa.array(qid_arr, type=pa.string()).take(pa.array(qidx)),
-        pa.array(rank, type=pa.int32()),
-        pa_ids.take(pa.array(nid)),
-        pa.array(score, type=pa.float32()),
-    ]
-    names = ["query_id", "rank", "id", "score"]
-    if with_metadata:
-        meta = g.item_meta
-        pymeta = (
-            [meta[i] for i in nid]
-            if meta is not None
-            else [None] * len(nid)
-        )
-        arrays.append(
-            pa.array(pymeta, type=pa.map_(pa.string(), pa.string()))
-        )
-        names.append("metadata")
-    return pa.Table.from_arrays(arrays, names=names)
+# Driver-local serving declines a brute scan above this many flops: a
+# big exact scan is COMPUTE-bound, not launch-bound — the task plan
+# chunks it across workers (one BLAS call per core) while the driver's
+# BLAS is pinned to one thread.
+_LOCAL_BRUTE_FLOPS_MAX = 5e8
 
 
 def _acquire_partition_graph(
@@ -3398,13 +3264,13 @@ def _acquire_partition_graph(
     index_ver: str | None,
     n_sub: int,
 ):
-    """Worker-side graph acquisition for one saved partition, with the
-    full cache ladder: L1 (process dict, LRU by bytes) → L2 (host-shared
-    /dev/shm mmap — one physical page set for every worker on the host)
-    → parquet read.  Returns (ids, graph, use_brute) where use_brute
-    reflects the auto-strategy flops test for a batch of ``n_sub``
-    queries.  Shared by the batch serving task (`search_index_path`) and
-    the streaming query transform (`streaming.search`)."""
+    """Graph acquisition for one saved partition, with the full cache
+    ladder: L1 (process dict, LRU by bytes) → L2 (host-shared /dev/shm
+    mmap — one physical page set for every worker on the host) →
+    parquet read.  Returns (ids, graph, use_brute), use_brute being
+    `_use_brute` for a batch of ``n_sub`` queries.  Shared by the batch
+    serving task and driver-local serving (`search_index_path`) and the
+    streaming query transform (`streaming.search`)."""
     from anndb_spark.sources import fsutil as _fsu
 
     # a full-graph cache entry serves both strategies; a brute-only
@@ -3420,14 +3286,11 @@ def _acquire_partition_graph(
             if got is not None:
                 _cache_put(full_key, *got)
                 hit = got
-    use_brute = strategy == "brute"
     if hit is not None:
         ids, g = hit
-        use_brute = use_brute or (
-            strategy == "auto"
-            and len(ids) * n_sub * g.dim <= brute_flops_threshold
+        return ids, g, _use_brute(
+            strategy, len(ids), n_sub, g.dim, brute_flops_threshold
         )
-        return ids, g, use_brute
     bkey = (
         (cache_token, index_ver, pid, "brute")
         if cache_token is not None
@@ -3447,39 +3310,104 @@ def _acquire_partition_graph(
     bhit = _cache_get(bkey)
     if bhit is not None:
         ids, g = bhit
-        if use_brute or (
-            strategy == "auto"
-            and len(ids) * n_sub * g.dim <= brute_flops_threshold
-        ):
+        if _use_brute(strategy, len(ids), n_sub, g.dim, brute_flops_threshold):
             return ids, g, True
     idx_pdf = _fsu.read_parquet_dir(
         _fsu.join(path, f"partition_id={pid}")
     ).to_pandas()
-    n_vert = int((idx_pdf["kind"] == "vertex").sum())
-    dim = (
-        len(idx_pdf.loc[idx_pdf["kind"] == "vertex", "vec"].iloc[0])
-        if n_vert
-        else 0
-    )
-    use_brute = use_brute or (
-        strategy == "auto"
-        and n_vert * n_sub * dim <= brute_flops_threshold
-    )
-    if use_brute:
+    verts = idx_pdf.loc[idx_pdf["kind"] == "vertex", "vec"]
+    dim = len(verts.iloc[0]) if len(verts) else 0
+    if _use_brute(strategy, len(verts), n_sub, dim, brute_flops_threshold):
         ids, g = _graph_from_index(idx_pdf, cfg, need_adj=False)
         _cache_put(bkey, ids, g)
+        return ids, g, True
+    ids, g = _graph_from_index(idx_pdf, cfg)
+    if full_key is not None:
+        # publish to L2, then serve from the SHARED pages (drops this
+        # worker's private copy)
+        d = _shm_store(full_key, ids, g)
+        if d is not None:
+            got = _shm_load(d, cfg)
+            if got is not None:
+                ids, g = got
+    _cache_put(full_key, ids, g)
+    return ids, g, False
+
+
+def _serve_single_graph_local(
+    path: str,
+    pid: int,
+    cfg: "HnswConfig",
+    strategy: str,
+    brute_flops_threshold: float,
+    cache_token: str | None,
+    index_ver,
+    qid_arr: np.ndarray,
+    qmat: np.ndarray,
+    k: int,
+    ef: int,
+    with_metadata: bool,
+    chunk_q: int,
+) -> "pa.Table | None":
+    """Driver-local serving of a ONE-partition saved index; returns an
+    Arrow table, or None when it declines a brute scan over
+    ``_LOCAL_BRUTE_FLOPS_MAX`` (the caller then runs the task plan).
+
+    When the whole index is a single graph, a Spark job buys nothing:
+    the measured per-job fixed wall on this mode (~0.5-0.65 s noop +
+    ~12 ms/task) is ~10x the compiled kernel's cost for a 10k-query
+    batch (~0.09 ms/query/core).  This is the reference benchmark's own
+    shape — one resident graph searched in-process
+    (`cmd/benchmark/ann-benchmark/main.go:279-307`) — so the graph comes
+    from the same `_acquire_partition_graph` cache ladder the workers
+    use (publishing to it, so a later multi-partition job finds the
+    graph warm) and is searched by `HnswGraph.search_fast_batch` with an
+    OpenMP thread per core.
+
+    Multi-partition / routed indexes never take this path: there the
+    graphs live on executors by design and the task plan is the scale
+    path.  Results are bit-identical to the task path (same kernel, same
+    per-chunk brute/beam resolution) — pytest-enforced.
+    """
+    nq = len(qmat)
+    # brute/beam resolution must match the task path, which decides per
+    # query-chunk of (at most) queries_per_task rows — use the same
+    # chunk size so "auto" lands on the same strategy
+    ids, g, use_brute = _acquire_partition_graph(
+        path, pid, cfg, strategy, brute_flops_threshold, cache_token,
+        index_ver, min(chunk_q, nq),
+    )
+    if use_brute and len(ids) * nq * g.dim > _LOCAL_BRUTE_FLOPS_MAX:
+        # local serving exists for the beam case, whose OpenMP kernel
+        # owns the machine; a big exact scan goes to the task plan
+        return None
+    if use_brute:
+        hits = g.search_brute(qmat, k)
     else:
-        ids, g = _graph_from_index(idx_pdf, cfg)
-        if full_key is not None:
-            # publish to L2, then serve from the SHARED pages (drops
-            # this worker's private copy)
-            d = _shm_store(full_key, ids, g)
-            if d is not None:
-                got = _shm_load(d, cfg)
-                if got is not None:
-                    ids, g = got
-        _cache_put(full_key, ids, g)
-    return ids, g, use_brute
+        hits = g.search_fast_batch(qmat, k, ef, threads=_os_mod.cpu_count() or 1)
+    return _assemble_hits(qid_arr, hits, ids, g, with_metadata, arrow=True)
+
+
+def _path_prologue(spark, path, queries, k, ef, config, cache_token, dim=0):
+    """Driver prologue of the saved-index servers (`search_index_path`,
+    `search_index_local`): (config, ef, partition ids, index content
+    fingerprint, query ids, query matrix)."""
+    from anndb_spark.sources import fsutil
+
+    cfg = config or get_index_config(load_index(spark, path)) or HnswConfig()
+    # partition discovery through pyarrow.fs: plain paths, file://,
+    # s3://, hdfs:// — not a shared-local-FS assumption (ADVICE r4)
+    pids = fsutil.list_partition_values(path, "partition_id=")
+    # cache keys carry the index CONTENT fingerprint: the host-shared
+    # /dev/shm graph cache outlives the Spark session, so a bare
+    # (token, pid) key would silently serve a graph stored by a
+    # PREVIOUS index version under the same token (measured: a
+    # cluster-routed index re-trained across runs answered probes with
+    # the prior run's cells — recall degraded to ~nprobe/n_cells)
+    index_ver = (
+        fsutil.index_fingerprint(path) if cache_token is not None else None
+    )
+    return (cfg, max(ef or cfg.ef, k), pids, index_ver, *_parse_queries(queries, dim))
 
 
 def search_index_path(
@@ -3497,7 +3425,6 @@ def search_index_path(
     nprobe: int = 0,
     queries_per_task: int | None = None,
     locality_centroids=None,
-    local_mode: str = "auto",
 ) -> DataFrame:
     """Serving-shape ANN search over a SAVED index (`save_index` path).
 
@@ -3513,6 +3440,11 @@ def search_index_path(
     on start/restore).  The query batch ships as a broadcast (once per
     executor), never in per-task closures.
 
+    A ONE-partition index without routing is served driver-locally
+    (`_serve_single_graph_local`: no job launch, same kernel and
+    caches), except a brute scan over the local cap, which runs the
+    task plan.
+
     With ``centroids`` + ``nprobe`` the query set is routed first (the
     IVF×HNSW hybrid): only probed partitions appear in the plan at all
     (the parquet directories of unprobed partitions are never listed to
@@ -3527,53 +3459,27 @@ def search_index_path(
     Results are identical to `search_index` / `search_index_routed` on
     the same saved index (pytest-verified).
     """
-    import os as _os
-
-    from anndb_spark.sources import fsutil
-
-    cfg = config or get_index_config(load_index(spark, path)) or HnswConfig()
-    ef = max(ef or cfg.ef, k)
-    # partition discovery through pyarrow.fs: plain paths, file://,
-    # s3://, hdfs:// — not a shared-local-FS assumption (ADVICE r4)
-    all_pids = fsutil.list_partition_values(path, "partition_id=")
-    # cache keys carry the index CONTENT fingerprint: the host-shared
-    # /dev/shm graph cache outlives the Spark session, so a bare
-    # (token, pid) key would silently serve a graph stored by a
-    # PREVIOUS index version under the same token (measured: a
-    # cluster-routed index re-trained across runs answered probes with
-    # the prior run's cells — recall degraded to ~nprobe/n_cells)
-    index_ver = (
-        fsutil.index_fingerprint(path) if cache_token is not None else None
+    routed = centroids is not None and nprobe > 0
+    cents = centroids if routed else locality_centroids
+    cfg, ef, all_pids, index_ver, qid_arr, qmat = _path_prologue(
+        spark, path, queries, k, ef, config, cache_token,
+        dim=0 if cents is None else np.shape(cents)[1],
     )
-    if isinstance(queries, tuple):
-        # (ids, matrix) — zero-copy for large query batches
-        qids_in, qmat = queries
-        qid_arr = np.array([str(q) for q in qids_in], dtype=object)
-        qmat = np.ascontiguousarray(qmat, dtype=np.float32)
-    else:
-        qid_arr = np.array([str(qid) for qid, _ in queries], dtype=object)
-        qmat = np.array([v for _, v in queries], dtype=np.float32)
-    _local_ok = (
-        len(all_pids) == 1
-        and (centroids is None or nprobe <= 0)
-        and (
-            local_mode == "force"
-            or (
-                local_mode == "auto"
-                and _os_mod.environ.get("ANNDB_LOCAL_SERVE", "1") != "0"
-            )
-        )
-    )
-    if (
-        locality_centroids is not None
-        and not _local_ok  # local path seed-sorts internally
-        and (centroids is None or nprobe <= 0)
-    ):
+    by_pid = _route_queries(qmat, centroids, nprobe, cfg.space) if routed else None
+    pids = all_pids if by_pid is None else [p for p in all_pids if p in by_pid]
+    # ONE graph partition → every query is answered completely by its
+    # single graph: ranks are final in-task and the global top-k Window
+    # (a shuffle) is skipped entirely — the single-graph serving fast
+    # path (the reference benchmark's one-resident-graph shape,
+    # cmd/benchmark/ann-benchmark/main.go:279-307)
+    single_graph = len(pids) == 1 and by_pid is None
+    if locality_centroids is not None and by_pid is None and not single_graph:
         # order the batch by coarse cell BEFORE chunking: each task's
         # queries then walk the SAME region of the graph, shrinking the
         # random-gather working set (the bandwidth-bound kernel's real
         # cost) from the whole matrix to a cluster's worth.  Pure
-        # reordering — results are per-query, order-independent.
+        # reordering — results are per-query, order-independent.  (The
+        # local path seed-sorts internally.)
         from anndb_spark.operators.ivf import _pairwise
 
         lc = np.ascontiguousarray(locality_centroids, dtype=np.float64)
@@ -3581,38 +3487,7 @@ def search_index_path(
         order = np.argsort(assign, kind="stable")
         qmat = np.ascontiguousarray(qmat[order])
         qid_arr = qid_arr[order]
-    by_pid: dict[int, list[int]] | None = None
-    if centroids is not None and nprobe > 0:
-        from anndb_spark.operators.ivf import _pairwise
-
-        cent = np.ascontiguousarray(centroids, dtype=np.float64)
-        npb = min(nprobe, cent.shape[0])
-        dmat = _pairwise(qmat.astype(np.float64), cent, cfg.space)
-        probes = np.argpartition(dmat, min(npb - 1, dmat.shape[1] - 1), axis=1)[:, :npb]
-        by_pid = {}
-        for qi, ps in enumerate(probes):
-            for p in ps:
-                by_pid.setdefault(int(p), []).append(qi)
-        pids = [p for p in all_pids if p in by_pid]
-    else:
-        pids = all_pids
-
-    # ONE graph partition → every query is answered completely by its
-    # single (pid, chunk) task: ranks are final in-task and the global
-    # top-k Window (a shuffle) is skipped entirely — the single-graph
-    # serving fast path (the reference benchmark's one-resident-graph
-    # shape, cmd/benchmark/ann-benchmark/main.go:279-307)
-    single_graph = len(pids) == 1 and by_pid is None
-    rank_cols = ["rank"] if single_graph else []
-    out_cols = ["query_id", *rank_cols, "id", "score"] + (
-        ["metadata"] if with_metadata else []
-    )
-    out_schema = (
-        "query_id STRING, "
-        + ("rank INT, " if single_graph else "")
-        + "id STRING, score FLOAT"
-        + (", metadata MAP<STRING,STRING>" if with_metadata else "")
-    )
+    out_cols, out_ddl = _result_layout(single_graph, with_metadata)
     # task layout: (pid, query-chunk) rows, round-robin.  Chunking the
     # query set per partition breaks the one-task-per-partition
     # straggler bound — skewed cluster cells (and the lock-step beam's
@@ -3633,22 +3508,17 @@ def search_index_path(
         # split queries across cores.
         target_tasks = max(len(pids), par // 2, 1)
         queries_per_task = max(64, -(-total // target_tasks))
-    # ONE-graph indexes skip Spark entirely when allowed: the per-job
-    # fixed wall dwarfs the compiled kernel at any realistic batch size
-    # (see _serve_single_graph_local).  `local_mode`: "auto" (on for
-    # single-graph, overridable via ANNDB_LOCAL_SERVE=0), "force",
-    # "off" (always run the task plan — pytest parity uses this).
-    if _local_ok and single_graph and n_q > 0:
+    if single_graph:
         tbl = _serve_single_graph_local(
-            spark, path, pids[0], qid_arr, qmat, k, ef, cfg, strategy,
-            brute_flops_threshold, cache_token, index_ver, with_metadata,
+            path, pids[0], cfg, strategy, brute_flops_threshold, cache_token,
+            index_ver, qid_arr, qmat, k, ef, with_metadata,
             min(queries_per_task, n_q),
         )
         if tbl is not None:
             # arrow-table input: no pandas hop, and under
             # spark.sql.execution.arrow.localRelationThreshold the JVM
             # builds a LocalRelation directly from the batches
-            return spark.createDataFrame(tbl, schema=out_schema)
+            return spark.createDataFrame(tbl, schema=out_ddl)
     plan_rows = []
     for p in pids:
         n_chunks = max(1, -(-per_pid[p] // queries_per_task))
@@ -3689,76 +3559,18 @@ def search_index_path(
                 qsel = by_pid.get(int(pid), [])[chunk * qpt : (chunk + 1) * qpt]
             if not qsel:
                 continue
-            sub, sub_qids = qmat[qsel], qid_arr[qsel]
             ids, g, use_brute = _acquire_partition_graph(
                 path, pid, cfg, strategy, brute_flops_threshold,
-                cache_token, index_ver, sub.shape[0],
+                cache_token, index_ver, len(qsel),
             )
-            arr = (
-                None if use_brute else g.search_fast_batch_arrays(sub, k, ef)
-            )
-            if arr is not None:
-                # columnar end-to-end: same C kernel as the tuple path,
-                # minus the per-hit python tuples (~0.19 s per 10k×10
-                # result, measured — often more than the walk itself)
-                ids_k, d_k = arr
-                valid = ids_k >= 0  # pads are a row suffix
-                counts = valid.sum(axis=1)
-                nid = ids_k[valid]
-                total = int(counts.sum())
-                dist = d_k[valid]
-                rank_full = np.broadcast_to(
-                    np.arange(1, ids_k.shape[1] + 1, dtype=np.int32),
-                    ids_k.shape,
-                )[valid]
-            else:
-                res = (
-                    g.search_brute(sub, k)
-                    if use_brute
-                    else g.search_fast_batch(sub, k, ef)
-                )
-                counts = [len(h) for h in res]
-                total = sum(counts)
-                nid = np.fromiter(
-                    (i for h in res for _, i in h), dtype=np.int64, count=total
-                )
-                dist = np.fromiter(
-                    (d for h in res for d, _ in h), dtype=np.float32, count=total
-                )
-                rank_full = (
-                    np.concatenate(
-                        [np.arange(1, c + 1, dtype=np.int32) for c in counts]
-                    )
-                    if total
-                    else np.empty(0, dtype=np.int32)
-                )
-            ids_arr = np.asarray(ids, dtype=object)
-            data = {
-                "query_id": np.repeat(sub_qids, counts),
-                "id": ids_arr[nid],
-                "score": dist,
-            }
-            if single_graph:
-                # hit lists are ascending → positional ranks are final
-                data["rank"] = rank_full
-            if with_metadata:
-                meta = g.item_meta
-                data["metadata"] = (
-                    [meta[i] for i in nid] if meta is not None else [None] * total
-                )
-            yield pd.DataFrame(data, columns=out_cols)
+            sub = qmat[qsel]
+            hits = g.search_brute(sub, k) if use_brute else g.search_fast_batch(sub, k, ef)
+            yield _assemble_hits(qid_arr[qsel], hits, ids, g, with_metadata, out_cols)
 
-    partials = plan.mapInPandas(run, schema=out_schema)
+    partials = plan.mapInPandas(run, schema=out_ddl)
     if single_graph:
         return partials
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "score", *out_cols[3:])
-    )
+    return _merge_topk(partials, k, with_metadata)
 
 
 def search_index_local(
@@ -3789,228 +3601,34 @@ def search_index_local(
     (an RPC handler, a batch scorer writing its own output) should
     call this instead.
 
-    One-partition indexes are answered entirely in-process through the
-    same compiled kernel and L1/shm-L2 graph caches as the task path.
-    Multi-partition (or declined compute-bound brute) requests fall
-    back to the Spark task plan — the scale path — and collect via
+    It shares `search_index_path`'s prologue.  One-partition indexes
+    are answered in-process (`_serve_single_graph_local`, brute/beam
+    decided over the whole batch unless ``queries_per_task`` is given).
+    Multi-partition indexes, and brute scans over the local cap, run
+    `search_index_path`'s task plan — the scale path — and collect via
     Arrow, so the call always answers with identical values to
     `search_index_path` (pytest-enforced).
 
     Columns: query_id, rank, id, score(, metadata) — same as
     `search_index_path`.
     """
-    cfg = config or get_index_config(load_index(spark, path)) or HnswConfig()
-    eff_ef = max(ef or cfg.ef, k)
-    from anndb_spark.sources import fsutil
-
-    all_pids = fsutil.list_partition_values(path, "partition_id=")
-    if len(all_pids) == 1:
-        index_ver = (
-            fsutil.index_fingerprint(path) if cache_token is not None else None
-        )
-        if isinstance(queries, tuple):
-            qids_in, qmat = queries
-            qid_arr = np.array([str(q) for q in qids_in], dtype=object)
-            qmat = np.ascontiguousarray(qmat, dtype=np.float32)
-        else:
-            qid_arr = np.array([str(qid) for qid, _ in queries], dtype=object)
-            qmat = np.array([v for _, v in queries], dtype=np.float32)
-        n_q = qmat.shape[0]
-        chunk_q = min(queries_per_task or n_q, n_q) or 1
+    cfg, eff_ef, pids, index_ver, qid_arr, qmat = _path_prologue(
+        spark, path, queries, k, ef, config, cache_token
+    )
+    if len(pids) == 1:
+        n_q = len(qmat)
         tbl = _serve_single_graph_local(
-            spark, path, all_pids[0], qid_arr, qmat, k, eff_ef, cfg,
-            strategy, brute_flops_threshold, cache_token, index_ver,
-            with_metadata, chunk_q,
+            path, pids[0], cfg, strategy, brute_flops_threshold, cache_token,
+            index_ver, qid_arr, qmat, k, eff_ef, with_metadata,
+            min(queries_per_task or n_q, n_q) or 1,
         )
         if tbl is not None:
             return tbl
-    # multi-partition / declined: the task plan IS the right physical
-    # strategy — run it and bring the result back columnar
     return search_index_path(
-        spark, path, queries, k, ef=ef, config=config, strategy=strategy,
+        spark, path, (qid_arr, qmat), k, ef=ef, config=cfg, strategy=strategy,
         brute_flops_threshold=brute_flops_threshold, cache_token=cache_token,
         with_metadata=with_metadata, queries_per_task=queries_per_task,
     ).toArrow()
-
-
-def search_index_broadcast(
-    index: DataFrame,
-    queries: list[tuple[object, list[float]]],
-    k: int,
-    ef: int | None = None,
-    config: HnswConfig | None = None,
-    num_tasks: int | None = None,
-    broadcast_row_cap: int = 1_000_000,
-) -> DataFrame:
-    """Query-parallel ANN search: broadcast the graph, partition the
-    *queries* — the serving shape for a hot index that fits one machine.
-
-    The partition-parallel `search_index` scatters every query to every
-    partition's graph (the reference's distributed read path,
-    `storage/dataset.go:390-432`); this is the reference's *benchmark*
-    shape instead (`cmd/benchmark/ann-benchmark/main.go:279-307`: NumCPU
-    workers all searching ONE resident graph).  The graph is
-    reconstructed once on the driver, broadcast, deserialized once per
-    executor, and each task beam-searches only its slice of the query
-    batch — per-query work is one graph walk, not P of them.
-
-    Use when the index is a single partition (or small enough to
-    broadcast, ≲ a few GB); at 100 TB per-dataset scale use
-    `search_index`.  Results are identical to `search_index` on a
-    single-partition index.
-
-    An index bigger than ``broadcast_row_cap`` rows falls back to the
-    partition-parallel `search_index` instead of OOMing the driver on
-    `toPandas()` (VERDICT r2 wrong #3).
-    """
-    cfg = config or get_index_config(index) or HnswConfig()
-    ef = max(ef or cfg.ef, k)
-    spark = index.sparkSession
-    n_rows = index.count()
-    if n_rows > broadcast_row_cap:
-        import warnings
-
-        warnings.warn(
-            f"search_index_broadcast: index has {n_rows:,} rows (> "
-            f"broadcast_row_cap={broadcast_row_cap:,}); collecting it to "
-            "the driver would OOM — falling back to the "
-            "partition-parallel search_index scatter",
-            stacklevel=2,
-        )
-        return search_index(index, None, queries, k, ef=ef, config=cfg)
-    idx_pdf = index.toPandas()
-    if not len(idx_pdf):
-        return spark.createDataFrame([], "query_id STRING, rank INT, id STRING, score FLOAT")
-    ids, g = _graph_from_index(idx_pdf, cfg)
-    bc = spark.sparkContext.broadcast((ids, g))
-
-    n_tasks = num_tasks or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    from anndb_spark.utils import literal_df
-
-    qdf = literal_df(
-        spark,
-        [(str(qid), [float(x) for x in v]) for qid, v in queries],
-        "query_id STRING, query_vector ARRAY<FLOAT>",
-    ).repartition(n_tasks)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_l, g_l = bc.value
-        # drain before yielding (worker-reuse contract; see run() in
-        # search_index_path)
-        pdfs = [pdf for pdf in batches if len(pdf)]
-        for pdf in pdfs:
-            qmat = np.array(pdf["query_vector"].tolist(), dtype=np.float32)
-            res = g_l.search_fast_batch(qmat, k, ef)
-            out = []
-            for qid, hits in zip(pdf["query_id"], res):
-                for rank, (d, nid) in enumerate(hits, 1):
-                    out.append((qid, rank, ids_l[nid], float(d)))
-            yield pd.DataFrame(out, columns=["query_id", "rank", "id", "score"])
-
-    return qdf.mapInPandas(run, schema="query_id STRING, rank INT, id STRING, score FLOAT")
-
-
-def search_index_routed(
-    index: DataFrame,
-    queries: list[tuple[object, list[float]]],
-    k: int,
-    centroids,
-    nprobe: int = 8,
-    ef: int | None = None,
-    config: HnswConfig | None = None,
-    strategy: str = "auto",
-    brute_flops_threshold: float = 1e8,
-    cache_token: str | None = None,
-    with_metadata: bool = False,
-) -> DataFrame:
-    """Cluster-routed ANN search — the IVF×HNSW hybrid, the 100 TB shape.
-
-    Build the index over *cluster-assigned* vectors
-    (`ivf.assign_clusters` → `build_index(partition_col='cluster_id')`)
-    so each graph partition is a coarse k-means cell; then each query
-    beam-searches only its ``nprobe`` nearest cells' graphs instead of
-    every partition.  Per-query work drops from P graph walks (the flat
-    `search_index` scatter, `storage/dataset.go:390-432`) to nprobe —
-    and because only probed partitions are scanned, an index persisted
-    ``partitionBy(partition_id)`` turns routing into parquet partition
-    pruning: nprobe/P of the index bytes are read.
-
-    Routing runs on the driver (a |Q|×K distance matrix over the small
-    centroid array); each task receives only its partition's query
-    slice via the closure.  Recall is governed by nprobe exactly like
-    IVF (`ivf.search_ivf`), on top of the per-graph beam's ef.
-    ``nprobe >= n_clusters`` degrades to the flat scatter.
-    """
-    if "vec" not in index.columns:
-        raise ValueError("routed search requires a self-contained index (vec column)")
-    from anndb_spark.operators.ivf import _pairwise
-
-    cfg = config or get_index_config(index) or HnswConfig()
-    ef = max(ef or cfg.ef, k)
-    cent = np.ascontiguousarray(centroids, dtype=np.float64)
-    nprobe = min(nprobe, cent.shape[0])
-    qids = [qid for qid, _ in queries]
-    qmat = np.array([v for _, v in queries], dtype=np.float32)
-    d = _pairwise(qmat.astype(np.float64), cent, cfg.space)
-    probes = np.argpartition(d, min(nprobe - 1, d.shape[1] - 1), axis=1)[:, :nprobe]
-    by_pid: dict[int, list[int]] = {}
-    for qi, ps in enumerate(probes):
-        for p in ps:
-            by_pid.setdefault(int(p), []).append(qi)
-
-    # scan-time pruning: only probed partitions are read at all
-    pruned = index.filter(F.col("partition_id").isin(sorted(by_pid)))
-    out_cols = ["query_id", "id", "score"] + (["metadata"] if with_metadata else [])
-    out_schema = "query_id STRING, id STRING, score FLOAT" + (
-        ", metadata MAP<STRING,STRING>" if with_metadata else ""
-    )
-    qid_str = np.array([str(q) for q in qids], dtype=object)
-
-    def search_part(key, idx_pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        qsel = by_pid.get(pid)
-        if not qsel or not len(idx_pdf):
-            return pd.DataFrame(columns=out_cols)
-        ckey = (cache_token, pid) if cache_token is not None else None
-        hit = _cache_get(ckey)
-        if hit is not None:
-            ids, g = hit
-        else:
-            ids, g = _graph_from_index(idx_pdf, cfg)
-            _cache_put(ckey, ids, g)
-        sub = qmat[qsel]
-        use_brute = strategy == "brute" or (
-            strategy == "auto" and len(ids) * len(qsel) * g.dim <= brute_flops_threshold
-        )
-        res = g.search_brute(sub, k) if use_brute else g.search_fast_batch(sub, k, ef)
-        counts = [len(h) for h in res]
-        total = sum(counts)
-        nid = np.fromiter((i for h in res for _, i in h), dtype=np.int64, count=total)
-        dist = np.fromiter((d for h in res for d, _ in h), dtype=np.float32, count=total)
-        ids_arr = np.asarray(ids, dtype=object)
-        data = {
-            "query_id": np.repeat(qid_str[qsel], counts),
-            "id": ids_arr[nid],
-            "score": dist,
-        }
-        if with_metadata:
-            meta = g.item_meta
-            data["metadata"] = (
-                [meta[i] for i in nid] if meta is not None else [None] * total
-            )
-        return pd.DataFrame(data, columns=out_cols)
-
-    partials = pruned.groupBy("partition_id").applyInPandas(
-        search_part, schema=out_schema
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "score", *out_cols[3:])
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -59,9 +59,11 @@ def knn(
 
     A saved ``index_path`` routes to the serving-shape
     `hnsw.search_index_path` (per-partition parquet reads + the
-    worker-resident graph cache keyed by ``cache_token``) — the hot-path
-    layout; an in-memory ``index`` DataFrame uses the shuffle-based
-    `hnsw.search_index`.
+    worker-resident graph cache keyed by ``cache_token``; a one-graph
+    index is answered driver-locally) — the hot-path layout; an
+    in-memory ``index`` DataFrame uses the shuffle-based
+    `hnsw.search_index`.  Both run the same graph-search entry,
+    brute/beam rule and result assembler, so they return the same rows.
     """
     from anndb_spark.operators.hnsw import search_index, search_index_path
     from anndb_spark.operators.ivf import search_ivf

@@ -6,11 +6,14 @@ Shape: a (possibly unbounded) DataFrame of queries flows through
 ``mapInPandas``; every executor answers its Arrow batches against ALL
 partitions of the saved index — graphs acquired through the same
 L1/shm-L2 worker cache ladder as batch serving
-(`hnsw._acquire_partition_graph`) — and merges to the final top-k
-locally.  That is exactly the reference's node protocol (O17 per-node
-multi-partition search + local aggregate, `storage/dataset.go:390-432`;
-O18 global merge, `:374-387`) with the executor playing the node: no
-shuffle, no state store, results stream out append-only.
+(`hnsw._acquire_partition_graph`), searched through the same kernel
+entry (`HnswGraph.search_fast_batch` / `search_brute`, chosen by
+`hnsw._use_brute`) and result assembler (`hnsw._assemble_hits`) — and
+merges to the final top-k locally.  That is exactly the reference's
+node protocol (O17 per-node multi-partition search + local aggregate,
+`storage/dataset.go:390-432`; O18 global merge, `:374-387`) with the
+executor playing the node: no shuffle, no state store, results stream
+out append-only.
 
 Scale note: this transform replicates the index per executor (each
 worker's cache eventually holds every partition it is asked about) —
@@ -29,7 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 STREAM_QUERIES_DDL = "query_id STRING, vector ARRAY<DOUBLE>"
-_RESULT_DDL = "query_id STRING, rank INT, id STRING, score FLOAT"
 
 
 def stream_search_transform(
@@ -54,6 +56,7 @@ def stream_search_transform(
     """
     from anndb_spark.operators.hnsw import (
         HnswConfig,
+        _result_layout,
         get_index_config,
         load_index,
     )
@@ -68,12 +71,13 @@ def stream_search_transform(
     index_ver = (
         fsutil.index_fingerprint(index_path) if cache_token is not None else None
     )
-    out_ddl = _RESULT_DDL + (
-        ", metadata MAP<STRING,STRING>" if with_metadata else ""
-    )
+    out_ddl = _result_layout(True, with_metadata)[1]
 
     def run(batches):
-        from anndb_spark.operators.hnsw import _acquire_partition_graph
+        from anndb_spark.operators.hnsw import (
+            _acquire_partition_graph,
+            _assemble_hits,
+        )
 
         # drain before yielding: interleaved yields get the python
         # worker killed instead of reused, destroying the graph cache
@@ -86,58 +90,25 @@ def stream_search_transform(
                 dtype=np.float32,
             )
             nq = qmat.shape[0]
-            cq, cid, cs = [], [], []  # candidate (qrow, id, score)
-            cm = [] if with_metadata else None
+            parts = []
             for pid in pids:
                 ids, g, use_brute = _acquire_partition_graph(
                     index_path, pid, cfg, strategy, brute_flops_threshold,
                     cache_token, index_ver, nq,
                 )
-                arr = (
-                    None
+                hits = (
+                    g.search_brute(qmat, k)
                     if use_brute
-                    else g.search_fast_batch_arrays(qmat, k, eff_ef)
+                    else g.search_fast_batch(qmat, k, eff_ef)
                 )
-                ids_arr = np.asarray(ids, dtype=object)
-                if arr is not None:
-                    # columnar: same kernel, no per-hit python tuples
-                    ids_k, d_k = arr
-                    valid = ids_k >= 0
-                    counts = valid.sum(axis=1)
-                    nid = ids_k[valid].astype(np.int64)
-                    total = int(counts.sum())
-                    dist = d_k[valid]
-                else:
-                    res = (
-                        g.search_brute(qmat, k)
-                        if use_brute
-                        else g.search_fast_batch(qmat, k, eff_ef)
-                    )
-                    counts = [len(h) for h in res]
-                    total = sum(counts)
-                    nid = np.fromiter(
-                        (i for h in res for _, i in h),
-                        dtype=np.int64,
-                        count=total,
-                    )
-                    dist = np.fromiter(
-                        (d for h in res for d, _ in h),
-                        dtype=np.float32,
-                        count=total,
-                    )
-                cq.append(np.repeat(np.arange(nq), counts))
-                cid.append(ids_arr[nid])
-                cs.append(dist)
-                if with_metadata:
-                    meta = g.item_meta
-                    cm.append(
-                        [meta[i] for i in nid]
-                        if meta is not None
-                        else [None] * total
-                    )
-            qrow = np.concatenate(cq)
-            rid = np.concatenate(cid)
-            score = np.concatenate(cs)
+                # query_id holds the batch row until the merge below
+                parts.append(
+                    _assemble_hits(np.arange(nq), hits, ids, g, with_metadata)
+                )
+            cand = pd.concat(parts, ignore_index=True)
+            qrow = cand["query_id"].to_numpy(dtype=np.int64)
+            rid = cand["id"].to_numpy(dtype=object)
+            score = cand["score"].to_numpy()
             # local final merge (O18): ascending (score, id) per query,
             # truncate to k — same order as the batch path's Window
             order = np.lexsort(
@@ -157,7 +128,7 @@ def stream_search_transform(
                 "score": score[sel],
             }
             if with_metadata:
-                flat_meta = [m for part in cm for m in part]
+                flat_meta = cand["metadata"].tolist()
                 data["metadata"] = [flat_meta[i] for i in sel]
             yield pd.DataFrame(data)
 

@@ -51,28 +51,30 @@ def plan_size_over_broadcast_threshold(df: DataFrame) -> bool:
     the same join against a corpus-sized table must broadcast the
     batch-bounded shortlist side instead — otherwise the planner
     falls back to a sort-merge join that shuffles the CORPUS by id to
-    fetch a few thousand rows.  Pure plan metadata: no job runs."""
+    fetch a few thousand rows.  Pure plan metadata: no job runs.
+
+    The threshold is Spark's own typed value (so '10MB', '64m', '1g'
+    and plain byte counts all parse exactly as the planner parses
+    them); a negative one means auto-broadcast is off, so the table
+    never broadcasts un-hinted and the bounded side must carry the
+    hint."""
+    from py4j.protocol import Py4JError
+
+    thr = int(
+        df.sparkSession._jsparkSession.sessionState()
+        .conf()
+        .autoBroadcastJoinThreshold()
+    )
+    if thr < 0:
+        return True
     try:
         est = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        thr = df.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-        mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-        t = thr.strip().lower()
-        if t and t[-1] in mult:
-            thr_bytes = int(t[:-1]) * mult[t[-1]]
-        else:
-            thr_bytes = int(t)
-        if thr_bytes < 0:
-            # auto-broadcast disabled: the table will never broadcast
-            # un-hinted, so the bounded side must carry the hint
-            return True
-        return est > thr_bytes
-    except Exception:
+    except Py4JError:
         # estimate unavailable: assume big (the scale-safe direction)
         return True
+    return est > thr
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -6,7 +6,15 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from anndb_spark.operators.hnsw import HnswConfig, HnswGraph, _dist_many, build_index, search_index
+from anndb_spark.operators.hnsw import (
+    HnswConfig,
+    HnswGraph,
+    _dist_many,
+    _hit_lists,
+    build_index,
+    search_index,
+)
+from tests.hnsw_oracle import search, search_fast
 
 
 @pytest.fixture(scope="module")
@@ -24,7 +32,7 @@ def test_search_vs_brute_force(kernel_graph):
     hits = 0
     for _ in range(50):
         q = rng.normal(0, 10, 32).astype(np.float32)
-        got = {n for _, n in g.search(q, 10, ef=100)}
+        got = {n for _, n in search(g, q, 10, ef=100)}
         exact = set(np.argsort(_dist_many("euclidean", mat, q), kind="stable")[:10].tolist())
         hits += len(got & exact)
     assert hits / 500 >= 0.9
@@ -54,7 +62,7 @@ def test_incremental_insert_matches_semantics():
     assert g.entrypoint >= 0
     assert g.levels[g.entrypoint] == max(g.levels)
     q = rng.normal(0, 1, 4).astype(np.float32)
-    res = g.search(q, 5, ef=64)
+    res = search(g, q, 5, ef=64)
     assert len(res) == 5
     assert [d for d, _ in res] == sorted(d for d, _ in res)
 
@@ -65,7 +73,7 @@ def test_heuristic_selection_mode():
     mat = rng.normal(0, 1, (300, 16)).astype(np.float32)
     g = HnswGraph.build(mat, [0] * 300, cfg)
     q = rng.normal(0, 1, 16).astype(np.float32)
-    got = {n for _, n in g.search(q, 10, ef=80)}
+    got = {n for _, n in search(g, q, 10, ef=80)}
     exact = set(np.argsort(_dist_many("euclidean", mat, q), kind="stable")[:10].tolist())
     assert len(got & exact) >= 8
 
@@ -148,7 +156,8 @@ def test_index_parquet_roundtrip(spark, spark_index, tmp_path):
 
 def test_batch_search_matches_single(spark):
     """search_fast_batch must return the same result sets as the
-    sequential search_fast for every query (same beams, same order)."""
+    sequential single-query oracle for every query (same beams, same
+    order)."""
     rng = np.random.default_rng(9)
     for space in ("euclidean", "cosine", "manhattan"):
         cfg = HnswConfig(m=8, ef_construction=64, space=space)
@@ -156,10 +165,10 @@ def test_batch_search_matches_single(spark):
         levels = [int(min(3, -np.log(rng.random()) / np.log(8))) for _ in range(600)]
         g = HnswGraph.build(mat, levels, cfg).finalize()
         Q = rng.normal(0, 1, (40, 24)).astype(np.float32)
-        batch = g.search_fast_batch(Q, 10, ef=40)
+        batch, _ = g.search_fast_batch(Q, 10, ef=40)
         for qi in range(Q.shape[0]):
-            single = g.search_fast(Q[qi], 10, ef=40)
-            got = {n for _, n in batch[qi]}
+            single = search_fast(g, Q[qi], 10, ef=40)
+            got = set(batch[qi][batch[qi] >= 0].tolist())
             want = {n for _, n in single}
             # identical beams are not guaranteed (candidate beam is
             # width-bounded in the batch kernel) but near-total overlap is
@@ -183,49 +192,6 @@ def test_legacy_index_requires_vectors(spark, spark_index):
     _, idx, cfg = spark_index
     with pytest.raises(ValueError, match="requires the vectors"):
         search_index(idx.drop("vec"), None, [("q", [0.0] * 64)], 3, config=cfg)
-
-
-def test_broadcast_search_matches_partitioned(spark):
-    """Query-parallel broadcast search returns the same hits as the
-    partition-parallel path on a single-partition index."""
-    from anndb_spark.operators.hnsw import search_index_broadcast
-
-    rng = np.random.default_rng(29)
-    rows = [(str(i), rng.normal(0, 1, 32).tolist(), 0) for i in range(400)]
-    emb = spark.createDataFrame(
-        rows, "id STRING, vector ARRAY<FLOAT>, partition_id INT"
-    )
-    cfg = HnswConfig(m=8, ef_construction=80)
-    idx = build_index(emb, cfg).cache()
-    queries = [(f"q{i}", rng.normal(0, 1, 32).tolist()) for i in range(6)]
-    a = search_index(
-        idx, None, queries, k=5, ef=60, config=cfg, strategy="beam"
-    ).collect()
-    b = search_index_broadcast(idx, queries, k=5, ef=60, config=cfg).collect()
-    key = lambda rs: sorted((r["query_id"], r["id"], round(r["score"], 4)) for r in rs)
-    assert key(a) == key(b)
-
-
-def test_broadcast_row_cap_falls_back(spark):
-    """An index over the broadcast cap is never collected: the call
-    reroutes to the partition-parallel scatter with identical results."""
-    from anndb_spark.operators.hnsw import search_index_broadcast
-
-    rng = np.random.default_rng(43)
-    rows = [(str(i), rng.normal(0, 1, 16).tolist(), 0) for i in range(300)]
-    emb = spark.createDataFrame(rows, "id STRING, vector ARRAY<FLOAT>, partition_id INT")
-    cfg = HnswConfig(m=8, ef_construction=80)
-    idx = build_index(emb, cfg).cache()
-    queries = [(f"q{i}", rng.normal(0, 1, 16).tolist()) for i in range(4)]
-    flat = search_index(
-        idx, None, queries, k=5, ef=60, config=cfg, strategy="beam"
-    ).collect()
-    with pytest.warns(UserWarning, match="partition-parallel"):
-        guarded = search_index_broadcast(
-            idx, queries, k=5, ef=60, config=cfg, broadcast_row_cap=10
-        ).collect()
-    key = lambda rs: sorted((r["query_id"], r["id"]) for r in rs)  # noqa: E731
-    assert key(flat) == key(guarded)
 
 
 def test_routed_search_full_probe_matches_flat(spark):
@@ -563,6 +529,54 @@ def test_save_graph_partition_single_graph_fast_path(spark, tmp_path):
     assert {(r["query_id"], r["rank"]): r["id"] for r in via_np} == got_path
 
 
+_BUILD_HASH_SCRIPT = """
+import hashlib
+import numpy as np
+from anndb_spark.operators.hnsw import HnswConfig, HnswGraph
+
+n, dim = 3000, 24
+mat = np.random.default_rng(23).normal(0, 1, (n, dim)).astype(np.float32)
+cfg = HnswConfig(m=8, ef_construction=80, heuristic=True)
+lr = np.random.default_rng(5)
+levels = np.floor(
+    -np.log(np.clip(lr.random(n), 1e-12, 1 - 1e-12)) * cfg.level_multiplier
+).astype(int).tolist()
+for workers in (1, 4):
+    g = HnswGraph.build(mat, levels, cfg, workers=workers)
+    h = hashlib.sha256()
+    h.update(str(g.entrypoint).encode())
+    h.update(np.asarray(g.levels, dtype=np.int64).tobytes())
+    for node_adj in g.adj:
+        for lvl in sorted(node_adj):
+            h.update(np.asarray(sorted(node_adj[lvl]), dtype=np.int64).tobytes())
+    print(h.hexdigest())
+"""
+
+
+def test_build_content_hash_stable_across_processes():
+    """A fixed-seed build is bit-deterministic: two fresh interpreters
+    with different PYTHONHASHSEED values (set iteration order), each
+    building with workers=1 and workers=4, produce one content hash of
+    (entrypoint, levels, per-level sorted adjacency)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    hashes = []
+    for seed in ("0", "12345"):
+        env = dict(os.environ, PYTHONHASHSEED=seed)
+        env["PYTHONPATH"] = os.pathsep.join(
+            p for p in (root, env.get("PYTHONPATH")) if p
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", _BUILD_HASH_SCRIPT],
+            env=env, capture_output=True, text=True, check=True, timeout=600,
+        )
+        hashes += out.stdout.split()
+    assert len(hashes) == 4 and len(set(hashes)) == 1, hashes
+
+
 def test_fork_parallel_build_identical_to_serial():
     """workers>1 must produce a bit-identical graph (fork replicas only
     parallelize read-only candidate work; commits stay ordered)."""
@@ -600,16 +614,16 @@ def test_quantized_traversal_exact_rerank():
     Q = centers[rng.integers(16, size=50)] + rng.normal(
         0, 0.15, (50, dim)
     ).astype(np.float32)
-    base = g.search_fast_batch(Q, 10)
+    base = _hit_lists(*g.search_fast_batch(Q, 10))
     g.quantize()  # force (below the auto threshold)
-    quant = g.search_fast_batch(Q, 10)
+    quant = _hit_lists(*g.search_fast_batch(Q, 10))
     # returned scores are exact euclidean distances, not quantized ones
     for qi in range(50):
         for d, idx in quant[qi]:
             exact = float(np.linalg.norm(mat[idx] - Q[qi]))
             assert abs(d - exact) < 1e-3
     # recall parity with the exact-walk kernel (vs brute truth)
-    truth = g.search_brute(Q, 10)
+    truth = _hit_lists(*g.search_brute(Q, 10))
     tsets = [set(i for _, i in row) for row in truth]
     r_base = sum(
         len(tsets[qi] & set(i for _, i in base[qi])) for qi in range(50)
@@ -624,8 +638,8 @@ def test_quantized_traversal_exact_rerank():
     assert not hasattr(g, "q_codes")
     g.insert(Q[0])
     g.finalize()
-    again = g.search_fast_batch(Q[:5], 5)
-    assert len(again) == 5 and all(len(r) == 5 for r in again)
+    again, _ = g.search_fast_batch(Q[:5], 5)
+    assert again.shape == (5, 5) and (again >= 0).all()
 
 
 def test_serving_cache_tracks_index_content(spark, tmp_path):
@@ -724,13 +738,13 @@ def test_ckernel_matches_numpy_kernel():
             * cfg.level_multiplier
         ).astype(int).tolist()
         g = HnswGraph.build(mat, levels, cfg).finalize()
-        res_c = g.search_fast_batch(Q, 10, ef=80)
+        res_c = _hit_lists(*g.search_fast_batch(Q, 10, ef=80))
         import anndb_spark.operators.ckernel as ck
 
         old = ck._lib
         try:
             ck._lib = None  # force the NumPy path without recompiling
-            res_np = g.search_fast_batch(Q, 10, ef=80)
+            res_np = _hit_lists(*g.search_fast_batch(Q, 10, ef=80))
         finally:
             ck._lib = old
         total = 0
@@ -746,17 +760,89 @@ def test_ckernel_matches_numpy_kernel():
         # tombstones: C path must never return deleted ids
         g.deleted = np.zeros(n, dtype=bool)
         g.deleted[list({i for r in res_c for _, i in r})] = True
-        res_t = g.search_fast_batch(Q, 10, ef=80)
+        res_t = _hit_lists(*g.search_fast_batch(Q, 10, ef=80))
         for row in res_t:
             assert all(not g.deleted[i] for _, i in row)
         g.deleted = None
 
 
+def test_kernel_array_contract(monkeypatch):
+    """`search_fast_batch` and `search_brute` share one array contract:
+    (nq, k) int64 ids and float32 distances, rows in query order and
+    ascending, −1 pads as a row suffix.  The C kernel and the NumPy
+    fallback return identical ids on a graph with no vertices, k above
+    the live vertex count, tombstones leaving 3 live vertices, and a
+    graph big enough for seed-GEMM seeding; brute agrees wherever the
+    beam is exhaustive."""
+    from anndb_spark.operators import ckernel
+
+    rng = np.random.default_rng(13)
+    cfg = HnswConfig(m=8, ef_construction=64)
+
+    def built(n):
+        mat = rng.normal(0, 1, (n, 8)).astype(np.float32)
+        lr = np.random.default_rng(5)
+        levels = np.floor(
+            -np.log(np.clip(lr.random(n), 1e-12, 1 - 1e-12))
+            * cfg.level_multiplier
+        ).astype(int).tolist()
+        return HnswGraph.build(mat, levels, cfg).finalize()
+
+    tomb = built(300)
+    tomb.deleted = np.ones(300, dtype=bool)
+    tomb.deleted[[5, 77, 201]] = False
+    big = built(4500)
+    assert big._max_level() > 0  # seed-GEMM seeding, not the descent
+    Q = rng.normal(0, 1, (25, 8)).astype(np.float32)
+    # (graph, k, live hits per row, brute must match the beam)
+    cases = [
+        (HnswGraph(8, cfg), 20, 0, True),
+        (built(12), 20, 12, True),
+        (tomb, 10, 3, True),
+        (big, 10, 10, False),
+    ]
+
+    def check(hits, k, live):
+        ids, ds = hits
+        assert ids.shape == ds.shape == (len(Q), k)
+        assert ids.dtype == np.int64 and ds.dtype == np.float32
+        assert (ids[:, :live] >= 0).all() and (ids[:, live:] == -1).all()
+        assert (np.diff(ds[:, :live], axis=1) >= 0).all()
+
+    native = ckernel.available()
+    for g, k, live, exhaustive in cases:
+        beam = g.search_fast_batch(Q, k, ef=64)
+        check(beam, k, live)
+        brute = g.search_brute(Q, k)
+        check(brute, k, live)
+        if exhaustive:
+            assert (brute[0] == beam[0]).all()
+        if native:
+            with monkeypatch.context() as m:
+                m.setattr(ckernel, "available", lambda: False)
+                fallback = g.search_fast_batch(Q, k, ef=64)
+            check(fallback, k, live)
+            assert (fallback[0] == beam[0]).all(), len(g.levels)
+    assert big.search_fast_batch(Q[:0], 10)[0].shape == (0, 10)
+    assert big.search_brute(Q[:0], 10)[0].shape == (0, 10)
+
+
+def _plan_text(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_local_serve_matches_task_path(spark, tmp_path):
-    """Driver-local single-graph serving (local_mode='force') must return
-    exactly what the Spark task plan (local_mode='off') returns — beam,
-    brute, tombstones, and metadata."""
-    from anndb_spark.operators.hnsw import save_graph_partition, search_index_path
+    """Driver-local single-graph serving (`search_index_path` on a
+    one-partition index) must return exactly what the Spark task plan of
+    `search_index(load_index(path))` returns — beam and brute, on the
+    plain and on a tombstoned index."""
+    from anndb_spark.operators.hnsw import (
+        delete_from_index,
+        load_index,
+        save_graph_partition,
+        save_index,
+        search_index_path,
+    )
 
     rng = np.random.default_rng(71)
     n, dim = 800, 24
@@ -770,39 +856,46 @@ def test_local_serve_matches_task_path(spark, tmp_path):
     ids = [f"v{i:04d}" for i in range(n)]
     path = str(tmp_path / "local_idx")
     save_graph_partition(g, ids, path)
+    tomb_path = str(tmp_path / "local_idx_tomb")
+    save_index(delete_from_index(load_index(spark, path), ids[::9]), tomb_path)
 
     queries = [(str(i), rng.normal(0, 1, dim).tolist()) for i in range(30)]
-    for strategy in ("beam", "brute"):
-        a = search_index_path(
-            spark, path, queries, 6, ef=60, config=cfg, strategy=strategy,
-            cache_token="t-local", local_mode="off",
-        ).collect()
-        b = search_index_path(
-            spark, path, queries, 6, ef=60, config=cfg, strategy=strategy,
-            cache_token="t-local", local_mode="force",
-        ).collect()
-        # ids/ranks must be identical; distances only to float32 GEMM
-        # reproducibility (driver BLAS may pick a different sgemm kernel
-        # than the OMP_NUM_THREADS=1 Spark worker -> ~1 ulp accumulation
-        # differences on the brute path).
-        sa, sb = sorted(map(tuple, a)), sorted(map(tuple, b))
-        assert [r[:3] for r in sa] == [r[:3] for r in sb], strategy
-        for ra, rb in zip(sa, sb):
-            assert ra[3] == pytest.approx(rb[3], rel=1e-5), strategy
-        assert len(b) == 180
+    for p in (path, tomb_path):
+        for strategy in ("beam", "brute"):
+            a = search_index(
+                load_index(spark, p), None, queries, 6, ef=60, config=cfg,
+                strategy=strategy, cache_token="t-local",
+            ).collect()
+            local = search_index_path(
+                spark, p, queries, 6, ef=60, config=cfg, strategy=strategy,
+                cache_token="t-local",
+            )
+            assert "MapInPandas" not in _plan_text(local)  # no task plan
+            b = local.collect()
+            # ids/ranks must be identical; distances only to float32 GEMM
+            # reproducibility (driver BLAS may pick a different sgemm
+            # kernel than the OMP_NUM_THREADS=1 Spark worker -> ~1 ulp
+            # accumulation differences on the brute path).
+            sa, sb = sorted(map(tuple, a)), sorted(map(tuple, b))
+            assert [r[:3] for r in sa] == [r[:3] for r in sb], (p, strategy)
+            for ra, rb in zip(sa, sb):
+                assert ra[3] == pytest.approx(rb[3], rel=1e-5), strategy
+            assert len(b) == 180
+            if p == tomb_path:
+                assert not {r["id"] for r in b} & set(ids[::9])
 
     # the local result is a real DataFrame: column ops compose on it
     d = search_index_path(
         spark, path, queries, 6, ef=60, config=cfg, strategy="beam",
-        local_mode="force",
     )
     assert d.filter(F.col("rank") == 1).count() == 30
 
 
-def test_local_serve_big_brute_falls_back_to_tasks(spark, tmp_path):
+def test_local_serve_big_brute_falls_back_to_tasks(spark, tmp_path, monkeypatch):
     """A big exact scan is compute-bound, not launch-bound: the local
     path must decline it (return None) so the caller runs the chunked
     task plan, which spreads the GEMM across workers."""
+    from anndb_spark.operators import hnsw as hnsw_mod
     from anndb_spark.operators.hnsw import (
         _serve_single_graph_local,
         save_graph_partition,
@@ -826,29 +919,29 @@ def test_local_serve_big_brute_falls_back_to_tasks(spark, tmp_path):
     qmat = rng.normal(0, 1, (40, dim)).astype(np.float32)
     qids = np.array([f"q{i}" for i in range(40)], dtype=object)
     # total flops 300*40*16 = 192k > cap 1 → local serving declines
+    monkeypatch.setattr(hnsw_mod, "_LOCAL_BRUTE_FLOPS_MAX", 1.0)
     declined = _serve_single_graph_local(
-        spark, path, 0, qids, qmat, 5, 50, cfg, "brute", 1e12,
-        None, None, False, 40, local_brute_flops_max=1.0,
+        path, 0, cfg, "brute", 1e12, None, None, qids, qmat, 5, 50, False, 40,
     )
     assert declined is None
     # beam is kernel-bound, not BLAS-bound: same cap must NOT decline
     served = _serve_single_graph_local(
-        spark, path, 0, qids, qmat, 5, 50, cfg, "beam", 0.0,
-        None, None, False, 40, local_brute_flops_max=1.0,
+        path, 0, cfg, "beam", 0.0, None, None, qids, qmat, 5, 50, False, 40,
     )
     assert served is not None and len(served) == 200
     # and the public API still answers the brute query via the task plan
     queries = [(f"q{i}", qmat[i].tolist()) for i in range(40)]
-    out = search_index_path(
+    via_tasks = search_index_path(
         spark, path, queries, 5, config=cfg, strategy="brute",
-    ).collect()
-    assert len(out) == 200
+    )
+    assert "MapInPandas" in _plan_text(via_tasks)
+    assert len(via_tasks.collect()) == 200
 
 
 def test_local_serve_metadata_single_partition(spark, tmp_path):
     """Driver-local serving returns the metadata MAP identically to the
-    task path on a one-partition saved index."""
-    from anndb_spark.operators.hnsw import save_index, search_index_path
+    task plan of `search_index` on a one-partition saved index."""
+    from anndb_spark.operators.hnsw import load_index, save_index, search_index_path
 
     rng = np.random.default_rng(29)
     rows = [
@@ -865,16 +958,21 @@ def test_local_serve_metadata_single_partition(spark, tmp_path):
     queries = [("q0", rows[3][1]), ("q1", rows[40][1])]
     want = {r[0]: r[2] for r in rows}
     outs = {}
-    for lm in ("force", "off"):
-        res = search_index_path(
+    for name, res in (
+        ("local", search_index_path(
             spark, path, queries, 5, config=cfg, with_metadata=True,
-            local_mode=lm,
-        ).collect()
+        )),
+        ("tasks", search_index(
+            load_index(spark, path), None, queries, 5, config=cfg,
+            with_metadata=True,
+        )),
+    ):
+        res = res.collect()
         assert len(res) == 10
         for r in res:
-            assert r["metadata"] == want[r["id"]], lm
-        outs[lm] = sorted((r["query_id"], r["rank"], r["id"]) for r in res)
-    assert outs["force"] == outs["off"]
+            assert r["metadata"] == want[r["id"]], name
+        outs[name] = sorted((r["query_id"], r["rank"], r["id"]) for r in res)
+    assert outs["local"] == outs["tasks"]
 
 
 def test_search_index_local_api(spark, tmp_path):
@@ -882,6 +980,7 @@ def test_search_index_local_api(spark, tmp_path):
     to the DataFrame path — single-partition in-process, multi-partition
     via the task-plan fallback."""
     from anndb_spark.operators.hnsw import (
+        load_index,
         save_graph_partition,
         save_index,
         search_index_local,
@@ -910,9 +1009,8 @@ def test_search_index_local_api(spark, tmp_path):
     assert isinstance(tbl, pa.Table)
     assert tbl.column_names == ["query_id", "rank", "id", "score"]
     assert tbl.num_rows == 125
-    df_rows = search_index_path(
-        spark, single, queries, 5, ef=50, config=cfg, cache_token="t-api",
-        local_mode="off",
+    df_rows = search_index(
+        load_index(spark, single), None, queries, 5, ef=50, config=cfg,
     ).collect()
     a = sorted(zip(*[tbl.column(c).to_pylist() for c in ("query_id", "rank", "id")]))
     b = sorted((r["query_id"], r["rank"], r["id"]) for r in df_rows)
@@ -941,6 +1039,69 @@ def test_search_index_local_api(spark, tmp_path):
     am = sorted(zip(*[tbl_m.column(c).to_pylist() for c in ("query_id", "rank", "id")]))
     bm = sorted((r["query_id"], r["rank"], r["id"]) for r in df_m)
     assert am == bm
+
+
+def test_every_server_answers_an_empty_batch(spark, tmp_path):
+    """An empty query batch is a valid request: every server returns zero
+    rows with its full result schema (the batch parses to a (0, dim)
+    matrix, never np.array([])'s (0,))."""
+    from anndb_spark.operators.hnsw import (
+        _parse_queries,
+        load_index,
+        save_index,
+        search_index_local,
+        search_index_path,
+        search_index_routed,
+    )
+    from anndb_spark.operators.ivf import assign_clusters, train_centroids
+    from anndb_spark.streaming.search import stream_search_transform
+
+    assert _parse_queries([], 8)[1].shape == (0, 8)
+
+    rng = np.random.default_rng(61)
+    rows = [
+        (f"e{i:03d}", rng.normal(0, 1, 8).tolist(), {"tag": f"t{i}"}, i % 2)
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "id STRING, vector ARRAY<DOUBLE>, metadata MAP<STRING,STRING>, partition_id INT",
+    )
+    cfg = HnswConfig(m=8, ef_construction=40)
+    single, multi, routed = (str(tmp_path / n) for n in ("one", "two", "cells"))
+    save_index(build_index(df.withColumn("partition_id", F.lit(0)), cfg), single)
+    save_index(build_index(df, cfg), multi)
+    cent = train_centroids(df, 2, seed=3)
+    idx_r = build_index(
+        assign_clusters(df.drop("partition_id"), cent), cfg, partition_col="cluster_id"
+    )
+    save_index(idx_r, routed)
+
+    base = [("query_id", "string"), ("rank", "int"), ("id", "string"), ("score", "float")]
+    meta = base + [("metadata", "map<string,string>")]
+    empty_q = spark.createDataFrame([], "query_id STRING, vector ARRAY<DOUBLE>")
+    frames = {
+        "search_index/one": (search_index(load_index(spark, single), None, [], 5), base),
+        "search_index/two": (
+            search_index(load_index(spark, multi), None, [], 5, with_metadata=True), meta),
+        "routed": (search_index_routed(
+            load_index(spark, routed), [], 5, centroids=cent, nprobe=2), base),
+        "path/one": (search_index_path(spark, single, [], 5, config=cfg), base),
+        "path/one/matrix": (search_index_path(
+            spark, single, ([], np.empty((0, 8))), 5, config=cfg, strategy="beam"), base),
+        "path/two": (search_index_path(
+            spark, multi, [], 5, config=cfg, with_metadata=True,
+            locality_centroids=cent), meta),
+        "path/routed": (search_index_path(
+            spark, routed, [], 5, config=cfg, centroids=cent, nprobe=2), base),
+        "stream": (stream_search_transform(empty_q, multi, 5, config=cfg), base),
+    }
+    for name, (res, schema) in frames.items():
+        assert res.dtypes == schema, name
+        assert res.count() == 0, name
+    for p in (single, multi):
+        tbl = search_index_local(spark, p, [], 5, config=cfg)
+        assert tbl.column_names == [c for c, _ in base] and tbl.num_rows == 0, p
 
 
 def test_dataset_search_local_facade(spark, tmp_path):
@@ -1009,8 +1170,8 @@ def test_build_hub_heavy_corpus_respects_caps():
         assert (tail == -1).all(), i
     g.finalize()
     Q = rng.normal(0, 0.01, (40, dim)).astype(np.float32)
-    res = g.search_fast_batch(Q, 10, ef=80)
-    truth = g.search_brute(Q, 10)
+    res = _hit_lists(*g.search_fast_batch(Q, 10, ef=80))
+    truth = _hit_lists(*g.search_brute(Q, 10))
     hits = sum(
         len({i for _, i in truth[q]} & {i for _, i in res[q]})
         for q in range(40)
@@ -1067,11 +1228,11 @@ def test_built_graph_is_picklable():
     ).astype(int).tolist()
     g = HnswGraph.build(mat, levels, cfg, workers=4).finalize()
     Q = rng.normal(0, 1, (10, 24)).astype(np.float32)
-    res_before = g.search_fast_batch(Q, 5, ef=32)
+    res_before, _ = g.search_fast_batch(Q, 5, ef=32)
     g2 = pickle.loads(pickle.dumps(g))
-    res_after = g2.search_fast_batch(Q, 5, ef=32)
-    assert [{i for _, i in r} for r in res_before] == [
-        {i for _, i in r} for r in res_after
+    res_after, _ = g2.search_fast_batch(Q, 5, ef=32)
+    assert [set(r) for r in res_before.tolist()] == [
+        set(r) for r in res_after.tolist()
     ]
 
 
@@ -1146,7 +1307,7 @@ def test_search_brute_scratch_reuse_bitwise_and_unpickled():
                     - dot / (np.sqrt(norms2)[None, :] * qn[:, None])
                 )
         k = 7
-        first = g.search_brute(queries, k)
+        first = _hit_lists(*g.search_brute(queries, k))
         part = np.argpartition(d_ref, k - 1, axis=1)[:, :k]
         for qi in range(q):
             ids = part[qi]
@@ -1155,7 +1316,8 @@ def test_search_brute_scratch_reuse_bitwise_and_unpickled():
             keep = np.isfinite(ds[order])
             want = list(zip(ds[order][keep].tolist(), ids[order][keep].tolist()))
             assert first[qi] == want, (space, qi)
-        assert g.search_brute(queries, k) == first, space  # dirty-buffer rerun
+        rerun = _hit_lists(*g.search_brute(queries, k))
+        assert rerun == first, space  # dirty-buffer rerun
         from anndb_spark.operators.hnsw import _SCRATCH_BUFS
 
         assert _SCRATCH_BUFS.bufs["brute_d"].size >= q * n  # thread scratch live
@@ -1164,8 +1326,8 @@ def test_search_brute_scratch_reuse_bitwise_and_unpickled():
         pickle.dumps(state)  # the shipped state stays picklable
         # tombstones: deleted ids never appear even via the reused buffer
         g.deleted = np.array([0, 1], dtype=np.int64)
-        hits = g.search_brute(queries, k)
-        assert all(i not in (0, 1) for h in hits for _, i in h)
+        hits, _ = g.search_brute(queries, k)
+        assert not np.isin(hits, [0, 1]).any()
 
 
 def test_acquire_brute_graph_warm_reads_no_parquet(spark, tmp_path, monkeypatch):

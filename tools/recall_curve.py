@@ -182,7 +182,7 @@ def curve(
         t0 = time.perf_counter()
         g = HnswGraph.build(mat, levels, cfg, workers=workers)
         build_s = time.perf_counter() - t0
-        ids, _d = g.search_fast_batch_arrays(q, K, ef=ef, threads=workers)
+        ids, _d = g.search_fast_batch(q, K, ef=ef, threads=workers)
         hits = sum(
             len(set(ids[qi].tolist()) & set(truth[qi].tolist()))
             for qi in range(q.shape[0])
