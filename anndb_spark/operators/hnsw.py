@@ -21,19 +21,21 @@ Spark shape (100 TB-minded): vectors are routed to partitions by the
 UuidMod-compatible partitioner; `applyInPandas` builds one independent
 HNSW per partition (the reference's unit of distribution — one graph
 per partition, `storage/partition.go`); search fans queries out to every
-partition (cogrouped `applyInPandas`), takes a per-partition top-k, and
-merges globally — exactly the reference's scatter/gather
+partition (one grouped scan of the index DataFrame, or one task per
+saved partition in `search_index_path`), takes a per-partition top-k,
+and merges globally — exactly the reference's scatter/gather
 (`storage/dataset.go:374-431`) expressed as partial + final top-k.
 Each task holds exactly one partition's graph in memory, which is the
 same sizing contract the reference imposes on its nodes.
 
-The in-memory kernel is NumPy float32 (vectorized candidate-batch
-distance evaluations stand in for the reference's SIMD kernels).
+The in-memory kernel is C (`ckernel`, compiled on first use, OpenMP
+across queries and wave items) with a NumPy float32 fallback
+(vectorized candidate-batch distance evaluations stand in for the
+reference's SIMD kernels) on hosts without a C compiler.
 """
 
 from __future__ import annotations
 
-import glob as _glob_mod
 import heapq
 import json
 import math
@@ -127,76 +129,9 @@ def _beam_topk(beam_d: np.ndarray, beam_i: np.ndarray, k: int):
     return i, d
 
 
-# fork-build plumbing: children inherit the pre-wave graph via fork COW
-# (no serialization); the tuple is (graph, vectors, ef_construction)
-_BUILD_FORK_GRAPH = None
-
-# fork-GEMM plumbing: (graph, vectors, efc, by_level, levels, upto)
-_BUILD_FORK_GEMM = None
-
-
-
-def _build_fork_cand_work(slice_ids: list[int]):
-    g, v, efc = _BUILD_FORK_GRAPH
-    res = _hit_lists(*g.search_fast_batch(v[slice_ids], k=efc, ef=efc))
-    return [
-        (x, g._select_neighbors(cand, g.cfg.m, 0, v[x]))
-        for x, cand in zip(slice_ids, res)
-    ]
-
-
-def _limit_blas_threads():
-    """Pool initializer: single-threaded BLAS inside fork children —
-    ``workers`` processes × multi-threaded OpenBLAS oversubscribes the
-    cores and THRASHES (measured)."""
-    try:
-        from threadpoolctl import threadpool_limits
-
-        threadpool_limits(1)
-    except Exception:
-        pass
-
-
-def _build_fork_gemm_work(payload):
-    """Exact-candidate wave work for one slice: one GEMM distance block
-    against the pre-wave prefix, then per-item top-efC selection and
-    neighbor selection at EVERY level (level-0 from the full row, upper
-    levels from that level's pre-wave node pool) — the per-item work of
-    ``commit_exact`` minus the graph mutation, which stays in the
-    (ordered, single-process) parent commit.
-
-    Children are forked ONCE per build (not per wave): everything they
-    read from the fork snapshot is static for the whole GEMM regime
-    (vectors, norms, config, per-item levels) — the only wave-varying
-    state, the upper-level node pools and the prefix bound, arrives in
-    the task payload (a few KB)."""
-    slice_ids, upto, by_level = payload
-    g, v, efc, levels = _BUILD_FORK_GEMM
-    X = v[slice_ids]
-    space = g.cfg.space
-    sub = v[:upto]
-    if space == "manhattan":
-        D = np.empty((len(slice_ids), upto), dtype=np.float32)
-        for r in range(len(slice_ids)):
-            D[r] = np.abs(sub - X[r]).sum(axis=1, dtype=np.float32)
-    else:
-        dot = X @ sub.T
-        if space == "euclidean":
-            qn2 = np.einsum("ij,ij->i", X, X, dtype=np.float32)
-            D = np.sqrt(
-                np.maximum(
-                    g.norms2[:upto][None, :] - 2.0 * dot + qn2[:, None], 0.0
-                )
-            )
-        else:
-            qn = np.sqrt(np.einsum("ij,ij->i", X, X, dtype=np.float32))
-            D = np.abs(
-                np.float32(1.0) - dot / (g.norms[:upto][None, :] * qn[:, None])
-            )
-    return [
-        (x, _exact_item_select(g, D[r], x, upto, efc, by_level, levels))
-        for r, x in enumerate(slice_ids)
-    ]
+# build wave floor: the first _BUILD_WAVE items bootstrap sequentially,
+# later waves hold max(_BUILD_WAVE, prefix // 10) items
+_BUILD_WAVE = 256
 
 
 def _topk_ids(row: np.ndarray, k: int) -> np.ndarray:
@@ -222,82 +157,6 @@ def _topk_ids(row: np.ndarray, k: int) -> np.ndarray:
             return idx
         # sample bound too tight (rare): fall through to the full row
     return np.argpartition(row, k - 1)[:k]
-
-
-def _exact_item_select(g, row, x, upto, efc, by_level, levels):
-    """Per-item neighbor selection from an exact distance row against
-    the pre-wave prefix: level-0 from the full row's top-efC, upper
-    levels from that level's pre-wave pool — the per-item work of
-    ``commit_exact`` minus the graph mutation."""
-    v = g.vectors
-    m = g.cfg.m
-    sel_by_level: dict[int, list[tuple[float, int]]] = {}
-    sel = _topk_ids(row[:upto], min(efc, upto))
-    cand = sorted(zip(row[sel].tolist(), sel.tolist()))
-    sel_by_level[0] = g._select_neighbors(cand, m, 0, v[x])
-    for l in range(1, levels[x] + 1):
-        nodes = by_level.get(l)
-        if not nodes:
-            continue
-        pool = np.asarray(nodes, dtype=np.int64)
-        pool = pool[pool < upto]  # intra-wave items invisible
-        if not pool.size:
-            continue
-        pd_ = row[pool]
-        sl = _topk_ids(pd_, min(efc, pd_.shape[0]))
-        cand_l = sorted(zip(pd_[sl].tolist(), pool[sl].tolist()))
-        sel_by_level[l] = g._select_neighbors(cand_l, m, l, v[x])
-    return sel_by_level
-
-
-def _build_fork_gemm_cols(args):
-    """Stage A of the column-tiled exact wave: compute the wave's
-    distance block against ONE column block of the prefix and write it
-    into the shared-memory distance buffer.  The column block
-    (~prefix/workers vectors) stays cache-resident through the GEMM, so
-    32 concurrent children don't each stream the whole prefix from RAM
-    (the row-chunked variant is memory-bandwidth-bound — measured)."""
-    lo, hi, wlo, wave_n, shm_path, shm_rows = args
-    g, v, efc, levels = _BUILD_FORK_GEMM
-    X = v[wlo : wlo + wave_n]
-    sub = v[lo:hi]
-    dot = X @ sub.T
-    if g.cfg.space == "euclidean":
-        qn2 = np.einsum("ij,ij->i", X, X, dtype=np.float32)
-        block = np.sqrt(
-            np.maximum(g.norms2[lo:hi][None, :] - 2.0 * dot + qn2[:, None], 0.0)
-        )
-    else:
-        qn = np.sqrt(np.einsum("ij,ij->i", X, X, dtype=np.float32))
-        block = np.abs(
-            np.float32(1.0) - dot / (g.norms[lo:hi][None, :] * qn[:, None])
-        )
-    D = np.memmap(
-        shm_path, dtype=np.float32, mode="r+", shape=(shm_rows, v.shape[0])
-    )
-    D[:wave_n, lo:hi] = block
-    del D
-    # per-item block argmin (nearly free): the parent reduces these to
-    # each item's nearest prefix vector and LOCALITY-SORTS the wave by
-    # it before stage B — same-cluster items then share their candidate
-    # vectors, so a stage-B chunk's scattered gathers become
-    # cache-resident (the random-gather wall at 32 children, measured)
-    bi = block.argmin(axis=1)
-    return (bi + lo).astype(np.int64), block[np.arange(wave_n), bi]
-
-
-def _build_fork_gemm_rows(args):
-    """Stage B of the column-tiled exact wave: per-item top-efC and
-    all-level neighbor selection straight from the shm distance rows."""
-    item_ids, wlo, upto, by_level, shm_path, shm_rows = args
-    g, v, efc, levels = _BUILD_FORK_GEMM
-    D = np.memmap(
-        shm_path, dtype=np.float32, mode="r", shape=(shm_rows, v.shape[0])
-    )
-    return [
-        (x, _exact_item_select(g, D[x - wlo, :upto], x, upto, efc, by_level, levels))
-        for x in item_ids
-    ]
 
 
 class HnswGraph:
@@ -581,43 +440,6 @@ class HnswGraph:
                 self.adj[node][level].discard(n)
                 self.adj[n].get(level, set()).discard(node)
 
-    # -- insert (index/hnsw.go:80-140) ---------------------------------
-    def insert(self, vec: np.ndarray, level: int | None = None) -> int:
-        for a_ in ("q_codes", "q_scale", "q_min", "q_norms2", "q_norms"):
-            if hasattr(self, a_):  # stale after any mutation
-                delattr(self, a_)
-        idx = len(self.levels)
-        vec = np.asarray(vec, dtype=np.float32).reshape(1, -1)
-        self.vectors = np.concatenate([self.vectors, vec]) if idx else vec.copy()
-        q = self.vectors[idx]
-        if level is None:
-            level = self.random_level()
-        self.levels.append(level)
-        self.adj.append({l: set() for l in range(level + 1)})
-
-        if self.entrypoint < 0:
-            self.entrypoint = idx
-            return idx
-
-        ep = self.entrypoint
-        max_level = self.levels[ep]
-        cur = ep
-        for l in range(max_level, level, -1):
-            cur = self._greedy_closest(q, cur, l)
-        for l in range(min(level, max_level), -1, -1):
-            cand = self._search_level(q, cur, self.cfg.ef_construction, l)
-            nbrs = self._select_neighbors(cand, self.cfg.m, l, q)
-            for _, n in nbrs:
-                self.adj[idx][l].add(n)
-                self.adj[n].setdefault(l, set()).add(idx)
-                if len(self.adj[n][l]) > self._cap(l):
-                    self._prune(n, l)
-            if cand:
-                cur = cand[0][1]
-        if level > max_level:
-            self.entrypoint = idx  # CAS analogue (index/hnsw.go:136)
-        return idx
-
     def thaw_adjacency(self) -> "HnswGraph":
         """Rebuild the python adjacency sets from the padded matrices —
         the inverse of finalize(), for mutating a reconstructed graph
@@ -644,6 +466,9 @@ class HnswGraph:
         (beam search on the current python adjacency).  O(batch · search)
         compute, independent of partition size.  Invalidates the
         finalized pads (callers re-finalize for the fast search path)."""
+        for a_ in ("q_codes", "q_scale", "q_min", "q_norms2", "q_norms"):
+            if hasattr(self, a_):  # stale after any mutation
+                delattr(self, a_)
         mats = np.ascontiguousarray(mats, dtype=np.float32).reshape(
             -1, self.dim or mats.shape[-1]
         )
@@ -1401,8 +1226,6 @@ class HnswGraph:
         mat: np.ndarray,
         levels: list[int],
         config: HnswConfig,
-        wave: int = 256,
-        brute_threshold: int | None = None,
         workers: int = 1,
     ) -> "HnswGraph":
         """Deterministic wave-batched build with a GEMM fast path.
@@ -1422,33 +1245,34 @@ class HnswGraph:
 
         Candidate generation has two kernels:
 
-        - **exact GEMM** while the built prefix is ≤ ``brute_threshold``
-          (default 4·efConstruction): with a beam of efC over a graph
-          that small, the beam visits ~everything anyway — so the
-          candidate list IS the exact top-efC, computable as one BLAS
-          GEMM per wave instead of thousands of gather-einsum beam
-          steps.  Upper-level candidates come from the same distance
-          row restricted to that level's nodes.  Same-or-better edge
-          quality, order-of-magnitude faster on partition sizes near
-          the construction beam width (the reference-protocol efC=500
-          case).
+        - **exact GEMM** while the built prefix is ≤ the brute
+          threshold: with a beam of efC over a graph that small, the
+          beam visits ~everything anyway — so the candidate list IS the
+          exact top-efC, computable as one BLAS GEMM per wave instead of
+          thousands of gather-einsum beam steps.  Upper-level candidates
+          come from the same distance row restricted to that level's
+          nodes.  Same-or-better edge quality, order-of-magnitude faster
+          on partition sizes near the construction beam width (the
+          reference-protocol efC=500 case).
         - **batched beam** beyond the threshold — the asymptotic path
           for large partitions.  Level-0 candidates come from the
           lock-step batched beam; upper-level candidates are EXACT
           distance rows against that level's (16×-smaller per level)
           node set — cheaper AND better than beaming the upper levels.
 
-        ``workers`` > 1 splits each wave's candidate search + neighbor
-        selection across FORKED worker processes (the pre-wave graph is
-        inherited copy-on-write — no serialization; each wave re-forks
-        so children always see the committed graph).  Commits stay
-        single-process and ordered, so the result is bit-identical to
-        workers=1.  This is the reference's concurrent-insert shape
-        (`index/hnsw.go:80-140` is called from NumCPU goroutines) for
-        driver-side single-graph builds; per-partition builds inside
-        Spark tasks keep workers=1 (the task's core is the unit of
-        parallelism there — threads would only fight the GIL, measured
-        net-negative).  Falls back to serial where fork is unavailable.
+        Each kernel has two implementations, picked by
+        ``ckernel.available()``: the compiled wave candidates, selection
+        and level-0 commit run in-process in C, or the serial NumPy
+        GEMM prefix and beam waves run when no C compiler is present.
+
+        ``workers`` is the OpenMP thread count of the C kernel's wave
+        candidate search and upper-level selection (the reference's
+        concurrent-insert shape: `index/hnsw.go:80-140` is called from
+        NumCPU goroutines) for driver-side single-graph builds; the
+        NumPy path ignores it.  Per-item walks are deterministic and
+        commits stay ordered, so every ``workers`` value builds the
+        bit-identical graph.  Per-partition builds inside Spark tasks
+        keep workers=1 (the task's core is the unit of parallelism).
         """
         g = cls(mat.shape[1], config)
         g.vectors = np.ascontiguousarray(mat, dtype=np.float32)
@@ -1460,9 +1284,6 @@ class HnswGraph:
             # f16 shadow for neighbor-selection gathers (see
             # _select_neighbors); built once, dropped before return
             g.vectors_h = v.astype(np.float16)
-        import multiprocessing as _mp
-
-        can_fork = workers > 1 and "fork" in _mp.get_all_start_methods()
         from anndb_spark.operators import ckernel as _ckm
 
         ck_ok = _ckm.available() and config.space in (
@@ -1470,40 +1291,25 @@ class HnswGraph:
             "cosine",
             "manhattan",
         )
-        if brute_threshold is None:
-            if ck_ok:
-                # keep the exact-GEMM prefix: it seeds a well-formed
-                # core graph that every later beam navigates cheaply —
-                # on a noisy 784-d corpus a beam-built prefix degrades
-                # ALL downstream walks (measured: 60k single-graph
-                # build 23 s → 205 s with no prefix).  But run the
-                # prefix IN-PROCESS (threaded BLAS + native
-                # selection), never through the fork pool: the pool's
-                # per-wave round trips cost ~0.45 s each — 4.3 s of a
-                # 6.3 s 15k/784 build (measured).  MUST not depend on
-                # `workers` (the workers>1 build is asserted
-                # bit-identical to serial).
-                brute_threshold = max(4 * config.ef_construction, 2_000)
-            elif can_fork:
-                # with a fork pool the GEMM path parallelizes perfectly
-                # (BLAS block per slice + per-row argpartition across
-                # workers) while staying EXACT — it beats the beam path
-                # up to ~100k prefix regardless of dimension, because
-                # the beam's ~efC·cap gathered distance evals per item
-                # cost about as much as a BLAS row that long
-                brute_threshold = max(4 * config.ef_construction, 120_000)
-            else:
-                # serial: beam-worthy once a brute candidate row costs
-                # more than the beam's visit budget — scale the cutover
-                # inversely with dimension (at 8-d a full GEMM row is
-                # ~free; at 784-d the 4·efC bound dominates)
-                brute_threshold = max(
-                    4 * config.ef_construction, 200_000 // max(mat.shape[1], 1)
-                )
+        if ck_ok:
+            # keep the exact-GEMM prefix: it seeds a well-formed core
+            # graph that every later beam navigates cheaply — on a
+            # noisy 784-d corpus a beam-built prefix degrades ALL
+            # downstream walks (measured: 60k single-graph build
+            # 23 s → 205 s with no prefix)
+            brute_threshold = max(4 * config.ef_construction, 2_000)
+        else:
+            # NumPy: beam-worthy once a brute candidate row costs more
+            # than the beam's visit budget — scale the cutover inversely
+            # with dimension (at 8-d a full GEMM row is ~free; at 784-d
+            # the 4·efC bound dominates)
+            brute_threshold = max(
+                4 * config.ef_construction, 200_000 // max(mat.shape[1], 1)
+            )
         g.norms2 = np.einsum("ij,ij->i", v, v, dtype=np.float32)
         g.norms = np.sqrt(g.norms2)
         # full-length norms are live for the whole build → _prune may
-        # use the native selection (cleared before return: insert()
+        # use the native selection (cleared before return: insert_many()
         # mutates vectors without maintaining them)
         g._ck_prune_ok = ck_ok
         space = config.space
@@ -1666,7 +1472,7 @@ class HnswGraph:
 
         # bootstrap sequentially (exact candidates, one gemv per item):
         # tiny graphs change too fast for stale pre-wave candidates
-        boot = min(n, wave)
+        boot = min(n, _BUILD_WAVE)
         for x in range(boot):
             drow = (
                 dist_rows(v[x : x + 1], x)[0]
@@ -1693,188 +1499,26 @@ class HnswGraph:
                 g._prune(node, level)
             overflow.clear()
 
-        def cand_work(slice_ids: list[int]):
-            """Candidate beams + level-0 neighbor selection for a wave
-            slice (read-only on the pre-wave graph)."""
-            res = _hit_lists(*g.search_fast_batch(v[slice_ids], k=efc, ef=efc))
-            return [
-                (x, g._select_neighbors(cand, g.cfg.m, 0, v[x]))
-                for x, cand in zip(slice_ids, res)
-            ]
-
         dirty: set[int] = set()
         finalized = False
         ck_commit = None
-        gemm_pool = None
-        shm_path = None
-        # max wave size → shm distance-buffer row count (column-tiled path)
-        _maxw, _ii = 0, boot
-        while _ii < n:
-            _jj = min(n, _ii + max(wave, _ii // 10))
-            if _ii <= brute_threshold:
-                _maxw = max(_maxw, _jj - _ii)
-            _ii = _jj
-        _prof = _os_mod.environ.get("ANNDB_BUILD_PROF") == "1"
-        _t = {"fork": 0.0, "commit": 0.0, "flush": 0.0, "serial": 0.0}
-        import time as _time_mod
-
         i = boot
         while i < n:
             # waves grow with the graph (≤10% stale candidates per wave)
-            j = min(n, i + max(wave, i // 10))
+            j = min(n, i + max(_BUILD_WAVE, i // 10))
             if i <= brute_threshold:
-                ids = list(range(i, j))
-                if (
-                    can_fork
-                    and not ck_ok  # ck builds: short prefix, in-process
-                    and not config.extend_candidates
-                    and len(ids) >= 8 * workers
-                ):
-                    # children forked ONCE for the regime (static
-                    # snapshot: vectors/norms/config/levels); each wave
-                    # ships only (slice, prefix bound, upper-level
-                    # pools) and gets back (id, {level: neighbors}) —
-                    # the parent commit is pure set updates in id order
-                    global _BUILD_FORK_GEMM
-                    _t0 = _time_mod.perf_counter()
-                    if gemm_pool is None:
-                        _BUILD_FORK_GEMM = (g, v, efc, levels)
-                        ctx = _mp.get_context("fork")
-                        gemm_pool = ctx.Pool(
-                            workers, initializer=_limit_blas_threads
-                        )
-                    def _shm_free_bytes() -> int:
-                        try:
-                            st = _os_mod.statvfs("/dev/shm")
-                            return st.f_bavail * st.f_frsize
-                        except OSError:
-                            return 0
-
-                    if (
-                        shm_path is None
-                        and space != "manhattan"
-                        and _os_mod.path.isdir("/dev/shm")
-                        and _maxw * n * 4 <= 8e9
-                        # tmpfs defaults to RAM/2 — check ACTUAL free
-                        # space (with 25% headroom) so pool children
-                        # writing the memmap can't SIGBUS on ENOSPC
-                        # (ADVICE r5); too small → non-shm fallback
-                        and _maxw * n * 4 <= 0.75 * _shm_free_bytes()
-                    ):
-                        import tempfile as _tf
-
-                        # sweep buffers leaked by crashed builds (files
-                        # are pid-tagged; a dead owner pid → unlink)
-                        for _old in _glob_mod.glob("/dev/shm/anndb-build-*"):
-                            try:
-                                _opid = int(_old.rsplit("-", 2)[-2])
-                                _os_mod.kill(_opid, 0)
-                            except (ValueError, ProcessLookupError):
-                                try:
-                                    _os_mod.unlink(_old)
-                                except OSError:
-                                    pass
-                            except OSError:
-                                pass
-                        fd, shm_path = _tf.mkstemp(
-                            dir="/dev/shm",
-                            prefix=f"anndb-build-{_os_mod.getpid()}-",
-                        )
-                        _os_mod.close(fd)
-                        mm = np.memmap(
-                            shm_path, dtype=np.float32, mode="w+",
-                            shape=(_maxw, n),
-                        )
-                        del mm
-                    bl_snap = {l: list(ns) for l, ns in by_level.items()}
-                    item_chunks = [
-                        c.tolist()
-                        for c in np.array_split(np.asarray(ids), 2 * workers)
-                        if len(c)
-                    ]
-                    if shm_path is not None:
-                        # stage A: column-tiled GEMM into the shm buffer
-                        # (each child's column block is cache-resident);
-                        # stage B: per-item selection from the shm rows
-                        wave_n = j - i
-                        cb = np.linspace(0, i, workers + 1).astype(int)
-                        mins = gemm_pool.map(
-                            _build_fork_gemm_cols,
-                            [
-                                (int(cb[b]), int(cb[b + 1]), i, wave_n,
-                                 shm_path, _maxw)
-                                for b in range(workers)
-                                if cb[b + 1] > cb[b]
-                            ],
-                        )
-                        _t["stageA"] = _t.get("stageA", 0.0) + (
-                            _time_mod.perf_counter() - _t0
-                        )
-                        mv = np.stack([m_[1] for m_ in mins])
-                        mi = np.stack([m_[0] for m_ in mins])
-                        bb = mv.argmin(axis=0)
-                        nearest = mi[bb, np.arange(wave_n)]
-                        order = np.argsort(nearest, kind="stable")
-                        ids_sorted = (np.asarray(ids)[order]).tolist()
-                        parts = gemm_pool.map(
-                            _build_fork_gemm_rows,
-                            [
-                                (c.tolist(), i, i, bl_snap, shm_path, _maxw)
-                                for c in np.array_split(
-                                    np.asarray(ids_sorted), 2 * workers
-                                )
-                                if len(c)
-                            ],
-                        )
-                        parts = [sorted(
-                            (p for part in parts for p in part),
-                            key=lambda t_: t_[0],
-                        )]
-                    else:
-                        parts = gemm_pool.map(
-                            _build_fork_gemm_work,
-                            [(c, i, bl_snap) for c in item_chunks],
-                        )
-                    _t1 = _time_mod.perf_counter()
-                    for part in parts:
-                        for x, pre in part:
-                            g._commit_exact_pre(
-                                x, levels[x], pre, by_level, overflow
-                            )
-                    _t2 = _time_mod.perf_counter()
-                    _t["fork"] += _t1 - _t0
-                    _t["commit"] += _t2 - _t1
-                else:
-                    # blocked so the (rows × i) distance matrix stays
-                    # under ~1 GB at any prefix
-                    _t0 = _time_mod.perf_counter()
-                    blk = max(256, int(2.5e8 // max(i, 1)))
-                    for s in range(i, j, blk):
-                        D = dist_rows(v[s : min(j, s + blk)], i)
-                        for x in range(s, min(j, s + blk)):
-                            commit_exact(x, D[x - s], i)
-                    _t["serial"] += _time_mod.perf_counter() - _t0
-                # backlink prunes are DEFERRED to the end of the GEMM
-                # regime: candidate generation here never reads
-                # adjacency, so over-cap lists are invisible until the
-                # graph is actually used — one mutual-agreement prune
-                # per over-cap vertex instead of one per wave it
-                # overflowed in (~3× fewer), computable in parallel
-                if _prof:
-                    print(f"wave {i}->{j}: {_t}", flush=True)
+                # blocked so the (rows × i) distance matrix stays under
+                # ~1 GB at any prefix; backlink prunes are deferred to
+                # flush_final at the end of the GEMM regime (candidate
+                # generation here never reads adjacency)
+                blk = max(256, int(2.5e8 // max(i, 1)))
+                for s in range(i, j, blk):
+                    D = dist_rows(v[s : min(j, s + blk)], i)
+                    for x in range(s, min(j, s + blk)):
+                        commit_exact(x, D[x - s], i)
                 i = j
                 continue
             if not finalized:
-                if gemm_pool is not None:
-                    gemm_pool.terminate()
-                    gemm_pool = None
-                    _BUILD_FORK_GEMM = None
-                if shm_path is not None:
-                    try:
-                        _os_mod.unlink(shm_path)
-                    except OSError:
-                        pass
-                    shm_path = None
                 flush_final()  # GEMM-regime deferred prunes, then pads
                 g.finalize()  # build pads once at the kernel transition
                 finalized = True
@@ -1890,31 +1534,20 @@ class HnswGraph:
                     except Exception:
                         ck_commit = None
             ids = list(range(i, j))
-            _t0 = _time_mod.perf_counter()
             g._refresh_pads(
                 dirty, len(g.levels), skip_level0=ck_commit is not None
-            )
-            _t["pads"] = _t.get("pads", 0.0) + (
-                _time_mod.perf_counter() - _t0
             )
             dirty.clear()
             nbrs0 = None
             sel_wave = None
             if ck_ok:
                 # native fused candidate beams + neighbor selection,
-                # OpenMP fan-out across the machine's cores IN-PROCESS —
-                # no per-wave fork pool (32 forks + teardown per wave
-                # cost more than the searches) and no per-candidate
-                # python tuples (500-wide lists per item dominated the
-                # first cut, measured).  Per-item walks are
-                # deterministic, so workers>1 stays bit-identical to
-                # workers=1.
-                _t0 = _time_mod.perf_counter()
+                # OpenMP fan-out across ``workers`` threads in-process
+                # (no per-candidate python tuples: 500-wide lists per
+                # item dominated the first cut, measured)
                 r = g._build_wave_candidates_ck(
                     v[ids], efc, config.m, threads=max(workers, 1)
                 )
-                _tk = _time_mod.perf_counter()
-                _t["kern"] = _t.get("kern", 0.0) + (_tk - _t0)
                 if r is not None:
                     if ck_commit is not None:
                         sel_wave = r[0]  # int32 (nw, m) straight to C
@@ -1935,29 +1568,14 @@ class HnswGraph:
                     ck_commit.commit_wave([], None, strict=True)
                     ck_commit.sync_back(g)
                     ck_commit = None
-                _t["fork"] += _time_mod.perf_counter() - _t0
-            if sel_wave is not None or nbrs0 is not None:
-                pass
-            elif can_fork and len(ids) >= 8 * workers:
-                # fork AFTER the pads refresh: children inherit the
-                # committed pre-wave graph copy-on-write and search
-                # their slice; only (id, selected-neighbor) pairs come
-                # back.  A fresh pool per wave keeps replicas in sync.
-                global _BUILD_FORK_GRAPH
-                _BUILD_FORK_GRAPH = (g, v, efc)
-                chunks = [
-                    c.tolist()
-                    for c in np.array_split(np.asarray(ids), 2 * workers)
-                    if len(c)
-                ]
-                ctx = _mp.get_context("fork")
-                with ctx.Pool(workers) as pool:
-                    parts = pool.map(_build_fork_cand_work, chunks)
-                _BUILD_FORK_GRAPH = None
-                nbrs0 = {x: nb for part in parts for x, nb in part}
-            else:
-                nbrs0 = dict(cand_work(ids))
-            _t0 = _time_mod.perf_counter()
+            if sel_wave is None and nbrs0 is None:
+                # NumPy beams + level-0 selection (read-only on the
+                # pre-wave graph)
+                res = _hit_lists(*g.search_fast_batch(v[ids], k=efc, ef=efc))
+                nbrs0 = {
+                    x: g._select_neighbors(cand, config.m, 0, v[x])
+                    for x, cand in zip(ids, res)
+                }
             upper_sel = None
             if ck_ok:
                 # batch the wave's upper-level selections natively: all
@@ -2006,24 +1624,8 @@ class HnswGraph:
                         x, levels[x], nbrs0[x], by_level, i, dirty,
                         overflow, upper_sel=upper_sel,
                     )
-            _t["serial"] += _time_mod.perf_counter() - _t0
-            _t0 = _time_mod.perf_counter()
-            _t.setdefault("prunes", 0)
-            _t["prunes"] += len(overflow)
             flush_overflow(dirty, strict=False)
-            _t["flush"] += _time_mod.perf_counter() - _t0
-            if _prof:
-                print(f"beam wave {i}->{j}: {_t}", flush=True)
             i = j
-        if gemm_pool is not None:
-            gemm_pool.terminate()
-            _BUILD_FORK_GEMM = None
-        if shm_path is not None:
-            try:
-                _os_mod.unlink(shm_path)
-            except OSError:
-                pass
-            shm_path = None
         if not finalized:
             flush_final()  # GEMM-only build: one deferred prune pass
         elif ck_commit is not None:
@@ -2045,39 +1647,6 @@ class HnswGraph:
             del g.vectors_h  # build-time only (searches never touch it)
         g._ck_prune_ok = False
         return g
-
-    def _commit_exact_pre(
-        self,
-        x: int,
-        L: int,
-        nbrs_by_level: dict[int, list[tuple[float, int]]],
-        by_level: dict[int, list[int]],
-        overflow: set[tuple[int, int]],
-    ) -> None:
-        """Ordered commit of one wave item whose per-level neighbor
-        selections were computed against the pre-wave graph (the
-        fork-GEMM path).  Pure set updates — identical graph to the
-        serial ``commit_exact`` because selection never reads adjacency
-        (``extend_candidates`` builds fall back to serial)."""
-        assert x == len(self.levels)
-        self.levels.append(L)
-        self.adj.append({l: set() for l in range(L + 1)})
-        if self.entrypoint < 0:
-            self.entrypoint = x
-        else:
-            max_level = self.levels[self.entrypoint]
-            for l, nbrs in nbrs_by_level.items():
-                if l > min(L, max_level):
-                    continue  # unreachable in practice: nonempty pool ⇒ pre-wave max ≥ l
-                for _, nb in nbrs:
-                    self.adj[x][l].add(nb)
-                    self.adj[nb].setdefault(l, set()).add(x)
-                    if len(self.adj[nb][l]) > self._cap(l):
-                        overflow.add((nb, l))
-            if L > max_level:
-                self.entrypoint = x
-        for l in range(1, L + 1):
-            by_level.setdefault(l, []).append(x)
 
     def _commit_wave_item(
         self,

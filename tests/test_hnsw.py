@@ -58,7 +58,7 @@ def test_incremental_insert_matches_semantics():
     g = HnswGraph(4, cfg)
     rng = np.random.default_rng(3)
     for _ in range(100):
-        g.insert(rng.normal(0, 1, 4))
+        g.insert_many([rng.normal(0, 1, 4)], [g.random_level()])
     assert g.entrypoint >= 0
     assert g.levels[g.entrypoint] == max(g.levels)
     q = rng.normal(0, 1, 4).astype(np.float32)
@@ -531,10 +531,11 @@ def test_save_graph_partition_single_graph_fast_path(spark, tmp_path):
 
 _BUILD_HASH_SCRIPT = """
 import hashlib
+import sys
 import numpy as np
 from anndb_spark.operators.hnsw import HnswConfig, HnswGraph
 
-n, dim = 3000, 24
+n, dim = int(sys.argv[1]), int(sys.argv[2])
 mat = np.random.default_rng(23).normal(0, 1, (n, dim)).astype(np.float32)
 cfg = HnswConfig(m=8, ef_construction=80, heuristic=True)
 lr = np.random.default_rng(5)
@@ -557,28 +558,33 @@ def test_build_content_hash_stable_across_processes():
     """A fixed-seed build is bit-deterministic: two fresh interpreters
     with different PYTHONHASHSEED values (set iteration order), each
     building with workers=1 and workers=4, produce one content hash of
-    (entrypoint, levels, per-level sorted adjacency)."""
+    (entrypoint, levels, per-level sorted adjacency).  Two inputs: a
+    3000×24 build on the default kernel, and a 2500×128 build with the
+    C kernel off, whose NumPy path crosses from the GEMM prefix to beam
+    waves at 200000 // 128 = 1562 rows."""
     import os
     import subprocess
     import sys
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hashes = []
-    for seed in ("0", "12345"):
-        env = dict(os.environ, PYTHONHASHSEED=seed)
-        env["PYTHONPATH"] = os.pathsep.join(
-            p for p in (root, env.get("PYTHONPATH")) if p
-        )
-        out = subprocess.run(
-            [sys.executable, "-c", _BUILD_HASH_SCRIPT],
-            env=env, capture_output=True, text=True, check=True, timeout=600,
-        )
-        hashes += out.stdout.split()
-    assert len(hashes) == 4 and len(set(hashes)) == 1, hashes
+    cases = (("3000", "24", {}), ("2500", "128", {"ANNDB_CKERNEL": "0"}))
+    for n, dim, extra_env in cases:
+        hashes = []
+        for seed in ("0", "12345"):
+            env = dict(os.environ, PYTHONHASHSEED=seed, **extra_env)
+            env["PYTHONPATH"] = os.pathsep.join(
+                p for p in (root, env.get("PYTHONPATH")) if p
+            )
+            out = subprocess.run(
+                [sys.executable, "-c", _BUILD_HASH_SCRIPT, n, dim],
+                env=env, capture_output=True, text=True, check=True, timeout=600,
+            )
+            hashes += out.stdout.split()
+        assert len(hashes) == 4 and len(set(hashes)) == 1, (n, dim, hashes)
 
 
 def test_fork_parallel_build_identical_to_serial():
-    """workers>1 must produce a bit-identical graph (fork replicas only
+    """workers>1 must produce a bit-identical graph (extra threads only
     parallelize read-only candidate work; commits stay ordered)."""
     rng = np.random.default_rng(23)
     n, dim = 3000, 24
@@ -636,7 +642,7 @@ def test_quantized_traversal_exact_rerank():
     # mutation drops stale codes (and search still works)
     g.thaw_adjacency()
     assert not hasattr(g, "q_codes")
-    g.insert(Q[0])
+    g.insert_many(Q[:1], [g.random_level()])
     g.finalize()
     again, _ = g.search_fast_batch(Q[:5], 5)
     assert again.shape == (5, 5) and (again >= 0).all()
