@@ -1,19 +1,18 @@
 """Thread-local reused scratch buffers for NumPy scoring kernels.
 
-The allocation discipline established by the r12 scatter-leg fix
-(`hnsw._scratch_mat`, PLANS r12) and extended to IVF in r13
-(`ivf._scratch_mat64`): a fresh multi-MB allocation per call in a
+One allocator for every (q, n)-sized intermediate in the package: the
+HNSW brute scan, IVF's `_pairwise`, the exact-kNN GEMM join and the
+PQ/IVFPQ ADC scanners.  A fresh multi-MB allocation per call in a
 32-way-concurrent Arrow worker path is a latent 100x first-touch tail
 on fault-slow hosts (measured: p90 5.6 s per 25 MB of fresh pages
-under 32-way concurrency; the r13 ivf micro A/B read p90 13.1 s fresh
-vs 0.31 s reused at the (64, 50k) float64 shape), while reused pages
-cost zero.  This module is the shared form for the PQ/IVFPQ ADC
-scanners, whose per-chunk score matrices are the LARGEST per-call
-allocations in the package ((nq, 65536) float32 per row chunk, plus
-the hidden (nq, n) int64 index matrix inside whole-matrix
-``np.argpartition(axis=1)``).
+under 32-way concurrency; an IVF micro A/B read p90 13.1 s fresh vs
+0.31 s reused at the (64, 50k) float64 shape), while reused pages
+cost zero.  The largest users are the ADC scanners ((nq, 65536)
+float32 per row chunk) and the hidden (nq, n) int64 index matrix
+inside whole-matrix ``np.argpartition(axis=1)``, which `argpart_rows`
+avoids.
 
-Contract (same as the hnsw/ivf locals):
+Contract:
 
 * one flat capacity buffer per (thread, tag), grown monotonically;
 * a buffer above ``ANNDB_SCRATCH_CAP_BYTES`` (default 256 MB) is

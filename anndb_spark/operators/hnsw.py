@@ -22,8 +22,9 @@ UuidMod-compatible partitioner; `applyInPandas` builds one independent
 HNSW per partition (the reference's unit of distribution — one graph
 per partition, `storage/partition.go`); search fans queries out to every
 partition (one grouped scan of the index DataFrame, or one task per
-saved partition in `search_index_path`), takes a per-partition top-k,
-and merges globally — exactly the reference's scatter/gather
+(saved partition, query chunk) in `search_index_path`, whose plan, cache
+and merge are the shared `_serve` scatter/gather), takes a per-partition
+top-k, and merges globally — exactly the reference's scatter/gather
 (`storage/dataset.go:374-431`) expressed as partial + final top-k.
 Each task holds exactly one partition's graph in memory, which is the
 same sizing contract the reference imposes on its nodes.
@@ -40,12 +41,15 @@ import heapq
 import json
 import math
 from dataclasses import asdict, dataclass, field
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from anndb_spark.operators import _serve
+from anndb_spark.operators._scratch import scratch_mat
+from anndb_spark.operators.ivf import _pairwise
 
 # ---------------------------------------------------------------------------
 # In-memory NumPy HNSW (per-partition kernel)
@@ -1152,7 +1156,7 @@ class HnswGraph:
         intermediates and the whole-matrix argpartition's internal
         index array were the BENCH_r11 hnsw_search_1kq 6x regression
         on byte-identical code.  So: every (q, n)-sized intermediate
-        lands in a process-level capacity buffer (`_scratch_mat` —
+        lands in a thread-local capacity buffer (`_scratch.scratch_mat` —
         reused across graphs AND shapes), and top-k selection runs
         per row (each row's introselect scratch is KBs, served from
         the malloc arena).  Row-wise argpartition is the same
@@ -1168,7 +1172,7 @@ class HnswGraph:
             return _pad_hits(nq, k)
         kk = min(k, n)
         space = self.cfg.space
-        d = _scratch_mat("brute_d", nq, n)
+        d = scratch_mat("brute_d", nq, n)
         if space == "manhattan":
             # blocked |x-y| sum through a reused cube buffer: the old
             # broadcast form materialized a fresh (q, n, dim) cube
@@ -1179,7 +1183,7 @@ class HnswGraph:
             step = max(1, int(2_000_000 // max(n * dim, 1)))
             for s in range(0, nq, step):
                 e = min(s + step, nq)
-                cube = _scratch_mat(
+                cube = scratch_mat(
                     "brute_cube", (e - s) * n, dim
                 ).reshape(e - s, n, dim)
                 np.subtract(queries[s:e, None, :], v[None, :, :], out=cube)
@@ -1201,7 +1205,7 @@ class HnswGraph:
                 # the norm product must stay ONE multiply (splitting
                 # into two in-place divisions would change rounding);
                 # it gets its own reused buffer
-                prod = _scratch_mat("brute_prod", nq, n)
+                prod = scratch_mat("brute_prod", nq, n)
                 np.multiply(self.norms[None, :], qn[:, None], out=prod)
                 d /= prod
                 np.subtract(np.float32(1.0), d, out=d)
@@ -2024,20 +2028,7 @@ def _check_config(idx_pdf: pd.DataFrame, cfg: HnswConfig) -> None:
             )
 
 
-# Reused-python-worker graph cache: reconstructed graphs survive across
-# jobs in the same worker process (spark.python.worker.reuse), so a
-# *serving* workload — many search batches over one index — pays
-# reconstruction once per (worker, partition), not once per batch.  The
-# analogue of the reference keeping its graphs resident in memory
-# between requests.  Keyed by caller-supplied token: the caller owns
-# versioning (pass a new token after rebuilding the index).
-#
-# Byte-capped LRU (not a row-count FIFO): pid→worker assignment is
-# effectively random per job, so over a serving session each worker
-# accumulates the graphs it has served — the cap bounds worker memory,
-# sized via ANNDB_GRAPH_CACHE_BYTES (default 1 GiB).
 import os as _os_mod
-import threading as _threading_mod
 
 # matrices with at least this many elements walk on uint8 codes with an
 # exact float32 rerank (ANNDB_QUANT_MIN_ELEMS=0 forces quantization, a
@@ -2049,51 +2040,6 @@ _QUANT_MIN_ELEMS = int(
     _os_mod.environ.get("ANNDB_QUANT_MIN_ELEMS", str(1 << 28))
 )
 
-_GRAPH_CACHE: dict = {}
-_GRAPH_CACHE_MAX_BYTES = int(
-    _os_mod.environ.get("ANNDB_GRAPH_CACHE_BYTES", str(1 << 30))
-)
-
-# Process-level scratch for the brute-search kernels: ONE flat
-# capacity buffer per purpose, reused across every graph and batch
-# shape (grown monotonically, exact-shape views are contiguous because
-# they reshape a flat prefix).  Fresh multi-MB allocations in the hot
-# path are the r12 scatter-leg pathology: under 32 concurrent workers
-# a first touch of fresh pages stalled for seconds at the tail
-# (p90 5.6 s / 25 MB measured, PLANS r12) while reused pages cost
-# zero.  Buffers are THREAD-local (ADVICE r12): Spark python workers
-# run one task at a time, but a driver-local serve (or an embedder
-# calling the graph from a thread pool) may enter concurrently — a
-# shared dict would hand two threads the same distance matrix.
-#
-# Memory bound (ADVICE r12): per thread, one buffer per tag (3 tags),
-# each <= max observed (nq x n x 4B) for that tag — outside the
-# ANNDB_GRAPH_CACHE_BYTES accounting.  A buffer above
-# ANNDB_SCRATCH_CAP_BYTES is released when the next request needs
-# under a quarter of it, so one outlier batch cannot pin hundreds of
-# MB for process lifetime; steady-state homogeneous batches still
-# never reallocate.
-_SCRATCH_BUFS = _threading_mod.local()
-_SCRATCH_CAP_BYTES = int(
-    _os_mod.environ.get("ANNDB_SCRATCH_CAP_BYTES", str(256 << 20))
-)
-
-
-def _scratch_mat(tag: str, rows: int, cols: int) -> np.ndarray:
-    bufs = getattr(_SCRATCH_BUFS, "bufs", None)
-    if bufs is None:
-        bufs = _SCRATCH_BUFS.bufs = {}
-    need = rows * cols
-    flat = bufs.get(tag)
-    if (
-        flat is None
-        or flat.size < need
-        or (flat.nbytes > _SCRATCH_CAP_BYTES and need * 4 < flat.size)
-    ):
-        flat = np.empty(need, dtype=np.float32)
-        bufs[tag] = flat
-    return flat[:need].reshape(rows, cols)
-
 
 def _graph_bytes(g: "HnswGraph") -> int:
     b = g.vectors.nbytes + 16 * len(g.levels)
@@ -2102,34 +2048,13 @@ def _graph_bytes(g: "HnswGraph") -> int:
     return b
 
 
-def _cache_get(key):
-    if key is None or key not in _GRAPH_CACHE:
-        return None
-    val = _GRAPH_CACHE.pop(key)  # re-insert → LRU order
-    _GRAPH_CACHE[key] = val
-    return val[:2]
-
-
-def _cache_put(key, ids, g):
-    if key is None:
-        return
-    nb = _graph_bytes(g)
-    if nb > _GRAPH_CACHE_MAX_BYTES:
-        return
-    total = nb + sum(v[2] for v in _GRAPH_CACHE.values())
-    while total > _GRAPH_CACHE_MAX_BYTES and _GRAPH_CACHE:
-        _, _, old_nb = _GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE)))
-        total -= old_nb
-    _GRAPH_CACHE[key] = (ids, g, nb)
-
-
 # ---------------------------------------------------------------------------
 # Shared-memory (L2) graph cache: ONE physical copy per host
 # ---------------------------------------------------------------------------
-# The per-process LRU above gives each python worker a PRIVATE graph copy:
-# 32 workers × 200 MB is 6.4 GB of duplicated pages, and the (bandwidth-
-# bound) beam kernel's random gathers then miss cache independently in
-# every worker.  The L2 layer materializes the finalized graph ONCE into
+# The per-process LRU (`_serve.CACHE`) gives each python worker a
+# PRIVATE graph copy: 32 workers × 200 MB is 6.4 GB of duplicated pages,
+# and the (bandwidth-bound) beam kernel's random gathers then miss cache
+# independently in every worker.  The L2 layer materializes the finalized graph ONCE into
 # /dev/shm as read-only npy files and every worker mmaps them — one
 # physical page set shared by all workers on the host (the resident-index
 # contract a serving node actually wants).  Writers build into a private
@@ -2517,44 +2442,6 @@ def _use_brute(
     )
 
 
-def _parse_queries(queries, dim: int = 0) -> tuple[np.ndarray, np.ndarray]:
-    """A query batch → (query-id strings, float32 (nq, dim) matrix).
-
-    Accepts ``[(query_id, vector)]`` or the zero-copy ``(ids, matrix)``
-    form for large batches.  An empty batch parses to a (0, dim) matrix
-    (``np.array([])`` is (0,), which no distance kernel can multiply);
-    callers that route by centroids pass their width."""
-    if isinstance(queries, tuple):
-        qids, qmat = queries
-        qmat = np.ascontiguousarray(qmat, dtype=np.float32)
-    else:
-        qids = [qid for qid, _ in queries]
-        qmat = np.array([v for _, v in queries], dtype=np.float32)
-    qid_arr = np.array([str(q) for q in qids], dtype=object)
-    if not len(qid_arr):
-        qmat = np.empty((0, dim), dtype=np.float32)
-    return qid_arr, qmat
-
-
-def _route_queries(
-    qmat: np.ndarray, centroids, nprobe: int, space: str
-) -> dict[int, list[int]]:
-    """IVF routing on the driver (a |Q|×K distance matrix over the
-    small centroid array): {cell id: [query rows]} for each query's
-    ``nprobe`` nearest cells, rows ascending."""
-    from anndb_spark.operators.ivf import _pairwise
-
-    cent = np.ascontiguousarray(centroids, dtype=np.float64)
-    npb = min(nprobe, cent.shape[0])
-    d = _pairwise(qmat.astype(np.float64), cent, space)
-    probes = np.argpartition(d, min(npb - 1, d.shape[1] - 1), axis=1)[:, :npb]
-    by_pid: dict[int, list[int]] = {}
-    for qi, ps in enumerate(probes):
-        for p in ps:
-            by_pid.setdefault(int(p), []).append(qi)
-    return by_pid
-
-
 def _result_layout(with_rank: bool, with_metadata: bool) -> tuple[list[str], str]:
     """Column names and DDL of a search result; ``rank`` is present
     where ranks are final in-task (one graph per query)."""
@@ -2636,19 +2523,6 @@ def _assemble_hits(qids, hits, ids, g, with_metadata: bool, columns=None, arrow=
     )
 
 
-def _merge_topk(partials: DataFrame, k: int, with_metadata: bool) -> DataFrame:
-    """Global gather: top-k per query over per-graph partials, ties
-    broken by id (the reference's final merge, `storage/dataset.go:374-387`)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*_result_layout(True, with_metadata)[0])
-    )
-
-
 def search_index(
     index: DataFrame,
     vectors: DataFrame | None,
@@ -2688,7 +2562,7 @@ def search_index(
     persisted one raises instead of silently mis-scoring.
     """
     cfg = config or get_index_config(index) or HnswConfig()
-    qid_arr, qmat = _parse_queries(queries)
+    qid_arr, qmat = _serve.parse_queries(queries)
     return _search_grouped(
         index, vectors, qid_arr, qmat, None, k, max(ef or cfg.ef, k), cfg,
         strategy, brute_flops_threshold, cache_token, with_metadata,
@@ -2716,7 +2590,7 @@ def _search_grouped(
     """The grouped body of `search_index` and `search_index_routed`: one
     task per index partition searches that graph for every query (or,
     routed, only the query rows ``by_pid`` sends to it), then
-    `_merge_topk` keeps the global top k."""
+    `_serve.merge_topk` keeps the global top k."""
     out_cols, out_ddl = _result_layout(False, with_metadata)
 
     def run_graph(pid, idx_pdf: pd.DataFrame, vec_pdf=None) -> pd.DataFrame:
@@ -2724,10 +2598,10 @@ def _search_grouped(
         if not len(idx_pdf) or (by_pid is not None and not qsel):
             return pd.DataFrame(columns=out_cols)
         key = (cache_token, int(pid)) if cache_token is not None else None
-        hit = _cache_get(key)
+        hit = _serve.CACHE.get("hnsw", key)
         if hit is None:
             hit = _graph_from_index(idx_pdf, cfg, vec_pdf)
-            _cache_put(key, *hit)
+            _serve.CACHE.put("hnsw", key, hit, _graph_bytes(hit[1]))
         ids, g = hit
         sub, sub_qids = (
             (qmat, qid_arr) if qsel is None else (qmat[qsel], qid_arr[qsel])
@@ -2769,7 +2643,7 @@ def _search_grouped(
             index.groupBy("partition_id")
         )
         partials = cogrouped.applyInPandas(search_one, schema=out_ddl)
-    return _merge_topk(partials, k, with_metadata)
+    return _serve.merge_topk(partials, k, _result_layout(True, with_metadata)[0])
 
 
 def search_index_routed(
@@ -2797,7 +2671,7 @@ def search_index_routed(
     ``partitionBy(partition_id)`` turns routing into parquet partition
     pruning: nprobe/P of the index bytes are read.
 
-    Routing runs on the driver (`_route_queries`); the pruned index then
+    Routing runs on the driver (`_serve.route`); the pruned index then
     runs `search_index`'s grouped body, each task searching only its
     partition's query rows.  Recall is governed by nprobe exactly like
     IVF (`ivf.search_ivf`), on top of the per-graph beam's ef.
@@ -2806,8 +2680,8 @@ def search_index_routed(
     if "vec" not in index.columns:
         raise ValueError("routed search requires a self-contained index (vec column)")
     cfg = config or get_index_config(index) or HnswConfig()
-    qid_arr, qmat = _parse_queries(queries, np.shape(centroids)[1])
-    by_pid = _route_queries(qmat, centroids, nprobe, cfg.space)
+    qid_arr, qmat = _serve.parse_queries(queries, np.shape(centroids)[1])
+    by_pid = _serve.route(_pairwise(qmat, centroids, cfg.space), nprobe)
     # scan-time pruning: only probed partitions are read at all
     pruned = index.filter(F.col("partition_id").isin(sorted(by_pid)))
     return _search_grouped(
@@ -2847,13 +2721,13 @@ def _acquire_partition_graph(
     full_key = (
         (cache_token, index_ver, pid) if cache_token is not None else None
     )
-    hit = _cache_get(full_key)
+    hit = _serve.CACHE.get("hnsw", full_key)
     if hit is None and full_key is not None:
         d = _shm_dir_for(full_key)
         if d is not None:
             got = _shm_load(d, cfg)
             if got is not None:
-                _cache_put(full_key, *got)
+                _serve.CACHE.put("hnsw", full_key, got, _graph_bytes(got[1]))
                 hit = got
     if hit is not None:
         ids, g = hit
@@ -2876,7 +2750,7 @@ def _acquire_partition_graph(
     # at 1.3 s on the same boots).  A cached brute graph carries the
     # same (n, dim) the auto-threshold test needs; if auto resolves to
     # beam for this batch size, fall through to the full read.
-    bhit = _cache_get(bkey)
+    bhit = _serve.CACHE.get("hnsw", bkey)
     if bhit is not None:
         ids, g = bhit
         if _use_brute(strategy, len(ids), n_sub, g.dim, brute_flops_threshold):
@@ -2888,7 +2762,7 @@ def _acquire_partition_graph(
     dim = len(verts.iloc[0]) if len(verts) else 0
     if _use_brute(strategy, len(verts), n_sub, dim, brute_flops_threshold):
         ids, g = _graph_from_index(idx_pdf, cfg, need_adj=False)
-        _cache_put(bkey, ids, g)
+        _serve.CACHE.put("hnsw", bkey, (ids, g), _graph_bytes(g))
         return ids, g, True
     ids, g = _graph_from_index(idx_pdf, cfg)
     if full_key is not None:
@@ -2899,7 +2773,7 @@ def _acquire_partition_graph(
             got = _shm_load(d, cfg)
             if got is not None:
                 ids, g = got
-    _cache_put(full_key, ids, g)
+    _serve.CACHE.put("hnsw", full_key, (ids, g), _graph_bytes(g))
     return ids, g, False
 
 
@@ -2976,7 +2850,7 @@ def _path_prologue(spark, path, queries, k, ef, config, cache_token, dim=0):
     index_ver = (
         fsutil.index_fingerprint(path) if cache_token is not None else None
     )
-    return (cfg, max(ef or cfg.ef, k), pids, index_ver, *_parse_queries(queries, dim))
+    return (cfg, max(ef or cfg.ef, k), pids, index_ver, *_serve.parse_queries(queries, dim))
 
 
 def search_index_path(
@@ -3034,7 +2908,7 @@ def search_index_path(
         spark, path, queries, k, ef, config, cache_token,
         dim=0 if cents is None else np.shape(cents)[1],
     )
-    by_pid = _route_queries(qmat, centroids, nprobe, cfg.space) if routed else None
+    by_pid = _serve.route(_pairwise(qmat, centroids, cfg.space), nprobe) if routed else None
     pids = all_pids if by_pid is None else [p for p in all_pids if p in by_pid]
     # ONE graph partition → every query is answered completely by its
     # single graph: ranks are final in-task and the global top-k Window
@@ -3049,35 +2923,14 @@ def search_index_path(
         # cost) from the whole matrix to a cluster's worth.  Pure
         # reordering — results are per-query, order-independent.  (The
         # local path seed-sorts internally.)
-        from anndb_spark.operators.ivf import _pairwise
-
-        lc = np.ascontiguousarray(locality_centroids, dtype=np.float64)
-        assign = _pairwise(qmat.astype(np.float64), lc, cfg.space).argmin(axis=1)
+        assign = _pairwise(qmat, locality_centroids, cfg.space).argmin(axis=1)
         order = np.argsort(assign, kind="stable")
         qmat = np.ascontiguousarray(qmat[order])
         qid_arr = qid_arr[order]
     out_cols, out_ddl = _result_layout(single_graph, with_metadata)
-    # task layout: (pid, query-chunk) rows, round-robin.  Chunking the
-    # query set per partition breaks the one-task-per-partition
-    # straggler bound — skewed cluster cells (and the lock-step beam's
-    # slowest-query tail) stop gating the whole job; the graph cache
-    # makes the extra per-task reconstruction cheap.
-    n_q = qmat.shape[0]
-    per_pid = {
-        p: (len(by_pid[p]) if by_pid is not None else n_q) for p in pids
-    }
-    if queries_per_task is None:
-        total = sum(per_pid.values())
-        par = spark.sparkContext.defaultParallelism
-        # aim for ~one chunk per partition once partitions cover half
-        # the cores: each task launch costs ~12 ms of serial scheduler
-        # wall (measured), which dwarfs the native kernel's per-query
-        # cost — 3 chunks/partition turned a 0.5 s scatter leg into
-        # 1.5 s.  Single-partition (or few-partition) indexes still
-        # split queries across cores.
-        target_tasks = max(len(pids), par // 2, 1)
-        queries_per_task = max(64, -(-total // target_tasks))
     if single_graph:
+        n_q = qmat.shape[0]
+        queries_per_task = _serve.chunk_size(spark, 1, n_q, queries_per_task)
         tbl = _serve_single_graph_local(
             path, pids[0], cfg, strategy, brute_flops_threshold, cache_token,
             index_ver, qid_arr, qmat, k, ef, with_metadata,
@@ -3088,58 +2941,26 @@ def search_index_path(
             # spark.sql.execution.arrow.localRelationThreshold the JVM
             # builds a LocalRelation directly from the batches
             return spark.createDataFrame(tbl, schema=out_ddl)
-    plan_rows = []
-    for p in pids:
-        n_chunks = max(1, -(-per_pid[p] // queries_per_task))
-        plan_rows.extend((p, c) for c in range(n_chunks))
-    # one plan row per partition, NO repartition: createDataFrame +
-    # repartition is a 2-stage shuffle that cost ~0.2 s of fixed wall
-    # per search call (measured); parallelize with numSlices places
-    # each (pid, chunk) row in its own partition shuffle-free
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan_rows, max(len(plan_rows), 1)),
-        "pid INT, chunk INT",
+
+    def search_chunk(pid: int, qids: np.ndarray, sub: np.ndarray) -> pd.DataFrame:
+        ids, g, use_brute = _acquire_partition_graph(
+            path, pid, cfg, strategy, brute_flops_threshold,
+            cache_token, index_ver, len(sub),
+        )
+        hits = g.search_brute(sub, k) if use_brute else g.search_fast_batch(sub, k, ef)
+        return _assemble_hits(qids, hits, ids, g, with_metadata, out_cols)
+
+    # (pid, query-chunk) tasks: chunking the query set per partition
+    # breaks the one-task-per-partition straggler bound — skewed cluster
+    # cells (and the lock-step beam's slowest-query tail) stop gating
+    # the whole job; the graph cache makes the extra per-task
+    # reconstruction cheap
+    partials = _serve.scatter(
+        spark, pids, by_pid, qid_arr, qmat, search_chunk, out_ddl, queries_per_task
     )
-    qpt = queries_per_task
-    # the query batch travels as a BROADCAST, not in the task closure:
-    # a closure is serialized into every task description, so a 10k×784
-    # float32 batch (31 MB) would cross the wire once PER TASK (32
-    # tasks → ~1 GB); the broadcast ships once per executor and python
-    # workers read it from the local block file (measured: the warm
-    # single-graph leg was spending most of its wall on closure bytes)
-    bq = spark.sparkContext.broadcast((qid_arr, qmat, by_pid))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qid_arr, qmat, by_pid = bq.value
-        # drain the input stream BEFORE yielding: a pandas-UDF that
-        # yields interleaved with unconsumed input gets its python
-        # worker KILLED by the runner instead of reused (measured —
-        # worker pids churn every job), which destroys the
-        # worker-resident graph cache this whole path is built around
-        work = [
-            (pid, chunk)
-            for b in batches
-            for pid, chunk in zip(b["pid"].tolist(), b["chunk"].tolist())
-        ]
-        for pid, chunk in work:
-            if by_pid is None:
-                qsel = list(range(chunk * qpt, min((chunk + 1) * qpt, n_q)))
-            else:
-                qsel = by_pid.get(int(pid), [])[chunk * qpt : (chunk + 1) * qpt]
-            if not qsel:
-                continue
-            ids, g, use_brute = _acquire_partition_graph(
-                path, pid, cfg, strategy, brute_flops_threshold,
-                cache_token, index_ver, len(qsel),
-            )
-            sub = qmat[qsel]
-            hits = g.search_brute(sub, k) if use_brute else g.search_fast_batch(sub, k, ef)
-            yield _assemble_hits(qid_arr[qsel], hits, ids, g, with_metadata, out_cols)
-
-    partials = plan.mapInPandas(run, schema=out_ddl)
     if single_graph:
         return partials
-    return _merge_topk(partials, k, with_metadata)
+    return _serve.merge_topk(partials, k, _result_layout(True, with_metadata)[0])
 
 
 def search_index_local(

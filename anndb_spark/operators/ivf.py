@@ -31,14 +31,16 @@ partition pruning.  Both sit on the same exact-kNN semantic core
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
+
+from anndb_spark.operators import _serve
+from anndb_spark.operators._scratch import argpart_rows, scratch_mat
 
 __all__ = [
     "train_centroids",
@@ -49,83 +51,9 @@ __all__ = [
     "search_ivf_path",
 ]
 
-# worker-resident cluster matrices for the serving path (same contract
-# as the HNSW graph cache: byte-capped LRU in the reused python worker)
-_CLUSTER_CACHE: dict = {}
-_CLUSTER_CACHE_MAX_BYTES = int(
-    os.environ.get("ANNDB_CLUSTER_CACHE_BYTES", str(1 << 30))
-)
-
-
-def _ccache_get(key):
-    if key is None or key not in _CLUSTER_CACHE:
-        return None
-    val = _CLUSTER_CACHE.pop(key)
-    _CLUSTER_CACHE[key] = val
-    return val[:2]
-
-
-def _ccache_put(key, ids, mat):
-    if key is None:
-        return
-    nb = mat.nbytes + 64 * len(ids)
-    if nb > _CLUSTER_CACHE_MAX_BYTES:
-        return
-    total = nb + sum(v[2] for v in _CLUSTER_CACHE.values())
-    while total > _CLUSTER_CACHE_MAX_BYTES and _CLUSTER_CACHE:
-        _, _, old = _CLUSTER_CACHE.pop(next(iter(_CLUSTER_CACHE)))
-        total -= old
-    _CLUSTER_CACHE[key] = (ids, mat, nb)
-
 
 def _as_matrix(series: pd.Series) -> np.ndarray:
     return np.array(series.tolist(), dtype=np.float64)
-
-
-# Thread-local scratch for the scoring kernels — the same allocation
-# discipline as hnsw._scratch_mat (PLANS r12): a fresh multi-MB
-# allocation per call in a 32-way-concurrent Arrow worker path is a
-# latent 100x first-touch tail on fault-slow hosts (measured p90 5.6 s
-# per 25 MB there), while reused pages cost zero.  One flat float64
-# capacity buffer per tag per thread, grown monotonically, released
-# when it exceeds ANNDB_SCRATCH_CAP_BYTES and the next request needs
-# under a quarter of it.
-_SCRATCH = __import__("threading").local()
-_SCRATCH_CAP_BYTES = int(
-    os.environ.get("ANNDB_SCRATCH_CAP_BYTES", str(256 << 20))
-)
-
-
-def _scratch_mat64(tag: str, rows: int, cols: int) -> np.ndarray:
-    bufs = getattr(_SCRATCH, "bufs", None)
-    if bufs is None:
-        bufs = _SCRATCH.bufs = {}
-    need = rows * cols
-    flat = bufs.get(tag)
-    if (
-        flat is None
-        or flat.size < need
-        or (flat.nbytes > _SCRATCH_CAP_BYTES and need * 4 < flat.size)
-    ):
-        flat = np.empty(need, dtype=np.float64)
-        bufs[tag] = flat
-    return flat[:need].reshape(rows, cols)
-
-
-def _argpart_rows(d: np.ndarray, kk: int) -> np.ndarray:
-    """Row-wise top-kk argpartition: (|Q|, kk) int64 indices.
-
-    Identical selection + tie behavior to
-    ``np.argpartition(d, kk-1, axis=1)[:, :kk]`` (axis=1 runs the same
-    introselect per row), but the per-row form's internal scratch is a
-    KB-scale arena allocation instead of the HIDDEN fresh (|Q|, n)
-    int64 index matrix the whole-matrix call builds — the single
-    largest fault demand of the r12 scatter-leg pathology
-    (hnsw.search_brute carries the same fix)."""
-    part = np.empty((d.shape[0], kk), dtype=np.int64)
-    for qi in range(d.shape[0]):
-        part[qi] = np.argpartition(d[qi], kk - 1)[:kk]
-    return part
 
 
 def _pairwise(queries: np.ndarray, vectors: np.ndarray, space: str) -> np.ndarray:
@@ -141,12 +69,12 @@ def _pairwise(queries: np.ndarray, vectors: np.ndarray, space: str) -> np.ndarra
     queries = np.ascontiguousarray(queries, dtype=np.float64)
     vectors = np.ascontiguousarray(vectors, dtype=np.float64)
     nq, n = queries.shape[0], vectors.shape[0]
-    out = _scratch_mat64("ivf_pw_out", nq, n)
+    out = scratch_mat("ivf_pw_out", nq, n, np.float64)
     if space == "manhattan":
         # blocked |x-y| sum through a reused (n, d) diff buffer: per-row
         # blocking leaves per-element sums unchanged
         dim = vectors.shape[1]
-        diff = _scratch_mat64("ivf_pw_diff", n, dim)
+        diff = scratch_mat("ivf_pw_diff", n, dim, np.float64)
         for i, q in enumerate(queries):
             np.subtract(vectors, q, out=diff)
             np.abs(diff, out=diff)
@@ -168,7 +96,7 @@ def _pairwise(queries: np.ndarray, vectors: np.ndarray, space: str) -> np.ndarra
         vn = np.sqrt(np.einsum("ij,ij->i", vectors, vectors))
         # the norm product stays ONE multiply (two in-place divisions
         # would change rounding); it gets its own reused buffer
-        prod = _scratch_mat64("ivf_pw_prod", nq, n)
+        prod = scratch_mat("ivf_pw_prod", nq, n, np.float64)
         np.multiply(qn[:, None], vn[None, :], out=prod)
         out /= prod
         np.subtract(1.0, out, out=out)
@@ -280,7 +208,7 @@ def route_queries(
             if not len(pdf):
                 continue
             d = _pairwise(_as_matrix(pdf[query_vec_col]), cent, space)
-            probes = _argpart_rows(d, nprobe)
+            probes = argpart_rows(d, nprobe)
             rep = pdf.loc[pdf.index.repeat(nprobe)].reset_index(drop=True)
             rep["cluster_id"] = probes.reshape(-1).astype(np.int32)
             yield rep
@@ -358,7 +286,7 @@ def search_ivf(
         qmat = _as_matrix(q_pdf["query_vector"])
         d = _pairwise(qmat, vmat, space)
         kk = min(k, vmat.shape[0])
-        part = _argpart_rows(d, kk)
+        part = argpart_rows(d, kk)
         sel = part.reshape(-1)
         ids = vec_pdf["id"].to_numpy()
         qids = q_pdf["query_id"].to_numpy()
@@ -384,12 +312,7 @@ def search_ivf(
             schema=f"query_id {qid_type}, id {id_type}, score double{payload_schema}",
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "score", *payload_cols)
-    )
+    return _serve.merge_topk(partial, k, ["query_id", "rank", "id", "score", *payload_cols])
 
 
 def save_assigned(assigned: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -416,35 +339,26 @@ def search_ivf_path(
 
     Same result contract as `search_ivf` (float64 scores, ascending
     (score, id), rank 1..k — pytest-identical), different physical plan:
-    queries are routed on the driver against the tiny centroid matrix;
-    the plan holds one row per (probed cluster, query-chunk); each task
-    column-reads its own cluster's parquet directly (unprobed cluster
-    directories never enter the plan) and GEMM-scores its chunk against
-    the worker-cached cluster matrix.  A warm serving workload pays zero
-    table bytes per batch — the IVF analogue of `hnsw.search_index_path`.
+    queries are routed on the driver against the tiny centroid matrix,
+    and `_serve.scatter` runs one task per (probed cluster, query-chunk);
+    each task column-reads its own cluster's parquet directly (unprobed
+    cluster directories never enter the plan) and GEMM-scores its chunk
+    against the worker-cached cluster matrix.  A warm serving workload
+    pays zero table bytes per batch.
     """
-    import os as _os
-
-    cent = np.ascontiguousarray(centroids, dtype=np.float64)
-    npb = min(nprobe, cent.shape[0])
-    qid_arr = np.array([str(qid) for qid, _ in queries], dtype=object)
-    qmat = np.array([v for _, v in queries], dtype=np.float64)
-    d = _pairwise(qmat, cent, space)
-    probes = _argpart_rows(d, min(npb, d.shape[1]))
-    by_cid: dict[int, list[int]] = {}
-    for qi, ps in enumerate(probes):
-        for p in ps:
-            by_cid.setdefault(int(p), []).append(qi)
     from anndb_spark.sources import fsutil
 
+    cent = np.ascontiguousarray(centroids, dtype=np.float64)
+    # float64 end to end: scores stay bit-identical to `search_ivf`
+    qid_arr, qmat = _serve.parse_queries(queries, cent.shape[1], np.float64)
+    by_cid = _serve.route(_pairwise(qmat, cent, space), nprobe)
     # discovery + footer read through pyarrow.fs (plain path, file://,
     # s3://, hdfs:// — no shared-local-FS assumption, ADVICE r4)
     avail = set(fsutil.list_partition_values(path, "cluster_id="))
     cids = sorted(set(by_cid) & avail)
     # cache keys carry the index CONTENT fingerprint — warm python
-    # workers outlive jobs (drain-before-yield), so a cluster table
-    # rebuilt at the same path+token would otherwise serve stale rows
-    # (same staleness class search_index_path fixed; ADVICE r5 medium)
+    # workers outlive jobs, so a cluster table rebuilt at the same
+    # path+token would otherwise serve stale rows (ADVICE r5 medium)
     index_ver = (
         fsutil.index_fingerprint(path) if cache_token is not None else None
     )
@@ -462,86 +376,32 @@ def search_ivf_path(
                 "float": "float",
             }.get(str(at), "string")
             break
-    if queries_per_task is None:
-        total = sum(len(by_cid[c]) for c in cids)
-        par = spark.sparkContext.defaultParallelism
-        # ~one chunk per probed cluster once clusters cover half the
-        # cores — task-launch wall dominates the per-query cost (see
-        # hnsw.search_index_path)
-        target_tasks = max(len(cids), par // 2, 1)
-        queries_per_task = max(64, -(-total // target_tasks))
-    qpt = queries_per_task
-    plan_rows = []
-    for c in cids:
-        n_chunks = max(1, -(-len(by_cid[c]) // qpt))
-        plan_rows.extend((c, i) for i in range(n_chunks))
-    # shuffle-free plan: one (cid, chunk) row per partition via
-    # parallelize numSlices (createDataFrame + repartition costs a
-    # 2-stage shuffle of fixed wall per call — see hnsw serving plan)
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            plan_rows or [(-1, 0)], max(len(plan_rows), 1)
-        ),
-        "cid INT, chunk INT",
-    )
-    # query batch as a broadcast, not a per-task closure payload (see
-    # hnsw.search_index_path — a closure is serialized into every task)
-    bq = spark.sparkContext.broadcast((qid_arr, qmat, by_cid))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from anndb_spark.sources import fsutil as _fsu
+    def score_chunk(cid: int, qids: np.ndarray, Q: np.ndarray) -> pd.DataFrame | None:
+        key = (cache_token, index_ver, cid) if cache_token is not None else None
+        hit = _serve.CACHE.get("ivf", key)
+        if hit is None:
+            tbl = fsutil.read_parquet_dir(
+                fsutil.join(path, f"cluster_id={cid}"), columns=[id_col, vec_col]
+            ).to_pandas()
+            hit = (tbl[id_col].to_numpy(), np.array(tbl[vec_col].tolist(), dtype=np.float64))
+            _serve.CACHE.put("ivf", key, hit, hit[1].nbytes + 64 * len(hit[0]))
+        ids, vmat = hit
+        if not len(ids):
+            return None
+        dm = _pairwise(Q, vmat, space)
+        kk = min(k, vmat.shape[0])
+        part = argpart_rows(dm, kk)
+        return pd.DataFrame(
+            {
+                "query_id": np.repeat(qids, kk),
+                "id": ids[part.reshape(-1)],
+                "score": np.take_along_axis(dm, part, axis=1).reshape(-1),
+            }
+        )
 
-        qid_arr, qmat, by_cid = bq.value
-        # drain before yielding — interleaved yield gets the python
-        # worker killed instead of reused, losing the resident cluster
-        # cache (see hnsw.search_index_path)
-        work = [
-            (cid, chunk)
-            for b in batches
-            for cid, chunk in zip(b["cid"].tolist(), b["chunk"].tolist())
-        ]
-        for cid, chunk in work:
-            if cid < 0:
-                continue
-            qsel = by_cid.get(int(cid), [])[chunk * qpt : (chunk + 1) * qpt]
-            if not qsel:
-                continue
-            key = (
-                (cache_token, index_ver, int(cid))
-                if cache_token is not None
-                else None
-            )
-            hit = _ccache_get(key)
-            if hit is not None:
-                ids, vmat = hit
-            else:
-                tbl = _fsu.read_parquet_dir(
-                    _fsu.join(path, f"cluster_id={cid}"),
-                    columns=[id_col, vec_col],
-                ).to_pandas()
-                ids = tbl[id_col].to_numpy()
-                vmat = np.array(tbl[vec_col].tolist(), dtype=np.float64)
-                _ccache_put(key, ids, vmat)
-            if not len(ids):
-                continue
-            dm = _pairwise(qmat[qsel], vmat, space)
-            kk = min(k, vmat.shape[0])
-            part = _argpart_rows(dm, kk)
-            sel = part.reshape(-1)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qid_arr[qsel], kk),
-                    "id": ids[sel],
-                    "score": np.take_along_axis(dm, part, axis=1).reshape(-1),
-                }
-            )
-
-    partial = plan.mapInPandas(
-        run, schema=f"query_id STRING, id {id_type}, score DOUBLE"
+    partial = _serve.scatter(
+        spark, cids, by_cid, qid_arr, qmat, score_chunk,
+        f"query_id STRING, id {id_type}, score DOUBLE", queries_per_task,
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "score")
-    )
+    return _serve.merge_topk(partial, k)

@@ -55,6 +55,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anndb_spark.operators import _serve
 from anndb_spark.operators._scratch import argpart_rows, scratch_mat
 from anndb_spark.operators.pq import (
     save_pq,
@@ -279,26 +280,6 @@ def load_ivfpq_config(spark, path: str) -> tuple[np.ndarray, np.ndarray, dict]:
     return cent, books, meta
 
 
-# worker-resident cell-codes cache (ids, codes matrix), byte-capped LRU
-_CODES_CACHE: dict = {}
-_CODES_CACHE_MAX = 64
-
-
-def _codes_get(key):
-    v = _CODES_CACHE.pop(key, None)
-    if v is not None:
-        _CODES_CACHE[key] = v
-    return v
-
-
-def _codes_put(key, ids, C):
-    if key is None:
-        return
-    _CODES_CACHE[key] = (ids, C)
-    while len(_CODES_CACHE) > _CODES_CACHE_MAX:
-        _CODES_CACHE.pop(next(iter(_CODES_CACHE)))
-
-
 def search_ivfpq(
     spark,
     path: str,
@@ -316,19 +297,23 @@ def search_ivfpq(
 ) -> DataFrame:
     """Serving-shape IVFADC top-k → (query_id, rank, id, score).
 
-    Driver routes every query to its nprobe nearest cells; the plan is
-    (cell, query-chunk) rows via shuffle-free ``parallelize``; each task
-    reads only its cell's codes directory through ``pyarrow.fs``
-    (worker-cached, content-fingerprint keyed) and scores its chunk
-    with per-cell residual LUTs, folding a per-query top-n in bounded
-    row chunks.  Scores are ADC approximations; with ``rerank_with``
-    the per-query shortlist (default 5·k) is re-scored exactly
-    (IVFADC+R).  ``space`` defaults to the artifact's recorded build
-    space; 'cosine' runs the normalize-then-L2 contract (queries
-    unit-normalized, ADC in L2 over unit vectors, scores emitted as
-    cosine distance s²/2)."""
-    from pyspark.sql import Window
+    Driver routes every query to its nprobe nearest cells;
+    `_serve.scatter` runs one task per (cell, query-chunk) — or
+    ``cells_per_task`` of them; each task reads only its cell's codes
+    directory through ``pyarrow.fs`` (worker-cached, content-fingerprint
+    keyed) and scores its chunk with per-cell residual LUTs, folding a
+    per-query top-n in bounded row chunks.  Scores are ADC
+    approximations; with ``rerank_with`` the per-query shortlist
+    (default 5·k) is re-scored exactly (IVFADC+R).  ``space`` defaults
+    to the artifact's recorded build space; 'cosine' runs the
+    normalize-then-L2 contract (queries unit-normalized, ADC in L2 over
+    unit vectors, scores emitted as cosine distance s²/2).
 
+    ``cells_per_task`` packs several (cell, chunk) work items into one
+    task.  1 = maximal parallelism, the right default when cells are
+    large; raise it for small-cell indexes where per-task fixed costs
+    would otherwise dominate (e.g. 1M rows / 1024 cells ≈ 1k rows per
+    cell: scheduling 1024 tiny tasks costs more than the ADC math)."""
     from anndb_spark.sources import fsutil
 
     meta: dict = {}
@@ -341,26 +326,16 @@ def search_ivfpq(
     cent = np.ascontiguousarray(centroids, dtype=np.float32)
     books = np.ascontiguousarray(codebooks, dtype=np.float32)
     m, kc, sub = books.shape
-    if isinstance(queries, tuple) and not isinstance(queries[0], str):
-        qids_in, qmat = queries
-        qid_arr = np.array([str(q) for q in qids_in], dtype=object)
-        Q = np.ascontiguousarray(qmat, dtype=np.float32)
-    else:
-        qid_arr = np.array([str(qid) for qid, _ in queries], dtype=object)
-        Q = np.array([v for _, v in queries], dtype=np.float32)
+    qid_arr, Q = _serve.parse_queries(queries, cent.shape[1])
     if cosine:
         Q = _normalize_rows(Q)
-    npb = min(nprobe, cent.shape[0])
+    # float32 L2 routing (the cells were assigned in float32)
     d2 = (
         np.einsum("ij,ij->i", Q, Q)[:, None]
         - 2.0 * Q @ cent.T
         + np.einsum("ij,ij->i", cent, cent)[None, :]
     )
-    probes = argpart_rows(d2, min(npb, d2.shape[1]))
-    by_cid: dict[int, list[int]] = {}
-    for qi, ps in enumerate(probes):
-        for p in ps:
-            by_cid.setdefault(int(p), []).append(qi)
+    by_cid = _serve.route(d2, nprobe)
     codes_root = f"{path}/codes"
     avail = set(fsutil.list_partition_values(codes_root, "cluster_id="))
     cids = sorted(set(by_cid) & avail)
@@ -368,156 +343,83 @@ def search_ivfpq(
         fsutil.index_fingerprint(codes_root) if cache_token is not None else None
     )
     top_n = k if rerank_with is None else max(shortlist or 5 * k, k)
-    if queries_per_task is None:
-        total = sum(len(by_cid[c]) for c in cids)
-        par = spark.sparkContext.defaultParallelism
-        target_tasks = max(len(cids), par // 2, 1)
-        queries_per_task = max(64, -(-total // target_tasks))
-    qpt = queries_per_task
-    plan_rows = []
-    for c in cids:
-        n_chunks = max(1, -(-len(by_cid[c]) // qpt))
-        plan_rows.extend((c, i) for i in range(n_chunks))
-    # ``cells_per_task`` packs several (cell, chunk) work items into one
-    # task (the scorer loops over every item in its partition anyway).
-    # 1 = maximal parallelism, the right default when cells are large;
-    # raise it for small-cell indexes where per-task fixed costs would
-    # otherwise dominate (e.g. 1M rows / 1024 cells ≈ 1k rows per cell:
-    # scheduling 1024 tiny tasks costs more than the ADC math).
-    n_slices = max(1, -(-len(plan_rows) // max(cells_per_task, 1)))
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan_rows or [(-1, 0)], n_slices),
-        "cid INT, chunk INT",
-    )
-    bq = spark.sparkContext.broadcast((qid_arr, Q, by_cid))
     bn2 = np.einsum("mkd,mkd->mk", books, books, dtype=np.float32)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from anndb_spark.sources import fsutil as _fsu
-
-        qid_arr, Qv, by_cid = bq.value
-        work = [
-            (cid, chunk)
-            for b in batches
-            for cid, chunk in zip(b["cid"].tolist(), b["chunk"].tolist())
-        ]
-        for cid, chunk in work:
-            if cid < 0:
-                continue
-            qsel = by_cid.get(int(cid), [])[chunk * qpt : (chunk + 1) * qpt]
-            if not qsel:
-                continue
-            key = (
-                (cache_token, index_ver, int(cid))
-                if cache_token is not None
-                else None
+    def score_chunk(cid: int, qids: np.ndarray, Qc: np.ndarray) -> pd.DataFrame | None:
+        key = (cache_token, index_ver, cid) if cache_token is not None else None
+        hit = _serve.CACHE.get("ivfpq", key)
+        if hit is None:
+            tbl = fsutil.read_parquet_dir(
+                fsutil.join(codes_root, f"cluster_id={cid}"), columns=["id", "codes"]
+            ).to_pandas()
+            hit = (tbl["id"].to_numpy(), codes_matrix(tbl["codes"], m))
+            _serve.CACHE.put("ivfpq", key, hit, hit[1].nbytes + 64 * len(hit[0]))
+        ids, C = hit
+        if not len(ids):
+            return None
+        # per-cell residual LUTs for this chunk's queries:
+        # LUT[q, j, c] = ||(Q[q]−cell)_j − book_j[c]||²
+        Rq = Qc - cent[cid][None, :]
+        nq = Rq.shape[0]
+        lut = np.empty((nq, m, kc), dtype=np.float32)
+        for j in range(m):
+            Rs = Rq[:, j * sub : (j + 1) * sub]
+            qn2 = np.einsum("ij,ij->i", Rs, Rs, dtype=np.float32)
+            lut[:, j, :] = (
+                bn2[j][None, :] - 2.0 * (Rs @ books[j].T) + qn2[:, None]
             )
-            hit = _codes_get(key)
-            if hit is not None:
-                ids, C = hit
-            else:
-                tbl = _fsu.read_parquet_dir(
-                    _fsu.join(codes_root, f"cluster_id={cid}"),
-                    columns=["id", "codes"],
-                ).to_pandas()
-                ids = tbl["id"].to_numpy()
-                C = codes_matrix(tbl["codes"], m)
-                _codes_put(key, ids, C)
-            if not len(ids):
-                continue
-            # per-cell residual LUTs for this chunk's queries:
-            # LUT[q, j, c] = ||(Q[q]−cell)_j − book_j[c]||²
-            Rq = Qv[qsel] - cent[cid][None, :]
-            nq = Rq.shape[0]
-            lut = np.empty((nq, m, kc), dtype=np.float32)
+        # fold per-query top-n in bounded row chunks — never a full
+        # (nq × cell_rows) score matrix for a big cell
+        row_chunk = 1 << 16
+        best_s: np.ndarray | None = None
+        best_ids: np.ndarray | None = None
+        for s0 in range(0, C.shape[0], row_chunk):
+            Cc = C[s0 : s0 + row_chunk]
+            n = Cc.shape[0]
+            # scratch discipline (operators/_scratch.py):
+            # elementwise-identical to the fresh-allocation form
+            S = scratch_mat("ivfpq_S", nq, n)
+            S.fill(np.float32(0.0))
+            g = scratch_mat("ivfpq_g", nq, n)
             for j in range(m):
-                Rs = Rq[:, j * sub : (j + 1) * sub]
-                qn2 = np.einsum("ij,ij->i", Rs, Rs, dtype=np.float32)
-                lut[:, j, :] = (
-                    bn2[j][None, :] - 2.0 * (Rs @ books[j].T) + qn2[:, None]
-                )
-            # fold per-query top-n in bounded row chunks — never a full
-            # (nq × cell_rows) score matrix for a big cell
-            row_chunk = 1 << 16
-            best_s: np.ndarray | None = None
-            best_ids: np.ndarray | None = None
-            for s0 in range(0, C.shape[0], row_chunk):
-                Cc = C[s0 : s0 + row_chunk]
-                n = Cc.shape[0]
-                # scratch discipline (r13, operators/_scratch.py):
-                # elementwise-identical to the fresh-allocation form
-                S = scratch_mat("ivfpq_S", nq, n)
-                S.fill(np.float32(0.0))
-                g = scratch_mat("ivfpq_g", nq, n)
-                for j in range(m):
-                    np.take(lut[:, j, :], Cc[:, j], axis=1, out=g)
-                    S += g
-                np.maximum(S, np.float32(0.0), out=S)
-                np.sqrt(S, out=S)
-                t = min(top_n, n)
-                part = (
-                    argpart_rows(S, t)
-                    if n > t
-                    else np.tile(np.arange(n), (nq, 1))
-                )
-                best_ids, best_s = topn_fold(
-                    (best_ids, best_s),
-                    ids[s0 : s0 + row_chunk][part],
-                    np.take_along_axis(S, part, axis=1),
-                    top_n,
-                )
-            if best_s is None:
-                continue
-            if cosine:
-                # unit sphere: L2² = 2(1−cos) → cosine distance s²/2
-                best_s = best_s * best_s / np.float32(2.0)
-            w = best_s.shape[1]
-            rows_q = np.repeat(np.arange(nq), w)
-            yield pd.DataFrame(
-                {
-                    "query_id": qid_arr[np.asarray(qsel)][rows_q],
-                    "id": best_ids.reshape(-1),
-                    "score": best_s.reshape(-1),
-                }
+                np.take(lut[:, j, :], Cc[:, j], axis=1, out=g)
+                S += g
+            np.maximum(S, np.float32(0.0), out=S)
+            np.sqrt(S, out=S)
+            t = min(top_n, n)
+            part = (
+                argpart_rows(S, t)
+                if n > t
+                else np.tile(np.arange(n), (nq, 1))
             )
+            best_ids, best_s = topn_fold(
+                (best_ids, best_s),
+                ids[s0 : s0 + row_chunk][part],
+                np.take_along_axis(S, part, axis=1),
+                top_n,
+            )
+        if best_s is None:
+            return None
+        if cosine:
+            # unit sphere: L2² = 2(1−cos) → cosine distance s²/2
+            best_s = best_s * best_s / np.float32(2.0)
+        return pd.DataFrame(
+            {
+                "query_id": np.repeat(qids, best_s.shape[1]),
+                "id": best_ids.reshape(-1),
+                "score": best_s.reshape(-1),
+            }
+        )
 
-    partial = plan.mapInPandas(run, "query_id STRING, id STRING, score FLOAT")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc(), F.col("id").asc()
-    )
-    cand = partial.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= top_n
+    partial = _serve.scatter(
+        spark, cids, by_cid, qid_arr, Q, score_chunk,
+        "query_id STRING, id STRING, score FLOAT", queries_per_task, cells_per_task,
     )
     if rerank_with is None:
-        return cand.filter(F.col("rank") <= k).select(
-            "query_id", "rank", "id", "score"
-        )
+        return _serve.merge_topk(partial, k)
     from anndb_spark.functions.spaces import distance_col
 
-    from anndb_spark.utils import literal_df
-
-    qdf = literal_df(
-        spark,
-        [(str(q), [float(x) for x in v]) for q, v in zip(qid_arr, Q)],
-        "query_id STRING, qvec ARRAY<FLOAT>",
-    )
-    exact = (
-        rerank_with.withColumn("id", F.col("id").cast("string"))
-        .join(F.broadcast(cand.select("query_id", "id")), "id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "id",
-            distance_col(F.col("vector"), F.col("qvec"), space=space)
-            .cast("float")
-            .alias("score"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc(), F.col("id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "score")
+    return _serve.exact_rerank(
+        spark, partial, top_n, rerank_with, qid_arr, Q, k,
+        distance_col(F.col("vector"), F.col("qvec"), space=space),
     )

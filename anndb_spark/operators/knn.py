@@ -112,7 +112,8 @@ def _gemm_partial_topk(
     """
     import numpy as np
 
-    from anndb_spark.operators.ivf import _argpart_rows, _pairwise
+    from anndb_spark.operators._scratch import argpart_rows
+    from anndb_spark.operators.ivf import _pairwise
 
     from anndb_spark.utils import ensure_parallelism
 
@@ -143,7 +144,7 @@ def _gemm_partial_topk(
                 eq = ids_b[None, :] == np.array(qid_arr)[:, None]
                 d[eq] = np.inf
             nb = min(k, d.shape[1])
-            part = _argpart_rows(d, nb)
+            part = argpart_rows(d, nb)
             cand_scores.append(np.take_along_axis(d, part, axis=1))
             cand_ids.append(ids_b[part])
         if not cand_scores:

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anndb_spark.operators import _serve
 from anndb_spark.operators._scratch import argpart_rows, scratch_mat
 
 
@@ -192,7 +193,7 @@ def pq_search(
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # drain-then-yield: interleaved yield kills the python worker
-        # (see hnsw.search_index_path).  Per-batch partial top-n is
+        # (see _serve.scatter).  Per-batch partial top-n is
         # folded DURING the drain, so worker memory holds one batch
         # plus a top_n shortlist — not the whole partition (ADVICE r5)
         best_ids: np.ndarray | None = None
@@ -400,20 +401,11 @@ def pq_search_batch(
     ``rerank_with`` the shortlist (default 5k per query) is re-scored
     exactly via a broadcast join — float rows are read for shortlist
     ids only."""
-    from pyspark.sql import Window
-
     m, kc, sub = codebooks.shape
     books = np.ascontiguousarray(codebooks, dtype=np.float32)
     if space not in ("euclidean", "cosine", "ip"):
         raise ValueError(f"unsupported space {space!r}")
-    if isinstance(queries, tuple) and not isinstance(queries[0], str):
-        qids_in, qmat = queries
-        qid_arr = np.array([str(q) for q in qids_in], dtype=object)
-        Q = np.ascontiguousarray(qmat, dtype=np.float32)
-    else:
-        qid_arr = np.array([str(qid) for qid, _ in queries], dtype=object)
-        Q = np.array([v for _, v in queries], dtype=np.float32)
-    nq = Q.shape[0]
+    qid_arr, Q = _serve.parse_queries(queries, m * sub)
     qn = np.sqrt(np.einsum("ij,ij->i", Q, Q, dtype=np.float32))
     top_n = k if rerank_with is None else max(shortlist or 5 * k, k)
     spark = codes.sparkSession
@@ -439,28 +431,8 @@ def pq_search_batch(
         )
 
     partial = codes.mapInPandas(score, "query_id STRING, id STRING, score FLOAT")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc(), F.col("id").asc()
-    )
-    cand = (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_n)
-    )
     if rerank_with is None:
-        return cand.filter(F.col("rank") <= k).select(
-            "query_id", "rank", "id", "score"
-        )
-    # exact rerank: broadcast the (nq × shortlist) candidate ids against
-    # the float table, score exactly, re-rank
-    from anndb_spark.functions.spaces import distance_col
-
-    from anndb_spark.utils import literal_df
-
-    qdf = literal_df(
-        spark,
-        [(str(q), [float(x) for x in v]) for q, v in zip(qid_arr, Q)],
-        "query_id STRING, qvec ARRAY<FLOAT>",
-    )
+        return _serve.merge_topk(partial, k)
     if space == "ip":
         # exact negated inner product (ascending = best-first, matching
         # the ADC scores)
@@ -474,21 +446,10 @@ def pq_search_batch(
             lambda acc, x: acc + x,
         )
     else:
+        from anndb_spark.functions.spaces import distance_col
+
         sc = distance_col(F.col("vector"), F.col("qvec"), space=space)
-    exact = (
-        rerank_with.withColumn("id", F.col("id").cast("string"))
-        .join(F.broadcast(cand.select("query_id", "id")), "id")
-        .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "id", sc.cast("float").alias("score"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc(), F.col("id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "score")
-    )
+    return _serve.exact_rerank(spark, partial, top_n, rerank_with, qid_arr, Q, k, sc)
 
 
 def save_pq(

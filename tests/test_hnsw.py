@@ -1051,18 +1051,25 @@ def test_every_server_answers_an_empty_batch(spark, tmp_path):
     """An empty query batch is a valid request: every server returns zero
     rows with its full result schema (the batch parses to a (0, dim)
     matrix, never np.array([])'s (0,))."""
+    from anndb_spark.operators._serve import parse_queries
     from anndb_spark.operators.hnsw import (
-        _parse_queries,
         load_index,
         save_index,
         search_index_local,
         search_index_path,
         search_index_routed,
     )
-    from anndb_spark.operators.ivf import assign_clusters, train_centroids
+    from anndb_spark.operators.ivf import (
+        assign_clusters,
+        save_assigned,
+        search_ivf_path,
+        train_centroids,
+    )
+    from anndb_spark.operators.ivfpq import build_ivfpq, search_ivfpq
+    from anndb_spark.operators.pq import pq_encode, pq_search_batch, train_pq
     from anndb_spark.streaming.search import stream_search_transform
 
-    assert _parse_queries([], 8)[1].shape == (0, 8)
+    assert parse_queries([], 8)[1].shape == (0, 8)
 
     rng = np.random.default_rng(61)
     rows = [
@@ -1082,6 +1089,11 @@ def test_every_server_answers_an_empty_batch(spark, tmp_path):
         assign_clusters(df.drop("partition_id"), cent), cfg, partition_col="cluster_id"
     )
     save_index(idx_r, routed)
+    vecs = df.select("id", "vector")
+    ivf_dir, ivfpq_dir = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    save_assigned(assign_clusters(vecs, cent), ivf_dir)
+    build_ivfpq(vecs, ivfpq_dir, n_cells=2, m=2, n_centroids=16, sample_n=200)
+    books = train_pq(vecs, m=2, n_centroids=16, sample_n=200)
 
     base = [("query_id", "string"), ("rank", "int"), ("id", "string"), ("score", "float")]
     meta = base + [("metadata", "map<string,string>")]
@@ -1101,6 +1113,11 @@ def test_every_server_answers_an_empty_batch(spark, tmp_path):
         "path/routed": (search_index_path(
             spark, routed, [], 5, config=cfg, centroids=cent, nprobe=2), base),
         "stream": (stream_search_transform(empty_q, multi, 5, config=cfg), base),
+        "ivf_path": (search_ivf_path(spark, ivf_dir, [], 5, cent, nprobe=2),
+                     base[:3] + [("score", "double")]),
+        "ivfpq": (search_ivfpq(spark, ivfpq_dir, [], k=5, nprobe=2), base),
+        "pq_batch/rerank": (pq_search_batch(
+            pq_encode(vecs, books), [], books, k=5, rerank_with=vecs), base),
     }
     for name, (res, schema) in frames.items():
         assert res.dtypes == schema, name
@@ -1324,9 +1341,9 @@ def test_search_brute_scratch_reuse_bitwise_and_unpickled():
             assert first[qi] == want, (space, qi)
         rerun = _hit_lists(*g.search_brute(queries, k))
         assert rerun == first, space  # dirty-buffer rerun
-        from anndb_spark.operators.hnsw import _SCRATCH_BUFS
+        from anndb_spark.operators._scratch import _TLS
 
-        assert _SCRATCH_BUFS.bufs["brute_d"].size >= q * n  # thread scratch live
+        assert _TLS.bufs["brute_d"].size >= q * n  # thread scratch live
         state = g.__getstate__()
         assert not any(key.startswith("_ck_") for key in state)
         pickle.dumps(state)  # the shipped state stays picklable
@@ -1396,37 +1413,3 @@ def test_acquire_brute_graph_warm_reads_no_parquet(spark, tmp_path, monkeypatch)
     )
     assert not ub4 and calls["n"] >= 2
     assert g4.adj_pad  # full graph carries adjacency
-
-
-def test_scratch_mat_thread_local_and_capped(monkeypatch):
-    """ADVICE r12: _SCRATCH_BUFS must be thread-local (a driver-local
-    serve or an embedder thread pool entering search_brute concurrently
-    must never share a distance matrix), and a buffer above
-    ANNDB_SCRATCH_CAP_BYTES is released when the next request needs
-    under a quarter of it (the documented memory bound)."""
-    import threading
-
-    from anndb_spark.operators import hnsw as hnsw_mod
-
-    backing = {}
-
-    def work(tag):
-        m = hnsw_mod._scratch_mat("tl_test", 8, 8)
-        m[:] = float(ord(tag))
-        # hold the FLAT buffer object itself (id() of a freed buffer
-        # can be reused by the next thread's allocation)
-        backing[tag] = (hnsw_mod._SCRATCH_BUFS.bufs["tl_test"], m.copy())
-
-    threads = [threading.Thread(target=work, args=(t,)) for t in ("a", "b")]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert backing["a"][0] is not backing["b"][0]  # distinct buffers
-    assert backing["a"][1][0, 0] != backing["b"][1][0, 0]
-
-    monkeypatch.setattr(hnsw_mod, "_SCRATCH_CAP_BYTES", 4 * 100)  # 100 elems
-    big = hnsw_mod._scratch_mat("cap_test", 20, 20)  # 400 > cap
-    small = hnsw_mod._scratch_mat("cap_test", 3, 3)  # 9*4 < 400 -> freed
-    assert hnsw_mod._SCRATCH_BUFS.bufs["cap_test"].size == 9
-    assert big.shape == (20, 20) and small.shape == (3, 3)

@@ -159,7 +159,8 @@ def test_pairwise_scratch_reuse_bitwise():
     thread-local buffers and selection runs per row — results must be
     BITWISE-identical to the fresh-allocation formulas in every space,
     including a dirty-buffer rerun with different shapes in between."""
-    from anndb_spark.operators.ivf import _SCRATCH, _argpart_rows, _pairwise
+    from anndb_spark.operators._scratch import _TLS, argpart_rows
+    from anndb_spark.operators.ivf import _pairwise
 
     rng = np.random.default_rng(123)
 
@@ -193,44 +194,9 @@ def test_pairwise_scratch_reuse_bitwise():
             assert got.dtype == want.dtype
             assert np.array_equal(got, want), (space, q, n)
             # returned matrix is scratch-backed (reuse is real)
-            assert got.base is not None or got is _SCRATCH.bufs["ivf_pw_out"]
+            assert got.base is not None or got is _TLS.bufs["ivf_pw_out"]
             # row-wise selection == whole-matrix argpartition selection
             kk = min(7, n)
-            part = _argpart_rows(np.array(got), kk)
+            part = argpart_rows(np.array(got), kk)
             ref = np.argpartition(want, kk - 1, axis=1)[:, :kk]
             assert np.array_equal(np.sort(part), np.sort(ref)), space
-
-
-def test_pairwise_scratch_is_thread_local_and_capped(monkeypatch):
-    """Two threads must never share a distance matrix (ADVICE r12), and
-    an outlier-sized buffer is released once requests shrink below a
-    quarter of the cap."""
-    import threading
-
-    from anndb_spark.operators import ivf as ivf_mod
-
-    rng = np.random.default_rng(7)
-    qs = rng.normal(0, 1, (8, 4))
-    vs = rng.normal(0, 1, (16, 4))
-    results = {}
-
-    def work(tag):
-        out = ivf_mod._pairwise(qs + ord(tag[0]), vs, "euclidean")
-        # hold the flat buffer object itself (id() of a freed buffer
-        # can be reused by the next thread's allocation)
-        results[tag] = (out.copy(), ivf_mod._SCRATCH.bufs["ivf_pw_out"])
-
-    threads = [threading.Thread(target=work, args=(t,)) for t in ("a", "b")]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not np.array_equal(results["a"][0], results["b"][0])
-    assert results["a"][1] is not results["b"][1]  # distinct backing buffers
-
-    # decay: a giant buffer above the cap frees when the next ask is tiny
-    monkeypatch.setattr(ivf_mod, "_SCRATCH_CAP_BYTES", 8 * 100)  # 100 elems
-    big = ivf_mod._scratch_mat64("cap_test", 20, 20)  # 400 elems > cap
-    small = ivf_mod._scratch_mat64("cap_test", 3, 3)  # 9 * 4 < 400
-    assert ivf_mod._SCRATCH.bufs["cap_test"].size == 9
-    assert small.shape == (3, 3) and big.shape == (20, 20)

@@ -500,3 +500,54 @@ def test_bm25_indexed_batch_plan_shape(spark, tmp_path):
     plan_w = _plan(wide)
     pf_w = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan_w)
     assert not any("bucket" in f and " IN " in f for f in pf_w), pf_w
+
+
+def test_saved_index_servers_scatter_then_one_merge_shuffle(spark, tmp_path):
+    """The saved-index servers share one scatter/gather shape: a
+    shuffle-free ``parallelize`` plan scan feeding ONE MapInPandas (each
+    task reads its own index part from storage), then exactly one
+    shuffle — the merge's hashpartitioning(query_id).  Index bytes never
+    cross a shuffle."""
+    import re
+
+    import numpy as np
+
+    from anndb_spark.operators.hnsw import (
+        HnswConfig,
+        build_index,
+        save_index,
+        search_index_path,
+    )
+    from anndb_spark.operators.ivf import (
+        assign_clusters,
+        save_assigned,
+        search_ivf_path,
+        train_centroids,
+    )
+    from anndb_spark.operators.ivfpq import build_ivfpq, search_ivfpq
+
+    rng = np.random.default_rng(17)
+    rows = [(f"v{i}", rng.normal(0, 1, 8).tolist(), i % 4) for i in range(240)]
+    df = spark.createDataFrame(rows, "id STRING, vector ARRAY<FLOAT>, partition_id INT")
+    vecs = df.drop("partition_id")
+    queries = [(f"q{i}", rng.normal(0, 1, 8).tolist()) for i in range(10)]
+    hnsw_dir, ivf_dir, pq_dir = (str(tmp_path / n) for n in ("hnsw", "ivf", "ivfpq"))
+    save_index(build_index(df, HnswConfig(m=4, ef_construction=16)), hnsw_dir)
+    cent = train_centroids(vecs, 3, seed=3)
+    save_assigned(assign_clusters(vecs, cent), ivf_dir)
+    build_ivfpq(vecs, pq_dir, n_cells=3, m=2, n_centroids=16, sample_n=240)
+
+    servers = {
+        "search_index_path": search_index_path(spark, hnsw_dir, queries, 5),
+        "search_ivf_path": search_ivf_path(spark, ivf_dir, queries, 5, cent, nprobe=2),
+        "search_ivfpq": search_ivfpq(spark, pq_dir, queries, k=5, nprobe=2),
+    }
+    for name, res in servers.items():
+        plan = _plan(res)
+        tree = plan.split("\n\n(1)")[0]
+        assert tree.count("MapInPandas") == 1, (name, plan)
+        assert "Scan ExistingRDD" in tree, (name, plan)
+        assert "FileScan" not in tree, (name, plan)  # index parts are read in-task
+        assert _exchanges(plan) == 1, (name, plan)
+        shuffles = re.findall(r"hashpartitioning\(([a-z_]+)#", plan)
+        assert set(shuffles) == {"query_id"}, (name, shuffles)

@@ -1,0 +1,44 @@
+"""The shared saved-index serving pieces (`operators/_serve.py`)."""
+
+import numpy as np
+
+from anndb_spark.operators._serve import PartCache, route
+
+
+def test_part_cache_lru_by_bytes_and_kind():
+    cache = PartCache(max_bytes=100)
+    cache.put("ivf", ("t", "v", 0), "a", 40)
+    cache.put("ivf", ("t", "v", 1), "b", 40)
+    # a get refreshes recency: the next eviction takes part 1, not 0
+    assert cache.get("ivf", ("t", "v", 0)) == "a"
+    cache.put("ivf", ("t", "v", 2), "c", 40)  # 120 > 100: evict the LRU
+    assert cache.get("ivf", ("t", "v", 1)) is None
+    assert cache.get("ivf", ("t", "v", 0)) == "a"
+    assert cache.get("ivf", ("t", "v", 2)) == "c"
+    # the budget is bytes, not entries
+    cache.put("ivf", ("t", "v", 3), "d", 90)
+    assert [cache.get("ivf", ("t", "v", p)) for p in range(4)] == [None, None, None, "d"]
+    # an entry above the whole budget is not stored and evicts nothing
+    cache.put("ivf", ("t", "v", 4), "huge", 101)
+    assert cache.get("ivf", ("t", "v", 4)) is None
+    assert cache.get("ivf", ("t", "v", 3)) == "d"
+    # kinds stay distinct under the same (token, version, part)
+    cache.put("hnsw", ("t", "v", 3), "graph", 5)
+    assert cache.get("hnsw", ("t", "v", 3)) == "graph"
+    assert cache.get("ivf", ("t", "v", 3)) == "d"
+    # re-putting a key replaces it without counting it twice
+    cache.put("hnsw", ("t", "v", 3), "graph2", 5)
+    assert sum(nb for _, nb in cache.entries.values()) == 95
+    # a None key disables caching
+    cache.put("hnsw", None, "x", 1)
+    assert cache.get("hnsw", None) is None
+
+
+def test_route_groups_query_rows_by_nearest_parts():
+    dist = np.array([[0.1, 0.5, 0.9], [0.9, 0.2, 0.1], [0.3, 0.1, 0.8]])
+    assert route(dist, 1) == {0: [0], 2: [1], 1: [2]}
+    assert {p: sorted(r) for p, r in route(dist, 2).items()} == {
+        0: [0, 2], 1: [0, 1, 2], 2: [1]
+    }
+    assert len(route(dist, 9)) == 3  # nprobe above the part count
+    assert route(np.empty((0, 3)), 2) == {}
