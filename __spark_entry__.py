@@ -1451,7 +1451,7 @@ def _ann_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = HnswConfig(m=16, ef_construction=100)
     idx = build_index(emb, cfg)
     qs = [(str(qid), vec) for qid, vec in EMBEDDING_QUERIES]
-    res = search_index(idx, emb, qs, k=K, ef=100, config=cfg, with_metadata=True)
+    res = search_index(idx, qs, k=K, ef=100, config=cfg, with_metadata=True)
     id_type = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .schema["vec_id"].dataType.simpleString()
@@ -1483,7 +1483,7 @@ def _ann_tombstone_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     idx = delete_from_index(idx, del_ids)
     qs = [(str(qid), vec) for qid, vec in EMBEDDING_QUERIES]
-    res = search_index(idx, None, qs, k=K, ef=100, config=cfg)
+    res = search_index(idx, qs, k=K, ef=100, config=cfg)
     id_type = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .schema["vec_id"].dataType.simpleString()
@@ -1669,7 +1669,7 @@ def _ann_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = HnswConfig(m=16, ef_construction=100)
     idx = build_index(emb, cfg)
     qs = [(str(qid), vec) for qid, vec in EMBEDDING_QUERIES]
-    ann = search_index(idx, emb, qs, k=K, ef=100, config=cfg)
+    ann = search_index(idx, qs, k=K, ef=100, config=cfg)
     exact = knn_exact(
         emb.select("id", "vector"), _queries_df(spark, EMBEDDING_QUERIES), K
     )
@@ -1681,7 +1681,7 @@ def _ann_routed_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle across nprobe (2/4/8 of 8 cells) — the 100 TB search shape:
     per-query work is nprobe graph walks, not one per partition, and a
     cluster-partitioned index prunes at scan time (rows-only check)."""
-    from anndb_spark.operators.hnsw import HnswConfig, build_index, search_index_routed
+    from anndb_spark.operators.hnsw import HnswConfig, build_index, search_index
     from anndb_spark.operators.ivf import assign_clusters
     from anndb_spark.operators.recall import recall_avg
 
@@ -1699,8 +1699,8 @@ def _ann_routed_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     curves = None
     for nprobe in (2, 4, 8):
-        ann = search_index_routed(
-            idx, qs, k=K, centroids=cent, nprobe=nprobe, ef=100, config=cfg
+        ann = search_index(
+            idx, qs, k=K, ef=100, config=cfg, centroids=cent, nprobe=nprobe
         )
         r = recall_avg(ann, exact, K).select(
             F.lit(nprobe).alias("nprobe"), F.col("avg_recall")

@@ -32,7 +32,6 @@ from anndb_spark.operators.hnsw import (  # noqa: F401
     load_index,
     save_index,
     search_index,
-    search_index_routed,
 )
 from anndb_spark.operators.ivf import (  # noqa: F401
     assign_clusters,

@@ -21,11 +21,13 @@ Spark shape (100 TB-minded): vectors are routed to partitions by the
 UuidMod-compatible partitioner; `applyInPandas` builds one independent
 HNSW per partition (the reference's unit of distribution — one graph
 per partition, `storage/partition.go`); search fans queries out to every
-partition (one grouped scan of the index DataFrame, or one task per
-(saved partition, query chunk) in `search_index_path`, whose plan, cache
-and merge are the shared `_serve` scatter/gather), takes a per-partition
-top-k, and merges globally — exactly the reference's scatter/gather
-(`storage/dataset.go:374-431`) expressed as partial + final top-k.
+partition, or with ``centroids``/``nprobe`` only to each query's nearest
+cells (one grouped scan of the index DataFrame in `search_index`, or
+one task per (saved partition, query chunk) in `search_index_path`,
+whose plan, cache and merge are the shared `_serve` scatter/gather),
+takes a per-partition top-k, and merges globally — exactly the
+reference's scatter/gather (`storage/dataset.go:374-431`) expressed as
+partial + final top-k.
 Each task holds exactly one partition's graph in memory, which is the
 same sizing contract the reference imposes on its nodes.
 
@@ -448,11 +450,6 @@ class HnswGraph:
         """Rebuild the python adjacency sets from the padded matrices —
         the inverse of finalize(), for mutating a reconstructed graph
         (online insert into a loaded index)."""
-        for a_ in ("q_codes", "q_scale", "q_min", "q_norms2", "q_norms"):
-            # traversal codes go stale the moment rows are added —
-            # search re-quantizes lazily after the mutation
-            if hasattr(self, a_):
-                delattr(self, a_)
         n = len(self.levels)
         self.adj = [dict() for _ in range(n)]
         for lvl, pad in self.adj_pad.items():
@@ -470,9 +467,6 @@ class HnswGraph:
         (beam search on the current python adjacency).  O(batch · search)
         compute, independent of partition size.  Invalidates the
         finalized pads (callers re-finalize for the fast search path)."""
-        for a_ in ("q_codes", "q_scale", "q_min", "q_norms2", "q_norms"):
-            if hasattr(self, a_):  # stale after any mutation
-                delattr(self, a_)
         mats = np.ascontiguousarray(mats, dtype=np.float32).reshape(
             -1, self.dim or mats.shape[-1]
         )
@@ -541,42 +535,6 @@ class HnswGraph:
         self.norms = np.sqrt(self.norms2)
         return self
 
-    def quantize(self) -> "HnswGraph":
-        """Per-dimension uint8 scalar quantization of the vector matrix
-        for TRAVERSAL distance evaluation (search results are reranked
-        with exact float32 at the end — see _search_batch_chunk).  The
-        beam walk is memory-bandwidth-bound at high dimension: gathering
-        1 byte/dim instead of 4 quarters the scattered-read traffic the
-        kernel actually pays for."""
-        if self.cfg.space == "manhattan" or hasattr(self, "q_codes"):
-            return self
-        v = np.asarray(self.vectors)
-        vmin = v.min(axis=0)
-        scale = (v.max(axis=0) - vmin) / np.float32(255.0)
-        scale = np.where(scale > 0, scale, np.float32(1.0)).astype(np.float32)
-        self.q_min = vmin.astype(np.float32)
-        self.q_scale = scale
-        self.q_codes = np.clip(
-            np.round((v - vmin) / scale), 0, 255
-        ).astype(np.uint8)
-        # norms of the DEQUANTIZED rows (dot-trick consistency: the
-        # traversal compares quantized-vs-quantized throughout)
-        n2 = np.empty(v.shape[0], dtype=np.float32)
-        for s in range(0, v.shape[0], 8192):
-            dq = self.q_codes[s : s + 8192].astype(np.float32) * scale + vmin
-            n2[s : s + 8192] = np.einsum("ij,ij->i", dq, dq, dtype=np.float32)
-        self.q_norms2 = n2
-        self.q_norms = np.sqrt(n2)
-        return self
-
-    def _gather_dequant(self, idx: np.ndarray) -> np.ndarray:
-        """float32 rows for traversal: dequantized uint8 codes when the
-        graph is quantized (¼ the gather bytes), exact rows otherwise."""
-        qc = getattr(self, "q_codes", None)
-        if qc is None:
-            return self.vectors[idx]
-        return qc[idx].astype(np.float32) * self.q_scale + self.q_min
-
     def _dist_gather(
         self, nb: np.ndarray, mask: np.ndarray, Q: np.ndarray, qn2: np.ndarray
     ) -> np.ndarray:
@@ -585,27 +543,9 @@ class HnswGraph:
         nb: (a, cap) node ids (may contain -1 / stale entries — masked),
         Q: (a, d) queries, qn2: (a,) squared query norms.
         Returns (a, cap) with +inf where ``mask`` is False.  One fused
-        einsum for the whole frontier instead of a Python loop per query.
-        Uses the quantized matrix when present (traversal accuracy)."""
+        einsum for the whole frontier instead of a Python loop per query."""
         space = self.cfg.space
         safe = np.where(mask, nb, 0)
-        if (
-            getattr(self, "q_codes", None) is not None
-            and space != "manhattan"
-            and self.deleted is None  # tombstone path has no rerank
-        ):
-            sub = self._gather_dequant(safe)
-            dot = np.einsum("acd,ad->ac", sub, Q, dtype=np.float32)
-            if space == "euclidean":
-                d = np.sqrt(
-                    np.maximum(self.q_norms2[safe] - 2.0 * dot + qn2[:, None], 0.0)
-                )
-            else:
-                qn = np.sqrt(qn2)
-                d = np.abs(
-                    np.float32(1.0) - dot / (self.q_norms[safe] * qn[:, None])
-                )
-            return np.where(mask, d, np.float32(np.inf))
         sub = self.vectors[safe]  # (a, cap, d)
         if space == "manhattan":
             d = np.abs(sub - Q[:, None, :]).sum(axis=2, dtype=np.float32)
@@ -682,15 +622,6 @@ class HnswGraph:
         # occupying result slots); it runs its own greedy descent
         if has_tomb and not use_ck:
             return numpy_chunks(self._search_batch_chunk_tombstone)
-        if (
-            not use_ck
-            and n * self.dim >= _QUANT_MIN_ELEMS
-            and self.cfg.space != "manhattan"
-        ):
-            # big graphs walk on uint8-quantized rows + exact rerank
-            # (the beam is scattered-gather-bound at high dimension);
-            # the C kernel reads float32 directly — exact, no rerank
-            self.quantize()
         if n < 4096 or self._max_level() == 0:
             if use_ck:
                 ent = _ck.descend(self, Qf)
@@ -992,30 +923,23 @@ class HnswGraph:
             d = np.full(nb.shape, INF, dtype=np.float32)
             if len(rows):
                 nbs = nb[rows, cols]
-                quant = getattr(self, "q_codes", None) is not None
-                sub = (
-                    self._gather_dequant(nbs)
-                    if quant and space != "manhattan"
-                    else self.vectors[nbs]
-                )
+                sub = self.vectors[nbs]
                 Qa = Qf[a]
                 qn2a = qn2[a]
                 if space == "manhattan":
                     dflat = np.abs(sub - Qa[rows]).sum(axis=1, dtype=np.float32)
                 else:
-                    n2 = self.q_norms2 if quant else self.norms2
                     dot = np.einsum("ij,ij->i", sub, Qa[rows], dtype=np.float32)
                     if space == "euclidean":
                         dflat = np.sqrt(
                             np.maximum(
-                                n2[nbs] - 2.0 * dot + qn2a[rows], 0.0
+                                self.norms2[nbs] - 2.0 * dot + qn2a[rows], 0.0
                             )
                         )
                     else:
-                        nm = self.q_norms if quant else self.norms
                         dflat = np.abs(
                             np.float32(1.0)
-                            - dot / (nm[nbs] * np.sqrt(qn2a[rows]))
+                            - dot / (self.norms[nbs] * np.sqrt(qn2a[rows]))
                         )
                 d[rows, cols] = dflat
             # one argpartition merges frontier into the beam
@@ -1026,25 +950,6 @@ class HnswGraph:
             beam_d[a] = np.take_along_axis(md, sel, axis=1)
             beam_i[a] = np.take_along_axis(mi, sel, axis=1)
             beam_x[a] = np.take_along_axis(mx, sel, axis=1)
-        if getattr(self, "q_codes", None) is not None and space != "manhattan":
-            # exact float32 rerank of the final beam: the walk ran on
-            # quantized distances (¼ gather bytes); ranks and returned
-            # scores must be exact.  ef rows/query — ~3% extra traffic.
-            safe = np.where(beam_i >= 0, beam_i, 0)
-            sub = self.vectors[safe]  # (q, ef, d)
-            dot = np.einsum("qed,qd->qe", sub, Qf, dtype=np.float32)
-            if space == "euclidean":
-                d_ex = np.sqrt(
-                    np.maximum(self.norms2[safe] - 2.0 * dot + qn2[:, None], 0.0)
-                )
-            else:
-                d_ex = np.abs(
-                    np.float32(1.0)
-                    - dot / (self.norms[safe] * np.sqrt(qn2)[:, None])
-                )
-            beam_d = np.where(
-                np.isfinite(beam_d) & (beam_i >= 0), d_ex, np.float32(np.inf)
-            )
         return _beam_topk(beam_d, beam_i, k)
 
     def _search_batch_chunk_tombstone(self, Q: np.ndarray, k: int, ef: int | None):
@@ -2030,16 +1935,6 @@ def _check_config(idx_pdf: pd.DataFrame, cfg: HnswConfig) -> None:
 
 import os as _os_mod
 
-# matrices with at least this many elements walk on uint8 codes with an
-# exact float32 rerank (ANNDB_QUANT_MIN_ELEMS=0 forces quantization, a
-# huge value disables).  Default is conservative: at 47M elements
-# (60k×784) the u8→f32 upcast per gathered frontier measurably COSTS
-# more than the 4× gather-byte saving on this host class; the win
-# appears when the matrix dwarfs the cache hierarchy (≳1 GB).
-_QUANT_MIN_ELEMS = int(
-    _os_mod.environ.get("ANNDB_QUANT_MIN_ELEMS", str(1 << 28))
-)
-
 
 def _graph_bytes(g: "HnswGraph") -> int:
     b = g.vectors.nbytes + 16 * len(g.levels)
@@ -2099,12 +1994,6 @@ def _shm_load(d: str, cfg: "HnswConfig"):
         g.adj_pad = {int(lvl): mm(f"pad_{lvl}.npy") for lvl in j["pad_levels"]}
         if j.get("has_deleted"):
             g.deleted = np.asarray(mm("deleted.npy"))
-        if j.get("has_quant"):
-            g.q_codes = mm("q_codes.npy")
-            g.q_scale = np.asarray(mm("q_scale.npy"))
-            g.q_min = np.asarray(mm("q_min.npy"))
-            g.q_norms2 = mm("q_norms2.npy")
-            g.q_norms = mm("q_norms.npy")
         with open(_os_mod.path.join(d, "ids.pkl"), "rb") as f:
             ids = _pickle.load(f)
         mp = _os_mod.path.join(d, "meta.pkl")
@@ -2173,21 +2062,6 @@ def _shm_store(key, ids, g: "HnswGraph") -> str | None:
             np.save(_os_mod.path.join(tmp, f"pad_{lvl}.npy"), pad)
         if g.deleted is not None:
             np.save(_os_mod.path.join(tmp, "deleted.npy"), g.deleted)
-        if (
-            g.deleted is None
-            and g.cfg.space != "manhattan"
-            and len(g.levels) * g.dim >= _QUANT_MIN_ELEMS
-        ):
-            g.quantize()  # share the traversal codes host-wide too
-        has_quant = getattr(g, "q_codes", None) is not None
-        if has_quant:
-            np.save(_os_mod.path.join(tmp, "q_codes.npy"), np.asarray(g.q_codes))
-            np.save(_os_mod.path.join(tmp, "q_scale.npy"), g.q_scale)
-            np.save(_os_mod.path.join(tmp, "q_min.npy"), g.q_min)
-            np.save(
-                _os_mod.path.join(tmp, "q_norms2.npy"), np.asarray(g.q_norms2)
-            )
-            np.save(_os_mod.path.join(tmp, "q_norms.npy"), np.asarray(g.q_norms))
         with open(_os_mod.path.join(tmp, "ids.pkl"), "wb") as f:
             _pickle.dump(ids, f, protocol=4)
         if g.item_meta is not None:
@@ -2201,7 +2075,6 @@ def _shm_store(key, ids, g: "HnswGraph") -> str | None:
                         "entrypoint": g.entrypoint,
                         "pad_levels": sorted(g.adj_pad),
                         "has_deleted": g.deleted is not None,
-                        "has_quant": has_quant,
                     }
                 )
             )
@@ -2258,11 +2131,10 @@ def _shm_evict() -> None:
 def _graph_from_index(
     idx_pdf: pd.DataFrame,
     cfg: "HnswConfig",
-    vec_pdf: pd.DataFrame | None = None,
     need_adj: bool = True,
 ):
     """Reconstruct (ids, HnswGraph) from index rows; vectors come from the
-    index's own vertex rows (self-contained) unless ``vec_pdf`` given.
+    index's own vertex rows.
 
     Vertex metadata (when present) is attached as ``g.item_meta`` and
     'tomb' rows become the ``g.deleted`` mask — deleted vertices stay
@@ -2278,24 +2150,17 @@ def _graph_from_index(
     partition-pruned IVF shape."""
     _check_config(idx_pdf, cfg)
     vrows = idx_pdf[idx_pdf["kind"] == "vertex"]
-    if vec_pdf is not None:
-        ids = vec_pdf["id"].tolist()
-        vecs = np.array(vec_pdf["vector"].tolist(), dtype=np.float32)
-        pos_index = pd.Index(ids)
-        levels = np.zeros(len(ids), dtype=np.int32)
-        levels[pos_index.get_indexer(vrows["src"])] = vrows["level"].to_numpy()
-    else:
-        ids = vrows["src"].tolist()
-        vecs = np.array(vrows["vec"].tolist(), dtype=np.float32)
-        pos_index = pd.Index(ids)
-        levels = vrows["level"].to_numpy(dtype=np.int32)
+    ids = vrows["src"].tolist()
+    vecs = np.array(vrows["vec"].tolist(), dtype=np.float32)
+    pos_index = pd.Index(ids)
+    levels = vrows["level"].to_numpy(dtype=np.int32)
     n = len(ids)
     if vecs.ndim == 1:  # zero vertices → (0, 0) matrix, empty graph
         vecs = vecs.reshape(0, 0)
     g = HnswGraph(vecs.shape[1], cfg)
     g.vectors = vecs
     g.levels = levels.tolist()
-    if vec_pdf is None and "meta" in idx_pdf.columns:
+    if "meta" in idx_pdf.columns:
         g.item_meta = [
             dict(m) if m is not None else None for m in vrows["meta"]
         ]  # arrow maps arrive as key/value tuples
@@ -2427,18 +2292,19 @@ def tombstone_stats(index: DataFrame) -> DataFrame:
     )
 
 
-def _use_brute(
-    strategy: str, n: int, nq: int, dim: int, threshold: float
-) -> bool:
+_BRUTE_FLOPS_MAX = 1e8
+
+
+def _use_brute(strategy: str, n: int, nq: int, dim: int) -> bool:
     """The one brute-vs-beam rule under every server.
 
     'brute' and 'beam' force a kernel.  'auto' scans exactly when the
-    n·|Q|·d flops of one partition's GEMM fall under ``threshold``
+    n·|Q|·d flops of one partition's GEMM fall under `_BRUTE_FLOPS_MAX`
     (small fine-partitions after coarse pruning — the IVF shape — where
     brute is both faster and exact) and walks the graph otherwise (at
     100 TB per-partition n is millions and beam always wins)."""
     return strategy == "brute" or (
-        strategy == "auto" and n * nq * dim <= threshold
+        strategy == "auto" and n * nq * dim <= _BRUTE_FLOPS_MAX
     )
 
 
@@ -2525,34 +2391,29 @@ def _assemble_hits(qids, hits, ids, g, with_metadata: bool, columns=None, arrow=
 
 def search_index(
     index: DataFrame,
-    vectors: DataFrame | None,
     queries: list[tuple[object, list[float]]],
     k: int,
     ef: int | None = None,
     config: HnswConfig | None = None,
-    partition_col: str = "partition_id",
-    id_col: str = "id",
-    vec_col: str = "vector",
     strategy: str = "auto",
-    brute_flops_threshold: float = 1e8,
     cache_token: str | None = None,
     with_metadata: bool = False,
+    centroids=None,
+    nprobe: int = 0,
 ) -> DataFrame:
-    """ANN top-k over the materialized index.
-
-    With a self-contained index (vertex rows carry vectors — the default
-    since the index embeds them like the reference snapshot's vertex
-    blocks), search is ONE grouped scan of the index: no cogroup, no
-    second table, half the shuffle.  ``vectors`` may be None then; a
-    legacy vector-less index falls back to cogrouping (vectors ⋈ index).
-    Either way: per-partition search → partial top-k → global window
-    top-k, the reference's scatter/gather (`storage/dataset.go:374-431`).
+    """ANN top-k over an index DataFrame: one grouped scan of the index,
+    per-partition search → partial top-k → global window top-k, the
+    reference's scatter/gather (`storage/dataset.go:374-431`).  Vertex
+    rows carry the vectors (like the reference snapshot's vertex
+    blocks), so the index is the only input; an index without a ``vec``
+    column is rejected — rebuild it with `build_index`.
 
     ``strategy``: 'beam' (HNSW greedy descent + beam over the finalized
     graph), 'brute' (exact blocked-GEMM scoring of the whole partition)
-    or 'auto' (`_use_brute` against ``brute_flops_threshold``).
+    or 'auto' (`_use_brute`).
 
-    ``queries``: [(query_id, vector)] — broadcast in the task closure.
+    ``queries``: [(query_id, vector)] or the ``(ids, matrix)`` form —
+    broadcast in the task closure.
     ``cache_token``: stable string enabling the reused-worker graph
     cache for serving workloads; pass a NEW token whenever the index is
     rebuilt (stale tokens would serve the old graph).
@@ -2560,134 +2421,61 @@ def search_index(
     ``config=None`` restores the config persisted in the index (the
     snapshot header); an explicit config whose space disagrees with the
     persisted one raises instead of silently mis-scoring.
+
+    With ``centroids`` and ``nprobe > 0`` the search is cluster-routed —
+    the IVF×HNSW hybrid, for an index built over *cluster-assigned*
+    vectors (`ivf.assign_clusters` → `build_index(partition_col=
+    'cluster_id')`), so each graph partition is a coarse k-means cell.
+    Each query then searches only its ``nprobe`` nearest cells' graphs
+    (driver-side `_serve.route`), and only probed partitions are scanned
+    at all: an index persisted ``partitionBy(partition_id)`` reads
+    nprobe/P of its bytes.  Recall is governed by nprobe exactly like
+    IVF (`ivf.search_ivf`), on top of the per-graph beam's ef.  As in
+    `search_index_path`, ``nprobe=0`` is the flat search, and
+    ``nprobe >= n_cells`` returns the flat search's rows.
     """
+    if "vec" not in index.columns:
+        raise ValueError(
+            "index has no 'vec' column (vertex vectors); rebuild it with "
+            "build_index"
+        )
     cfg = config or get_index_config(index) or HnswConfig()
-    qid_arr, qmat = _serve.parse_queries(queries)
-    return _search_grouped(
-        index, vectors, qid_arr, qmat, None, k, max(ef or cfg.ef, k), cfg,
-        strategy, brute_flops_threshold, cache_token, with_metadata,
-        partition_col, id_col, vec_col,
+    ef = max(ef or cfg.ef, k)
+    routed = centroids is not None and nprobe > 0
+    qid_arr, qmat = _serve.parse_queries(
+        queries, np.shape(centroids)[1] if routed else 0
     )
-
-
-def _search_grouped(
-    index: DataFrame,
-    vectors: DataFrame | None,
-    qid_arr: np.ndarray,
-    qmat: np.ndarray,
-    by_pid: dict[int, list[int]] | None,
-    k: int,
-    ef: int,
-    cfg: HnswConfig,
-    strategy: str,
-    brute_flops_threshold: float,
-    cache_token: str | None,
-    with_metadata: bool,
-    partition_col: str = "partition_id",
-    id_col: str = "id",
-    vec_col: str = "vector",
-) -> DataFrame:
-    """The grouped body of `search_index` and `search_index_routed`: one
-    task per index partition searches that graph for every query (or,
-    routed, only the query rows ``by_pid`` sends to it), then
-    `_serve.merge_topk` keeps the global top k."""
+    by_pid = None
+    if routed:
+        by_pid = _serve.route(_pairwise(qmat, centroids, cfg.space), nprobe)
+        # scan-time pruning: only probed partitions are read at all
+        index = index.filter(F.col("partition_id").isin(sorted(by_pid)))
     out_cols, out_ddl = _result_layout(False, with_metadata)
 
-    def run_graph(pid, idx_pdf: pd.DataFrame, vec_pdf=None) -> pd.DataFrame:
-        qsel = None if by_pid is None else by_pid.get(int(pid))
+    def search_part(key, idx_pdf: pd.DataFrame) -> pd.DataFrame:
+        pid = int(key[0])
+        qsel = None if by_pid is None else by_pid.get(pid)
         if not len(idx_pdf) or (by_pid is not None and not qsel):
             return pd.DataFrame(columns=out_cols)
-        key = (cache_token, int(pid)) if cache_token is not None else None
-        hit = _serve.CACHE.get("hnsw", key)
+        ckey = (cache_token, pid) if cache_token is not None else None
+        hit = _serve.CACHE.get("hnsw", ckey)
         if hit is None:
-            hit = _graph_from_index(idx_pdf, cfg, vec_pdf)
-            _serve.CACHE.put("hnsw", key, hit, _graph_bytes(hit[1]))
+            hit = _graph_from_index(idx_pdf, cfg)
+            _serve.CACHE.put("hnsw", ckey, hit, _graph_bytes(hit[1]))
         ids, g = hit
         sub, sub_qids = (
             (qmat, qid_arr) if qsel is None else (qmat[qsel], qid_arr[qsel])
         )
-        if _use_brute(strategy, len(ids), len(sub), g.dim, brute_flops_threshold):
+        if _use_brute(strategy, len(ids), len(sub), g.dim):
             hits = g.search_brute(sub, k)
         else:
             hits = g.search_fast_batch(sub, k, ef)
         return _assemble_hits(sub_qids, hits, ids, g, with_metadata, out_cols)
 
-    if "vec" in index.columns:
-
-        def search_self(key, idx_pdf: pd.DataFrame) -> pd.DataFrame:
-            return run_graph(key[0], idx_pdf)
-
-        partials = index.groupBy("partition_id").applyInPandas(
-            search_self, schema=out_ddl
-        )
-    else:
-        if vectors is None:
-            raise ValueError("legacy vector-less index requires the vectors DataFrame")
-        if with_metadata:
-            raise ValueError(
-                "with_metadata requires a self-contained index (vertex rows "
-                "carry metadata); rebuild the index or join metadata externally"
-            )
-        vsrc = vectors.select(
-            F.col(partition_col).alias("partition_id"),
-            F.col(id_col).cast("string").alias("id"),
-            F.col(vec_col).cast("array<float>").alias("vector"),
-        )
-
-        def search_one(vec_pdf: pd.DataFrame, idx_pdf: pd.DataFrame) -> pd.DataFrame:
-            if not len(vec_pdf):
-                return pd.DataFrame(columns=out_cols)
-            return run_graph(vec_pdf["partition_id"].iloc[0], idx_pdf, vec_pdf)
-
-        cogrouped = vsrc.groupBy("partition_id").cogroup(
-            index.groupBy("partition_id")
-        )
-        partials = cogrouped.applyInPandas(search_one, schema=out_ddl)
-    return _serve.merge_topk(partials, k, _result_layout(True, with_metadata)[0])
-
-
-def search_index_routed(
-    index: DataFrame,
-    queries: list[tuple[object, list[float]]],
-    k: int,
-    centroids,
-    nprobe: int = 8,
-    ef: int | None = None,
-    config: HnswConfig | None = None,
-    strategy: str = "auto",
-    brute_flops_threshold: float = 1e8,
-    cache_token: str | None = None,
-    with_metadata: bool = False,
-) -> DataFrame:
-    """Cluster-routed ANN search — the IVF×HNSW hybrid, the 100 TB shape.
-
-    Build the index over *cluster-assigned* vectors
-    (`ivf.assign_clusters` → `build_index(partition_col='cluster_id')`)
-    so each graph partition is a coarse k-means cell; then each query
-    beam-searches only its ``nprobe`` nearest cells' graphs instead of
-    every partition.  Per-query work drops from P graph walks (the flat
-    `search_index` scatter, `storage/dataset.go:390-432`) to nprobe —
-    and because only probed partitions are scanned, an index persisted
-    ``partitionBy(partition_id)`` turns routing into parquet partition
-    pruning: nprobe/P of the index bytes are read.
-
-    Routing runs on the driver (`_serve.route`); the pruned index then
-    runs `search_index`'s grouped body, each task searching only its
-    partition's query rows.  Recall is governed by nprobe exactly like
-    IVF (`ivf.search_ivf`), on top of the per-graph beam's ef.
-    ``nprobe >= n_clusters`` degrades to the flat scatter.
-    """
-    if "vec" not in index.columns:
-        raise ValueError("routed search requires a self-contained index (vec column)")
-    cfg = config or get_index_config(index) or HnswConfig()
-    qid_arr, qmat = _serve.parse_queries(queries, np.shape(centroids)[1])
-    by_pid = _serve.route(_pairwise(qmat, centroids, cfg.space), nprobe)
-    # scan-time pruning: only probed partitions are read at all
-    pruned = index.filter(F.col("partition_id").isin(sorted(by_pid)))
-    return _search_grouped(
-        pruned, None, qid_arr, qmat, by_pid, k, max(ef or cfg.ef, k), cfg,
-        strategy, brute_flops_threshold, cache_token, with_metadata,
+    partials = index.groupBy("partition_id").applyInPandas(
+        search_part, schema=out_ddl
     )
+    return _serve.merge_topk(partials, k, _result_layout(True, with_metadata)[0])
 
 
 # Driver-local serving declines a brute scan above this many flops: a
@@ -2702,7 +2490,6 @@ def _acquire_partition_graph(
     pid,
     cfg: "HnswConfig",
     strategy: str,
-    brute_flops_threshold: float,
     cache_token: str | None,
     index_ver: str | None,
     n_sub: int,
@@ -2731,9 +2518,7 @@ def _acquire_partition_graph(
                 hit = got
     if hit is not None:
         ids, g = hit
-        return ids, g, _use_brute(
-            strategy, len(ids), n_sub, g.dim, brute_flops_threshold
-        )
+        return ids, g, _use_brute(strategy, len(ids), n_sub, g.dim)
     bkey = (
         (cache_token, index_ver, pid, "brute")
         if cache_token is not None
@@ -2753,14 +2538,14 @@ def _acquire_partition_graph(
     bhit = _serve.CACHE.get("hnsw", bkey)
     if bhit is not None:
         ids, g = bhit
-        if _use_brute(strategy, len(ids), n_sub, g.dim, brute_flops_threshold):
+        if _use_brute(strategy, len(ids), n_sub, g.dim):
             return ids, g, True
     idx_pdf = _fsu.read_parquet_dir(
         _fsu.join(path, f"partition_id={pid}")
     ).to_pandas()
     verts = idx_pdf.loc[idx_pdf["kind"] == "vertex", "vec"]
     dim = len(verts.iloc[0]) if len(verts) else 0
-    if _use_brute(strategy, len(verts), n_sub, dim, brute_flops_threshold):
+    if _use_brute(strategy, len(verts), n_sub, dim):
         ids, g = _graph_from_index(idx_pdf, cfg, need_adj=False)
         _serve.CACHE.put("hnsw", bkey, (ids, g), _graph_bytes(g))
         return ids, g, True
@@ -2782,7 +2567,6 @@ def _serve_single_graph_local(
     pid: int,
     cfg: "HnswConfig",
     strategy: str,
-    brute_flops_threshold: float,
     cache_token: str | None,
     index_ver,
     qid_arr: np.ndarray,
@@ -2817,8 +2601,7 @@ def _serve_single_graph_local(
     # query-chunk of (at most) queries_per_task rows — use the same
     # chunk size so "auto" lands on the same strategy
     ids, g, use_brute = _acquire_partition_graph(
-        path, pid, cfg, strategy, brute_flops_threshold, cache_token,
-        index_ver, min(chunk_q, nq),
+        path, pid, cfg, strategy, cache_token, index_ver, min(chunk_q, nq),
     )
     if use_brute and len(ids) * nq * g.dim > _LOCAL_BRUTE_FLOPS_MAX:
         # local serving exists for the beam case, whose OpenMP kernel
@@ -2861,7 +2644,6 @@ def search_index_path(
     ef: int | None = None,
     config: HnswConfig | None = None,
     strategy: str = "auto",
-    brute_flops_threshold: float = 1e8,
     cache_token: str | None = None,
     with_metadata: bool = False,
     centroids=None,
@@ -2899,8 +2681,8 @@ def search_index_path(
     task-side reads both go through the filesystem API, so driver and
     executors need no shared local filesystem.
 
-    Results are identical to `search_index` / `search_index_routed` on
-    the same saved index (pytest-verified).
+    Results are identical to `search_index` on the same saved index,
+    flat or routed (pytest-verified).
     """
     routed = centroids is not None and nprobe > 0
     cents = centroids if routed else locality_centroids
@@ -2932,9 +2714,8 @@ def search_index_path(
         n_q = qmat.shape[0]
         queries_per_task = _serve.chunk_size(spark, 1, n_q, queries_per_task)
         tbl = _serve_single_graph_local(
-            path, pids[0], cfg, strategy, brute_flops_threshold, cache_token,
-            index_ver, qid_arr, qmat, k, ef, with_metadata,
-            min(queries_per_task, n_q),
+            path, pids[0], cfg, strategy, cache_token, index_ver, qid_arr,
+            qmat, k, ef, with_metadata, min(queries_per_task, n_q),
         )
         if tbl is not None:
             # arrow-table input: no pandas hop, and under
@@ -2944,8 +2725,7 @@ def search_index_path(
 
     def search_chunk(pid: int, qids: np.ndarray, sub: np.ndarray) -> pd.DataFrame:
         ids, g, use_brute = _acquire_partition_graph(
-            path, pid, cfg, strategy, brute_flops_threshold,
-            cache_token, index_ver, len(sub),
+            path, pid, cfg, strategy, cache_token, index_ver, len(sub),
         )
         hits = g.search_brute(sub, k) if use_brute else g.search_fast_batch(sub, k, ef)
         return _assemble_hits(qids, hits, ids, g, with_metadata, out_cols)
@@ -2971,7 +2751,6 @@ def search_index_local(
     ef: int | None = None,
     config: HnswConfig | None = None,
     strategy: str = "auto",
-    brute_flops_threshold: float = 1e8,
     cache_token: str | None = None,
     with_metadata: bool = False,
     queries_per_task: int | None = None,
@@ -3008,15 +2787,15 @@ def search_index_local(
     if len(pids) == 1:
         n_q = len(qmat)
         tbl = _serve_single_graph_local(
-            path, pids[0], cfg, strategy, brute_flops_threshold, cache_token,
-            index_ver, qid_arr, qmat, k, eff_ef, with_metadata,
+            path, pids[0], cfg, strategy, cache_token, index_ver, qid_arr,
+            qmat, k, eff_ef, with_metadata,
             min(queries_per_task or n_q, n_q) or 1,
         )
         if tbl is not None:
             return tbl
     return search_index_path(
         spark, path, (qid_arr, qmat), k, ef=ef, config=cfg, strategy=strategy,
-        brute_flops_threshold=brute_flops_threshold, cache_token=cache_token,
+        cache_token=cache_token,
         with_metadata=with_metadata, queries_per_task=queries_per_task,
     ).toArrow()
 
@@ -3042,8 +2821,8 @@ def load_index(spark, path: str) -> DataFrame:
 
     Column order is normalized back to INDEX_SCHEMA order (partitionBy
     moves the partition column to the end on disk).  Indexes saved
-    before vectors were embedded load without a ``vec`` column and
-    search falls back to the cogroup path."""
+    before vectors were embedded load without a ``vec`` column;
+    `search_index` rejects them — rebuild with `build_index`."""
     df = spark.read.parquet(path)
     cols = ["partition_id", "kind", "src", "level", "dsts"]
     for opt in ("vec", "meta"):

@@ -601,6 +601,10 @@ def knn_join(
       centroids and score only those clusters of right (see
       `operators/ivf.py`): O(|L|·nprobe·cluster_size) scores, the 100 TB
       path.  Requires ``centroids`` (train via `ivf.train_centroids`).
+      A ``cluster_id`` column on ``right`` is used as the rows' cell
+      instead of re-assigning them, so it must come from
+      `ivf.assign_clusters` against the same ``centroids``; a NULL or
+      out-of-range id fails the query.
     - ``'pq'`` — product-code the right side once (m bytes/row) and
       ADC-score the codes, exact-reranking a per-left-row shortlist
       against the float rows (see `operators/pq.py`): the inner scan
@@ -622,14 +626,30 @@ def knn_join(
         # dropped it, so search_ivf re-assigned the WHOLE right table
         # (a full Python pass over every vector) on every call even
         # when the caller had already assigned it against these same
-        # centroids.  A caller-supplied cluster_id is trusted exactly
-        # like search_ivf trusts it (same contract).
+        # centroids.
         rcols = [
             F.col(right_id_col).alias("id"),
             F.col(right_vec_col).alias("vector"),
         ]
         if "cluster_id" in right.columns:
-            rcols.append(F.col("cluster_id"))
+            # a NULL or out-of-range id is never probed, so its row would
+            # silently drop out: fail the query instead (checked in the
+            # same scan — no extra job)
+            cid, n_cells = F.col("cluster_id"), len(centroids)
+            rcols.append(
+                F.when(
+                    cid.isNull() | (cid < 0) | (cid >= n_cells),
+                    F.raise_error(F.concat(
+                        F.lit("knn_join(mode='ivf'): right column cluster_id = "),
+                        F.coalesce(cid.cast("string"), F.lit("NULL")),
+                        F.lit(
+                            f" is not a cell of the {n_cells} centroids; assign "
+                            "it with ivf.assign_clusters against the same "
+                            "centroids, or drop the column"
+                        ),
+                    )),
+                ).otherwise(cid).alias("cluster_id")
+            )
         res = search_ivf(
             right.select(*rcols),
             left.select(

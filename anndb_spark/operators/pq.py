@@ -23,8 +23,7 @@ Spark shape:
 
 The reference stores raw float32 vectors only (its snapshot format,
 index/hnsw_persistence.go:71-95) — PQ is a north-star extension; the
-row-wise SQ8 codec (functions/quantize.py) and the serving-side
-per-dimension SQ (operators/hnsw.HnswGraph.quantize) are its cheaper
+row-wise SQ8 and binary codecs (functions/quantize.py) are its cheaper
 untrained cousins.
 """
 

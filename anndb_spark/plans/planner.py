@@ -8,9 +8,11 @@ decision Catalyst can't see — which physical kNN kernel to run:
 - ``exact``  — broadcast cross join + partial/final top-k (`knn.knn_exact`);
   the semantic ground truth, right answer for small tables and for oracle
   checks.
-- ``ann``    — HNSW graph walk over a materialized index DataFrame
-  (`hnsw.search_index`); right when an index exists and the table is
-  large: per-query work is ~ef·m distance evals instead of n.
+- ``ann``    — HNSW graph walk over a materialized index: an index
+  DataFrame (`hnsw.search_index`) or a saved index path
+  (`hnsw.search_index_path`), the same search with the same brute/beam
+  rule either way; right when an index exists and the table is large:
+  per-query work is ~ef·m distance evals instead of n.
 - ``ivf``    — coarse-quantized probe (`ivf.search_ivf`); right at
   extreme scale where even holding a graph per partition is too much:
   queries touch nprobe/n_clusters of the data and cluster-partitioned
@@ -122,7 +124,7 @@ def knn(
                 config=HnswConfig(space=space), cache_token=cache_token,
             )
         return "ann", search_index(
-            index, vectors, qitems, k, ef=ef, config=HnswConfig(space=space)
+            index, qitems, k, ef=ef, config=HnswConfig(space=space)
         )
     from anndb_spark.utils import literal_df
 

@@ -41,7 +41,6 @@ def stream_search_transform(
     ef: int | None = None,
     config=None,
     strategy: str = "auto",
-    brute_flops_threshold: float = 1e8,
     cache_token: str | None = None,
     with_metadata: bool = False,
 ) -> DataFrame:
@@ -93,8 +92,7 @@ def stream_search_transform(
             parts = []
             for pid in pids:
                 ids, g, use_brute = _acquire_partition_graph(
-                    index_path, pid, cfg, strategy, brute_flops_threshold,
-                    cache_token, index_ver, nq,
+                    index_path, pid, cfg, strategy, cache_token, index_ver, nq,
                 )
                 hits = (
                     g.search_brute(qmat, k)

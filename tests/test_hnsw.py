@@ -119,7 +119,7 @@ def test_search_index_recall_vs_exact(spark, spark_index):
 
     rng = np.random.default_rng(5)
     queries = [(str(i), rng.normal(0, 1, 64).tolist()) for i in range(10)]
-    ann = search_index(idx, emb, queries, k=10, ef=100, config=cfg).collect()
+    ann = search_index(idx, queries, k=10, ef=100, config=cfg).collect()
     qdf = spark.createDataFrame(
         [(q, v) for q, v in queries], "query_id STRING, query_vector ARRAY<DOUBLE>"
     )
@@ -149,8 +149,8 @@ def test_index_parquet_roundtrip(spark, spark_index, tmp_path):
     assert idx2.columns == ["partition_id", "kind", "src", "level", "dsts", "vec", "meta"]
     rng = np.random.default_rng(6)
     queries = [("q0", rng.normal(0, 1, 64).tolist())]
-    a = search_index(idx, emb, queries, k=5, ef=50, config=cfg).collect()
-    b = search_index(idx2, emb, queries, k=5, ef=50, config=cfg).collect()
+    a = search_index(idx, queries, k=5, ef=50, config=cfg).collect()
+    b = search_index(idx2, queries, k=5, ef=50, config=cfg).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
@@ -175,29 +175,18 @@ def test_batch_search_matches_single(spark):
             assert len(got & want) >= 8, (space, qi, got, want)
 
 
-def test_self_contained_search_needs_no_vectors(spark, spark_index):
-    """Vertex rows embed vectors (reference snapshot parity,
-    index/hnsw_persistence.go:71-95): search runs off the index alone and
-    matches the cogroup path bit-for-bit."""
-    emb, idx, cfg = spark_index
-    rng = np.random.default_rng(17)
-    queries = [(f"q{i}", rng.normal(0, 1, 64).tolist()) for i in range(5)]
-    a = search_index(idx, None, queries, k=7, ef=60, config=cfg).collect()
-    legacy = idx.drop("vec")
-    b = search_index(legacy, emb, queries, k=7, ef=60, config=cfg).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_legacy_index_requires_vectors(spark, spark_index):
+def test_index_without_vec_is_rejected(spark, spark_index):
+    """Every index writer emits vertex vectors; an index without the
+    ``vec`` column is rejected with a message naming the fix."""
     _, idx, cfg = spark_index
-    with pytest.raises(ValueError, match="requires the vectors"):
-        search_index(idx.drop("vec"), None, [("q", [0.0] * 64)], 3, config=cfg)
+    with pytest.raises(ValueError, match="'vec'.*build_index"):
+        search_index(idx.drop("vec"), [("q", [0.0] * 64)], 3, config=cfg)
 
 
-def test_routed_search_full_probe_matches_flat(spark):
-    """IVF×HNSW hybrid: with nprobe = n_clusters the routed search
-    degrades to the flat scatter and returns identical results."""
-    from anndb_spark.operators.hnsw import search_index_routed
+@pytest.fixture(scope="module")
+def cell_index(spark):
+    """A cluster-partitioned index (8 k-means cells over 600×16), its
+    centroids, config, five queries and their flat beam results."""
     from anndb_spark.operators.ivf import assign_clusters, train_centroids
 
     rng = np.random.default_rng(31)
@@ -209,19 +198,38 @@ def test_routed_search_full_probe_matches_flat(spark):
     idx = build_index(assigned, cfg, partition_col="cluster_id").cache()
     queries = [(f"q{i}", rng.normal(0, 1, 16).tolist()) for i in range(5)]
     flat = search_index(
-        idx, None, queries, k=5, ef=60, config=cfg, strategy="beam"
+        idx, queries, k=5, ef=60, config=cfg, strategy="beam"
     ).collect()
-    routed = search_index_routed(
-        idx, queries, k=5, centroids=cent, nprobe=8, ef=60, config=cfg,
-        strategy="beam",
+    assert len(flat) == 25
+    return idx, cent, cfg, queries, sorted(map(tuple, flat))
+
+
+def test_routed_search_full_probe_matches_flat(cell_index):
+    """IVF×HNSW hybrid: with nprobe = n_clusters the routed search
+    degrades to the flat scatter and returns identical results."""
+    idx, cent, cfg, queries, flat = cell_index
+    routed = search_index(
+        idx, queries, k=5, ef=60, config=cfg, strategy="beam",
+        centroids=cent, nprobe=8,
     ).collect()
-    assert sorted(map(tuple, flat)) == sorted(map(tuple, routed))
+    assert flat == sorted(map(tuple, routed))
+
+
+def test_routed_nprobe_zero_is_flat(cell_index):
+    """``nprobe=0`` means "no routing" on both HNSW servers: with
+    centroids given, `search_index` returns the flat call's rows, as
+    `search_index_path` does."""
+    idx, cent, cfg, queries, flat = cell_index
+    got = search_index(
+        idx, queries, k=5, ef=60, config=cfg, strategy="beam",
+        centroids=cent, nprobe=0,
+    ).collect()
+    assert flat == sorted(map(tuple, got))
 
 
 def test_routed_search_recall(spark):
     """nprobe ≪ n_clusters still recovers most true neighbors (IVF
     pruning on top of the graph beam)."""
-    from anndb_spark.operators.hnsw import search_index_routed
     from anndb_spark.operators.ivf import assign_clusters, train_centroids
 
     rng = np.random.default_rng(37)
@@ -240,8 +248,8 @@ def test_routed_search_recall(spark):
     idx = build_index(assigned, cfg, partition_col="cluster_id").cache()
     qsrc = blobs[rng.integers(0, 16, 20)] + rng.normal(0, 1, (20, 16))
     queries = [(f"q{i}", qsrc[i].tolist()) for i in range(20)]
-    got = search_index_routed(
-        idx, queries, k=10, centroids=cent, nprobe=4, ef=80, config=cfg
+    got = search_index(
+        idx, queries, k=10, ef=80, config=cfg, centroids=cent, nprobe=4
     ).collect()
     by_q = {}
     for r in got:
@@ -279,7 +287,7 @@ def test_config_persisted_and_restored(spark, tmp_path):
     stored = get_index_config(idx2)
     assert stored is not None and stored.space == "cosine" and stored.m == 8
     queries = [("q0", rng.normal(0, 1, 16).tolist())]
-    ann = search_index(idx2, None, queries, k=5, ef=80).collect()
+    ann = search_index(idx2, queries, k=5, ef=80).collect()
     qdf = spark.createDataFrame(
         [(q, v) for q, v in queries], "query_id STRING, query_vector ARRAY<DOUBLE>"
     )
@@ -289,7 +297,7 @@ def test_config_persisted_and_restored(spark, tmp_path):
     assert len(got & want) >= 4, (got, want)
     with pytest.raises(Exception, match="space"):
         search_index(
-            idx2, None, queries, k=5,
+            idx2, queries, k=5,
             config=HnswConfig(m=8, space="euclidean"),
         ).collect()
 
@@ -300,12 +308,12 @@ def test_cache_token_serving_path(spark, spark_index):
     emb, idx, cfg = spark_index
     rng = np.random.default_rng(23)
     queries = [(f"q{i}", rng.normal(0, 1, 64).tolist()) for i in range(3)]
-    cold = search_index(idx, None, queries, k=5, ef=60, config=cfg).collect()
+    cold = search_index(idx, queries, k=5, ef=60, config=cfg).collect()
     warm1 = search_index(
-        idx, None, queries, k=5, ef=60, config=cfg, cache_token="t1"
+        idx, queries, k=5, ef=60, config=cfg, cache_token="t1"
     ).collect()
     warm2 = search_index(
-        idx, None, queries, k=5, ef=60, config=cfg, cache_token="t1"
+        idx, queries, k=5, ef=60, config=cfg, cache_token="t1"
     ).collect()
     assert sorted(map(tuple, cold)) == sorted(map(tuple, warm1)) == sorted(map(tuple, warm2))
 
@@ -341,7 +349,7 @@ def test_tombstone_delete_never_returned(spark, spark_index):
     deleted = set(del_ids)
     for strategy in ("brute", "beam"):
         res = search_index(
-            idx2, None, queries, k=10, ef=100, config=cfg, strategy=strategy
+            idx2, queries, k=10, ef=100, config=cfg, strategy=strategy
         ).collect()
         assert not ({r["id"] for r in res} & deleted), strategy
         per_q = {}
@@ -354,7 +362,7 @@ def test_tombstone_delete_never_returned(spark, spark_index):
     ids_s = [r["id"] for r in surv]
     mat = np.array([r["vector"] for r in surv], dtype=np.float32)
     res_b = search_index(
-        idx2, None, queries, k=10, ef=100, config=cfg, strategy="brute"
+        idx2, queries, k=10, ef=100, config=cfg, strategy="brute"
     ).collect()
     got = {}
     for r in res_b:
@@ -371,7 +379,6 @@ def test_index_metadata_passthrough(spark):
     """Vertex rows carry metadata; with_metadata returns it from the
     index alone (SearchResultItem contract, search.proto:22-26) on both
     the flat and the routed path."""
-    from anndb_spark.operators.hnsw import search_index_routed
     from anndb_spark.operators.ivf import train_centroids
 
     rng = np.random.default_rng(23)
@@ -387,7 +394,7 @@ def test_index_metadata_passthrough(spark):
     idx = build_index(df, cfg).cache()
     queries = [("q0", rows[3][1]), ("q1", rows[40][1])]
     res = search_index(
-        idx, None, queries, k=5, config=cfg, with_metadata=True
+        idx, queries, k=5, config=cfg, with_metadata=True
     ).collect()
     assert len(res) == 10
     want = {r[0]: r[2] for r in rows}
@@ -400,8 +407,8 @@ def test_index_metadata_passthrough(spark):
     idx_r = build_index(
         assign_clusters(df, cent), cfg, partition_col="cluster_id"
     ).cache()
-    res_r = search_index_routed(
-        idx_r, queries, k=5, centroids=cent, nprobe=2, config=cfg, with_metadata=True
+    res_r = search_index(
+        idx_r, queries, k=5, config=cfg, with_metadata=True, centroids=cent, nprobe=2
     ).collect()
     for r in res_r:
         assert r["metadata"] == want[r["id"]]
@@ -411,11 +418,7 @@ def test_search_index_path_matches_dataframe_search(spark, spark_index, tmp_path
     """The serving-shape path search (per-partition parquet reads, no
     index shuffle) must return exactly what the DataFrame search
     returns — flat, routed, and brute/beam strategies."""
-    from anndb_spark.operators.hnsw import (
-        save_index,
-        search_index_path,
-        search_index_routed,
-    )
+    from anndb_spark.operators.hnsw import save_index, search_index_path
     from anndb_spark.operators.ivf import assign_clusters, train_centroids
 
     emb, idx, cfg = spark_index
@@ -425,7 +428,7 @@ def test_search_index_path_matches_dataframe_search(spark, spark_index, tmp_path
     queries = [(str(i), rng.normal(0, 1, 64).tolist()) for i in range(6)]
     for strategy in ("brute", "beam"):
         a = search_index(
-            idx, None, queries, k=8, ef=80, config=cfg, strategy=strategy
+            idx, queries, k=8, ef=80, config=cfg, strategy=strategy
         ).collect()
         b = search_index_path(
             spark, path, queries, k=8, ef=80, config=cfg, strategy=strategy
@@ -442,8 +445,8 @@ def test_search_index_path_matches_dataframe_search(spark, spark_index, tmp_path
     from anndb_spark.operators.hnsw import save_index as _si
 
     _si(idx_r, rpath)
-    a = search_index_routed(
-        idx_r, queries, k=8, centroids=cent, nprobe=2, ef=80, config=cfg
+    a = search_index(
+        idx_r, queries, k=8, ef=80, config=cfg, centroids=cent, nprobe=2
     ).collect()
     b = search_index_path(
         spark, rpath, queries, k=8, centroids=cent, nprobe=2, ef=80, config=cfg
@@ -515,7 +518,7 @@ def test_save_graph_partition_single_graph_fast_path(spark, tmp_path):
     got_df = {
         (r["query_id"], r["rank"]): r["id"]
         for r in search_index(
-            idx_df, None, queries, 5, ef=50, config=cfg, strategy="beam"
+            idx_df, queries, 5, ef=50, config=cfg, strategy="beam"
         ).collect()
     }
     assert got_path == got_df and len(got_path) == 200
@@ -599,53 +602,6 @@ def test_fork_parallel_build_identical_to_serial():
     assert g1.entrypoint == g2.entrypoint
     assert g1.levels == g2.levels
     assert all(a == b for a, b in zip(g1.adj, g2.adj))
-
-
-def test_quantized_traversal_exact_rerank():
-    """Big-graph searches walk on uint8-quantized rows but the returned
-    distances must be EXACT float32 (rerank), and recall must not
-    degrade vs the unquantized kernel."""
-    rng = np.random.default_rng(11)
-    n, dim = 3000, 64
-    centers = rng.normal(0, 1, (16, dim)).astype(np.float32)
-    mat = centers[np.arange(n) % 16] + rng.normal(0, 0.15, (n, dim)).astype(
-        np.float32
-    )
-    cfg = HnswConfig(m=8, ef_construction=80, ef=24, heuristic=True)
-    lr = np.random.default_rng(3)
-    levels = np.floor(
-        -np.log(np.clip(lr.random(n), 1e-12, 1 - 1e-12)) * cfg.level_multiplier
-    ).astype(int).tolist()
-    g = HnswGraph.build(mat, levels, cfg).finalize()
-    Q = centers[rng.integers(16, size=50)] + rng.normal(
-        0, 0.15, (50, dim)
-    ).astype(np.float32)
-    base = _hit_lists(*g.search_fast_batch(Q, 10))
-    g.quantize()  # force (below the auto threshold)
-    quant = _hit_lists(*g.search_fast_batch(Q, 10))
-    # returned scores are exact euclidean distances, not quantized ones
-    for qi in range(50):
-        for d, idx in quant[qi]:
-            exact = float(np.linalg.norm(mat[idx] - Q[qi]))
-            assert abs(d - exact) < 1e-3
-    # recall parity with the exact-walk kernel (vs brute truth)
-    truth = _hit_lists(*g.search_brute(Q, 10))
-    tsets = [set(i for _, i in row) for row in truth]
-    r_base = sum(
-        len(tsets[qi] & set(i for _, i in base[qi])) for qi in range(50)
-    )
-    r_quant = sum(
-        len(tsets[qi] & set(i for _, i in quant[qi])) for qi in range(50)
-    )
-    assert r_quant >= r_base - 10  # ≤2% drift allowed
-
-    # mutation drops stale codes (and search still works)
-    g.thaw_adjacency()
-    assert not hasattr(g, "q_codes")
-    g.insert_many(Q[:1], [g.random_level()])
-    g.finalize()
-    again, _ = g.search_fast_batch(Q[:5], 5)
-    assert again.shape == (5, 5) and (again >= 0).all()
 
 
 def test_serving_cache_tracks_index_content(spark, tmp_path):
@@ -869,7 +825,7 @@ def test_local_serve_matches_task_path(spark, tmp_path):
     for p in (path, tomb_path):
         for strategy in ("beam", "brute"):
             a = search_index(
-                load_index(spark, p), None, queries, 6, ef=60, config=cfg,
+                load_index(spark, p), queries, 6, ef=60, config=cfg,
                 strategy=strategy, cache_token="t-local",
             ).collect()
             local = search_index_path(
@@ -927,12 +883,12 @@ def test_local_serve_big_brute_falls_back_to_tasks(spark, tmp_path, monkeypatch)
     # total flops 300*40*16 = 192k > cap 1 → local serving declines
     monkeypatch.setattr(hnsw_mod, "_LOCAL_BRUTE_FLOPS_MAX", 1.0)
     declined = _serve_single_graph_local(
-        path, 0, cfg, "brute", 1e12, None, None, qids, qmat, 5, 50, False, 40,
+        path, 0, cfg, "brute", None, None, qids, qmat, 5, 50, False, 40,
     )
     assert declined is None
     # beam is kernel-bound, not BLAS-bound: same cap must NOT decline
     served = _serve_single_graph_local(
-        path, 0, cfg, "beam", 0.0, None, None, qids, qmat, 5, 50, False, 40,
+        path, 0, cfg, "beam", None, None, qids, qmat, 5, 50, False, 40,
     )
     assert served is not None and len(served) == 200
     # and the public API still answers the brute query via the task plan
@@ -969,7 +925,7 @@ def test_local_serve_metadata_single_partition(spark, tmp_path):
             spark, path, queries, 5, config=cfg, with_metadata=True,
         )),
         ("tasks", search_index(
-            load_index(spark, path), None, queries, 5, config=cfg,
+            load_index(spark, path), queries, 5, config=cfg,
             with_metadata=True,
         )),
     ):
@@ -1016,7 +972,7 @@ def test_search_index_local_api(spark, tmp_path):
     assert tbl.column_names == ["query_id", "rank", "id", "score"]
     assert tbl.num_rows == 125
     df_rows = search_index(
-        load_index(spark, single), None, queries, 5, ef=50, config=cfg,
+        load_index(spark, single), queries, 5, ef=50, config=cfg,
     ).collect()
     a = sorted(zip(*[tbl.column(c).to_pylist() for c in ("query_id", "rank", "id")]))
     b = sorted((r["query_id"], r["rank"], r["id"]) for r in df_rows)
@@ -1057,7 +1013,6 @@ def test_every_server_answers_an_empty_batch(spark, tmp_path):
         save_index,
         search_index_local,
         search_index_path,
-        search_index_routed,
     )
     from anndb_spark.operators.ivf import (
         assign_clusters,
@@ -1099,10 +1054,10 @@ def test_every_server_answers_an_empty_batch(spark, tmp_path):
     meta = base + [("metadata", "map<string,string>")]
     empty_q = spark.createDataFrame([], "query_id STRING, vector ARRAY<DOUBLE>")
     frames = {
-        "search_index/one": (search_index(load_index(spark, single), None, [], 5), base),
+        "search_index/one": (search_index(load_index(spark, single), [], 5), base),
         "search_index/two": (
-            search_index(load_index(spark, multi), None, [], 5, with_metadata=True), meta),
-        "routed": (search_index_routed(
+            search_index(load_index(spark, multi), [], 5, with_metadata=True), meta),
+        "routed": (search_index(
             load_index(spark, routed), [], 5, centroids=cent, nprobe=2), base),
         "path/one": (search_index_path(spark, single, [], 5, config=cfg), base),
         "path/one/matrix": (search_index_path(
@@ -1362,6 +1317,7 @@ def test_acquire_brute_graph_warm_reads_no_parquet(spark, tmp_path, monkeypatch)
     path never had the defect).  Auto-resolution to beam on a cached
     brute-only entry must still fall through to the full read (it
     needs adjacency)."""
+    from anndb_spark.operators import hnsw as hnsw_mod
     from anndb_spark.operators.hnsw import (
         _acquire_partition_graph,
         build_index,
@@ -1392,24 +1348,25 @@ def test_acquire_brute_graph_warm_reads_no_parquet(spark, tmp_path, monkeypatch)
     token = f"warm-brute-{ver}"
     # cold: one parquet read, brute-only graph cached
     ids, g, ub = _acquire_partition_graph(
-        path, 0, cfg, "brute", 1e8, token, ver, 5
+        path, 0, cfg, "brute", token, ver, 5
     )
     assert ub and calls["n"] == 1 and len(ids) > 0
     # warm brute: zero further reads
     ids2, g2, ub2 = _acquire_partition_graph(
-        path, 0, cfg, "brute", 1e8, token, ver, 5
+        path, 0, cfg, "brute", token, ver, 5
     )
     assert ub2 and calls["n"] == 1
     assert ids2 == ids and g2 is g
     # warm auto resolving to brute: still zero reads
     _, _, ub3 = _acquire_partition_graph(
-        path, 0, cfg, "auto", 1e8, token, ver, 5
+        path, 0, cfg, "auto", token, ver, 5
     )
     assert ub3 and calls["n"] == 1
     # auto resolving to BEAM (threshold 0): the brute-only entry lacks
     # adjacency -> must fall through to a full read and return beam
+    monkeypatch.setattr(hnsw_mod, "_BRUTE_FLOPS_MAX", 0.0)
     _, g4, ub4 = _acquire_partition_graph(
-        path, 0, cfg, "auto", 0.0, token, ver, 5
+        path, 0, cfg, "auto", token, ver, 5
     )
     assert not ub4 and calls["n"] >= 2
     assert g4.adj_pad  # full graph carries adjacency

@@ -164,6 +164,41 @@ def test_knn_join_ivf_partial_probe_recall(spark, join_sides):
     assert hits / total >= 0.6
 
 
+def test_knn_join_ivf_preassigned_right_matches_unassigned(spark, join_sides):
+    """A ``right`` carrying its `assign_clusters` cells returns the same
+    rows as one the join assigns itself."""
+    from anndb_spark.operators.ivf import assign_clusters, train_centroids
+    from anndb_spark.operators.knn import knn_join
+
+    ldf, _, rdf, _ = join_sides
+    cents = train_centroids(rdf, 8, sample_n=200, seed=3)
+    plain = knn_join(ldf, rdf, 5, mode="ivf", centroids=cents, nprobe=3).collect()
+    carried = knn_join(
+        ldf, assign_clusters(rdf, cents), 5, mode="ivf", centroids=cents, nprobe=3
+    ).collect()
+    assert sorted(map(tuple, carried)) == sorted(map(tuple, plain))
+    assert len(plain) == 5 * ldf.count()
+
+
+@pytest.mark.parametrize("bad", [8, -1, None])
+def test_knn_join_ivf_rejects_bad_cluster_id(spark, join_sides, bad):
+    """A carried ``cluster_id`` outside range(len(centroids)) — or NULL —
+    would never be probed; the join fails naming the column instead of
+    silently dropping the row."""
+    from anndb_spark.operators.ivf import assign_clusters, train_centroids
+    from anndb_spark.operators.knn import knn_join
+
+    ldf, _, rdf, _ = join_sides
+    cents = train_centroids(rdf, 8, sample_n=200, seed=3)
+    cid = F.col("cluster_id")
+    right = assign_clusters(rdf, cents).withColumn(
+        "cluster_id",
+        F.when(F.col("id") == "R007", F.lit(bad).cast("int")).otherwise(cid),
+    )
+    with pytest.raises(Exception, match="cluster_id"):
+        knn_join(ldf, right, 5, mode="ivf", centroids=cents, nprobe=8).collect()
+
+
 def test_knn_exact_gemm_kernel_matches_expr(spark, small_vectors):
     """GEMM kernel returns the same ids/ranks as the expression path;
     scores agree to float tolerance (different summation order)."""

@@ -141,7 +141,7 @@ def test_stream_maintain_index_dirty_partitions_only(spark, tmp_path):
 
     # search over the streamed index finds the anchor itself
     anchor = rows[5]
-    res = search_index(idx1, st, [("q", anchor[3])], 5, config=cfg, strategy="beam")
+    res = search_index(idx1, [("q", anchor[3])], 5, config=cfg, strategy="beam")
     got = [r["id"] for r in res.orderBy("rank").collect()]
     assert anchor[1] in got and got[0] == anchor[1]
 
@@ -175,8 +175,7 @@ def test_stream_maintain_index_dirty_partitions_only(spark, tmp_path):
     assert len(touched) == 1  # dynamic overwrite rewrote only the dirty partition
 
     # updated vector is searchable in the refreshed index
-    st2 = spark.read.parquet(base)
-    res2 = search_index(load_index(spark, index), st2, [("q", upd[0][3])], 3, config=cfg, strategy="beam")
+    res2 = search_index(load_index(spark, index), [("q", upd[0][3])], 3, config=cfg, strategy="beam")
     assert res2.orderBy("rank").collect()[0]["id"] == rows[5][1]
 
 
@@ -232,9 +231,8 @@ def test_stream_maintain_index_tombstone_deletes(spark, tmp_path):
     # base IS compacted (deletes applied)
     assert spark.read.parquet(base).count() == n - 3
 
-    st = spark.read.parquet(base)
     anchor = rows[12]  # partition 0, not deleted
-    res = search_index(idx, None, [("q", anchor[3])], 8, config=cfg, strategy="beam")
+    res = search_index(idx, [("q", anchor[3])], 8, config=cfg, strategy="beam")
     got = [r["id"] for r in res.orderBy("rank").collect()]
     assert got[0] == anchor[1]
     assert not (set(got) & set(del1))
@@ -257,7 +255,7 @@ def test_stream_maintain_index_tombstone_deletes(spark, tmp_path):
         ).collect()
     }
     assert verts2_p0 == verts_p0 - set(del1) - set(del2)
-    res2 = search_index(idx2, None, [("q", anchor[3])], 8, config=cfg, strategy="beam")
+    res2 = search_index(idx2, [("q", anchor[3])], 8, config=cfg, strategy="beam")
     got2 = [r["id"] for r in res2.orderBy("rank").collect()]
     assert got2[0] == anchor[1]
     assert not (set(got2) & (set(del1) | set(del2)))
@@ -309,7 +307,7 @@ def test_stream_maintain_index_empty_partition_rebuild(spark, tmp_path):
     # search across the whole index (incl. the empty partition) works and
     # never returns a deleted id
     anchor = rows[1]  # partition 1, still present
-    res = search_index(idx, None, [("q", anchor[3])], 10, config=cfg)
+    res = search_index(idx, [("q", anchor[3])], 10, config=cfg)
     got = [r["id"] for r in res.orderBy("rank").collect()]
     assert got and got[0] == anchor[1]
     assert not (set(got) & set(p0_ids))
@@ -383,7 +381,7 @@ def test_stream_maintain_index_insert_only_extends(spark, tmp_path, monkeypatch)
     # the new vector is immediately searchable at rank 1, and old
     # anchors still resolve
     for probe in (new[0], rows[4]):
-        res = search_index(idx, None, [("q", probe[3])], 3, config=cfg)
+        res = search_index(idx, [("q", probe[3])], 3, config=cfg)
         assert res.orderBy("rank").collect()[0]["id"] == probe[1]
 
 
