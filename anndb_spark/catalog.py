@@ -38,16 +38,6 @@ CATALOG_SCHEMA = T.StructType(
     ]
 )
 
-VECTORS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("vector", T.ArrayType(T.FloatType()), False),
-        T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("partition_id", T.IntegerType(), False),
-    ]
-)
-
-
 def uuid_mod(id_col: Column, m: int) -> Column:
     """The reference's UuidMod partitioner as a column expression.
 

@@ -10,10 +10,19 @@ One class per reference service, mapped onto the batch engine:
 
 Write path: every mutation appends rows to an ordered parquet changelog
 (the Raft-log analogue, `storage/partition.go:435-474` — durability is
-the storage layer's job per the north star), `compact()` folds it into
+the storage layer's job per the north star).  `compact()` folds it into
 the base snapshot with the same state machine the reference applies
-entry-by-entry, and per-item errors come back as a rejects DataFrame
-instead of the reference's `map[id]error` (`storage/dataset.go:243-252`).
+entry-by-entry, and writes the new snapshot once, into a new version
+directory ``_base/<epoch>/partition_id=*/``.  It then switches readers
+with an atomic pointer (``_base/CURRENT.tmp`` renamed over
+``_base/CURRENT``), and only after the switch deletes the old version and
+the changelog (the Raft snapshot replacing its log,
+`storage/raft/group.go:275-300`).  A failed compaction therefore leaves
+the previous base and the changelog as they were.  Per-item errors come
+back as a rejects DataFrame instead of the reference's `map[id]error`
+(`storage/dataset.go:243-252`).  Vectors are stored as float32 in both
+the changelog and the base, like the reference's ``value []float32``
+(`protobuf/proto/dataset.proto:36-41`).
 
 Read path: `search()` routes through the physical-path planner
 (`plans/planner.py`) — exact cross-join for small data, HNSW graph walk
@@ -38,14 +47,15 @@ from anndb_spark.operators.crud import (
     split_rejects,
     split_state,
 )
+from anndb_spark.sources import fsutil
 
 CHANGES_SCHEMA = (
-    "seq LONG, id STRING, op STRING, vector ARRAY<DOUBLE>, "
+    "seq LONG, id STRING, op STRING, vector ARRAY<FLOAT>, "
     "metadata MAP<STRING,STRING>"
 )
 
 STATE_SCHEMA = (
-    "id STRING, vector ARRAY<DOUBLE>, metadata MAP<STRING,STRING>, "
+    "id STRING, vector ARRAY<FLOAT>, metadata MAP<STRING,STRING>, "
     "level INT, partition_id INT"
 )
 
@@ -106,10 +116,11 @@ class Dataset:
     # --- write path (changelog appends) --------------------------------
 
     def _changes(self) -> DataFrame | None:
-        try:
-            return self.spark.read.schema(CHANGES_SCHEMA).parquet(self.changes_path)
-        except Exception:
+        """The pending changelog; None only when none has been written
+        since the last compaction."""
+        if not fsutil.exists(self.changes_path):
             return None
+        return self.spark.read.schema(CHANGES_SCHEMA).parquet(self.changes_path)
 
     def _next_seq(self) -> int:
         ch = self._changes()
@@ -135,8 +146,8 @@ class Dataset:
         n_buckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         keyed = df.select(
             F.col("id").cast("string").alias("id"),
-            (F.col("vector").cast("array<double>") if "vector" in df.columns
-             else F.lit(None).cast("array<double>")).alias("vector"),
+            (F.col("vector").cast("array<float>") if "vector" in df.columns
+             else F.lit(None).cast("array<float>")).alias("vector"),
             (F.col("metadata") if "metadata" in df.columns
              else F.lit(None).cast("map<string,string>")).alias("metadata"),
         ).withColumn(
@@ -166,8 +177,11 @@ class Dataset:
         out.write.mode("append").parquet(self.changes_path)
 
     def insert(self, df: DataFrame) -> None:
-        """Append insert ops for (id, vector[, metadata]) rows.  Dimension
-        errors surface as rejects at compaction (batch semantics)."""
+        """Append insert ops for (id, vector[, metadata]) rows.  Vectors
+        are stored as float32, like the reference's ``[]float32``: a
+        double that float32 cannot represent is rounded once, to the
+        nearest float32.  Dimension errors surface as rejects at
+        compaction (batch semantics)."""
         self._append(df, "insert")
 
     def update(self, df: DataFrame) -> None:
@@ -227,40 +241,68 @@ class Dataset:
             .alias("error"),
         )
         applied = apply_changes_sql(self._base(), ch.filter(~bad_dim & ~bad_meta))
-        state = split_state(applied)
+        state = split_state(applied).withColumn(
+            "vector", F.col("vector").cast("array<float>")
+        )
         rejects = split_rejects(applied).select("id", "error").unionByName(bad)
         routed = with_partition_id(state, self.meta.partition_count)
-        # materialize to scratch dirs first: both `routed` and `rejects`
-        # read lazily from the *old* base + changelog, which the final
-        # writes below overwrite (and the path overwrite invalidates any
-        # cache entries referencing it — .cache() would NOT survive)
-        tmp = self.base_path + "_tmp"
+        # both `routed` and `rejects` read lazily from the current base
+        # and the changelog: write both before the pointer switch
+        # retires them.  A failure up to the switch leaves the current
+        # base and the changelog untouched.
+        version = str(self._base_version()[0] + 1)
         rejects_path = os.path.join(os.path.dirname(self.base_path), "_rejects")
-        routed.write.mode("overwrite").partitionBy("partition_id").parquet(tmp)
+        routed.write.mode("overwrite").partitionBy("partition_id").parquet(
+            fsutil.join(self.base_path, version)
+        )
         rejects.write.mode("overwrite").parquet(rejects_path)
-        final = self.spark.read.schema(STATE_SCHEMA).parquet(tmp)
-        final.write.mode("overwrite").partitionBy("partition_id").parquet(self.base_path)
+        fsutil.replace_text(fsutil.join(self.base_path, "CURRENT"), version)
+        for name in fsutil.child_names(self.base_path):
+            if name not in ("CURRENT", version):
+                fsutil.delete_path(fsutil.join(self.base_path, name))
         # changelog folded in; truncate it (Raft log compaction analogue,
         # storage/raft/group.go:275-300)
-        empty = self.spark.createDataFrame([], CHANGES_SCHEMA)
-        empty.write.mode("overwrite").parquet(self.changes_path)
+        fsutil.delete_path(self.changes_path)
         self._approx_len = None  # row count changed; recount lazily
         return self.spark.read.schema("id STRING, error STRING").parquet(rejects_path)
 
+    def _base_version(self) -> tuple[int, str | None]:
+        """(epoch, directory) of the current base: the version
+        ``_base/CURRENT`` names, or a base written before versioning
+        (``partition_id=*`` directly under ``_base``, epoch 0).  (0, None)
+        only when no base has been written yet."""
+        current = fsutil.read_text(fsutil.join(self.base_path, "CURRENT"))
+        if current is not None:
+            current = current.strip()
+            return int(current), fsutil.join(self.base_path, current)
+        if any(
+            n.startswith("partition_id=")
+            for n in fsutil.child_names(self.base_path)
+        ):
+            return 0, self.base_path
+        return 0, None
+
     def _base(self) -> DataFrame | None:
-        try:
-            df = self.spark.read.parquet(self.base_path)
-            return df.select("id", "vector", "metadata", "level")
-        except Exception:
+        """The current base with the `STATE_SCHEMA` columns, or None
+        when no base has been written yet.  Every base reader goes
+        through here; read errors propagate."""
+        epoch, path = self._base_version()
+        if path is None:
             return None
+        if epoch == 0:  # unversioned base, vectors stored as doubles
+            legacy = STATE_SCHEMA.replace("ARRAY<FLOAT>", "ARRAY<DOUBLE>")
+            return self.spark.read.schema(legacy).parquet(path).withColumn(
+                "vector", F.col("vector").cast("array<float>")
+            )
+        return self.spark.read.schema(STATE_SCHEMA).parquet(path)
 
     def state(self) -> DataFrame:
         """Current compacted snapshot (id, vector, metadata, level,
         partition_id).  Call compact() first to fold pending changes."""
-        try:
-            return self.spark.read.schema(STATE_SCHEMA).parquet(self.base_path)
-        except Exception:
+        base = self._base()
+        if base is None:
             return self.spark.createDataFrame([], STATE_SCHEMA)
+        return base
 
     def get(self, item_id: str):
         """Point lookup (`index/hnsw.go:142-151`); partition-pruned scan."""

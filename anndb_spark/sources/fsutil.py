@@ -1,12 +1,15 @@
-"""Filesystem abstraction for the serving-shape search paths.
+"""Filesystem abstraction for the serving-shape search paths and the
+Dataset's versioned base.
 
 `search_index_path` / `search_ivf_path` discover partition directories
-on the driver and read parquet inside tasks.  Plain ``os.listdir`` /
-local-path reads tie the hot path to a POSIX filesystem shared between
-driver and executors — at the 100 TB target the index lives on object
-storage, so both sides go through ``pyarrow.fs`` instead: plain paths
-resolve to the local filesystem, ``file://`` / ``s3://`` / ``hdfs://``
-(and anything else pyarrow can mount) resolve via ``FileSystem.from_uri``.
+on the driver and read parquet inside tasks; `Dataset.compact` switches
+its ``_base/CURRENT`` pointer and deletes retired versions.  Plain
+``os.listdir`` / local-path reads tie the hot path to a POSIX filesystem
+shared between driver and executors — at the 100 TB target the index
+lives on object storage, so both sides go through ``pyarrow.fs``
+instead: plain paths resolve to the local filesystem, ``file://`` /
+``s3://`` / ``hdfs://`` (and anything else pyarrow can mount) resolve
+via ``FileSystem.from_uri``.
 
 The reference has no analogue (its snapshots are local files under the
 Raft data dir, `storage/partition.go`); this is our north star's
@@ -79,6 +82,57 @@ def read_dir_schema(path: str):
 def join(path: str, *parts: str) -> str:
     """Path join that preserves URI schemes (os.path.join would not)."""
     return "/".join([path.rstrip("/")] + [p.strip("/") for p in parts])
+
+
+def exists(path: str) -> bool:
+    """Whether a file or directory exists at ``path``."""
+    from pyarrow import fs as pafs
+
+    f, p = resolve_fs(path)
+    return f.get_file_info(p).type != pafs.FileType.NotFound
+
+
+def child_names(path: str) -> list[str]:
+    """Sorted names of the entries directly under ``path``; [] when
+    ``path`` does not exist."""
+    from pyarrow import fs as pafs
+
+    f, p = resolve_fs(path)
+    infos = f.get_file_info(pafs.FileSelector(p, allow_not_found=True))
+    return sorted(i.base_name for i in infos)
+
+
+def delete_path(path: str) -> None:
+    """Delete a file or a directory tree; a missing path is a no-op."""
+    from pyarrow import fs as pafs
+
+    f, p = resolve_fs(path)
+    kind = f.get_file_info(p).type
+    if kind == pafs.FileType.Directory:
+        f.delete_dir(p)
+    elif kind == pafs.FileType.File:
+        f.delete_file(p)
+
+
+def read_text(path: str) -> str | None:
+    """Contents of a small text file; None when it does not exist (any
+    other error propagates)."""
+    f, p = resolve_fs(path)
+    try:
+        with f.open_input_stream(p) as fh:
+            return fh.read().decode()
+    except FileNotFoundError:
+        return None
+
+
+def replace_text(path: str, text: str) -> None:
+    """Write ``<path>.tmp``, then rename it over ``path``: a reader sees
+    the old text or the new one, never a torn file (a rename is atomic
+    on local and HDFS filesystems; object stores copy instead)."""
+    f, p = resolve_fs(path)
+    with f.open_output_stream(p + ".tmp") as fh:
+        fh.write(text.encode())
+    f.move(p + ".tmp", p)
 
 
 def index_fingerprint(path: str) -> str:

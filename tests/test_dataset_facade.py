@@ -3,10 +3,16 @@ client workflow (create → insert → search → update → remove → search)
 run against the batch engine, mirroring the service-level behavior the
 reference leaves untested (`SURVEY.md §5.6`)."""
 
+import json
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.readwriter import DataFrameWriter
 
+from anndb_spark.catalog import with_partition_id
 from anndb_spark.dataset import AnnDB
 
 
@@ -185,8 +191,12 @@ def test_pending_changes_invisible_until_compact(spark, db):
         )
     )
     assert ds.len() == 0  # changelog not yet folded
+    assert ds._next_seq() == 1
     ds.compact()
     assert ds.len() == 1
+    # the fold deletes the changelog instead of writing an empty one
+    assert not os.path.exists(ds.changes_path)
+    assert ds._changes() is None and ds._next_seq() == 0
 
 
 def test_remove_tombstones_index_without_rebuild(spark, db):
@@ -364,3 +374,176 @@ def test_search_filter_exact_and_ann(spark, db):
 
     with pytest.raises(ValueError, match="filter="):
         ds.search(q, 3, mode="ivfpq", filter=pred)
+
+
+# --- versioned base -----------------------------------------------------------
+
+
+def _state_rows(ds):
+    return sorted(tuple(r) for r in ds.state().collect())
+
+
+def _change_rows(ds):
+    return sorted(
+        (r["seq"], r["id"], r["op"], r["vector"]) for r in ds._changes().collect()
+    )
+
+
+def test_compact_keeps_one_base_version(spark, db):
+    """Each compaction writes one new version under ``_base``, switches
+    ``CURRENT`` to it and deletes the rest: no scratch copy survives."""
+    ds = db.create_dataset("ver", dimension=4, partition_count=2)
+    rows, df = _vec_rows(spark, 30, 4, seed=5)
+    ds.insert(df)
+    ds.compact()
+    assert sorted(os.listdir(ds.base_path)) == ["1", "CURRENT"]
+    ds.remove([rows[0][0]])
+    ds.compact()
+    assert sorted(os.listdir(ds.base_path)) == ["2", "CURRENT"]
+    with open(os.path.join(ds.base_path, "CURRENT")) as f:
+        assert f.read() == "2"
+    left = set(os.listdir(os.path.dirname(ds.base_path)))
+    assert not left & {"_base_tmp", "_base_next", "_changes"}
+    assert ds.len() == 29
+
+
+def test_failed_compaction_keeps_previous_base_and_changelog(spark, db, monkeypatch):
+    """A compaction whose base write job fails must leave the previous
+    base readable, bit-identically, and the changelog still pending."""
+    ds = db.create_dataset("fail", dimension=4, partition_count=2)
+    rows, df = _vec_rows(spark, 20, 4, seed=6)
+    ds.insert(df)
+    ds.compact()
+    before = _state_rows(ds)
+    _, more = _vec_rows(spark, 5, 4, seed=7, prefix="w")
+    ds.insert(more)
+    ds.remove([rows[1][0]])
+    pending = _change_rows(ds)
+
+    real = DataFrameWriter.parquet
+
+    def fail(_):  # a closure, so the python workers unpickle it by value
+        raise RuntimeError("injected write failure")
+
+    def failing(writer, path, *a, **kw):
+        p = path.rstrip("/")
+        if p == ds.base_path or os.path.dirname(p) == ds.base_path:
+            boom = F.udf(fail, "string")
+            writer = (
+                writer._df.withColumn("id", boom("id"))
+                .write.mode("overwrite")
+                .partitionBy("partition_id")
+            )
+        return real(writer, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(Exception, match="injected write failure"):
+        ds.compact()
+    monkeypatch.undo()
+
+    assert _state_rows(ds) == before
+    assert _change_rows(ds) == pending
+    # the retry folds the same changes and retires the failed attempt
+    ds.compact()
+    assert ds.len() == 24
+    assert sorted(os.listdir(ds.base_path)) == ["2", "CURRENT"]
+
+
+def test_base_read_errors_propagate(spark, db):
+    """Only "no base written yet" reads as empty; a pointer to a missing
+    version is an error, never an empty dataset to fold into."""
+    ds = db.create_dataset("brk", dimension=4, partition_count=2)
+    assert ds.state().count() == 0 and ds.get("x") is None
+    rows, df = _vec_rows(spark, 10, 4, seed=8)
+    ds.insert(df)
+    ds.compact()
+    with open(os.path.join(ds.base_path, "CURRENT"), "w") as f:
+        f.write("7")
+    _, more = _vec_rows(spark, 3, 4, seed=9, prefix="w")
+    ds.insert(more)
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        ds.state()
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        ds.compact()
+    assert len(_change_rows(ds)) == 3
+
+
+def test_unversioned_double_base_is_read_and_migrated(spark, db):
+    """A base written before versioning (``ARRAY<DOUBLE>`` rows directly
+    under ``_base/partition_id=*``) reads as float32, and one compaction
+    migrates it to ``CURRENT`` plus one version."""
+    ds = db.create_dataset("old", dimension=4, partition_count=2)
+    legacy = spark.createDataFrame(
+        [("a", [0.1, 0.2, 0.3, 0.4], {"k": "1"}, 0),
+         ("b", [1.0, 0.0, 0.0, 0.0], {}, 1)],
+        "id STRING, vector ARRAY<DOUBLE>, metadata MAP<STRING,STRING>, level INT",
+    )
+    with_partition_id(legacy, 2).write.partitionBy("partition_id").parquet(
+        ds.base_path
+    )
+    st = ds.state()
+    assert st.schema["vector"].dataType == T.ArrayType(T.FloatType())
+    f32 = [float(np.float32(v)) for v in (0.1, 0.2, 0.3, 0.4)]
+    assert ds.get("a")["vector"] == f32
+    ds.insert(spark.createDataFrame([("c", [0.5] * 4)], "id STRING, vector ARRAY<DOUBLE>"))
+    assert ds.compact().collect() == []
+    assert sorted(os.listdir(ds.base_path)) == ["1", "CURRENT"]
+    got = {r["id"]: (r["vector"], r["metadata"], r["level"]) for r in ds.state().collect()}
+    assert got == {
+        "a": (f32, {"k": "1"}, 0),
+        "b": ([1.0, 0.0, 0.0, 0.0], {}, 1),
+        "c": ([0.5] * 4, {}, got["c"][2]),
+    }
+
+
+# --- float32 boundary ---------------------------------------------------------
+
+
+def test_float32_vectors_round_trip_bit_identical(spark, db):
+    ds = db.create_dataset("f32", dimension=8, partition_count=2)
+    rng = np.random.default_rng(13)
+    x = rng.normal(size=(40, 8)).astype(np.float32)
+    x[0, :3] = [np.float32(1e-40), np.finfo(np.float32).max, -0.0]
+    ds.insert(spark.createDataFrame(
+        [(f"f{i:02d}", x[i].tolist()) for i in range(40)], "id STRING, vector ARRAY<DOUBLE>"
+    ))
+    ds.compact()
+    assert ds.state().schema["vector"].dataType == T.ArrayType(T.FloatType())
+    got = {r["id"]: r["vector"] for r in ds.state().collect()}
+    for i in range(40):
+        want = np.asarray(got[f"f{i:02d}"], dtype=np.float32)
+        assert want.tobytes() == x[i].tobytes()
+    assert np.asarray(ds.get("f00")["vector"], np.float32).tobytes() == x[0].tobytes()
+
+
+def test_double_vectors_round_once_to_nearest_float32(spark, db):
+    ds = db.create_dataset("rnd", dimension=4, partition_count=1)
+    # 1 + 2**-24 is a tie: round-half-even keeps 1.0; 1 + 3 * 2**-24
+    # rounds up to 1 + 2**-22; 0.1 rounds to the nearest float32
+    v = [0.1, 1 + 2**-24, 1 + 3 * 2**-24, 1e300]
+    ds.insert(spark.createDataFrame([("r", v)], "id STRING, vector ARRAY<DOUBLE>"))
+    ds.compact()
+    got = ds.get("r")["vector"]
+    assert got == [float(np.float32(0.1)), 1.0, 1 + 2**-22, float("inf")]
+
+
+def test_exact_search_rows_unchanged_by_float32_storage(spark, db):
+    """Exact scoring widens every element to double, so on
+    float32-representable inputs the rows are bit-identical to those the
+    double-storing base produced (dumped into the fixture)."""
+    rng = np.random.default_rng(600)
+    x = rng.normal(size=(600, 16)).astype(np.float32)
+    q = rng.normal(size=(4, 16)).astype(np.float32)
+    ds = db.create_dataset("e", dimension=16, partition_count=3)
+    ds.insert(spark.createDataFrame(
+        [(f"e{i:04d}", x[i].tolist()) for i in range(600)], "id STRING, vector ARRAY<DOUBLE>"
+    ))
+    ds.compact()
+    qs = [(f"q{j}", q[j].tolist()) for j in range(4)]
+    got = sorted(
+        [r["query_id"], r["rank"], r["id"], r["score"].hex()]
+        for r in ds.search(qs, 10, mode="exact").collect()
+    )
+    path = os.path.join(os.path.dirname(__file__), "fixtures", "dataset_exact_600x16.json")
+    with open(path) as f:
+        assert got == json.load(f)

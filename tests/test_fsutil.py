@@ -1,6 +1,8 @@
 """Filesystem abstraction for the serving paths: plain paths and
 file:// URIs must behave identically (the object-store seam)."""
 
+from pathlib import Path
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -45,6 +47,30 @@ def test_read_parquet_dir_and_schema(tmp_path):
         assert got.num_rows == 2
         sch = fsutil.read_dir_schema(p)
         assert str(sch.field("id").type) == "int64"
+
+
+def test_pointer_and_delete_helpers(tmp_path):
+    """The Dataset's versioned-base helpers behave the same on plain
+    paths and file:// URIs; missing paths are the only quiet case."""
+    for p in (str(tmp_path / "a"), f"file://{tmp_path}/b"):
+        ptr = fsutil.join(p, "CURRENT")
+        assert not fsutil.exists(p)
+        assert fsutil.child_names(p) == []
+        assert fsutil.read_text(ptr) is None
+        fsutil.delete_path(p)  # missing: no-op
+        part = Path(p.removeprefix("file://")) / "1" / "partition_id=0"
+        part.mkdir(parents=True)
+        (part / "x.parquet").write_text("")
+        fsutil.replace_text(ptr, "1")
+        fsutil.replace_text(ptr, "2")
+        assert fsutil.read_text(ptr) == "2"
+        assert fsutil.child_names(p) == ["1", "CURRENT"]  # no CURRENT.tmp
+        fsutil.delete_path(fsutil.join(p, "1"))
+        assert fsutil.child_names(p) == ["CURRENT"]
+        fsutil.delete_path(ptr)
+        assert fsutil.exists(p) and fsutil.child_names(p) == []
+        with pytest.raises(OSError):
+            fsutil.read_text(p)  # a directory, not a missing file
 
 
 def test_serving_paths_accept_file_uri(spark, tmp_path):
