@@ -536,17 +536,20 @@ class Dataset:
         return res
 
     def search_local(self, query, k: int, **kw):
-        """In-process serving: Arrow-table results, no Spark job when
-        the dataset's saved index is one resident graph — the reference
+        """In-process serving: Arrow-table results from the saved index
+        (`hnsw.search_index_local`), with no Spark job whenever its
+        driver regime takes the batch — the parts the batch touches fit
+        the graph cache, whatever the partition count, and its brute
+        chunks stay under the local flops cap.  This is the reference
         node's own answer path (`services/search.go:20-46` serves from
         the in-memory graph; results never cross a serialization
         boundary).  RPC handlers and driver-side scorers should call
-        this; `search()` returns a composable DataFrame and pays a
-        driver↔JVM Arrow round trip for it.
+        this; `search()` returns a composable DataFrame (a local
+        relation in the same regime) and pays a driver→JVM hop for it.
 
-        Falls back to the Spark plan (collected via Arrow) when there
-        is no saved index or the index is multi-partition — identical
-        values either way (same kernels underneath)."""
+        Runs the Spark task plan (collected via Arrow) when the rule
+        declines, and the planner's path when there is no saved index —
+        identical values either way (same kernels underneath)."""
         queries = [("0", list(query))] if not isinstance(query, list) or (
             query and isinstance(query[0], (int, float))
         ) else query

@@ -23,10 +23,21 @@ Contract:
 * the returned view is valid until the caller's next request for the
   same tag on the same thread — callers must consume (or copy out of)
   a scratch matrix before re-requesting its tag.
+
+`one_blas_thread` pins numpy's OpenBLAS to one thread for a block.
+Python workers run one BLAS thread (``OPENBLAS_NUM_THREADS=1``), but a
+driver that imported numpy before `session.get_spark` set that variable
+runs one per core, and a GEMM's summation order — so its last bits —
+follows the thread split.  Kernels run in the driver under it score
+exactly as they do in a task.
 """
 
 from __future__ import annotations
 
+import contextlib
+import ctypes
+import functools
+import glob
 import os
 import threading
 
@@ -67,3 +78,58 @@ def argpart_rows(d: np.ndarray, kk: int) -> np.ndarray:
     for qi in range(d.shape[0]):
         part[qi] = np.argpartition(d[qi], kk - 1)[:kk]
     return part
+
+
+_BLAS_SETTERS = ("openblas_set_num_threads64_", "openblas_set_num_threads",
+                 "scipy_openblas_set_num_threads64_")
+
+
+@functools.cache
+def _openblas() -> tuple:
+    """(set, get) of the thread count of the OpenBLAS numpy loaded, or
+    () when none is found."""
+    root = os.path.dirname(os.path.dirname(np.__file__))
+    for path in glob.glob(os.path.join(root, "numpy.libs", "libopenblas*")) + glob.glob(
+        os.path.join(root, "numpy", ".libs", "libopenblas*")
+    ):
+        try:
+            lib = ctypes.CDLL(path)  # already loaded by numpy: same handle
+        except OSError:
+            continue
+        for name in _BLAS_SETTERS:
+            getter = name.replace("_set_", "_get_")
+            if hasattr(lib, name) and hasattr(lib, getter):
+                set_fn, get_fn = getattr(lib, name), getattr(lib, getter)
+                set_fn.argtypes, set_fn.restype = [ctypes.c_int], None
+                get_fn.argtypes, get_fn.restype = [], ctypes.c_int
+                return set_fn, get_fn
+    return ()
+
+
+_BLAS_LOCK = threading.Lock()
+_BLAS_HOLD = [0, 0]  # [callers inside, count to restore on the last exit]
+
+
+@contextlib.contextmanager
+def one_blas_thread():
+    """Run the block with numpy's OpenBLAS on one thread; a no-op when no
+    OpenBLAS setter is found.  The count is process-wide, so callers
+    share one hold: the first to enter saves the count and sets 1, the
+    last to leave restores it — overlapping callers (threads serving
+    requests) all run their GEMMs on one thread."""
+    blas = _openblas()
+    if not blas:
+        yield
+        return
+    with _BLAS_LOCK:
+        if not _BLAS_HOLD[0]:
+            _BLAS_HOLD[1] = blas[1]()
+            blas[0](1)
+        _BLAS_HOLD[0] += 1
+    try:
+        yield
+    finally:
+        with _BLAS_LOCK:
+            _BLAS_HOLD[0] -= 1
+            if not _BLAS_HOLD[0]:
+                blas[0](_BLAS_HOLD[1])

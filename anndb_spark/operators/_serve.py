@@ -1,4 +1,4 @@
-"""Scatter/gather for the saved-index servers.
+"""Scatter/gather for the saved-index servers, and the driver regime.
 
 Every saved-index search — `hnsw.search_index_path`, `ivf.search_ivf_path`,
 `ivfpq.search_ivfpq` — and the ADC batch scan `pq.pq_search_batch` has
@@ -11,29 +11,48 @@ kernel:
 
 - `parse_queries` — the query batch → (query-id strings, matrix);
 - `route`         — driver-side probing: {partition: [query rows]};
-- `scatter`       — the task plan: one ``(part, chunk)`` row per task
-                    via shuffle-free ``parallelize``, the query batch as
-                    a broadcast, and the drain-before-yield
+- `query_chunks`  — the plan: one ``(part, chunk, query rows)`` per
+                    kernel call, walked by both regimes below;
+- `scatter`       — the task regime: one plan row per task via
+                    shuffle-free ``parallelize``, the query batch as a
+                    broadcast, and the drain-before-yield
                     ``mapInPandas`` loop that calls the server's kernel;
 - `merge_topk`    — the global ``(score asc, id asc)`` row-number merge;
+- `serve`         — the driver regime beside `scatter`, for HNSW and
+                    IVF: `serve_locally` is the one rule (the driver
+                    keeps what it loads, the touched parts' resident
+                    bytes fit `CACHE`, and the batch's brute chunks stay
+                    under `LOCAL_BRUTE_FLOPS_MAX`), `run_local` runs
+                    the same kernel on the same chunks in the driver
+                    and merges like `merge_topk`, and the answer is a
+                    local relation — collecting it runs no Spark job,
+                    as the reference's coordinator merges partition
+                    results itself;
 - `exact_rerank`  — re-scoring an approximate shortlist against the
                     float table (IVFADC+R and PQ+R);
 - `CACHE`         — the byte-capped LRU that keeps loaded index parts
                     (HNSW graphs, IVF cells, IVF-PQ codes) resident in
-                    the reused python worker.
+                    the reused python worker, and in the driver for the
+                    driver regime.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from anndb_spark.operators._scratch import argpart_rows
+from anndb_spark.operators._scratch import argpart_rows, one_blas_thread
+
+# the driver regime declines a batch whose brute chunks exceed this many
+# flops (`serve_locally`)
+LOCAL_BRUTE_FLOPS_MAX = 5e8
 
 
 def parse_queries(queries, dim: int = 0, dtype=np.float32) -> tuple[np.ndarray, np.ndarray]:
@@ -80,46 +99,68 @@ def chunk_size(spark, n_parts: int, n_rows: int, queries_per_task: int | None = 
     return max(64, -(-n_rows // max(n_parts, par // 2, 1)))
 
 
+def query_chunks(
+    spark,
+    parts: list[int],
+    by_part: dict[int, list[int]] | None,
+    n_q: int,
+    queries_per_task: int | None = None,
+) -> list[tuple[int, int, "list[int] | range"]]:
+    """The plan both regimes walk: ``(part, chunk, query rows)``, one per
+    `chunk_size` rows of each part's queries.
+
+    ``by_part`` maps each partition to the query rows it answers; None
+    sends every query to every partition, and each chunk's rows stay a
+    ``range`` (it pickles in O(1) into `scatter`'s broadcast).  A part
+    without queries keeps one empty chunk.  Each chunk is one kernel call
+    in either regime, so a kernel's per-chunk choice (`hnsw._use_brute`)
+    is the same in both."""
+    rows_of = [range(n_q) if by_part is None else by_part.get(p, []) for p in parts]
+    qpt = chunk_size(spark, len(parts), sum(map(len, rows_of)), queries_per_task)
+    return [
+        (p, c, rows[c * qpt : (c + 1) * qpt])
+        for p, rows in zip(parts, rows_of)
+        for c in range(max(1, -(-len(rows) // qpt)))
+    ]
+
+
 def scatter(
     spark,
     parts: list[int],
     by_part: dict[int, list[int]] | None,
     qid_arr: np.ndarray,
     qmat: np.ndarray,
-    search_chunk: Callable[[int, np.ndarray, np.ndarray], pd.DataFrame | None],
+    search_chunk: Callable[..., pd.DataFrame | None],
     out_ddl: str,
     queries_per_task: int | None = None,
     items_per_task: int = 1,
 ) -> DataFrame:
-    """Partial top-k of every (partition, query chunk) as one Spark job.
+    """Partial top-k of every `query_chunks` chunk as one Spark job.
 
-    ``by_part`` maps each partition to the query rows it answers; None
-    sends every query to every partition.  ``search_chunk(part, qids,
-    Q)`` runs in a task and returns the chunk's partial rows (or None);
-    ``items_per_task`` packs several chunks into one task for indexes
-    whose parts are too small to pay a task launch each."""
-    n_q = qmat.shape[0]
-    per_part = [n_q if by_part is None else len(by_part.get(p, ())) for p in parts]
-    qpt = chunk_size(spark, len(parts), sum(per_part), queries_per_task)
-    plan_rows = [
-        (p, c) for p, n in zip(parts, per_part) for c in range(max(1, -(-n // qpt)))
-    ]
+    ``search_chunk(part, qids, Q)`` runs in a task and returns the
+    chunk's partial rows as pandas (or None); ``items_per_task`` packs several
+    chunks into one task for indexes whose parts are too small to pay a
+    task launch each."""
+    chunks = query_chunks(spark, parts, by_part, qmat.shape[0], queries_per_task)
     # createDataFrame + repartition is a 2-stage shuffle that cost ~0.2 s
     # of fixed wall per search call (measured); parallelize with
     # numSlices places each plan row in its own partition shuffle-free
-    n_slices = max(1, -(-len(plan_rows) // max(items_per_task, 1)))
+    n_slices = max(1, -(-len(chunks) // max(items_per_task, 1)))
     plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan_rows, n_slices), "part INT, chunk INT"
+        spark.sparkContext.parallelize([(p, c) for p, c, _ in chunks], n_slices),
+        "part INT, chunk INT",
     )
     # the query batch travels as a BROADCAST, not in the task closure: a
     # closure is serialized into every task description, so a 10k×784
     # float32 batch (31 MB) would cross the wire once PER TASK; the
     # broadcast ships once per executor and python workers read it from
     # the local block file
-    bq = spark.sparkContext.broadcast((qid_arr, qmat, by_part))
+    bq = spark.sparkContext.broadcast(
+        (qid_arr, qmat, {(p, c): rows for p, c, rows in chunks})
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qid_arr, qmat, by_part = bq.value
+        qid_arr, qmat, rows_of = bq.value
         # drain the input stream BEFORE yielding: a pandas UDF that
         # yields interleaved with unconsumed input gets its python
         # worker KILLED by the runner instead of reused (measured —
@@ -131,17 +172,177 @@ def scatter(
             for part, chunk in zip(b["part"].tolist(), b["chunk"].tolist())
         ]
         for part, chunk in work:
-            if by_part is None:
-                qsel = list(range(chunk * qpt, min((chunk + 1) * qpt, n_q)))
-            else:
-                qsel = by_part.get(part, [])[chunk * qpt : (chunk + 1) * qpt]
-            if not qsel:
+            qsel = rows_of[(part, chunk)]
+            if not len(qsel):
                 continue
+            if isinstance(qsel, range):  # a flat plan: a view, not a copy
+                qsel = slice(qsel.start, qsel.stop)
             out = search_chunk(part, qid_arr[qsel], qmat[qsel])
             if out is not None:
                 yield out
 
     return plan.mapInPandas(run, schema=out_ddl)
+
+
+def serve_locally(
+    chunks: list[tuple[int, int, "list[int] | range"]],
+    part_size: Callable[[int], tuple[int, float]],
+    dim: int,
+    is_brute: Callable[[int, int], bool],
+    cached: bool,
+) -> bool:
+    """The one local-or-scatter rule, decided from the plan and the
+    parts' parquet footers before any part's data is read.  Local when
+    all hold:
+
+    - the driver keeps what it loads (``cached``: the server has a cache
+      key), or the batch touches one part — a task would read that part
+      once per call as well, while several uncached parts would be read
+      one after another here and in parallel tasks there;
+    - the touched parts' resident bytes fit the `CACHE` budget;
+      ``part_size(part)`` is the server's (rows, resident bytes) bound
+      for one part, in `CACHE`'s own accounting;
+    - the flops of the brute chunks are at most `LOCAL_BRUTE_FLOPS_MAX`;
+      ``is_brute(rows, nq)`` is the server's own per-chunk choice, given
+      the rows its kernel will see.
+
+    A Spark job's fixed cost (~0.5 s of scheduling and two stages)
+    dwarfs a native kernel's microseconds per query, so small and warm
+    batches are answered in the driver.  A big exact scan is
+    compute-bound instead: the task plan spreads its GEMMs over the
+    workers, while the driver runs them on one BLAS thread."""
+    touched = sorted({p for p, _, rows in chunks if len(rows)})
+    if not cached and len(touched) > 1:
+        return False
+    size = {p: part_size(p) for p in touched}
+    if sum(b for _, b in size.values()) > CACHE.max_bytes:
+        return False
+    flops = 0
+    for p, _, rows in chunks:
+        if len(rows) and is_brute(size[p][0], len(rows)):
+            flops += size[p][0] * len(rows) * dim
+    return flops <= LOCAL_BRUTE_FLOPS_MAX
+
+
+def run_local(
+    chunks: list[tuple[int, int, "list[int] | range"]],
+    qid_arr: np.ndarray,
+    qmat: np.ndarray,
+    search_chunk: Callable[..., pd.DataFrame | pa.Table | None],
+    schema: pa.Schema,
+    k: int | None,
+    is_brute: Callable[[int, int], bool],
+) -> pa.Table:
+    """The driver regime: the chunks through the server's own kernel,
+    here (``local=True``: an OpenMP thread per core for graph walks, and
+    Arrow rows where the kernel can build them), with numpy's BLAS on
+    one thread as in a task; then, for ``k``, the global top-k merge.
+    ``k=None`` keeps the kernel's partial rows as final (their ``rank``
+    included) — a one-graph index's scatter skips the merge too.
+
+    A part's consecutive graph-walk chunks (``not is_brute(part, nq)``)
+    run as ONE kernel call: each query walks alone, so its rows do not
+    depend on the queries beside it, and one OpenMP team over the whole
+    run has one tail instead of one per chunk (a 10k-query batch on one
+    graph in 2 chunks took 25% longer in the kernel, measured).  Brute
+    chunks keep their size: a GEMM's last bits can depend on its shape."""
+    calls: list[tuple[int, list, bool]] = []  # (part, row runs, walks)
+    for part, _, rows in chunks:
+        if not len(rows):
+            continue
+        walks = not is_brute(part, len(rows))
+        if walks and calls and calls[-1][0] == part and calls[-1][2]:
+            calls[-1][1].append(rows)
+        else:
+            calls.append((part, [rows], walks))
+    partial = schema if k is None else schema.remove(schema.get_field_index("rank"))
+    outs = []
+    with one_blas_thread():
+        for part, runs, _ in calls:
+            if all(isinstance(r, range) for r in runs):  # a flat plan: a view
+                rows = slice(runs[0].start, runs[-1].stop)
+            else:
+                rows = np.concatenate([np.asarray(r) for r in runs])
+            out = search_chunk(part, qid_arr[rows], qmat[rows], local=True)
+            if out is not None and len(out):
+                outs.append(
+                    out.select(partial.names).cast(partial) if isinstance(out, pa.Table)
+                    else pa.Table.from_pandas(out[partial.names], schema=partial,
+                                              preserve_index=False)
+                )
+    if not outs:
+        return schema.empty_table()
+    tbl = pa.concat_tables(outs)
+    return tbl if k is None else _merge_rows(tbl, k)
+
+
+def _merge_rows(tbl: pa.Table, k: int) -> pa.Table:
+    """`merge_topk` in the driver: per query_id, rows ascending by
+    (score, id) get ranks 1..k, inserted after ``query_id``.  Ids
+    compare in their native order (strings by UTF-8 bytes, as Spark
+    compares them); floats compare as Spark's do (-0.0 equals 0.0, NaN
+    last)."""
+    import pyarrow.compute as pc
+
+    tbl = tbl.take(pc.sort_indices(
+        tbl, sort_keys=[("query_id", "ascending"), ("score", "ascending"), ("id", "ascending")]
+    ))
+    q = tbl.column("query_id").combine_chunks()
+    new = np.ones(len(q), dtype=bool)
+    new[1:] = pc.not_equal(q[1:], q[:-1]).to_numpy(zero_copy_only=False)
+    start = np.flatnonzero(new)
+    rank = np.arange(len(q)) - np.repeat(start, np.diff(np.r_[start, len(q)])) + 1
+    keep = rank <= k
+    return tbl.filter(pa.array(keep)).add_column(
+        1, pa.field("rank", pa.int32()), pa.array(rank[keep], pa.int32())
+    )
+
+
+def serve(
+    spark,
+    parts: list[int],
+    part_size: Callable[[int], tuple[int, float]],
+    by_part: dict[int, list[int]] | None,
+    qid_arr: np.ndarray,
+    qmat: np.ndarray,
+    search_chunk: Callable[..., pd.DataFrame | pa.Table | None],
+    out_ddl: str,
+    k: int | None,
+    is_brute: Callable[[int, int], bool],
+    cached: bool,
+    queries_per_task: int | None = None,
+    arrow: bool = False,
+):
+    """Answer a saved-index query batch in one of two regimes: in the
+    driver (`run_local`) when `serve_locally` says so, else `scatter` +
+    `merge_topk`.  Same plan, same kernel, same rows either way.
+
+    ``part_size``, ``is_brute`` and ``cached`` are the server's inputs
+    to that rule.  ``out_ddl`` is the kernel's partial-row layout; the
+    top-``k`` merge adds ``rank`` after ``query_id``, and ``k=None``
+    takes the kernel's rows, ranks included, as final.  Returns a DataFrame (a local
+    relation in the driver regime: collecting it runs no job), or with
+    ``arrow`` an Arrow table (the driver regime's own; the scatter
+    result collected)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    fields = list(StructType.fromDDL(out_ddl).fields)
+    if k is not None:
+        fields.insert(1, StructField("rank", IntegerType()))
+    schema = StructType(fields)
+    chunks = query_chunks(spark, parts, by_part, qmat.shape[0], queries_per_task)
+    size = functools.cache(part_size)
+    if serve_locally(chunks, size, qmat.shape[1], is_brute, cached):
+        tbl = run_local(
+            chunks, qid_arr, qmat, search_chunk, to_arrow_schema(schema), k,
+            lambda p, nq: is_brute(size(p)[0], nq),
+        )
+        return tbl if arrow else spark.createDataFrame(tbl, schema=schema)
+    res = scatter(spark, parts, by_part, qid_arr, qmat, search_chunk, out_ddl, queries_per_task)
+    if k is not None:
+        res = merge_topk(res, k, schema.names)
+    return res.toArrow() if arrow else res
 
 
 def merge_topk(

@@ -21,7 +21,7 @@ SERVING parallelism comes from Spark, not threads: the serving plans
 emit (partition, query-chunk) tasks and each task calls this kernel on
 its chunk single-threaded, so 32 local cores (or 1000 executors) scale
 without any C-side threading.  The callers that own a whole machine —
-driver-local serving of a one-graph index and the driver-side
+the driver serving regime (`_serve.run_local`) and the driver-side
 single-graph BUILD — use the `_mt` entries (OpenMP fan-out over
 queries or wave items with per-thread scratch); the build adds fused
 walk+selection (`hnsw_build_candidates`) and native backlink-prune

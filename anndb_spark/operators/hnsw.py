@@ -1943,6 +1943,13 @@ def _graph_bytes(g: "HnswGraph") -> int:
     return b
 
 
+def _graph_bytes_max(n: int, dim: int, top_level: int, cfg: "HnswConfig") -> int:
+    """An upper bound of `_graph_bytes` for a saved graph of ``n``
+    vertices whose highest level is ``top_level``: the float32 vectors,
+    16 B per vertex, and one (n × neighbor cap) int32 matrix per level."""
+    return n * (4 * dim + 16 + 4 * (cfg.m_max_0 + cfg.m_max * top_level))
+
+
 # ---------------------------------------------------------------------------
 # Shared-memory (L2) graph cache: ONE physical copy per host
 # ---------------------------------------------------------------------------
@@ -2328,30 +2335,24 @@ def _result_layout(with_rank: bool, with_metadata: bool) -> tuple[list[str], str
 
 def _assemble_hits(qids, hits, ids, g, with_metadata: bool, columns=None, arrow=False):
     """The one result assembler: one kernel call's ``(ids, dists)``
-    over the query batch ``qids`` → the columns ``query_id, rank, id,
-    score[, metadata]``, one row per non-pad hit in (query, rank)
-    order.  Pads are a row suffix, so a hit's rank is its column + 1 —
-    final for a single graph, partial before a multi-graph merge.
-    ``id`` and ``metadata`` index the graph's id list and
-    ``g.item_meta``.
+    over the query batch ``qids`` → the ``columns`` (default: all) of
+    ``query_id, rank, id, score[, metadata]``, one row per non-pad hit
+    in (query, rank) order.  Pads are a row suffix, so a hit's rank is
+    its column + 1 — final for a single graph, partial before a
+    multi-graph merge.  ``id`` and ``metadata`` index the graph's id
+    list and ``g.item_meta``.
 
-    Task paths get pandas (``columns`` picks the output layout).  The
-    local path gets Arrow (``arrow=True``), the cheap half of the
-    driver↔JVM hop: `createDataFrame(pa.Table)` skips the pandas→Arrow
-    conversion AND lands on Spark's LocalRelation fast path (measured
-    0.14 → 0.10 s for 100k result rows), and `search_index_local`
-    returns the table as-is.  Its string columns are built by Arrow
-    ``take`` over small dictionaries — the graph's id array (converted
-    once per resident graph, cached on it) and the call's query ids —
-    instead of fancy-indexing object arrays and re-converting 100k
-    python strings per call (measured: that assembly cost MORE than the
-    10k-query kernel walk itself on a 1M-row graph)."""
+    Tasks get pandas.  The driver regime gets Arrow (``arrow=True``):
+    its string columns are Arrow ``take``s over small dictionaries — the
+    graph's id array (converted once per resident graph, kept on it) and
+    the call's query ids — instead of fancy-indexed object arrays whose
+    python strings are converted again on every call (measured: that
+    assembly cost more than the 10k-query kernel walk on a 1M-row
+    graph)."""
     hit_ids, hit_d = hits
     valid = hit_ids >= 0
     qrow, col = np.nonzero(valid)
     nid = hit_ids[valid]
-    rank = (col + 1).astype(np.int32)
-    score = hit_d[valid]
     meta = None
     if with_metadata:
         im = g.item_meta
@@ -2359,9 +2360,9 @@ def _assemble_hits(qids, hits, ids, g, with_metadata: bool, columns=None, arrow=
     if not arrow:
         data = {
             "query_id": qids[qrow],
-            "rank": rank,
+            "rank": (col + 1).astype(np.int32),
             "id": np.asarray(ids, dtype=object)[nid],
-            "score": score,
+            "score": hit_d[valid],
         }
         if with_metadata:
             # object dtype even when empty (pandas types an empty list float64)
@@ -2371,22 +2372,16 @@ def _assemble_hits(qids, hits, ids, g, with_metadata: bool, columns=None, arrow=
 
     pa_ids = getattr(g, "_pa_ids", None)
     if pa_ids is None or len(pa_ids) != len(ids):
-        pa_ids = pa.array(ids, type=pa.string())
-        try:
-            g._pa_ids = pa_ids  # graph↔ids pairing is stable per cache entry
-        except AttributeError:
-            pass
-    arrays = [
-        pa.array(qids, type=pa.string()).take(pa.array(qrow)),
-        pa.array(rank, type=pa.int32()),
-        pa_ids.take(pa.array(nid)),
-        pa.array(score, type=pa.float32()),
-    ]
+        pa_ids = g._pa_ids = pa.array(ids, type=pa.string())
+    data = {
+        "query_id": pa.array(qids, type=pa.string()).take(pa.array(qrow)),
+        "rank": pa.array((col + 1).astype(np.int32)),
+        "id": pa_ids.take(pa.array(nid)),
+        "score": pa.array(hit_d[valid], type=pa.float32()),
+    }
     if with_metadata:
-        arrays.append(pa.array(meta, type=pa.map_(pa.string(), pa.string())))
-    return pa.Table.from_arrays(
-        arrays, names=_result_layout(True, with_metadata)[0]
-    )
+        data["metadata"] = pa.array(meta, type=pa.map_(pa.string(), pa.string()))
+    return pa.table({c: data[c] for c in (columns or data)})
 
 
 def search_index(
@@ -2478,13 +2473,6 @@ def search_index(
     return _serve.merge_topk(partials, k, _result_layout(True, with_metadata)[0])
 
 
-# Driver-local serving declines a brute scan above this many flops: a
-# big exact scan is COMPUTE-bound, not launch-bound — the task plan
-# chunks it across workers (one BLAS call per core) while the driver's
-# BLAS is pinned to one thread.
-_LOCAL_BRUTE_FLOPS_MAX = 5e8
-
-
 def _acquire_partition_graph(
     path: str,
     pid,
@@ -2562,78 +2550,90 @@ def _acquire_partition_graph(
     return ids, g, False
 
 
-def _serve_single_graph_local(
-    path: str,
-    pid: int,
-    cfg: "HnswConfig",
-    strategy: str,
-    cache_token: str | None,
-    index_ver,
-    qid_arr: np.ndarray,
-    qmat: np.ndarray,
-    k: int,
-    ef: int,
-    with_metadata: bool,
-    chunk_q: int,
-) -> "pa.Table | None":
-    """Driver-local serving of a ONE-partition saved index; returns an
-    Arrow table, or None when it declines a brute scan over
-    ``_LOCAL_BRUTE_FLOPS_MAX`` (the caller then runs the task plan).
-
-    When the whole index is a single graph, a Spark job buys nothing:
-    the measured per-job fixed wall on this mode (~0.5-0.65 s noop +
-    ~12 ms/task) is ~10x the compiled kernel's cost for a 10k-query
-    batch (~0.09 ms/query/core).  This is the reference benchmark's own
-    shape — one resident graph searched in-process
-    (`cmd/benchmark/ann-benchmark/main.go:279-307`) — so the graph comes
-    from the same `_acquire_partition_graph` cache ladder the workers
-    use (publishing to it, so a later multi-partition job finds the
-    graph warm) and is searched by `HnswGraph.search_fast_batch` with an
-    OpenMP thread per core.
-
-    Multi-partition / routed indexes never take this path: there the
-    graphs live on executors by design and the task plan is the scale
-    path.  Results are bit-identical to the task path (same kernel, same
-    per-chunk brute/beam resolution) — pytest-enforced.
-    """
-    nq = len(qmat)
-    # brute/beam resolution must match the task path, which decides per
-    # query-chunk of (at most) queries_per_task rows — use the same
-    # chunk size so "auto" lands on the same strategy
-    ids, g, use_brute = _acquire_partition_graph(
-        path, pid, cfg, strategy, cache_token, index_ver, min(chunk_q, nq),
-    )
-    if use_brute and len(ids) * nq * g.dim > _LOCAL_BRUTE_FLOPS_MAX:
-        # local serving exists for the beam case, whose OpenMP kernel
-        # owns the machine; a big exact scan goes to the task plan
-        return None
-    if use_brute:
-        hits = g.search_brute(qmat, k)
-    else:
-        hits = g.search_fast_batch(qmat, k, ef, threads=_os_mod.cpu_count() or 1)
-    return _assemble_hits(qid_arr, hits, ids, g, with_metadata, arrow=True)
-
-
-def _path_prologue(spark, path, queries, k, ef, config, cache_token, dim=0):
-    """Driver prologue of the saved-index servers (`search_index_path`,
-    `search_index_local`): (config, ef, partition ids, index content
-    fingerprint, query ids, query matrix)."""
+def _search_path(
+    spark, path, queries, k, ef, config, strategy, cache_token,
+    with_metadata, centroids, nprobe, queries_per_task, locality_centroids,
+    arrow,
+):
+    """`search_index_path` (``arrow=False``) and `search_index_local`
+    (``arrow=True``): one listing, one plan, `_serve.serve`'s two
+    regimes."""
     from anndb_spark.sources import fsutil
 
     cfg = config or get_index_config(load_index(spark, path)) or HnswConfig()
-    # partition discovery through pyarrow.fs: plain paths, file://,
-    # s3://, hdfs:// — not a shared-local-FS assumption (ADVICE r4)
-    pids = fsutil.list_partition_values(path, "partition_id=")
-    # cache keys carry the index CONTENT fingerprint: the host-shared
-    # /dev/shm graph cache outlives the Spark session, so a bare
-    # (token, pid) key would silently serve a graph stored by a
-    # PREVIOUS index version under the same token (measured: a
-    # cluster-routed index re-trained across runs answered probes with
-    # the prior run's cells — recall degraded to ~nprobe/n_cells)
-    index_ver = (
-        fsutil.index_fingerprint(path) if cache_token is not None else None
+    ef = max(ef or cfg.ef, k)
+    routed = centroids is not None and nprobe > 0
+    cents = centroids if routed else locality_centroids
+    qid_arr, qmat = _serve.parse_queries(queries, 0 if cents is None else np.shape(cents)[1])
+    # ONE listing through pyarrow.fs (plain paths, file://, s3://,
+    # hdfs:// — not a shared-local-FS assumption, ADVICE r4) gives the
+    # parts, their files for the local rule, and the cache keys' content
+    # fingerprint: the host-shared /dev/shm graph cache outlives the
+    # Spark session, so a bare (token, pid) key would silently serve a
+    # graph stored by a PREVIOUS index version under the same token
+    # (measured: a cluster-routed index re-trained across runs answered
+    # probes with the prior run's cells — recall degraded to
+    # ~nprobe/n_cells)
+    index_ver, part_files = fsutil.list_parts(path, "partition_id=")
+    index_ver = index_ver if cache_token is not None else None
+    by_pid = _serve.route(_pairwise(qmat, centroids, cfg.space), nprobe) if routed else None
+    pids = [p for p in part_files if by_pid is None or p in by_pid]
+    # ONE graph partition → every query is answered completely by its
+    # single graph: ranks are final in-kernel and the global top-k merge
+    # is skipped (the reference benchmark's one-resident-graph shape,
+    # cmd/benchmark/ann-benchmark/main.go:279-307)
+    final_ranks = len(pids) == 1 and by_pid is None
+    if locality_centroids is not None and by_pid is None and not final_ranks:
+        # order the batch by coarse cell BEFORE chunking: each chunk's
+        # queries then walk the SAME region of the graph, shrinking the
+        # random-gather working set (the bandwidth-bound kernel's real
+        # cost) from the whole matrix to a cluster's worth.  Pure
+        # reordering — results are per-query, order-independent.  One
+        # graph skips it: its walks run as one kernel call in the driver
+        # (`_serve.run_local`), which seed-sorts the batch itself.
+        assign = _pairwise(qmat, locality_centroids, cfg.space).argmin(axis=1)
+        order = np.argsort(assign, kind="stable")
+        qmat = np.ascontiguousarray(qmat[order])
+        qid_arr = qid_arr[order]
+    out_cols, out_ddl = _result_layout(final_ranks, with_metadata)
+
+    def search_chunk(pid: int, qids: np.ndarray, sub: np.ndarray, local: bool = False):
+        # in the driver (`_serve.run_local`) the walk owns every core and
+        # the rows are built as Arrow
+        ids, g, use_brute = _acquire_partition_graph(
+            path, pid, cfg, strategy, cache_token, index_ver, len(sub),
+        )
+        hits = (
+            g.search_brute(sub, k) if use_brute
+            else g.search_fast_batch(
+                sub, k, ef, threads=(_os_mod.cpu_count() or 1) if local else 1
+            )
+        )
+        return _assemble_hits(qids, hits, ids, g, with_metadata, out_cols, arrow=local)
+
+    def part_size(pid: int) -> tuple[int, float]:
+        # vertex rows are the rows with a vector; the top level bounds
+        # the graph's per-level adjacency matrices
+        metas = fsutil.footers(path, part_files[pid])
+        rows = sum(md.num_rows for md in metas)
+        nulls = fsutil.column_stats(metas, "vec")[0]
+        top = fsutil.column_stats(metas, "level")[1]
+        n = rows - nulls if nulls is not None else rows
+        if top is None:
+            return n, 0 if n == 0 else math.inf
+        return n, _graph_bytes_max(n, qmat.shape[1], int(top), cfg)
+
+    # (pid, query-chunk) plan: chunking the query set per partition
+    # breaks the one-task-per-partition straggler bound — skewed cluster
+    # cells (and the lock-step beam's slowest-query tail) stop gating
+    # the whole job; the graph cache makes the extra per-task
+    # reconstruction cheap
+    return _serve.serve(
+        spark, pids, part_size, by_pid, qid_arr, qmat, search_chunk, out_ddl,
+        None if final_ranks else k,
+        lambda n, nq: _use_brute(strategy, n, nq, qmat.shape[1]),
+        cache_token is not None, queries_per_task=queries_per_task, arrow=arrow,
     )
-    return (cfg, max(ef or cfg.ef, k), pids, index_ver, *_serve.parse_queries(queries, dim))
 
 
 def search_index_path(
@@ -2655,92 +2655,53 @@ def search_index_path(
 
     `search_index` ships the index DataFrame through a shuffle + Arrow
     conversion on EVERY call — at 784-d that transfer dwarfs the actual
-    graph walk (~10× the kernel time).  Here the plan parallelizes over
-    *partition ids* (one row per graph partition, round-robin → one task
-    each); every task column-reads its own partition's parquet directly
-    and caches the reconstructed graph in the reused python worker, so a
-    warm serving workload pays ZERO index bytes per query batch — the
-    same resident-graph contract the reference's nodes have
-    (`storage/partition.go`: graphs live in memory, storage is only read
-    on start/restore).  The query batch ships as a broadcast (once per
-    executor), never in per-task closures.
+    graph walk (~10× the kernel time).  Here the plan is one row per
+    (graph partition, query chunk); each chunk's kernel column-reads
+    its own partition's parquet directly and caches the reconstructed
+    graph in its process, so a warm serving workload pays ZERO index
+    bytes per query batch — the same resident-graph contract the
+    reference's nodes have (`storage/partition.go`: graphs live in
+    memory, storage is only read on start/restore).
 
-    A ONE-partition index without routing is served driver-locally
-    (`_serve_single_graph_local`: no job launch, same kernel and
-    caches), except a brute scan over the local cap, which runs the
-    task plan.
+    The plan runs in one of `_serve.serve`'s two regimes, flat or
+    routed, whatever the partition count:
+
+    - in the driver, when the driver keeps the graphs it loads (a
+      ``cache_token``; without one, only a batch that touches one
+      partition), the touched graphs fit the graph cache's byte budget
+      (their vertex counts and top levels read from the parquet
+      footers bound `_graph_bytes`) and its brute chunks stay under the
+      local flops cap (`_serve.serve_locally`): the same kernel with an
+      OpenMP thread per core, the ``(score, id)`` merge done in the
+      driver, and the result a local relation — collecting it launches
+      no Spark job;
+    - otherwise as Spark tasks (`_serve.scatter`): the query batch
+      ships as a broadcast (once per executor), and the global top-k
+      is a window over ``hashpartitioning(query_id)``.
+
+    Both regimes return the same rows, score bits included
+    (pytest-enforced).  A one-partition unrouted index skips the merge
+    in both: its kernel's ranks are final.
 
     With ``centroids`` + ``nprobe`` the query set is routed first (the
     IVF×HNSW hybrid): only probed partitions appear in the plan at all
-    (the parquet directories of unprobed partitions are never listed to
-    tasks), and each task searches only its queries — per-query work is
+    (the parquet directories of unprobed partitions are never read),
+    and each chunk searches only its queries — per-query work is
     nprobe graph walks.
 
     ``path`` may be a plain path or any URI pyarrow.fs can mount
     (``file://``, ``s3://``, ``hdfs://`` with libhdfs): discovery and
-    task-side reads both go through the filesystem API, so driver and
+    part reads both go through the filesystem API, so driver and
     executors need no shared local filesystem.
 
     Results are identical to `search_index` on the same saved index,
     flat or routed (pytest-verified).
     """
-    routed = centroids is not None and nprobe > 0
-    cents = centroids if routed else locality_centroids
-    cfg, ef, all_pids, index_ver, qid_arr, qmat = _path_prologue(
-        spark, path, queries, k, ef, config, cache_token,
-        dim=0 if cents is None else np.shape(cents)[1],
+    return _search_path(
+        spark, path, queries, k, ef, config, strategy, cache_token,
+        with_metadata, centroids, nprobe, queries_per_task,
+        locality_centroids, arrow=False,
     )
-    by_pid = _serve.route(_pairwise(qmat, centroids, cfg.space), nprobe) if routed else None
-    pids = all_pids if by_pid is None else [p for p in all_pids if p in by_pid]
-    # ONE graph partition → every query is answered completely by its
-    # single graph: ranks are final in-task and the global top-k Window
-    # (a shuffle) is skipped entirely — the single-graph serving fast
-    # path (the reference benchmark's one-resident-graph shape,
-    # cmd/benchmark/ann-benchmark/main.go:279-307)
-    single_graph = len(pids) == 1 and by_pid is None
-    if locality_centroids is not None and by_pid is None and not single_graph:
-        # order the batch by coarse cell BEFORE chunking: each task's
-        # queries then walk the SAME region of the graph, shrinking the
-        # random-gather working set (the bandwidth-bound kernel's real
-        # cost) from the whole matrix to a cluster's worth.  Pure
-        # reordering — results are per-query, order-independent.  (The
-        # local path seed-sorts internally.)
-        assign = _pairwise(qmat, locality_centroids, cfg.space).argmin(axis=1)
-        order = np.argsort(assign, kind="stable")
-        qmat = np.ascontiguousarray(qmat[order])
-        qid_arr = qid_arr[order]
-    out_cols, out_ddl = _result_layout(single_graph, with_metadata)
-    if single_graph:
-        n_q = qmat.shape[0]
-        queries_per_task = _serve.chunk_size(spark, 1, n_q, queries_per_task)
-        tbl = _serve_single_graph_local(
-            path, pids[0], cfg, strategy, cache_token, index_ver, qid_arr,
-            qmat, k, ef, with_metadata, min(queries_per_task, n_q),
-        )
-        if tbl is not None:
-            # arrow-table input: no pandas hop, and under
-            # spark.sql.execution.arrow.localRelationThreshold the JVM
-            # builds a LocalRelation directly from the batches
-            return spark.createDataFrame(tbl, schema=out_ddl)
-
-    def search_chunk(pid: int, qids: np.ndarray, sub: np.ndarray) -> pd.DataFrame:
-        ids, g, use_brute = _acquire_partition_graph(
-            path, pid, cfg, strategy, cache_token, index_ver, len(sub),
-        )
-        hits = g.search_brute(sub, k) if use_brute else g.search_fast_batch(sub, k, ef)
-        return _assemble_hits(qids, hits, ids, g, with_metadata, out_cols)
-
-    # (pid, query-chunk) tasks: chunking the query set per partition
-    # breaks the one-task-per-partition straggler bound — skewed cluster
-    # cells (and the lock-step beam's slowest-query tail) stop gating
-    # the whole job; the graph cache makes the extra per-task
-    # reconstruction cheap
-    partials = _serve.scatter(
-        spark, pids, by_pid, qid_arr, qmat, search_chunk, out_ddl, queries_per_task
-    )
-    if single_graph:
-        return partials
-    return _serve.merge_topk(partials, k, _result_layout(True, with_metadata)[0])
 
 
 def search_index_local(
@@ -2756,48 +2717,30 @@ def search_index_local(
     queries_per_task: int | None = None,
 ) -> "pa.Table":
     """In-process serving API: search a saved index, return an Arrow
-    table — no Spark job, no DataFrame materialization.
+    table.
 
     This is the node-serving protocol of the reference: its benchmark
     calls the index in-process and gets slices back
     (`cmd/benchmark/ann-benchmark/main.go:279-307`,
     `index/hnsw.go:76-107`) — the result never crosses a
     serialization boundary.  `search_index_path` wraps results into a
-    Spark DataFrame for plan composition, which costs a driver→JVM→
-    driver Arrow round trip (~0.3-0.4 s per call regardless of batch
-    size — pure protocol overhead when the caller wants driver-side
-    results anyway).  Serving stacks that terminate on the driver
-    (an RPC handler, a batch scorer writing its own output) should
-    call this instead.
+    Spark DataFrame for plan composition, which costs a driver→JVM
+    hop; serving stacks that terminate on the driver (an RPC handler, a
+    batch scorer writing its own output) should call this instead.
 
-    It shares `search_index_path`'s prologue.  One-partition indexes
-    are answered in-process (`_serve_single_graph_local`, brute/beam
-    decided over the whole batch unless ``queries_per_task`` is given).
-    Multi-partition indexes, and brute scans over the local cap, run
-    `search_index_path`'s task plan — the scale path — and collect via
-    Arrow, so the call always answers with identical values to
-    `search_index_path` (pytest-enforced).
+    It is `search_index_path` with the same rule: when the driver
+    regime takes the batch, its Arrow table is returned directly (no
+    Spark job, no DataFrame); when the rule declines, the task plan
+    runs and its result is collected via Arrow.  Values are identical
+    either way (pytest-enforced).
 
     Columns: query_id, rank, id, score(, metadata) — same as
     `search_index_path`.
     """
-    cfg, eff_ef, pids, index_ver, qid_arr, qmat = _path_prologue(
-        spark, path, queries, k, ef, config, cache_token
+    return _search_path(
+        spark, path, queries, k, ef, config, strategy, cache_token,
+        with_metadata, None, 0, queries_per_task, None, arrow=True,
     )
-    if len(pids) == 1:
-        n_q = len(qmat)
-        tbl = _serve_single_graph_local(
-            path, pids[0], cfg, strategy, cache_token, index_ver, qid_arr,
-            qmat, k, eff_ef, with_metadata,
-            min(queries_per_task or n_q, n_q) or 1,
-        )
-        if tbl is not None:
-            return tbl
-    return search_index_path(
-        spark, path, (qid_arr, qmat), k, ef=ef, config=cfg, strategy=strategy,
-        cache_token=cache_token,
-        with_metadata=with_metadata, queries_per_task=queries_per_task,
-    ).toArrow()
 
 
 # ---------------------------------------------------------------------------

@@ -340,11 +340,20 @@ def search_ivf_path(
     Same result contract as `search_ivf` (float64 scores, ascending
     (score, id), rank 1..k — pytest-identical), different physical plan:
     queries are routed on the driver against the tiny centroid matrix,
-    and `_serve.scatter` runs one task per (probed cluster, query-chunk);
-    each task column-reads its own cluster's parquet directly (unprobed
-    cluster directories never enter the plan) and GEMM-scores its chunk
-    against the worker-cached cluster matrix.  A warm serving workload
-    pays zero table bytes per batch.
+    and the plan is one row per (probed cluster, query-chunk); each
+    chunk column-reads its own cluster's parquet directly (unprobed
+    cluster directories never enter the plan) and GEMM-scores against
+    the process-cached cluster matrix.  A warm serving workload pays
+    zero table bytes per batch.
+
+    `_serve.serve` picks the regime: when a ``cache_token`` lets the
+    driver keep the cells it loads (or one cell is probed), the probed
+    cells' cached bytes — ``rows·(8·dim + 64)``, rows from the parquet
+    footers — fit the cache budget and the batch's GEMM flops stay under
+    the local cap (`_serve.serve_locally`), the driver scores and merges
+    the chunks itself and returns a local relation (collecting it runs
+    no Spark job); otherwise one task per chunk, merged by a window over
+    ``hashpartitioning(query_id)``.  Same rows, score bits included.
     """
     from anndb_spark.sources import fsutil
 
@@ -352,21 +361,19 @@ def search_ivf_path(
     # float64 end to end: scores stay bit-identical to `search_ivf`
     qid_arr, qmat = _serve.parse_queries(queries, cent.shape[1], np.float64)
     by_cid = _serve.route(_pairwise(qmat, cent, space), nprobe)
-    # discovery + footer read through pyarrow.fs (plain path, file://,
-    # s3://, hdfs:// — no shared-local-FS assumption, ADVICE r4)
-    avail = set(fsutil.list_partition_values(path, "cluster_id="))
-    cids = sorted(set(by_cid) & avail)
-    # cache keys carry the index CONTENT fingerprint — warm python
-    # workers outlive jobs, so a cluster table rebuilt at the same
-    # path+token would otherwise serve stale rows (ADVICE r5 medium)
-    index_ver = (
-        fsutil.index_fingerprint(path) if cache_token is not None else None
-    )
-    # result id column keeps the table's native type (one footer read)
+    # ONE listing through pyarrow.fs (plain path, file://, s3://, hdfs://
+    # — no shared-local-FS assumption, ADVICE r4): the clusters, their
+    # files for the local rule, and the cache keys' content fingerprint
+    # — warm processes outlive jobs, so a cluster table rebuilt at the
+    # same path+token would otherwise serve stale rows (ADVICE r5 medium)
+    index_ver, cell_files = fsutil.list_parts(path, "cluster_id=")
+    cids = sorted(set(by_cid) & set(cell_files))
+    index_ver = index_ver if cache_token is not None else None
+    # result id column keeps the table's native type (one memoized footer)
     id_type = "string"
-    for cid0 in sorted(avail):
-        schema = fsutil.read_dir_schema(fsutil.join(path, f"cluster_id={cid0}"))
-        if schema is not None:
+    for files in cell_files.values():
+        if files:
+            schema = fsutil.footers(path, files[:1])[0].schema.to_arrow_schema()
             at = schema.field(id_col).type
             id_type = {
                 "int64": "bigint",
@@ -377,7 +384,11 @@ def search_ivf_path(
             }.get(str(at), "string")
             break
 
-    def score_chunk(cid: int, qids: np.ndarray, Q: np.ndarray) -> pd.DataFrame | None:
+    def score_chunk(
+        cid: int, qids: np.ndarray, Q: np.ndarray, local: bool = False
+    ) -> pd.DataFrame | None:
+        # the same in the driver regime (``local``): the GEMM runs on the
+        # caller's BLAS threads
         key = (cache_token, index_ver, cid) if cache_token is not None else None
         hit = _serve.CACHE.get("ivf", key)
         if hit is None:
@@ -385,7 +396,7 @@ def search_ivf_path(
                 fsutil.join(path, f"cluster_id={cid}"), columns=[id_col, vec_col]
             ).to_pandas()
             hit = (tbl[id_col].to_numpy(), np.array(tbl[vec_col].tolist(), dtype=np.float64))
-            _serve.CACHE.put("ivf", key, hit, hit[1].nbytes + 64 * len(hit[0]))
+            _serve.CACHE.put("ivf", key, hit, _cell_bytes(len(hit[0]), Q.shape[1]))
         ids, vmat = hit
         if not len(ids):
             return None
@@ -400,8 +411,18 @@ def search_ivf_path(
             }
         )
 
-    partial = _serve.scatter(
-        spark, cids, by_cid, qid_arr, qmat, score_chunk,
-        f"query_id STRING, id {id_type}, score DOUBLE", queries_per_task,
+    def cell_size(cid: int) -> tuple[int, int]:
+        n = sum(md.num_rows for md in fsutil.footers(path, cell_files[cid]))
+        return n, _cell_bytes(n, qmat.shape[1])
+
+    return _serve.serve(
+        spark, cids, cell_size, by_cid, qid_arr, qmat, score_chunk,
+        f"query_id STRING, id {id_type}, score DOUBLE", k,
+        lambda n, nq: True, cache_token is not None, queries_per_task=queries_per_task,
     )
-    return _serve.merge_topk(partial, k)
+
+
+def _cell_bytes(n: int, dim: int) -> int:
+    """`_serve.CACHE` bytes of one cached cell: its float64 matrix and
+    ~64 B per id."""
+    return n * (8 * dim + 64)

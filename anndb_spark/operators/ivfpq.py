@@ -337,11 +337,9 @@ def search_ivfpq(
     )
     by_cid = _serve.route(d2, nprobe)
     codes_root = f"{path}/codes"
-    avail = set(fsutil.list_partition_values(codes_root, "cluster_id="))
-    cids = sorted(set(by_cid) & avail)
-    index_ver = (
-        fsutil.index_fingerprint(codes_root) if cache_token is not None else None
-    )
+    index_ver, cell_files = fsutil.list_parts(codes_root, "cluster_id=")
+    cids = sorted(set(by_cid) & set(cell_files))
+    index_ver = index_ver if cache_token is not None else None
     top_n = k if rerank_with is None else max(shortlist or 5 * k, k)
     bn2 = np.einsum("mkd,mkd->mk", books, books, dtype=np.float32)
 

@@ -61,8 +61,9 @@ def knn(
 
     A saved ``index_path`` routes to the serving-shape
     `hnsw.search_index_path` (per-partition parquet reads + the
-    worker-resident graph cache keyed by ``cache_token``; a one-graph
-    index is answered driver-locally) — the hot-path layout; an
+    process-resident graph cache keyed by ``cache_token``; a batch
+    whose parts fit that cache and whose brute work is small is
+    answered in the driver, any partition count) — the hot-path layout; an
     in-memory ``index`` DataFrame uses the shuffle-based
     `hnsw.search_index`.  Both run the same graph-search entry,
     brute/beam rule and result assembler, so they return the same rows.

@@ -1,11 +1,14 @@
 """Filesystem abstraction for the serving-shape search paths and the
 Dataset's versioned base.
 
-`search_index_path` / `search_ivf_path` discover partition directories
-on the driver and read parquet inside tasks; `Dataset.compact` switches
-its ``_base/CURRENT`` pointer and deletes retired versions.  Plain
-``os.listdir`` / local-path reads tie the hot path to a POSIX filesystem
-shared between driver and executors — at the 100 TB target the index
+The saved-index servers list an index once on the driver (`list_parts`:
+content fingerprint, part values and their parquet files), read the
+footers the local-serving rule sizes parts by (`footers`, memoized),
+and read part parquet in tasks or, when served locally, in the driver;
+`Dataset.compact` switches its ``_base/CURRENT`` pointer and deletes
+retired versions.  Plain ``os.listdir`` / local-path reads tie the hot
+path to a POSIX filesystem shared between driver and executors — at
+the 100 TB target the index
 lives on object storage, so both sides go through ``pyarrow.fs``
 instead: plain paths resolve to the local filesystem, ``file://`` /
 ``s3://`` / ``hdfs://`` (and anything else pyarrow can mount) resolve
@@ -18,6 +21,7 @@ requirement, not parity.
 
 from __future__ import annotations
 
+import functools
 import re
 
 _URI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*://")
@@ -39,22 +43,82 @@ def resolve_fs(path: str):
     return pafs.LocalFileSystem(), path
 
 
-def list_partition_values(path: str, prefix: str) -> list[int]:
-    """Sorted <int> values of ``<prefix><int>`` child directories (hive
-    partition layout), via the path's filesystem."""
+def list_parts(path: str, prefix: str) -> tuple[str, dict[int, list]]:
+    """One recursive listing of a hive-partitioned index directory →
+    (content fingerprint, {<int> value of each ``<prefix><int>`` child
+    directory: the ``FileInfo`` of each parquet file under it}).
+
+    The saved-index servers take their cache version, their part list
+    and the files whose footers the local-serving rule reads
+    (`footers`) from this one call.  A missing ``path`` raises; the
+    fingerprint is `index_fingerprint`'s."""
     from pyarrow import fs as pafs
 
     f, p = resolve_fs(path)
-    infos = f.get_file_info(pafs.FileSelector(p, allow_not_found=False))
-    out = []
+    infos = f.get_file_info(pafs.FileSelector(p, recursive=True))
+    root = p.rstrip("/") + "/"
+    parts: dict[int, list] = {}
     for info in infos:
-        base = info.base_name
-        if base.startswith(prefix):
-            try:
-                out.append(int(base[len(prefix):]))
-            except ValueError:
-                continue
-    return sorted(out)
+        rel = info.path[len(root):] if info.path.startswith(root) else info.path
+        top = rel.split("/", 1)[0]
+        if not top.startswith(prefix):
+            continue
+        try:
+            v = int(top[len(prefix):])
+        except ValueError:
+            continue
+        files = parts.setdefault(v, [])
+        if info.type == pafs.FileType.File and info.base_name.endswith(".parquet") and (
+            not info.base_name.startswith((".", "_"))
+        ):
+            files.append(info)
+    return _fingerprint(infos), dict(sorted(parts.items()))
+
+
+def footers(path: str, files: list) -> list:
+    """The parquet footer (``pyarrow.parquet.FileMetaData``: row counts,
+    column statistics, schema) of each of ``files`` — `list_parts`
+    ``FileInfo`` under ``path`` — without reading any column data.
+    Memoized per (path, file, size, mtime): a warm caller reads none."""
+    return [
+        _footer(path, i.path, int(i.size or 0), int(getattr(i, "mtime_ns", 0) or 0))
+        for i in files
+    ]
+
+
+@functools.lru_cache(maxsize=4096)
+def _footer(path: str, file: str, size: int, mtime_ns: int):
+    import pyarrow.parquet as pq
+
+    f, _ = resolve_fs(path)
+    with f.open_input_file(file) as fh:
+        return pq.read_metadata(fh)
+
+
+def column_stats(metas: list, column: str) -> tuple:
+    """(null count, max) of the top-level ``column`` over the footers
+    ``metas``, from their statistics; each is None where a footer lacks
+    it (the max is also None when the column holds no value).  A list
+    column's count is its leaf's: a null list counts one."""
+    nulls, top, known = 0, None, True
+    for md in metas:
+        for rg in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(rg).column(c)
+                if col.path_in_schema.split(".", 1)[0] != column:
+                    continue
+                st = col.statistics
+                if st is None or not st.has_null_count:
+                    nulls = None
+                elif nulls is not None:
+                    nulls += st.null_count
+                if st is not None and st.has_min_max:
+                    top = st.max if top is None else max(top, st.max)
+                elif st is None or not st.has_null_count or (
+                    st.null_count != col.num_values
+                ):
+                    known = False  # values without a recorded max
+    return nulls, top if known else None
 
 
 def read_parquet_dir(path: str, columns: list[str] | None = None):
@@ -64,19 +128,6 @@ def read_parquet_dir(path: str, columns: list[str] | None = None):
 
     f, p = resolve_fs(path)
     return pq.read_table(p, columns=columns, filesystem=f)
-
-
-def read_dir_schema(path: str):
-    """Schema of the first parquet file under ``path`` (footer read)."""
-    import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
-
-    f, p = resolve_fs(path)
-    for info in f.get_file_info(pafs.FileSelector(p)):
-        if info.base_name.endswith(".parquet"):
-            with f.open_input_file(info.path) as fh:
-                return pq.read_schema(fh)
-    return None
 
 
 def join(path: str, *parts: str) -> str:
@@ -147,7 +198,6 @@ def index_fingerprint(path: str) -> str:
     brand-new index) and ``"unknown"`` when the filesystem itself errors
     — the latter disables staleness protection, so it is logged loudly
     rather than swallowed (ADVICE r5)."""
-    import hashlib
     import logging
 
     from pyarrow import fs as pafs
@@ -165,6 +215,16 @@ def index_fingerprint(path: str) -> str:
             e,
         )
         return "unknown"
+    return _fingerprint(infos)
+
+
+def _fingerprint(infos) -> str:
+    """Hash of the listed files' (path, size, mtime); ``"empty"`` when
+    there are none."""
+    import hashlib
+
+    from pyarrow import fs as pafs
+
     items = sorted(
         (i.path, int(i.size or 0), int(getattr(i, "mtime_ns", 0) or 0))
         for i in infos

@@ -64,12 +64,11 @@ def stream_search_transform(
     spark = queries.sparkSession
     cfg = config or get_index_config(load_index(spark, index_path)) or HnswConfig()
     eff_ef = max(ef or cfg.ef, k)
-    pids = [int(p) for p in fsutil.list_partition_values(index_path, "partition_id=")]
+    index_ver, part_files = fsutil.list_parts(index_path, "partition_id=")
+    pids = list(part_files)
     if not pids:
         raise ValueError(f"no index partitions under {index_path!r}")
-    index_ver = (
-        fsutil.index_fingerprint(index_path) if cache_token is not None else None
-    )
+    index_ver = index_ver if cache_token is not None else None
     out_ddl = _result_layout(True, with_metadata)[1]
 
     def run(batches):

@@ -1,8 +1,10 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, not an installed or sibling copy
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from anndb_spark.session import get_spark
 

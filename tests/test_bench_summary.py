@@ -4,8 +4,9 @@ with the contract fields, whatever the extra payload grows to."""
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bench import compact_summary_line  # noqa: E402
 

@@ -6,11 +6,12 @@ numeric-only compare shipped exactly that failure (corpus_cube
 hash-red in CORRECTNESS_r09)."""
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 from check_driver import compare  # noqa: E402
 
 
@@ -50,7 +51,7 @@ def test_equal_values_different_int_widths_still_pass():
 def test_cube_oracle_sql_is_int64_end_to_end():
     """The shipped corpus_cube_source_lang oracle must produce int64
     n_tokens/n_docs on the real fixture (regression for the r9 red row)."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as e
 
     con = duckdb.connect()

@@ -26,27 +26,52 @@ def test_resolve_unmountable_scheme_raises():
 
 
 def test_list_partition_values_and_join(tmp_path):
+    """`list_parts`: one recursive listing gives the sorted partition
+    values, the parquet files under each (checksums and markers left
+    out), and `index_fingerprint`'s value."""
     for pid in (3, 0, 11):
         (tmp_path / f"partition_id={pid}").mkdir()
+    (tmp_path / "partition_id=3" / "a.parquet").write_bytes(b"x" * 5)
+    (tmp_path / "partition_id=3" / ".a.parquet.crc").write_bytes(b"c")
+    (tmp_path / "partition_id=3" / "sub").mkdir()
+    (tmp_path / "partition_id=3" / "sub" / "b.parquet").write_bytes(b"y" * 7)
+    (tmp_path / "partition_id=11" / "c.parquet").write_bytes(b"z" * 2)
     (tmp_path / "partition_id=junk").mkdir()
     (tmp_path / "_SUCCESS").write_text("")
     for p in (str(tmp_path), f"file://{tmp_path}"):
-        assert fsutil.list_partition_values(p, "partition_id=") == [0, 3, 11]
+        fp, part_files = fsutil.list_parts(p, "partition_id=")
+        assert list(part_files) == [0, 3, 11]
+        assert {k: sorted((i.base_name, i.size) for i in v) for k, v in part_files.items()} == {
+            0: [], 3: [("a.parquet", 5), ("b.parquet", 7)], 11: [("c.parquet", 2)]
+        }
+        assert fp == fsutil.index_fingerprint(p) not in ("empty", "unknown")
+    with pytest.raises(FileNotFoundError):
+        fsutil.list_parts(str(tmp_path / "missing"), "partition_id=")
     assert fsutil.join("file:///a/b", "c=1") == "file:///a/b/c=1"
     assert fsutil.join("/a/b/", "c=1") == "/a/b/c=1"
 
 
 def test_read_parquet_dir_and_schema(tmp_path):
+    """A part reads whole; its footers give the schema, row count, null
+    counts and maxima without reading data, once per file version."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    t = pa.table({"id": pa.array([1, 2], pa.int64()), "v": ["a", "b"]})
-    pq.write_table(t, str(tmp_path / "part-0.parquet"))
+    part = tmp_path / "cluster_id=0"
+    part.mkdir()
+    pq.write_table(pa.table({"id": pa.array([1, 2], pa.int64()), "v": ["a", "b"]}),
+                   str(part / "part-0.parquet"))
+    pq.write_table(pa.table({"id": pa.array([9], pa.int64()), "v": pa.array([None], pa.string())}),
+                   str(part / "part-1.parquet"))
     for p in (str(tmp_path), f"file://{tmp_path}"):
-        got = fsutil.read_parquet_dir(p)
-        assert got.num_rows == 2
-        sch = fsutil.read_dir_schema(p)
-        assert str(sch.field("id").type) == "int64"
+        assert fsutil.read_parquet_dir(fsutil.join(p, "cluster_id=0")).num_rows == 3
+        files = fsutil.list_parts(p, "cluster_id=")[1][0]
+        metas = fsutil.footers(p, files)
+        assert sum(md.num_rows for md in metas) == 3
+        assert str(metas[0].schema.to_arrow_schema().field("id").type) == "int64"
+        assert fsutil.column_stats(metas, "id") == (0, 9)
+        assert fsutil.column_stats(metas, "v") == (1, "b")  # an all-null chunk has no max
+        assert fsutil.footers(p, files)[0] is metas[0]  # memoized
 
 
 def test_pointer_and_delete_helpers(tmp_path):

@@ -2,6 +2,8 @@
 (tests/hdf5_writer.py): round-trips, slicing, dtype coverage, and the
 explicit unsupported-feature gates."""
 
+from pathlib import Path
+
 import numpy as np
 import pytest
 
@@ -221,7 +223,7 @@ _GOLDEN_SHA256 = {
     "v3_chunked_deflate.hdf5":
         "3c3cd031942ba4a5",
 }
-_FIXTURE_DIR = "/root/repo/tests/fixtures/hdf5"
+_FIXTURE_DIR = str(Path(__file__).resolve().parent / "fixtures" / "hdf5")
 
 
 def _golden_data():

@@ -502,16 +502,20 @@ def test_bm25_indexed_batch_plan_shape(spark, tmp_path):
     assert not any("bucket" in f and " IN " in f for f in pf_w), pf_w
 
 
-def test_saved_index_servers_scatter_then_one_merge_shuffle(spark, tmp_path):
+def test_saved_index_servers_scatter_then_one_merge_shuffle(spark, tmp_path, monkeypatch):
     """The saved-index servers share one scatter/gather shape: a
     shuffle-free ``parallelize`` plan scan feeding ONE MapInPandas (each
     task reads its own index part from storage), then exactly one
     shuffle — the merge's hashpartitioning(query_id).  Index bytes never
-    cross a shuffle."""
+    cross a shuffle.  HNSW and IVF take that shape when the driver
+    regime declines (here: a cache budget below every part); by default
+    a tiny index with a cache token is answered in the driver — one
+    LocalTableScan, no exchange."""
     import re
 
     import numpy as np
 
+    from anndb_spark.operators import _serve
     from anndb_spark.operators.hnsw import (
         HnswConfig,
         build_index,
@@ -537,6 +541,20 @@ def test_saved_index_servers_scatter_then_one_merge_shuffle(spark, tmp_path):
     save_assigned(assign_clusters(vecs, cent), ivf_dir)
     build_ivfpq(vecs, pq_dir, n_cells=3, m=2, n_centroids=16, sample_n=240)
 
+    local = {
+        "search_index_path": search_index_path(spark, hnsw_dir, queries, 5, cache_token="s"),
+        "search_ivf_path": search_ivf_path(
+            spark, ivf_dir, queries, 5, cent, nprobe=2, cache_token="s"),
+    }
+    for name, res in local.items():
+        plan = _plan(res)
+        tree = plan.split("\n\n(1)")[0]
+        assert tree.strip().splitlines()[-1].strip().startswith("LocalTableScan"), (name, plan)
+        assert tree.count("LocalTableScan") == 1, (name, plan)
+        assert _exchanges(plan) == 0, (name, plan)
+        assert "MapInPandas" not in tree, (name, plan)
+
+    monkeypatch.setattr(_serve.CACHE, "max_bytes", -1)
     servers = {
         "search_index_path": search_index_path(spark, hnsw_dir, queries, 5),
         "search_ivf_path": search_ivf_path(spark, ivf_dir, queries, 5, cent, nprobe=2),

@@ -5,10 +5,11 @@ the rotation policy (never-driver-green entries first; freshness debt
 enforced by tools/window_gate.py, which has its own test module)."""
 
 import sys
+from pathlib import Path
 
 import __spark_entry__ as e
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 from window_gate import never_green_order_ok  # noqa: E402
 
 

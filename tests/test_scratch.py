@@ -41,3 +41,33 @@ def test_scratch_mat_thread_local_and_capped(monkeypatch, dtype):
     assert _scratch._TLS.bufs["cap_test"].size == 9
     assert big.shape == (20, 20) and small.shape == (3, 3)
     assert small.dtype == dtype
+
+
+def test_one_blas_thread_pins_and_restores():
+    from anndb_spark.operators._scratch import _openblas, one_blas_thread
+
+    blas = _openblas()
+    if not blas:
+        pytest.skip("numpy's BLAS is not an OpenBLAS with a thread setter")
+    before = blas[1]()
+    with one_blas_thread():
+        assert blas[1]() == 1
+    assert blas[1]() == before
+
+
+def test_one_blas_thread_overlapping_callers_share_one_hold():
+    """A enters, B enters, A leaves: B still runs on one thread; the
+    count comes back only when B leaves too."""
+    from anndb_spark.operators._scratch import _openblas, one_blas_thread
+
+    blas = _openblas()
+    if not blas:
+        pytest.skip("numpy's BLAS is not an OpenBLAS with a thread setter")
+    before = blas[1]()
+    a, b = one_blas_thread(), one_blas_thread()
+    a.__enter__()
+    b.__enter__()
+    a.__exit__(None, None, None)
+    assert blas[1]() == 1
+    b.__exit__(None, None, None)
+    assert blas[1]() == before

@@ -1,8 +1,10 @@
 """The shared saved-index serving pieces (`operators/_serve.py`)."""
 
+import pickle
+
 import numpy as np
 
-from anndb_spark.operators._serve import PartCache, route
+from anndb_spark.operators._serve import PartCache, query_chunks, route
 
 
 def test_part_cache_lru_by_bytes_and_kind():
@@ -42,3 +44,17 @@ def test_route_groups_query_rows_by_nearest_parts():
     }
     assert len(route(dist, 9)) == 3  # nprobe above the part count
     assert route(np.empty((0, 3)), 2) == {}
+
+
+def test_query_chunks_plan():
+    """A flat plan's chunks keep their rows as ranges (constant-size in
+    the task broadcast at any batch size); a routed plan slices each
+    part's row list; a part without queries keeps one empty chunk."""
+    flat = query_chunks(None, [0, 1], None, 10_000_000, queries_per_task=4_000_000)
+    assert [(p, c, r) for p, c, r in flat] == [
+        (p, c, range(c * 4_000_000, min((c + 1) * 4_000_000, 10_000_000)))
+        for p in (0, 1) for c in range(3)
+    ]
+    assert len(pickle.dumps(flat)) < 1_000
+    routed = query_chunks(None, [0, 1, 2], {0: [1, 4, 5], 2: [0]}, 6, queries_per_task=2)
+    assert routed == [(0, 0, [1, 4]), (0, 1, [5]), (1, 0, []), (2, 0, [0])]

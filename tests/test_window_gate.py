@@ -8,9 +8,11 @@ test_window_order red the instant CORRECTNESS_r09.json appeared)."""
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "tools"))
 
 import __spark_entry__ as e  # noqa: E402
 from window_gate import (  # noqa: E402
@@ -163,7 +165,7 @@ def test_real_window_survives_current_round_artifact(tmp_path):
     import glob
     import shutil
 
-    repo = "/root/repo"
+    repo = str(REPO)
     for f in glob.glob(f"{repo}/CORRECTNESS_r*.json"):
         shutil.copy(f, tmp_path)
     _, _, current = load_green_history(str(tmp_path))
