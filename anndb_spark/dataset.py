@@ -327,20 +327,6 @@ class Dataset:
         except Exception:
             return None
 
-    def _index_version(self) -> str | None:
-        """Cache token for the serving search: the index directory's
-        content fingerprint via ``fsutil.index_fingerprint`` — URI-capable
-        (``file://``, ``s3://``, ...) like the serving layer it feeds, so
-        the stale-graph protection holds off-POSIX too (r5 Wrong #3;
-        replaces a local-only os.walk that silently returned None on
-        URIs and dropped the cache token)."""
-        from anndb_spark.sources.fsutil import index_fingerprint
-
-        fp = index_fingerprint(self.index_path)
-        if fp in ("empty", "unknown"):
-            return None
-        return f"{self.index_path}@{fp}"
-
     def build_pq(
         self, m: int = 8, n_centroids: int = 256, sample_n: int = 50_000
     ) -> None:
@@ -445,14 +431,13 @@ class Dataset:
             # planner has no hand in this one: the physical strategy IS
             # the artifact layout)
             from anndb_spark.operators.ivfpq import search_ivfpq
-            from anndb_spark.sources.fsutil import index_fingerprint
 
             if self.meta.space not in ("euclidean", "cosine"):
                 raise ValueError(
                     "mode='ivfpq' supports euclidean and cosine "
                     "(normalize-then-L2); use mode='pq' for ip"
                 )
-            if index_fingerprint(self.ivfpq_path) in ("empty", "unknown"):
+            if not fsutil.exists(self.ivfpq_path):
                 raise ValueError(
                     f"dataset {self.meta.name!r} has no IVFPQ artifacts "
                     "— run build_ivfpq() first"
@@ -464,8 +449,6 @@ class Dataset:
                 k,
                 nprobe=kw.pop("nprobe", 8),
                 rerank_with=self.state().select("id", "vector"),
-                cache_token=f"{self.ivfpq_path}@"
-                + index_fingerprint(f"{self.ivfpq_path}/codes"),
                 **{
                     kk: vv
                     for kk, vv in kw.items()
@@ -482,13 +465,13 @@ class Dataset:
                     .select(*res.columns, "metadata")
                 )
             return res
-        if index_df is None and mode in ("auto", "ann"):
-            # saved index → serving path with an auto-versioned cache
-            # token (rebuilds/tombstones invalidate it)
-            version = self._index_version()
-            if version is not None:
-                index_path = self.index_path
-                kw.setdefault("cache_token", version)
+        if index_df is None and (
+            mode == "ann" or (mode == "auto" and fsutil.exists(self.index_path))
+        ):
+            # saved index → serving path; its caches are versioned by the
+            # index's content fingerprint (rebuilds and tombstones
+            # invalidate them), from the one listing the search makes
+            index_path = self.index_path
         if mode == "auto" and "approx_row_count" not in kw and (
             index_df is not None or index_path is not None
             or kw.get("centroids") is not None
@@ -511,8 +494,10 @@ class Dataset:
                 **kw,
             )
         else:
+            # an unfiltered ann search over the saved index reads no
+            # table: no base listing, no Spark file index
             plan, res = knn(
-                self.state(),
+                None if mode == "ann" and index_path is not None else self.state(),
                 queries,
                 k,
                 space=self.meta.space,
@@ -546,6 +531,9 @@ class Dataset:
         boundary).  RPC handlers and driver-side scorers should call
         this; `search()` returns a composable DataFrame (a local
         relation in the same regime) and pays a driver→JVM hop for it.
+        The graphs it keeps are held for the index's content
+        fingerprint, so the call after a `build_index()` or a `remove()`
+        reads the new index with no caller action.
 
         Runs the Spark task plan (collected via Arrow) when the rule
         declines, and the planner's path when there is no saved index —
@@ -553,15 +541,13 @@ class Dataset:
         queries = [("0", list(query))] if not isinstance(query, list) or (
             query and isinstance(query[0], (int, float))
         ) else query
-        version = self._index_version()
-        if version is not None:
+        if fsutil.exists(self.index_path):
             from anndb_spark.operators.hnsw import (
                 HnswConfig,
                 search_index_local,
             )
 
             kw.setdefault("config", HnswConfig(space=self.meta.space))
-            kw.setdefault("cache_token", version)
             return search_index_local(
                 self.spark, self.index_path, queries, k, **kw
             )
@@ -581,8 +567,7 @@ class Dataset:
         — the reference's gRPC request stream as a Structured Streaming
         pipeline).  Requires `build_index()` first.  Returns the
         StreamingQuery."""
-        version = self._index_version()
-        if version is None:
+        if not fsutil.exists(self.index_path):
             raise ValueError(
                 f"dataset {self.meta.name!r} has no saved index — "
                 "run build_index() first"
@@ -591,7 +576,6 @@ class Dataset:
         from anndb_spark.streaming.search import stream_search
 
         kw.setdefault("config", HnswConfig(space=self.meta.space))
-        kw.setdefault("cache_token", version)
         return stream_search(
             self.spark, queries_dir, self.index_path, results_dir,
             checkpoint_dir, k, **kw,

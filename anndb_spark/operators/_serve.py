@@ -19,21 +19,23 @@ kernel:
                     ``mapInPandas`` loop that calls the server's kernel;
 - `merge_topk`    — the global ``(score asc, id asc)`` row-number merge;
 - `serve`         — the driver regime beside `scatter`, for HNSW and
-                    IVF: `serve_locally` is the one rule (the driver
-                    keeps what it loads, the touched parts' resident
-                    bytes fit `CACHE`, and the batch's brute chunks stay
-                    under `LOCAL_BRUTE_FLOPS_MAX`), `run_local` runs
-                    the same kernel on the same chunks in the driver
-                    and merges like `merge_topk`, and the answer is a
-                    local relation — collecting it runs no Spark job,
-                    as the reference's coordinator merges partition
-                    results itself;
+                    IVF: `serve_locally` is the one rule (the touched
+                    parts' resident bytes fit `CACHE`, and the batch's
+                    brute chunks stay under `LOCAL_BRUTE_FLOPS_MAX`),
+                    `run_local` runs the same kernel on the same chunks
+                    in the driver and merges like `merge_topk`, and the
+                    answer is a local relation — collecting it runs no
+                    Spark job, as the reference's coordinator merges
+                    partition results itself;
 - `exact_rerank`  — re-scoring an approximate shortlist against the
                     float table (IVFADC+R and PQ+R);
 - `CACHE`         — the byte-capped LRU that keeps loaded index parts
                     (HNSW graphs, IVF cells, IVF-PQ codes) resident in
                     the reused python worker, and in the driver for the
-                    driver regime.
+                    driver regime, keyed by (index path, part) and
+                    versioned by the index's content fingerprint
+                    (`fsutil.list_parts`), as the reference's partitions
+                    version the graphs they hold (`storage/partition.go`).
 """
 
 from __future__ import annotations
@@ -189,16 +191,11 @@ def serve_locally(
     part_size: Callable[[int], tuple[int, float]],
     dim: int,
     is_brute: Callable[[int, int], bool],
-    cached: bool,
 ) -> bool:
     """The one local-or-scatter rule, decided from the plan and the
     parts' parquet footers before any part's data is read.  Local when
-    all hold:
+    both hold:
 
-    - the driver keeps what it loads (``cached``: the server has a cache
-      key), or the batch touches one part — a task would read that part
-      once per call as well, while several uncached parts would be read
-      one after another here and in parallel tasks there;
     - the touched parts' resident bytes fit the `CACHE` budget;
       ``part_size(part)`` is the server's (rows, resident bytes) bound
       for one part, in `CACHE`'s own accounting;
@@ -206,14 +203,15 @@ def serve_locally(
       ``is_brute(rows, nq)`` is the server's own per-chunk choice, given
       the rows its kernel will see.
 
-    A Spark job's fixed cost (~0.5 s of scheduling and two stages)
-    dwarfs a native kernel's microseconds per query, so small and warm
-    batches are answered in the driver.  A big exact scan is
+    Every server keeps what it loads under its index's content
+    fingerprint, so parts that fit stay resident: a cold batch reads
+    them once, here, and the next batch over the same index version
+    reads none.  A Spark job's fixed cost (~0.5 s of scheduling and two
+    stages) dwarfs a native kernel's microseconds per query, so small
+    and warm batches are answered in the driver.  A big exact scan is
     compute-bound instead: the task plan spreads its GEMMs over the
     workers, while the driver runs them on one BLAS thread."""
     touched = sorted({p for p, _, rows in chunks if len(rows)})
-    if not cached and len(touched) > 1:
-        return False
     size = {p: part_size(p) for p in touched}
     if sum(b for _, b in size.values()) > CACHE.max_bytes:
         return False
@@ -309,7 +307,6 @@ def serve(
     out_ddl: str,
     k: int | None,
     is_brute: Callable[[int, int], bool],
-    cached: bool,
     queries_per_task: int | None = None,
     arrow: bool = False,
 ):
@@ -317,8 +314,8 @@ def serve(
     driver (`run_local`) when `serve_locally` says so, else `scatter` +
     `merge_topk`.  Same plan, same kernel, same rows either way.
 
-    ``part_size``, ``is_brute`` and ``cached`` are the server's inputs
-    to that rule.  ``out_ddl`` is the kernel's partial-row layout; the
+    ``part_size`` and ``is_brute`` are the server's inputs to that
+    rule.  ``out_ddl`` is the kernel's partial-row layout; the
     top-``k`` merge adds ``rank`` after ``query_id``, and ``k=None``
     takes the kernel's rows, ranks included, as final.  Returns a DataFrame (a local
     relation in the driver regime: collecting it runs no job), or with
@@ -333,7 +330,7 @@ def serve(
     schema = StructType(fields)
     chunks = query_chunks(spark, parts, by_part, qmat.shape[0], queries_per_task)
     size = functools.cache(part_size)
-    if serve_locally(chunks, size, qmat.shape[1], is_brute, cached):
+    if serve_locally(chunks, size, qmat.shape[1], is_brute):
         tbl = run_local(
             chunks, qid_arr, qmat, search_chunk, to_arrow_schema(schema), k,
             lambda p, nq: is_brute(size(p)[0], nq),
@@ -393,35 +390,46 @@ def exact_rerank(
 
 
 class PartCache:
-    """Byte-capped LRU of loaded index parts in one python worker.
+    """Byte-capped LRU of loaded index parts in one python worker (and in
+    the driver).
 
     A warm serving workload pays zero index bytes per batch because the
-    reused worker keeps what it loaded.  Keys are ``(kind, key)``: an
-    HNSW graph and an IVF cell stored under the same token, fingerprint
-    and part number stay distinct.  A None key disables caching for
-    that call; an entry larger than the whole budget is not stored."""
+    reused worker keeps what it loaded.  Entries are keyed by ``(kind,
+    key)`` with ``key = (index path, part)`` — an HNSW graph and an IVF
+    cell stay distinct — and carry a ``version``, the index's content
+    fingerprint: `get` hits only on an equal version, and `put` drops
+    the path's entries of every other version, so a rewritten index is
+    reloaded and its superseded parts free their bytes at once.  A None
+    key disables caching for that call; an entry larger than the whole
+    budget is not stored."""
 
     def __init__(self, max_bytes: int):
         self.max_bytes = max_bytes
-        self.entries: dict = {}  # (kind, key) -> (value, nbytes), oldest first
+        # (kind, key) -> (version, value, nbytes), oldest first
+        self.entries: dict = {}
 
-    def get(self, kind: str, key):
+    def get(self, kind: str, key, version):
+        hit = self.entries.get((kind, key))
+        if key is None or hit is None or hit[0] != version:
+            return None
+        self.entries[(kind, key)] = self.entries.pop((kind, key))  # most recent
+        return hit[1]
+
+    def put(self, kind: str, key, version, value, nbytes: int) -> None:
         if key is None:
-            return None
-        hit = self.entries.pop((kind, key), None)
-        if hit is None:
-            return None
-        self.entries[(kind, key)] = hit  # re-insert → most recent
-        return hit[0]
-
-    def put(self, kind: str, key, value, nbytes: int) -> None:
-        if key is None or nbytes > self.max_bytes:
+            return
+        for old in [
+            e for e, (v, _, _) in self.entries.items()
+            if e[1][0] == key[0] and v != version
+        ]:
+            del self.entries[old]
+        if nbytes > self.max_bytes:
             return
         self.entries.pop((kind, key), None)
-        total = nbytes + sum(nb for _, nb in self.entries.values())
+        total = nbytes + sum(nb for _, _, nb in self.entries.values())
         while total > self.max_bytes:
-            total -= self.entries.pop(next(iter(self.entries)))[1]
-        self.entries[(kind, key)] = (value, nbytes)
+            total -= self.entries.pop(next(iter(self.entries)))[2]
+        self.entries[(kind, key)] = (version, value, nbytes)
 
 
 CACHE = PartCache(int(os.environ.get("ANNDB_GRAPH_CACHE_BYTES", str(1 << 30))))

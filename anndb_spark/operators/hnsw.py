@@ -1961,7 +1961,10 @@ def _graph_bytes_max(n: int, dim: int, top_level: int, cfg: "HnswConfig") -> int
 # physical page set shared by all workers on the host (the resident-index
 # contract a serving node actually wants).  Writers build into a private
 # tmp dir and atomically rename it in; losers of the race just mmap the
-# winner's copy.
+# winner's copy.  An entry is keyed like its `_serve.CACHE` entry, by
+# (index path, part), and its directory name carries the index's content
+# fingerprint: a complete directory never changes, and storing a new
+# version deletes the part's directories of every other version.
 
 _SHM_ROOT = _os_mod.environ.get(
     "ANNDB_SHM_CACHE_DIR",
@@ -1972,13 +1975,17 @@ _SHM_CACHE_MAX_BYTES = int(
 )
 
 
-def _shm_dir_for(key) -> str | None:
+def _shm_dir_for(key, version) -> str | None:
+    """``<root>/<hash of key>-<hash of version>``, or None without a
+    shared-memory root."""
     if not _SHM_ROOT:
         return None
     import hashlib
 
-    h = hashlib.sha1(repr(key).encode()).hexdigest()[:24]
-    return _os_mod.path.join(_SHM_ROOT, h)
+    def h(x, n):
+        return hashlib.sha1(repr(x).encode()).hexdigest()[:n]
+
+    return _os_mod.path.join(_SHM_ROOT, f"{h(key, 24)}-{h(version, 16)}")
 
 
 def _shm_load(d: str, cfg: "HnswConfig"):
@@ -2013,12 +2020,13 @@ def _shm_load(d: str, cfg: "HnswConfig"):
         return None
 
 
-def _shm_store(key, ids, g: "HnswGraph") -> str | None:
-    """Write the finalized graph into /dev/shm (atomic dir rename)."""
+def _shm_store(key, version, ids, g: "HnswGraph") -> str | None:
+    """Write the finalized graph into /dev/shm (atomic dir rename), and
+    drop the key's entries of other versions."""
     import pickle as _pickle
     import shutil
 
-    d = _shm_dir_for(key)
+    d = _shm_dir_for(key, version)
     if d is None:
         return None
     if _os_mod.path.exists(_os_mod.path.join(d, "_COMPLETE")):
@@ -2090,6 +2098,13 @@ def _shm_store(key, ids, g: "HnswGraph") -> str | None:
             _os_mod.rename(tmp, d)
         except OSError:
             shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+        # superseded versions of this key: a reader mid-load falls back
+        # to parquet, and pages already mapped stay valid after unlink
+        name = _os_mod.path.basename(d)
+        prefix = name.split("-")[0] + "-"
+        for other in _os_mod.listdir(_SHM_ROOT):
+            if other.startswith(prefix) and other != name and "." not in other:
+                shutil.rmtree(_os_mod.path.join(_SHM_ROOT, other), ignore_errors=True)
         _shm_evict()
         return d
     except Exception:
@@ -2410,8 +2425,10 @@ def search_index(
     ``queries``: [(query_id, vector)] or the ``(ids, matrix)`` form —
     broadcast in the task closure.
     ``cache_token``: stable string enabling the reused-worker graph
-    cache for serving workloads; pass a NEW token whenever the index is
-    rebuilt (stale tokens would serve the old graph).
+    cache for serving workloads.  A DataFrame carries no content
+    fingerprint to version that cache by, so pass a new token whenever
+    the index changes (the saved-index servers need none: they version
+    their caches by the index's fingerprint).
 
     ``config=None`` restores the config persisted in the index (the
     snapshot header); an explicit config whose space disagrees with the
@@ -2453,10 +2470,10 @@ def search_index(
         if not len(idx_pdf) or (by_pid is not None and not qsel):
             return pd.DataFrame(columns=out_cols)
         ckey = (cache_token, pid) if cache_token is not None else None
-        hit = _serve.CACHE.get("hnsw", ckey)
+        hit = _serve.CACHE.get("hnsw", ckey, None)
         if hit is None:
             hit = _graph_from_index(idx_pdf, cfg)
-            _serve.CACHE.put("hnsw", ckey, hit, _graph_bytes(hit[1]))
+            _serve.CACHE.put("hnsw", ckey, None, hit, _graph_bytes(hit[1]))
         ids, g = hit
         sub, sub_qids = (
             (qmat, qid_arr) if qsel is None else (qmat[qsel], qid_arr[qsel])
@@ -2478,40 +2495,35 @@ def _acquire_partition_graph(
     pid,
     cfg: "HnswConfig",
     strategy: str,
-    cache_token: str | None,
-    index_ver: str | None,
+    index_ver: str,
     n_sub: int,
 ):
     """Graph acquisition for one saved partition, with the full cache
     ladder: L1 (process dict, LRU by bytes) → L2 (host-shared /dev/shm
     mmap — one physical page set for every worker on the host) →
-    parquet read.  Returns (ids, graph, use_brute), use_brute being
-    `_use_brute` for a batch of ``n_sub`` queries.  Shared by the batch
-    serving task and driver-local serving (`search_index_path`) and the
-    streaming query transform (`streaming.search`)."""
+    parquet read.  Both levels key the graph by (``path``, ``pid``) and
+    hold it for ``index_ver``, the index's `fsutil.list_parts`
+    fingerprint: a rewritten index misses and is read again.  Returns
+    (ids, graph, use_brute), use_brute being `_use_brute` for a batch of
+    ``n_sub`` queries.  Shared by the batch serving task and driver-local
+    serving (`search_index_path`) and the streaming query transform
+    (`streaming.search`)."""
     from anndb_spark.sources import fsutil as _fsu
 
     # a full-graph cache entry serves both strategies; a brute-only
-    # (adjacency-free) one is keyed separately
-    full_key = (
-        (cache_token, index_ver, pid) if cache_token is not None else None
-    )
-    hit = _serve.CACHE.get("hnsw", full_key)
-    if hit is None and full_key is not None:
-        d = _shm_dir_for(full_key)
+    # (adjacency-free) one is kept under its own kind
+    key = (path, pid)
+    hit = _serve.CACHE.get("hnsw", key, index_ver)
+    if hit is None:
+        d = _shm_dir_for(key, index_ver)
         if d is not None:
             got = _shm_load(d, cfg)
             if got is not None:
-                _serve.CACHE.put("hnsw", full_key, got, _graph_bytes(got[1]))
+                _serve.CACHE.put("hnsw", key, index_ver, got, _graph_bytes(got[1]))
                 hit = got
     if hit is not None:
         ids, g = hit
         return ids, g, _use_brute(strategy, len(ids), n_sub, g.dim)
-    bkey = (
-        (cache_token, index_ver, pid, "brute")
-        if cache_token is not None
-        else None
-    )
     # brute-only (adjacency-free) entry: checked BEFORE the parquet
     # read.  The r12 scatter-leg finding (PLANS r12): this check used
     # to sit after `read_parquet_dir(...).to_pandas()`, so every
@@ -2523,7 +2535,7 @@ def _acquire_partition_graph(
     # at 1.3 s on the same boots).  A cached brute graph carries the
     # same (n, dim) the auto-threshold test needs; if auto resolves to
     # beam for this batch size, fall through to the full read.
-    bhit = _serve.CACHE.get("hnsw", bkey)
+    bhit = _serve.CACHE.get("hnsw_brute", key, index_ver)
     if bhit is not None:
         ids, g = bhit
         if _use_brute(strategy, len(ids), n_sub, g.dim):
@@ -2535,23 +2547,22 @@ def _acquire_partition_graph(
     dim = len(verts.iloc[0]) if len(verts) else 0
     if _use_brute(strategy, len(verts), n_sub, dim):
         ids, g = _graph_from_index(idx_pdf, cfg, need_adj=False)
-        _serve.CACHE.put("hnsw", bkey, (ids, g), _graph_bytes(g))
+        _serve.CACHE.put("hnsw_brute", key, index_ver, (ids, g), _graph_bytes(g))
         return ids, g, True
     ids, g = _graph_from_index(idx_pdf, cfg)
-    if full_key is not None:
-        # publish to L2, then serve from the SHARED pages (drops this
-        # worker's private copy)
-        d = _shm_store(full_key, ids, g)
-        if d is not None:
-            got = _shm_load(d, cfg)
-            if got is not None:
-                ids, g = got
-    _serve.CACHE.put("hnsw", full_key, (ids, g), _graph_bytes(g))
+    # publish to L2, then serve from the SHARED pages (drops this
+    # worker's private copy)
+    d = _shm_store(key, index_ver, ids, g)
+    if d is not None:
+        got = _shm_load(d, cfg)
+        if got is not None:
+            ids, g = got
+    _serve.CACHE.put("hnsw", key, index_ver, (ids, g), _graph_bytes(g))
     return ids, g, False
 
 
 def _search_path(
-    spark, path, queries, k, ef, config, strategy, cache_token,
+    spark, path, queries, k, ef, config, strategy,
     with_metadata, centroids, nprobe, queries_per_task, locality_centroids,
     arrow,
 ):
@@ -2567,15 +2578,14 @@ def _search_path(
     qid_arr, qmat = _serve.parse_queries(queries, 0 if cents is None else np.shape(cents)[1])
     # ONE listing through pyarrow.fs (plain paths, file://, s3://,
     # hdfs:// — not a shared-local-FS assumption, ADVICE r4) gives the
-    # parts, their files for the local rule, and the cache keys' content
-    # fingerprint: the host-shared /dev/shm graph cache outlives the
-    # Spark session, so a bare (token, pid) key would silently serve a
-    # graph stored by a PREVIOUS index version under the same token
+    # parts, their files for the local rule, and the version of every
+    # cached graph: the host-shared /dev/shm graph cache outlives the
+    # Spark session, so a graph cached without the content fingerprint
+    # would be served for a PREVIOUS index version at the same path
     # (measured: a cluster-routed index re-trained across runs answered
     # probes with the prior run's cells — recall degraded to
     # ~nprobe/n_cells)
     index_ver, part_files = fsutil.list_parts(path, "partition_id=")
-    index_ver = index_ver if cache_token is not None else None
     by_pid = _serve.route(_pairwise(qmat, centroids, cfg.space), nprobe) if routed else None
     pids = [p for p in part_files if by_pid is None or p in by_pid]
     # ONE graph partition → every query is answered completely by its
@@ -2601,7 +2611,7 @@ def _search_path(
         # in the driver (`_serve.run_local`) the walk owns every core and
         # the rows are built as Arrow
         ids, g, use_brute = _acquire_partition_graph(
-            path, pid, cfg, strategy, cache_token, index_ver, len(sub),
+            path, pid, cfg, strategy, index_ver, len(sub),
         )
         hits = (
             g.search_brute(sub, k) if use_brute
@@ -2632,7 +2642,7 @@ def _search_path(
         spark, pids, part_size, by_pid, qid_arr, qmat, search_chunk, out_ddl,
         None if final_ranks else k,
         lambda n, nq: _use_brute(strategy, n, nq, qmat.shape[1]),
-        cache_token is not None, queries_per_task=queries_per_task, arrow=arrow,
+        queries_per_task=queries_per_task, arrow=arrow,
     )
 
 
@@ -2644,7 +2654,6 @@ def search_index_path(
     ef: int | None = None,
     config: HnswConfig | None = None,
     strategy: str = "auto",
-    cache_token: str | None = None,
     with_metadata: bool = False,
     centroids=None,
     nprobe: int = 0,
@@ -2661,15 +2670,16 @@ def search_index_path(
     graph in its process, so a warm serving workload pays ZERO index
     bytes per query batch — the same resident-graph contract the
     reference's nodes have (`storage/partition.go`: graphs live in
-    memory, storage is only read on start/restore).
+    memory, storage is only read on start/restore).  Cached graphs are
+    held for the index's content fingerprint, taken from the call's one
+    listing of ``path``, so an index rewritten at the same path is read
+    again on the next call with no caller action.
 
     The plan runs in one of `_serve.serve`'s two regimes, flat or
     routed, whatever the partition count:
 
-    - in the driver, when the driver keeps the graphs it loads (a
-      ``cache_token``; without one, only a batch that touches one
-      partition), the touched graphs fit the graph cache's byte budget
-      (their vertex counts and top levels read from the parquet
+    - in the driver, when the touched graphs fit the graph cache's byte
+      budget (their vertex counts and top levels read from the parquet
       footers bound `_graph_bytes`) and its brute chunks stay under the
       local flops cap (`_serve.serve_locally`): the same kernel with an
       OpenMP thread per core, the ``(score, id)`` merge done in the
@@ -2698,7 +2708,7 @@ def search_index_path(
     flat or routed (pytest-verified).
     """
     return _search_path(
-        spark, path, queries, k, ef, config, strategy, cache_token,
+        spark, path, queries, k, ef, config, strategy,
         with_metadata, centroids, nprobe, queries_per_task,
         locality_centroids, arrow=False,
     )
@@ -2712,7 +2722,6 @@ def search_index_local(
     ef: int | None = None,
     config: HnswConfig | None = None,
     strategy: str = "auto",
-    cache_token: str | None = None,
     with_metadata: bool = False,
     queries_per_task: int | None = None,
 ) -> "pa.Table":
@@ -2738,7 +2747,7 @@ def search_index_local(
     `search_index_path`.
     """
     return _search_path(
-        spark, path, queries, k, ef, config, strategy, cache_token,
+        spark, path, queries, k, ef, config, strategy,
         with_metadata, None, 0, queries_per_task, None, arrow=True,
     )
 

@@ -35,6 +35,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
@@ -332,7 +333,6 @@ def search_ivf_path(
     space: str = "euclidean",
     id_col: str = "id",
     vec_col: str = "vector",
-    cache_token: str | None = None,
     queries_per_task: int | None = None,
 ) -> DataFrame:
     """Serving-shape IVF top-k over a `save_assigned` table.
@@ -344,13 +344,13 @@ def search_ivf_path(
     chunk column-reads its own cluster's parquet directly (unprobed
     cluster directories never enter the plan) and GEMM-scores against
     the process-cached cluster matrix.  A warm serving workload pays
-    zero table bytes per batch.
+    zero table bytes per batch; cached cells are held for the table's
+    content fingerprint, so a table rewritten at ``path`` is read again.
 
-    `_serve.serve` picks the regime: when a ``cache_token`` lets the
-    driver keep the cells it loads (or one cell is probed), the probed
-    cells' cached bytes — ``rows·(8·dim + 64)``, rows from the parquet
-    footers — fit the cache budget and the batch's GEMM flops stay under
-    the local cap (`_serve.serve_locally`), the driver scores and merges
+    `_serve.serve` picks the regime: when the probed cells' cached bytes
+    — ``rows·(8·dim + 64)``, rows from the parquet footers — fit the
+    cache budget and the batch's GEMM flops stay under the local cap
+    (`_serve.serve_locally`), the driver scores and merges
     the chunks itself and returns a local relation (collecting it runs
     no Spark job); otherwise one task per chunk, merged by a window over
     ``hashpartitioning(query_id)``.  Same rows, score bits included.
@@ -363,12 +363,12 @@ def search_ivf_path(
     by_cid = _serve.route(_pairwise(qmat, cent, space), nprobe)
     # ONE listing through pyarrow.fs (plain path, file://, s3://, hdfs://
     # — no shared-local-FS assumption, ADVICE r4): the clusters, their
-    # files for the local rule, and the cache keys' content fingerprint
-    # — warm processes outlive jobs, so a cluster table rebuilt at the
-    # same path+token would otherwise serve stale rows (ADVICE r5 medium)
+    # files for the local rule, and the cached cells' version, the
+    # content fingerprint — warm processes outlive jobs, so a cluster
+    # table rebuilt at the same path would otherwise serve stale rows
+    # (ADVICE r5 medium)
     index_ver, cell_files = fsutil.list_parts(path, "cluster_id=")
     cids = sorted(set(by_cid) & set(cell_files))
-    index_ver = index_ver if cache_token is not None else None
     # result id column keeps the table's native type (one memoized footer)
     id_type = "string"
     for files in cell_files.values():
@@ -389,14 +389,21 @@ def search_ivf_path(
     ) -> pd.DataFrame | None:
         # the same in the driver regime (``local``): the GEMM runs on the
         # caller's BLAS threads
-        key = (cache_token, index_ver, cid) if cache_token is not None else None
-        hit = _serve.CACHE.get("ivf", key)
+        hit = _serve.CACHE.get("ivf", (path, cid), index_ver)
         if hit is None:
             tbl = fsutil.read_parquet_dir(
                 fsutil.join(path, f"cluster_id={cid}"), columns=[id_col, vec_col]
-            ).to_pandas()
-            hit = (tbl[id_col].to_numpy(), np.array(tbl[vec_col].tolist(), dtype=np.float64))
-            _serve.CACHE.put("ivf", key, hit, _cell_bytes(len(hit[0]), Q.shape[1]))
+            )
+            # the list column's values straight from Arrow, widened in
+            # numpy: the bits of float64(x) for each float x, with no
+            # Python object per element
+            flat = pc.list_flatten(tbl.column(vec_col)).to_numpy()
+            hit = (
+                tbl.column(id_col).to_numpy(),
+                flat.astype(np.float64).reshape(tbl.num_rows, Q.shape[1]),
+            )
+            _serve.CACHE.put("ivf", (path, cid), index_ver, hit,
+                             _cell_bytes(len(hit[0]), Q.shape[1]))
         ids, vmat = hit
         if not len(ids):
             return None
@@ -418,7 +425,7 @@ def search_ivf_path(
     return _serve.serve(
         spark, cids, cell_size, by_cid, qid_arr, qmat, score_chunk,
         f"query_id STRING, id {id_type}, score DOUBLE", k,
-        lambda n, nq: True, cache_token is not None, queries_per_task=queries_per_task,
+        lambda n, nq: True, queries_per_task=queries_per_task,
     )
 
 

@@ -290,7 +290,6 @@ def search_ivfpq(
     codebooks: np.ndarray | None = None,
     rerank_with: DataFrame | None = None,
     shortlist: int | None = None,
-    cache_token: str | None = None,
     queries_per_task: int | None = None,
     space: str | None = None,
     cells_per_task: int = 1,
@@ -337,21 +336,21 @@ def search_ivfpq(
     )
     by_cid = _serve.route(d2, nprobe)
     codes_root = f"{path}/codes"
+    # the cached code matrices' version: the codes' content fingerprint
     index_ver, cell_files = fsutil.list_parts(codes_root, "cluster_id=")
     cids = sorted(set(by_cid) & set(cell_files))
-    index_ver = index_ver if cache_token is not None else None
     top_n = k if rerank_with is None else max(shortlist or 5 * k, k)
     bn2 = np.einsum("mkd,mkd->mk", books, books, dtype=np.float32)
 
     def score_chunk(cid: int, qids: np.ndarray, Qc: np.ndarray) -> pd.DataFrame | None:
-        key = (cache_token, index_ver, cid) if cache_token is not None else None
-        hit = _serve.CACHE.get("ivfpq", key)
+        hit = _serve.CACHE.get("ivfpq", (codes_root, cid), index_ver)
         if hit is None:
             tbl = fsutil.read_parquet_dir(
                 fsutil.join(codes_root, f"cluster_id={cid}"), columns=["id", "codes"]
             ).to_pandas()
             hit = (tbl["id"].to_numpy(), codes_matrix(tbl["codes"], m))
-            _serve.CACHE.put("ivfpq", key, hit, hit[1].nbytes + 64 * len(hit[0]))
+            _serve.CACHE.put("ivfpq", (codes_root, cid), index_ver, hit,
+                             hit[1].nbytes + 64 * len(hit[0]))
         ids, C = hit
         if not len(ids):
             return None

@@ -34,14 +34,13 @@ EXACT_MAX_ROWS_DEFAULT = 10_000_000
 
 
 def knn(
-    vectors: DataFrame,
+    vectors: DataFrame | None,
     queries: Sequence[tuple],
     k: int,
     space: str = "euclidean",
     mode: str = "auto",
     index: DataFrame | None = None,
     index_path: str | None = None,
-    cache_token: str | None = None,
     centroids=None,
     nprobe: int = 8,
     ef: int | None = None,
@@ -61,12 +60,14 @@ def knn(
 
     A saved ``index_path`` routes to the serving-shape
     `hnsw.search_index_path` (per-partition parquet reads + the
-    process-resident graph cache keyed by ``cache_token``; a batch
-    whose parts fit that cache and whose brute work is small is
-    answered in the driver, any partition count) — the hot-path layout; an
-    in-memory ``index`` DataFrame uses the shuffle-based
-    `hnsw.search_index`.  Both run the same graph-search entry,
+    process-resident graph cache, versioned by the index's content
+    fingerprint; a batch whose parts fit that cache and whose brute
+    work is small is answered in the driver, any partition count) — the
+    hot-path layout; an in-memory ``index`` DataFrame uses the
+    shuffle-based `hnsw.search_index`.  Both run the same graph-search entry,
     brute/beam rule and result assembler, so they return the same rows.
+    ``vectors`` may be None for ``mode='ann'`` over an ``index_path``,
+    the one plan that reads no table.
     """
     from anndb_spark.operators.hnsw import search_index, search_index_path
     from anndb_spark.operators.ivf import search_ivf
@@ -76,6 +77,8 @@ def knn(
         raise ValueError(f"unknown mode {mode!r}")
     if mode == "ann" and index is None and index_path is None:
         raise ValueError("mode='ann' requires a materialized index (DataFrame or path)")
+    if vectors is None and not (mode == "ann" and index_path is not None):
+        raise ValueError("vectors is required unless mode='ann' searches an index_path")
     if mode == "ivf" and centroids is None:
         raise ValueError("mode='ivf' requires trained centroids")
     if mode == "pq":
@@ -114,15 +117,16 @@ def knn(
         else:
             mode = "exact"
 
-    spark = vectors.sparkSession
     qitems = [(str(qid), [float(x) for x in vec]) for qid, vec in queries]
     if mode == "ann":
+        from pyspark.sql import SparkSession
+
         from anndb_spark.operators.hnsw import HnswConfig
 
         if index_path is not None:
+            spark = SparkSession.active() if vectors is None else vectors.sparkSession
             return "ann", search_index_path(
-                spark, index_path, qitems, k, ef=ef,
-                config=HnswConfig(space=space), cache_token=cache_token,
+                spark, index_path, qitems, k, ef=ef, config=HnswConfig(space=space),
             )
         return "ann", search_index(
             index, qitems, k, ef=ef, config=HnswConfig(space=space)
@@ -130,7 +134,7 @@ def knn(
     from anndb_spark.utils import literal_df
 
     qdf = literal_df(
-        spark, qitems, "query_id STRING, query_vector ARRAY<DOUBLE>"
+        vectors.sparkSession, qitems, "query_id STRING, query_vector ARRAY<DOUBLE>"
     )
     if mode == "exact":
         return "exact", knn_exact(vectors, qdf, k, space=space)

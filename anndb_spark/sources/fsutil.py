@@ -188,11 +188,11 @@ def replace_text(path: str, text: str) -> None:
 
 def index_fingerprint(path: str) -> str:
     """Content fingerprint of an index directory: hash of every file's
-    (relative path, size, mtime).  Serving caches key their resident
-    graphs by (token, FINGERPRINT, pid) — a host-shared cache entry can
-    outlive the Spark session AND the index version that produced it
-    (e.g. a rebuilt index saved under the same logical name), and an
-    unversioned token then serves a stale graph silently.
+    (path, size, mtime), the same value `list_parts` returns.  Serving
+    caches hold each resident part for this version — a host-shared
+    cache entry can outlive the Spark session AND the index version
+    that produced it (e.g. a rebuilt index saved under the same path),
+    and an unversioned entry would then serve a stale graph silently.
 
     Returns ``"empty"`` when the directory has no files (missing or
     brand-new index) and ``"unknown"`` when the filesystem itself errors

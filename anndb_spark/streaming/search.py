@@ -41,7 +41,6 @@ def stream_search_transform(
     ef: int | None = None,
     config=None,
     strategy: str = "auto",
-    cache_token: str | None = None,
     with_metadata: bool = False,
 ) -> DataFrame:
     """Transform a streaming (or batch) queries DataFrame
@@ -51,7 +50,9 @@ def stream_search_transform(
 
     Values are identical to `hnsw.search_index_path` over the same
     index (pytest-enforced): same kernels, same auto brute/beam
-    routing, same ascending (score, id) merge order.
+    routing, same ascending (score, id) merge order.  Cached graphs are
+    held for the index's content fingerprint as listed here, when the
+    transform is built.
     """
     from anndb_spark.operators.hnsw import (
         HnswConfig,
@@ -68,7 +69,6 @@ def stream_search_transform(
     pids = list(part_files)
     if not pids:
         raise ValueError(f"no index partitions under {index_path!r}")
-    index_ver = index_ver if cache_token is not None else None
     out_ddl = _result_layout(True, with_metadata)[1]
 
     def run(batches):
@@ -91,7 +91,7 @@ def stream_search_transform(
             parts = []
             for pid in pids:
                 ids, g, use_brute = _acquire_partition_graph(
-                    index_path, pid, cfg, strategy, cache_token, index_ver, nq,
+                    index_path, pid, cfg, strategy, index_ver, nq,
                 )
                 hits = (
                     g.search_brute(qmat, k)

@@ -363,19 +363,18 @@ def main():
     rng = np.random.default_rng(42)
     queries = [(str(i), rng.normal(0, 30, 8).tolist()) for i in range(1000)]
     search_index_path(  # warm: full-shape pass primes every worker's cache
-        spark, idx_path, queries, 10, ef=50, config=cfg, cache_token="bench-flat"
+        spark, idx_path, queries, 10, ef=50, config=cfg
     ).collect()
     timed(
         "hnsw_search_1kq",
         lambda: search_index_path(
-            spark, idx_path, queries, 10, ef=50, config=cfg, cache_token="bench-flat"
+            spark, idx_path, queries, 10, ef=50, config=cfg
         ).collect(),
     )
     timed(
         "hnsw_search_1kq_beam",
         lambda: search_index_path(
             spark, idx_path, queries, 10, ef=50, config=cfg, strategy="beam",
-            cache_token="bench-flat",
         ).collect(),
     )
     extra["hnsw_search_q_per_s"] = round(1000 / timings["hnsw_search_1kq"], 1)
@@ -406,13 +405,13 @@ def main():
     # warm pass primes the per-worker graph cache (serving shape)
     search_index_path(
         spark, idx_r_path, queries, 10, centroids=cent_r, nprobe=4, ef=50,
-        config=cfg, cache_token="bench", strategy="beam",
+        config=cfg, strategy="beam",
     ).collect()
     timed(
         "hnsw_search_1kq_routed",
         lambda: search_index_path(
             spark, idx_r_path, queries, 10, centroids=cent_r, nprobe=4, ef=50,
-            config=cfg, cache_token="bench", strategy="beam",
+            config=cfg, strategy="beam",
         ).collect(),
     )
     extra["hnsw_search_q_per_s_routed"] = round(
@@ -489,12 +488,12 @@ def main():
     rng2 = np.random.default_rng(7)
     ivf_queries = [(i, rng2.normal(0, 1, 64).tolist()) for i in range(200)]
     search_ivf_path(  # warm cluster matrices
-        spark, ivf_path, ivf_queries[:8], 10, cent, nprobe=4, cache_token="bench-ivf"
+        spark, ivf_path, ivf_queries[:8], 10, cent, nprobe=4
     ).collect()
     timed(
         "ivf_search_200q",
         lambda: search_ivf_path(
-            spark, ivf_path, ivf_queries, 10, cent, nprobe=4, cache_token="bench-ivf"
+            spark, ivf_path, ivf_queries, 10, cent, nprobe=4
         ).collect(),
     )
     extra["ivf_search_q_per_s"] = round(200 / timings["ivf_search_200q"], 1)
@@ -559,13 +558,13 @@ def main():
     )
     search_ivfpq(  # warm: populates every worker's codes cache
         spark, ivfpq_path, ivfpq_qs, k=10, nprobe=4, centroids=cent_pq,
-        codebooks=books_pq, cache_token="bench-ivfpq",
+        codebooks=books_pq,
     ).count()
     timed(
         "ivfpq_search_1kq",
         lambda: search_ivfpq(
             spark, ivfpq_path, ivfpq_qs, k=10, nprobe=4, centroids=cent_pq,
-            codebooks=books_pq, cache_token="bench-ivfpq",
+            codebooks=books_pq,
         ).count(),
     )
     extra["ivfpq_q_per_s"] = round(1000 / timings["ivfpq_search_1kq"], 1)
@@ -705,23 +704,19 @@ def main():
     qs_fm = fm_queries()
     search_index_path(  # warm + prime worker graph caches (full shape)
         spark, fm_path, qs_fm, 10, ef=20, config=cfg_fm, strategy="beam",
-        cache_token="bench-fm",
     ).collect()
     timed(
         "fm_search_1kq",
         lambda: search_index_path(
             spark, fm_path, qs_fm, 10, ef=20, config=cfg_fm, strategy="beam",
-            cache_token="bench-fm",
         ).collect(),
     )
     # exact ground truth: blocked-GEMM brute scan of every partition
     truth_rows = search_index_path(
         spark, fm_path, qs_fm, 10, config=cfg_fm, strategy="brute",
-        cache_token="bench-fm",
     ).collect()
     ann_rows = search_index_path(
         spark, fm_path, qs_fm, 10, ef=20, config=cfg_fm, strategy="beam",
-        cache_token="bench-fm",
     ).collect()
     truth: dict[str, set] = {}
     for r in truth_rows:
@@ -895,7 +890,7 @@ def main():
         # host-shared mmap graph, then every worker's L1 handle
         search_index_path(
             spark, fm_single_path, qs_fm_10k, 10, ef=20, config=cfg_fm_single,
-            strategy="beam", cache_token="bench-fm-single", queries_per_task=qpt,
+            strategy="beam", queries_per_task=qpt,
             locality_centroids=cent_single,
         ).collect()
     timed(
@@ -907,7 +902,7 @@ def main():
         # in-process Go slices pay neither)
         lambda: search_index_path(
             spark, fm_single_path, qs_fm_10k, 10, ef=20, config=cfg_fm_single,
-            strategy="beam", cache_token="bench-fm-single", queries_per_task=qpt,
+            strategy="beam", queries_per_task=qpt,
             locality_centroids=cent_single,
         ).toPandas(),
     )
@@ -931,7 +926,7 @@ def main():
         "fm_search_10kq_matched",
         lambda: search_index_local(
             spark, fm_single_path, qs_fm_10k, 10, ef=20, config=cfg_fm_single,
-            strategy="beam", cache_token="bench-fm-single",
+            strategy="beam",
             queries_per_task=qpt,
         ),
     )
@@ -940,13 +935,12 @@ def main():
     )
     single_rows = search_index_path(
         spark, fm_single_path, qs_fm, 10, ef=20, config=cfg_fm_single,
-        strategy="beam", cache_token="bench-fm-single",
+        strategy="beam",
         queries_per_task=-(-FM_QUERIES // cpus),
         locality_centroids=cent_single,
     ).collect()
     truth_single = search_index_path(
         spark, fm_single_path, qs_fm, 10, config=cfg_fm_single, strategy="brute",
-        cache_token="bench-fm-single",  # full cached graph serves brute too
         queries_per_task=-(-FM_QUERIES // cpus),
     ).collect()
     tr_map: dict[str, set] = {}
@@ -971,7 +965,7 @@ def main():
     )
     search_index_path(  # warm (full shape; sweep below re-warms anyway)
         spark, fm_routed_path, qs_fm, 10, centroids=cent_fm, nprobe=16,
-        ef=20, config=cfg_fm, strategy="beam", cache_token="bench-fm-r",
+        ef=20, config=cfg_fm, strategy="beam",
     ).collect()
     # nprobe sweep: the routed path's accuracy/cost knob.  Emit the
     # (nprobe → recall, q/s) curve, then time the headline leg at the
@@ -983,7 +977,6 @@ def main():
         rows_np = search_index_path(
             spark, fm_routed_path, qs_fm, 10, centroids=cent_fm,
             nprobe=np_probe, ef=20, config=cfg_fm, strategy="beam",
-            cache_token="bench-fm-r",
         ).collect()
         dt = time.perf_counter() - t0
         hits_np = sum(1 for r in rows_np if r["id"] in truth.get(r["query_id"], ()))
@@ -1001,13 +994,11 @@ def main():
         lambda: search_index_path(
             spark, fm_routed_path, qs_fm, 10, centroids=cent_fm,
             nprobe=routed_nprobe, ef=20, config=cfg_fm, strategy="beam",
-            cache_token="bench-fm-r",
         ).collect(),
     )
     ann_routed = search_index_path(
         spark, fm_routed_path, qs_fm, 10, centroids=cent_fm,
         nprobe=routed_nprobe, ef=20, config=cfg_fm, strategy="beam",
-        cache_token="bench-fm-r",
     ).collect()
     hits_r = sum(1 for r in ann_routed if r["id"] in truth.get(r["query_id"], ()))
     extra["fm_recall_at_10_routed"] = round(hits_r / (10 * FM_QUERIES), 4)

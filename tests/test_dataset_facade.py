@@ -251,20 +251,49 @@ def test_search_runs_no_count_job_after_first(spark, db, monkeypatch):
     assert [r["id"] for r in warm] == [r["id"] for r in first]
 
 
-def test_index_version_token_tracks_mutations(spark, db):
-    """The serving cache token must change on ANY index mutation even if
-    mtime granularity is coarse — it folds in file count and total bytes
-    (ADVICE r4)."""
+def test_index_fingerprint_tracks_mutations(spark, db):
+    """The version the serving caches hold a saved index for — its
+    content fingerprint — must change on ANY index mutation even if
+    mtime granularity is coarse (it folds in file count and total bytes,
+    ADVICE r4), so a warm search after a tombstone append drops the
+    removed item without a caller token."""
+    from anndb_spark.sources.fsutil import list_parts
+
     ds = db.create_dataset("vtok", dimension=8, partition_count=2)
     rows, df = _vec_rows(spark, 40, 8, seed=44)
     ds.insert(df)
     ds.compact()
     ds.build_index()
-    v1 = ds._index_version()
-    assert v1 is not None
+    q = rows[0][1]
+    v1 = list_parts(ds.index_path, "partition_id=")[0]
+    assert rows[0][0] in {r["id"] for r in ds.search(q, 3, mode="ann").collect()}
     ds.remove([rows[0][0]])  # tombstone append mutates the index dir
-    v2 = ds._index_version()
-    assert v2 is not None and v2 != v1
+    v2 = list_parts(ds.index_path, "partition_id=")[0]
+    assert v2 != v1
+    assert rows[0][0] not in {r["id"] for r in ds.search(q, 3, mode="ann").collect()}
+
+
+def test_ann_search_over_saved_index_reads_no_state(spark, db, monkeypatch):
+    """An unfiltered ann search over the saved index answers without
+    building `state()` (a base pointer read and a Spark file index);
+    a filtered one still needs it."""
+    from anndb_spark.dataset import Dataset
+
+    ds = db.create_dataset("nostate", dimension=8, partition_count=2)
+    rows, df = _vec_rows(spark, 40, 8, seed=45)
+    ds.insert(df)
+    ds.compact()
+    ds.build_index()
+    want = ds.search(rows[3][1], 3, mode="ann").collect()
+
+    def boom(self):
+        raise AssertionError("state() built")
+
+    monkeypatch.setattr(Dataset, "state", boom)
+    got = ds.search(rows[3][1], 3, mode="ann").collect()
+    assert got == want and got[0]["id"] == rows[3][0]
+    with pytest.raises(AssertionError, match="state"):
+        ds.search(rows[3][1], 3, mode="ann", filter=F.col("id") != "x")
 
 
 def test_facade_pq_mode_roundtrip(spark, tmp_path):

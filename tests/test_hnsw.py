@@ -606,11 +606,22 @@ def test_fork_parallel_build_identical_to_serial():
     assert all(a == b for a, b in zip(g1.adj, g2.adj))
 
 
-def test_serving_cache_tracks_index_content(spark, tmp_path):
-    """Same path + same cache_token, index REBUILT with different
-    content: the serving caches (worker L1 + host-shared /dev/shm, which
-    outlives Spark sessions) must serve the new graph, not the stale
-    one — keys carry the index content fingerprint."""
+def test_serving_cache_tracks_index_content(spark, tmp_path, monkeypatch):
+    """An HNSW index and an IVF table REBUILT at the same path with
+    different content, searched without a token: the serving caches
+    (driver and worker L1, and the host-shared /dev/shm graphs, which
+    outlive Spark sessions) must serve the new rows, not the stale ones,
+    in the driver and in the task regime — entries are held for the
+    index's content fingerprint."""
+    from anndb_spark.operators import _serve
+    from anndb_spark.operators.hnsw import save_index, search_index_path
+    from anndb_spark.operators.ivf import (
+        assign_clusters,
+        save_assigned,
+        search_ivf_path,
+        train_centroids,
+    )
+
     rng = np.random.default_rng(5)
 
     def make(ids_prefix, n):
@@ -622,24 +633,32 @@ def test_serving_cache_tracks_index_content(spark, tmp_path):
             rows, "id string, vector array<float>"
         ).withColumn("partition_id", F.pmod(F.crc32(F.col("id")), F.lit(2)).cast("int"))
 
-    from anndb_spark.operators.hnsw import save_index
-
     cfg = HnswConfig(m=4, ef_construction=16, ef=16)
-    path = str(tmp_path / "idx")
-    save_index(build_index(make("a", 40), cfg), path)
     q = [("q0", rng.normal(0, 1, 8).astype(float).tolist())]
-    from anndb_spark.operators.hnsw import search_index_path
+    hnsw_path, ivf_path = str(tmp_path / "idx"), str(tmp_path / "ivf")
+    a, b = make("a", 40), make("b", 60)
+    cent = train_centroids(a.drop("partition_id"), 2, seed=1)
 
-    r1 = search_index_path(
-        spark, path, q, 5, config=cfg, strategy="beam", cache_token="stale-t"
-    ).collect()
-    assert all(r["id"].startswith("a") for r in r1)
-    # rebuild at the SAME path with different ids/content
-    save_index(build_index(make("b", 60), cfg), path)
-    r2 = search_index_path(
-        spark, path, q, 5, config=cfg, strategy="beam", cache_token="stale-t"
-    ).collect()
-    assert all(r["id"].startswith("b") for r in r2), [r["id"] for r in r2]
+    def write(df):
+        save_index(build_index(df, cfg), hnsw_path)
+        save_assigned(assign_clusters(df.drop("partition_id"), cent), ivf_path)
+
+    def ids():
+        return [
+            {r["id"][0] for r in res.collect()}
+            for res in (
+                search_index_path(spark, hnsw_path, q, 5, config=cfg, strategy="beam"),
+                search_ivf_path(spark, ivf_path, q, 5, cent, nprobe=2),
+            )
+        ]
+
+    for budget in (_serve.CACHE.max_bytes, -1):  # driver, then tasks
+        monkeypatch.setattr(_serve.CACHE, "max_bytes", budget)
+        write(a)
+        assert ids() == [{"a"}, {"a"}]
+        # rebuild at the SAME paths with different ids/content
+        write(b)
+        assert ids() == [{"b"}, {"b"}], budget
 
 
 def test_shm_store_retries_after_stale_lock(tmp_path, monkeypatch):
@@ -658,25 +677,25 @@ def test_shm_store_retries_after_stale_lock(tmp_path, monkeypatch):
     levels = [0] * 50
     g = HnswGraph.build(mat, levels, cfg)
     g.finalize()  # _shm_store writes the finalized (padded) layout
-    key = ("tok", "ver", 0)
-    d = H._shm_dir_for(key)
+    key = (str(tmp_path / "idx"), 0)
+    d = H._shm_dir_for(key, "ver")
     lock = f"{d}.lock"
     os.makedirs(os.path.dirname(d), exist_ok=True)
     open(lock, "w").close()
     old = time.time() - 3600
     os.utime(lock, (old, old))  # stale: crashed storer 1 h ago
     ids = [str(i) for i in range(50)]
-    stored = H._shm_store(key, ids, g)
+    stored = H._shm_store(key, "ver", ids, g)
     assert stored is not None and os.path.exists(
         os.path.join(stored, "_COMPLETE")
     )
     hit = H._shm_load(stored, cfg)
     assert hit is not None and list(hit[0]) == ids
     # and a FRESH lock (live storer) still yields graceful None
-    key2 = ("tok", "ver", 1)
-    d2 = H._shm_dir_for(key2)
+    key2 = (str(tmp_path / "idx"), 1)
+    d2 = H._shm_dir_for(key2, "ver")
     open(f"{d2}.lock", "w").close()
-    assert H._shm_store(key2, ids, g) is None
+    assert H._shm_store(key2, "ver", ids, g) is None
 
 
 def test_ckernel_matches_numpy_kernel():
@@ -832,7 +851,6 @@ def test_local_serve_matches_task_path(spark, tmp_path):
             ).collect()
             local = search_index_path(
                 spark, p, queries, 6, ef=60, config=cfg, strategy=strategy,
-                cache_token="t-local",
             )
             assert "MapInPandas" not in _plan_text(local)  # no task plan
             b = local.collect()
@@ -965,7 +983,7 @@ def test_search_index_local_api(spark, tmp_path):
 
     queries = [(str(i), rng.normal(0, 1, dim).tolist()) for i in range(25)]
     tbl = search_index_local(
-        spark, single, queries, 5, ef=50, config=cfg, cache_token="t-api"
+        spark, single, queries, 5, ef=50, config=cfg
     )
     import pyarrow as pa
 
@@ -994,7 +1012,7 @@ def test_search_index_local_api(spark, tmp_path):
     sc.setJobGroup("search-index-local-api", "multi-partition local call")
     try:
         tbl_m = search_index_local(
-            spark, multi, queries, 5, ef=50, config=cfg, cache_token="t-api"
+            spark, multi, queries, 5, ef=50, config=cfg
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -1342,7 +1360,7 @@ def test_acquire_brute_graph_warm_reads_no_parquet(spark, tmp_path, monkeypatch)
     cfg = HnswConfig(m=4, ef_construction=16)
     path = str(tmp_path / "idx")
     save_index(build_index(df, cfg), path)
-    ver = fsutil.index_fingerprint(path)
+    ver = fsutil.list_parts(path, "partition_id=")[0]
 
     calls = {"n": 0}
     real = fsutil.read_parquet_dir
@@ -1352,28 +1370,27 @@ def test_acquire_brute_graph_warm_reads_no_parquet(spark, tmp_path, monkeypatch)
         return real(*a, **kw)
 
     monkeypatch.setattr(fsutil, "read_parquet_dir", counting)
-    token = f"warm-brute-{ver}"
     # cold: one parquet read, brute-only graph cached
     ids, g, ub = _acquire_partition_graph(
-        path, 0, cfg, "brute", token, ver, 5
+        path, 0, cfg, "brute", ver, 5
     )
     assert ub and calls["n"] == 1 and len(ids) > 0
     # warm brute: zero further reads
     ids2, g2, ub2 = _acquire_partition_graph(
-        path, 0, cfg, "brute", token, ver, 5
+        path, 0, cfg, "brute", ver, 5
     )
     assert ub2 and calls["n"] == 1
     assert ids2 == ids and g2 is g
     # warm auto resolving to brute: still zero reads
     _, _, ub3 = _acquire_partition_graph(
-        path, 0, cfg, "auto", token, ver, 5
+        path, 0, cfg, "auto", ver, 5
     )
     assert ub3 and calls["n"] == 1
     # auto resolving to BEAM (threshold 0): the brute-only entry lacks
     # adjacency -> must fall through to a full read and return beam
     monkeypatch.setattr(hnsw_mod, "_BRUTE_FLOPS_MAX", 0.0)
     _, g4, ub4 = _acquire_partition_graph(
-        path, 0, cfg, "auto", token, ver, 5
+        path, 0, cfg, "auto", ver, 5
     )
     assert not ub4 and calls["n"] >= 2
     assert g4.adj_pad  # full graph carries adjacency

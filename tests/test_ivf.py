@@ -117,7 +117,7 @@ def test_search_ivf_path_matches_search_ivf(spark, tmp_path):
     for nprobe in (2, 4):
         a = search_ivf(assigned, qdf, 5, cent, nprobe=nprobe).collect()
         b = search_ivf_path(
-            spark, path, queries, 5, cent, nprobe=nprobe, cache_token="t"
+            spark, path, queries, 5, cent, nprobe=nprobe
         ).collect()
         assert sorted(map(tuple, a)) == sorted(map(tuple, b)), nprobe
 

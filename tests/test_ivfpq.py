@@ -106,12 +106,12 @@ def test_ivfpq_full_probe_contains_adc_truth(spark, ivfpq_built):
 
 
 def test_ivfpq_cache_token_reuse(spark, ivfpq_built):
-    """Warm searches with a cache token return identical results (the
-    worker-resident codes cache serves the cell matrices)."""
+    """Warm searches return identical results (the worker-resident codes
+    cache serves the cell matrices, held for the codes' fingerprint)."""
     df, mat, path, cent, books = ivfpq_built
     q = [("q0", mat[3].astype(float).tolist())]
-    a = search_ivfpq(spark, path, q, k=5, nprobe=3, cache_token="t").collect()
-    b = search_ivfpq(spark, path, q, k=5, nprobe=3, cache_token="t").collect()
+    a = search_ivfpq(spark, path, q, k=5, nprobe=3).collect()
+    b = search_ivfpq(spark, path, q, k=5, nprobe=3).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 

@@ -509,8 +509,8 @@ def test_saved_index_servers_scatter_then_one_merge_shuffle(spark, tmp_path, mon
     shuffle — the merge's hashpartitioning(query_id).  Index bytes never
     cross a shuffle.  HNSW and IVF take that shape when the driver
     regime declines (here: a cache budget below every part); by default
-    a tiny index with a cache token is answered in the driver — one
-    LocalTableScan, no exchange."""
+    a tiny index is answered in the driver — one LocalTableScan, no
+    exchange."""
     import re
 
     import numpy as np
@@ -542,9 +542,9 @@ def test_saved_index_servers_scatter_then_one_merge_shuffle(spark, tmp_path, mon
     build_ivfpq(vecs, pq_dir, n_cells=3, m=2, n_centroids=16, sample_n=240)
 
     local = {
-        "search_index_path": search_index_path(spark, hnsw_dir, queries, 5, cache_token="s"),
+        "search_index_path": search_index_path(spark, hnsw_dir, queries, 5),
         "search_ivf_path": search_ivf_path(
-            spark, ivf_dir, queries, 5, cent, nprobe=2, cache_token="s"),
+            spark, ivf_dir, queries, 5, cent, nprobe=2),
     }
     for name, res in local.items():
         plan = _plan(res)

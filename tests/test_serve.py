@@ -9,31 +9,49 @@ from anndb_spark.operators._serve import PartCache, query_chunks, route
 
 def test_part_cache_lru_by_bytes_and_kind():
     cache = PartCache(max_bytes=100)
-    cache.put("ivf", ("t", "v", 0), "a", 40)
-    cache.put("ivf", ("t", "v", 1), "b", 40)
+    cache.put("ivf", ("p", 0), "v", "a", 40)
+    cache.put("ivf", ("p", 1), "v", "b", 40)
     # a get refreshes recency: the next eviction takes part 1, not 0
-    assert cache.get("ivf", ("t", "v", 0)) == "a"
-    cache.put("ivf", ("t", "v", 2), "c", 40)  # 120 > 100: evict the LRU
-    assert cache.get("ivf", ("t", "v", 1)) is None
-    assert cache.get("ivf", ("t", "v", 0)) == "a"
-    assert cache.get("ivf", ("t", "v", 2)) == "c"
+    assert cache.get("ivf", ("p", 0), "v") == "a"
+    cache.put("ivf", ("p", 2), "v", "c", 40)  # 120 > 100: evict the LRU
+    assert cache.get("ivf", ("p", 1), "v") is None
+    assert cache.get("ivf", ("p", 0), "v") == "a"
+    assert cache.get("ivf", ("p", 2), "v") == "c"
     # the budget is bytes, not entries
-    cache.put("ivf", ("t", "v", 3), "d", 90)
-    assert [cache.get("ivf", ("t", "v", p)) for p in range(4)] == [None, None, None, "d"]
+    cache.put("ivf", ("p", 3), "v", "d", 90)
+    assert [cache.get("ivf", ("p", i), "v") for i in range(4)] == [None, None, None, "d"]
     # an entry above the whole budget is not stored and evicts nothing
-    cache.put("ivf", ("t", "v", 4), "huge", 101)
-    assert cache.get("ivf", ("t", "v", 4)) is None
-    assert cache.get("ivf", ("t", "v", 3)) == "d"
-    # kinds stay distinct under the same (token, version, part)
-    cache.put("hnsw", ("t", "v", 3), "graph", 5)
-    assert cache.get("hnsw", ("t", "v", 3)) == "graph"
-    assert cache.get("ivf", ("t", "v", 3)) == "d"
+    cache.put("ivf", ("p", 4), "v", "huge", 101)
+    assert cache.get("ivf", ("p", 4), "v") is None
+    assert cache.get("ivf", ("p", 3), "v") == "d"
+    # kinds stay distinct under the same (path, part) and version
+    cache.put("hnsw", ("p", 3), "v", "graph", 5)
+    assert cache.get("hnsw", ("p", 3), "v") == "graph"
+    assert cache.get("ivf", ("p", 3), "v") == "d"
     # re-putting a key replaces it without counting it twice
-    cache.put("hnsw", ("t", "v", 3), "graph2", 5)
-    assert sum(nb for _, nb in cache.entries.values()) == 95
+    cache.put("hnsw", ("p", 3), "v", "graph2", 5)
+    assert sum(nb for _, _, nb in cache.entries.values()) == 95
     # a None key disables caching
-    cache.put("hnsw", None, "x", 1)
-    assert cache.get("hnsw", None) is None
+    cache.put("hnsw", None, "v", "x", 1)
+    assert cache.get("hnsw", None, "v") is None
+
+
+def test_part_cache_keeps_one_version_per_path():
+    """A get hits only the version it asks for; a put drops the path's
+    entries of every other version (any kind), and no other path's."""
+    cache = PartCache(max_bytes=100)
+    cache.put("hnsw", ("p", 0), "v1", "g0", 10)
+    cache.put("hnsw_brute", ("p", 1), "v1", "b1", 10)
+    cache.put("hnsw", ("q", 0), "w1", "other", 10)
+    assert cache.get("hnsw", ("p", 0), "v2") is None  # stale: a miss
+    assert cache.get("hnsw", ("p", 0), "v1") == "g0"
+    cache.put("hnsw", ("p", 0), "v2", "g0'", 10)
+    assert set(cache.entries) == {("hnsw", ("p", 0)), ("hnsw", ("q", 0))}
+    assert cache.get("hnsw", ("p", 0), "v2") == "g0'"
+    assert cache.get("hnsw", ("q", 0), "w1") == "other"
+    # an entry too big to keep still retires the path's old version
+    cache.put("hnsw", ("q", 1), "w2", "huge", 101)
+    assert set(cache.entries) == {("hnsw", ("p", 0))}
 
 
 def test_route_groups_query_rows_by_nearest_parts():

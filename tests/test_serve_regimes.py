@@ -4,9 +4,9 @@ id, score bits[, metadata]) — launch no Spark job, and step aside for
 the task plan exactly when `serve_locally` declines.
 
 The scatter regime is forced by setting the driver's cache budget below
-every part's bytes (-1: an empty batch touches 0 bytes).  Searches over
-several parts pass a cache token: without one the rule sends them to the
-task plan."""
+every part's bytes (-1: an empty batch touches 0 bytes).  No search
+passes a cache token: the servers version what they keep by the index's
+content fingerprint."""
 
 import struct
 import uuid
@@ -55,13 +55,13 @@ def _jobs(spark, fn):
 
 def _both(spark, monkeypatch, search):
     """Rows of ``search()`` in the driver regime (asserting no task plan
-    and 0 jobs), then in the forced scatter regime (asserting its task
-    plan); returns both as sorted keys."""
-    local = search()
+    and 0 jobs, search and collect), then in the forced scatter regime
+    (asserting its task plan); returns both as sorted keys."""
+    local, jobs = _jobs(spark, search)
     assert "MapInPandas" not in _plan(local)
     assert "LocalTableScan" in _plan(local)
-    rows_local, jobs = _jobs(spark, local.collect)
-    assert jobs == 0
+    rows_local, more = _jobs(spark, local.collect)
+    assert jobs + more == 0
     with monkeypatch.context() as m:
         m.setattr(_serve.CACHE, "max_bytes", -1)
         tasks = search()
@@ -108,7 +108,7 @@ def test_hnsw_regimes_equal(spark, monkeypatch, corpus, hnsw_paths, parts, strat
     _, _, queries = corpus
     a, b = _both(spark, monkeypatch, lambda: search_index_path(
         spark, hnsw_paths[parts], queries, 6, ef=40, config=CFG,
-        strategy=strategy, cache_token="regimes"))
+        strategy=strategy))
     assert a == b and len(a) == 6 * len(queries)
 
 
@@ -131,7 +131,7 @@ def test_hnsw_regimes_equal_walk_chunks_merged(spark, monkeypatch, corpus, hnsw_
         walks.clear()
         a, b = _both(spark, monkeypatch, lambda: search_index_path(
             spark, hnsw_paths["four"], queries, 6, ef=40, config=CFG, strategy=strategy,
-            cache_token="regimes", queries_per_task=5))
+            queries_per_task=5))
         assert a == b and len(a) == 6 * len(queries), strategy
         assert walks[:4] == [12 if strategy == "beam" else 10] * 4, (strategy, walks)
 
@@ -142,15 +142,14 @@ def test_hnsw_regimes_equal_ties_tombstones_metadata_big_k(spark, monkeypatch, c
     above the live rows returns every live row."""
     _, _, queries = corpus
     a, b = _both(spark, monkeypatch, lambda: search_index_path(
-        spark, hnsw_paths["four"], queries[:1], 2, config=CFG, strategy="brute",
-        cache_token="regimes"))
+        spark, hnsw_paths["four"], queries[:1], 2, config=CFG, strategy="brute"))
     assert a == b
     assert [r[2] for r in a] == ["b10", "b9"]  # both at distance 0
 
     live = N - len(range(0, N, 3))
     a, b = _both(spark, monkeypatch, lambda: search_index_path(
         spark, hnsw_paths["tomb"], queries[:3], N + 10, config=CFG,
-        strategy="brute", with_metadata=True, cache_token="regimes"))
+        strategy="brute", with_metadata=True))
     assert a == b and len(a) == 3 * live
     assert all(int(r[2][1:]) % 3 and r[4] == (("tag", f"t{int(r[2][1:]) % 5}"),) for r in a)
 
@@ -165,8 +164,7 @@ def test_hnsw_regimes_equal_routed_and_empty(spark, monkeypatch, corpus, tmp_pat
                            partition_col="cluster_id"), path)
     for nprobe in (1, 4):
         a, b = _both(spark, monkeypatch, lambda: search_index_path(
-            spark, path, queries, 5, ef=40, config=CFG, centroids=cent, nprobe=nprobe,
-            cache_token="regimes"))
+            spark, path, queries, 5, ef=40, config=CFG, centroids=cent, nprobe=nprobe))
         assert a == b and len(a) == 5 * len(queries), nprobe
     a, b = _both(spark, monkeypatch, lambda: search_index_path(spark, path, [], 5, config=CFG))
     assert a == b == []
@@ -183,7 +181,7 @@ def test_ivf_regimes_equal(spark, monkeypatch, corpus, tmp_path, id_type):
     save_assigned(assign_clusters(vecs, cent), path)
     for nprobe in (1, 4):
         a, b = _both(spark, monkeypatch, lambda: search_ivf_path(
-            spark, path, queries, 5, cent, nprobe=nprobe, cache_token="ivf-regimes"))
+            spark, path, queries, 5, cent, nprobe=nprobe))
         assert a == b and len(a) == 5 * len(queries)
         assert {type(r[2]) for r in a} == {str if id_type == "STRING" else int}
 
@@ -204,7 +202,10 @@ def _sized(monkeypatch):
 
 
 def _cached_bytes(kind):
-    return sum(nb for (kd, _), (_, nb) in _serve.CACHE.entries.items() if kd == kind)
+    """Bytes cached under ``kind`` and its variants (``hnsw_brute``)."""
+    return sum(
+        nb for (kd, _), (_, _, nb) in _serve.CACHE.entries.items() if kd.startswith(kind)
+    )
 
 
 def test_rule_declines_over_budget(spark, monkeypatch, corpus, hnsw_paths):
@@ -218,8 +219,7 @@ def test_rule_declines_over_budget(spark, monkeypatch, corpus, hnsw_paths):
     seen = _sized(monkeypatch)
 
     def plan():
-        return _plan(search_index_path(spark, path, queries, 5, config=CFG,
-                                       cache_token=f"budget-{uuid.uuid4().hex}"))
+        return _plan(search_index_path(spark, path, queries, 5, config=CFG))
 
     plan()
     assert sorted(n for n, _ in seen.values()) == [N // 4] * 4  # vertices, from footers
@@ -232,18 +232,23 @@ def test_rule_declines_over_budget(spark, monkeypatch, corpus, hnsw_paths):
     assert 0 < _cached_bytes("hnsw") <= need
 
 
-def test_rule_needs_a_cache_key_for_several_parts(spark, monkeypatch, corpus, hnsw_paths):
-    """Without a cache token the driver keeps nothing it loads: a batch
-    over several parts runs as tasks (which read them in parallel), a
-    batch over one part stays in the driver (a task reads it too)."""
+def test_rule_answers_tokenless_parts_in_driver(spark, monkeypatch, corpus, hnsw_paths):
+    """A batch over several parts needs no cache token to run in the
+    driver: cold (nothing cached) and warm, it launches no job, and the
+    driver keeps each part it read, held for the index's fingerprint."""
+    from anndb_spark.sources.fsutil import list_parts
+
     _, _, queries = corpus
-
-    def plan(parts, **kw):
-        return _plan(search_index_path(spark, hnsw_paths[parts], queries, 5, config=CFG, **kw))
-
-    assert "MapInPandas" in plan("four")
-    assert "MapInPandas" not in plan("four", cache_token="regimes")
-    assert "MapInPandas" not in plan("one")
+    path = hnsw_paths["four"]
+    monkeypatch.setattr(_serve.CACHE, "entries", {})
+    for _ in ("cold", "warm"):
+        rows, jobs = _jobs(spark, lambda: search_index_path(
+            spark, path, queries, 5, config=CFG, strategy="beam").collect())
+        assert jobs == 0 and len(rows) == 5 * len(queries)
+    ver = list_parts(path, "partition_id=")[0]
+    assert {(kd, key, v) for (kd, key), (v, _, _) in _serve.CACHE.entries.items()} == {
+        ("hnsw", (path, p), ver) for p in range(4)
+    }
 
 
 def test_ivf_rule_counts_resident_not_listed_bytes(spark, monkeypatch, corpus, tmp_path):
@@ -262,8 +267,7 @@ def test_ivf_rule_counts_resident_not_listed_bytes(spark, monkeypatch, corpus, t
     seen = _sized(monkeypatch)
 
     def plan():
-        return _plan(search_ivf_path(spark, path, queries, 5, cent, nprobe=4,
-                                     cache_token=f"ivf-budget-{uuid.uuid4().hex}"))
+        return _plan(search_ivf_path(spark, path, queries, 5, cent, nprobe=4))
 
     plan()
     assert sum(n for n, _ in seen.values()) == N
@@ -277,19 +281,62 @@ def test_ivf_rule_counts_resident_not_listed_bytes(spark, monkeypatch, corpus, t
     assert _cached_bytes("ivf") == need  # the rule's bytes are the cache's
 
 
-def test_one_listing_per_search(spark, monkeypatch, hnsw_paths, corpus):
-    """A warm `search_index_path` lists the index once: partitions,
-    their bytes and the cache fingerprint come from one recursive
-    `get_file_info`, and no part is read."""
+def test_cache_keeps_only_the_live_version(spark, corpus, tmp_path):
+    """Three index versions written at one path, each searched without a
+    token: the driver's `CACHE` and the shared-memory graph directory
+    then hold the live version's parts only."""
+    import os
+
+    from anndb_spark.operators import hnsw as hnsw_mod
+    from anndb_spark.sources.fsutil import list_parts
+
+    df, _, queries = corpus
+    path = str(tmp_path / "versions")
+    for v in range(3):
+        save_index(build_index(df.filter(F.col("id") != f"b{v}"), CFG), path)
+        rows = search_index_path(spark, path, queries, 5, config=CFG, strategy="beam").collect()
+        assert len(rows) == 5 * len(queries)
+    ver = list_parts(path, "partition_id=")[0]
+    mine = {(kd, key): v for (kd, key), (v, _, _) in _serve.CACHE.entries.items()
+            if key[0] == path}
+    assert mine == {("hnsw", (path, p)): ver for p in range(4)}
+    root = hnsw_mod._SHM_ROOT
+    if root:
+        for p in range(4):
+            live = os.path.basename(hnsw_mod._shm_dir_for((path, p), ver))
+            prefix = live.split("-")[0] + "-"
+            assert [n for n in os.listdir(root) if n.startswith(prefix)] == [live]
+
+
+@pytest.fixture(scope="module")
+def dataset(spark, corpus, tmp_path_factory):
+    """The corpus as a 4-partition Dataset with a saved index."""
+    from anndb_spark.dataset import AnnDB
+
+    df, _, _ = corpus
+    db = AnnDB(spark, str(tmp_path_factory.mktemp("regimes-db")))
+    ds = db.create_dataset("regimes", DIM, partition_count=4)
+    ds.insert(df.drop("partition_id"))
+    ds.compact()
+    ds.build_index(CFG)
+    return ds
+
+
+def test_one_listing_per_search(spark, monkeypatch, hnsw_paths, corpus, dataset):
+    """A warm `search_index_path`, and a warm unfiltered ann
+    `Dataset.search`, list the index once: partitions, their bytes and
+    the cache fingerprint come from one recursive `get_file_info`, and
+    no part is read."""
     from anndb_spark.sources import fsutil
 
     _, _, queries = corpus
-    path = hnsw_paths["four"]
-
-    def search():
-        return search_index_path(spark, path, queries, 5, config=CFG, cache_token="listing")
-
-    search().collect()  # warm the driver's cache
+    searches = {
+        "search_index_path": lambda: search_index_path(
+            spark, hnsw_paths["four"], queries, 5, config=CFG),
+        "Dataset.search": lambda: dataset.search(queries, 5, mode="ann"),
+    }
+    for search in searches.values():
+        search().collect()  # warm the driver's cache
     calls = []
     resolve = fsutil.resolve_fs
 
@@ -304,8 +351,13 @@ def test_one_listing_per_search(spark, monkeypatch, hnsw_paths, corpus):
     monkeypatch.setattr(
         fsutil, "resolve_fs", lambda p: (lambda f, q: (Counting(f), q))(*resolve(p))
     )
-    assert len(search().collect()) == 5 * len(queries)
-    assert len(calls) == 1
+    reads = []
+    monkeypatch.setattr(fsutil, "read_parquet_dir", lambda *a, **kw: reads.append(a))
+    for name, search in searches.items():
+        calls.clear()
+        assert len(search().collect()) == 5 * len(queries), name
+        assert len(calls) == 1, name
+    assert reads == []
 
 
 def test_driver_blas_threads_do_not_change_scores(spark, monkeypatch, tmp_path):
@@ -318,16 +370,15 @@ def test_driver_blas_threads_do_not_change_scores(spark, monkeypatch, tmp_path):
     rows = [(f"r{i}", rng.normal(0, 1, 64).tolist(), i % 4) for i in range(4000)]
     df = spark.createDataFrame(rows, "id STRING, vector ARRAY<FLOAT>, partition_id INT")
     hnsw_dir, ivf_dir = str(tmp_path / "hnsw"), str(tmp_path / "ivf")
-    save_index(build_index(df, HnswConfig(m=4, ef_construction=16)), hnsw_dir)
+    cfg = HnswConfig(m=4, ef_construction=16)
+    save_index(build_index(df, cfg), hnsw_dir)
     vecs = df.drop("partition_id")
     cent = train_centroids(vecs, 4, seed=5)
     save_assigned(assign_clusters(vecs, cent), ivf_dir)
     queries = [(f"q{i}", v.tolist()) for i, v in enumerate(rng.normal(0, 1, (50, 64)))]
     a, b = _both(spark, monkeypatch, lambda: search_index_path(
-        spark, hnsw_dir, queries, 10, strategy="brute", queries_per_task=50,
-        cache_token="blas"))
+        spark, hnsw_dir, queries, 10, config=cfg, strategy="brute", queries_per_task=50))
     assert a == b and len(a) == 500
     a, b = _both(spark, monkeypatch, lambda: search_ivf_path(
-        spark, ivf_dir, queries, 10, cent, nprobe=4, queries_per_task=50,
-        cache_token="blas"))
+        spark, ivf_dir, queries, 10, cent, nprobe=4, queries_per_task=50))
     assert a == b and len(a) == 500

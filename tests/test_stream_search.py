@@ -52,10 +52,10 @@ def test_stream_transform_matches_batch_path(spark, tmp_path):
     path, cfg, qs = _saved_index(spark, tmp_path)
     qdf = spark.createDataFrame(qs, STREAM_QUERIES_DDL)
     got = stream_search_transform(
-        qdf, path, 5, ef=60, config=cfg, cache_token="ss-t"
+        qdf, path, 5, ef=60, config=cfg
     ).collect()
     want = search_index_path(
-        spark, path, qs, 5, ef=60, config=cfg, cache_token="ss-t"
+        spark, path, qs, 5, ef=60, config=cfg
     ).collect()
     assert _sorted_triples(got) == _sorted_triples(want)
     assert len(got) == 150
@@ -87,12 +87,11 @@ def test_stream_search_end_to_end_exactly_once(spark, tmp_path):
     ).parquet(qdir)
     stream_search(
         spark, qdir, path, rdir, ckpt, 5, ef=60, config=cfg,
-        cache_token="ss-e2e",
     ).awaitTermination(180)
     first = spark.read.parquet(rdir).collect()
     assert len(first) == 50
     want = search_index_path(
-        spark, path, qs[:10], 5, ef=60, config=cfg, cache_token="ss-e2e"
+        spark, path, qs[:10], 5, ef=60, config=cfg
     ).collect()
     assert _sorted_triples(first) == _sorted_triples(want)
 
@@ -102,7 +101,6 @@ def test_stream_search_end_to_end_exactly_once(spark, tmp_path):
     ).parquet(qdir)
     stream_search(
         spark, qdir, path, rdir, ckpt, 5, ef=60, config=cfg,
-        cache_token="ss-e2e",
     ).awaitTermination(180)
     both = spark.read.parquet(rdir).collect()
     assert len(both) == 100  # 50 + 50, no re-answers

@@ -255,7 +255,6 @@ def phase_search(n: int) -> dict:
     # ---- full scatter (every partition walked per query) ------------
     search_index_path(  # warm: build /dev/shm graphs + worker handles
         spark, INDEX, (qids, q), K, ef=20, config=cfg, strategy="beam",
-        cache_token="ann10m",
     ).collect()
     # the accuracy/throughput knob: ann-benchmark-style ef sweep (the
     # corpus is deliberately recall-stressed — 1024 overlapping
@@ -264,7 +263,6 @@ def phase_search(n: int) -> dict:
         t0 = time.perf_counter()
         rows = search_index_path(
             spark, INDEX, (qids, q), K, ef=ef, config=cfg, strategy="beam",
-            cache_token="ann10m",
         ).collect()
         dt = time.perf_counter() - t0
         rec = recall(rows)
@@ -279,7 +277,7 @@ def phase_search(n: int) -> dict:
         t0 = time.perf_counter()
         rows = search_index_path(
             spark, INDEX, (qids, q), K, centroids=cent, nprobe=np_probe,
-            ef=20, config=cfg, strategy="beam", cache_token="ann10m",
+            ef=20, config=cfg, strategy="beam",
         ).collect()
         dt = time.perf_counter() - t0
         rec = recall(rows)

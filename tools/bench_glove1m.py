@@ -167,7 +167,7 @@ def main():
 
     search_index_local(
         spark, sdir, (qids[:100], q[:100]), K, ef=20, config=cfg,
-        strategy="beam", cache_token="glove1m",
+        strategy="beam",
     )
     print("[glove1m] exact ground truth ...", file=sys.stderr)
     truth = exact_topk_cosine(mat, q[:TRUTH_QUERIES], K)
@@ -178,7 +178,7 @@ def main():
             t0 = time.perf_counter()
             tbl = search_index_local(
                 spark, sdir, (qids, q), K, ef=ef, config=cfg,
-                strategy="beam", cache_token="glove1m",
+                strategy="beam",
             )
             s = min(s, time.perf_counter() - t0)
         got: dict[str, set] = {}

@@ -197,7 +197,6 @@ def main():
     for nprobe, rerank, sl in legs:
             kwargs = dict(
                 k=K, nprobe=nprobe, centroids=cent, codebooks=books,
-                cache_token="pq1m",
                 # ~1k-row cells: pack work so ~2 tasks/core, not 1 task
                 # per probed cell (scheduling would dominate the ADC)
                 cells_per_task=max(1, N_CELLS // (2 * cpus)),

@@ -162,7 +162,7 @@ def main():
     # warm (loads the graph into the driver-local cache), then time
     search_index_local(
         spark, sdir, (qids[:100], q[:100]), K, ef=20, config=cfg,
-        strategy="beam", cache_token="sift1m",
+        strategy="beam",
     )
     print("[sift1m] exact ground truth ...", file=sys.stderr)
     truth = exact_topk(mat, q[:TRUTH_QUERIES], K)
@@ -175,7 +175,7 @@ def main():
             t0 = time.perf_counter()
             tbl = search_index_local(
                 spark, sdir, (qids, q), K, ef=ef, config=cfg,
-                strategy="beam", cache_token="sift1m",
+                strategy="beam",
             )
             s = min(s, time.perf_counter() - t0)
         got: dict[str, set] = {}
