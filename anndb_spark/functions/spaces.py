@@ -5,25 +5,35 @@ Parity target: the reference's metric enum and kernels
 Note the reference's cosine distance is `abs(1 - a·b/(|a||b|))` — the
 abs() wrapper (`index/space/space.go:68-70`) is replicated here.
 
-Three implementations, fastest-appropriate picked per call-site:
+Four implementations, fastest-appropriate picked per call-site:
 
 1. ``distance_col`` — pure Catalyst column expressions built from
    higher-order array functions (``zip_with`` + ``aggregate``).  All
    arithmetic is cast to DOUBLE and folded strictly left-to-right, so
    the bit-exact same result is produced by the DuckDB SQL emitted by
-   ``distance_sql`` (the correctness-oracle contract).  JVM-side,
-   whole-stage-codegen'd, no Python in the loop.
+   ``distance_sql`` (the correctness-oracle contract).  JVM-side, but
+   higher-order functions are not whole-stage-codegen'd: Catalyst
+   interprets the lambdas per element, which makes this the slow form
+   (a 32 × 5,000 × 64 scoring is a 2 s task).  `knn` keeps it as the
+   escape hatch and for small reranks.
 
 2. ``distance_sql`` — emits the *same* computation as portable SQL text
    for either the ``spark`` or ``duckdb`` dialect (array indexing is the
    only divergence: ``element_at(v, i)`` vs ``v[i]``, both 1-based).
    Used by the oracle harness and by generated literal-query kNN SQL.
 
-3. ``pairwise_distances_udf`` — Arrow-batched pandas UDF computing
-   distances with NumPy in float32, the analogue of the reference's SIMD
-   kernels (`simd/cpp/avx.cpp`): one BLAS-backed matrix operation per
-   Arrow batch instead of per-element folds.  This is the 100 TB hot
-   path; the column-expression form is the oracle-matched path.
+3. ``fold_distances`` — the same left fold in NumPy over a whole
+   (queries × vectors) block: one elementwise pass per dimension,
+   ``acc = acc + term`` from 0.0, then ``sqrt`` or
+   ``abs(1.0 - dot / (na * nb))`` — the expression's operations in the
+   expression's order, so its doubles are bit-identical to
+   ``distance_col``'s.  The exact-kNN kernel (`knn._gemm_partial_topk`)
+   scores with it.
+
+4. ``np_distances`` / ``pairwise_distances_udf`` — NumPy float32
+   distances, the analogue of the reference's SIMD kernels
+   (`simd/cpp/avx.cpp`): one BLAS-backed matrix operation per Arrow
+   batch instead of per-element folds, with float32 rounding.
 """
 
 from __future__ import annotations
@@ -179,7 +189,59 @@ def pair_distance_sql(
 
 
 # ---------------------------------------------------------------------------
-# 3. NumPy float32 kernels (perf path, reference-SIMD analogue)
+# 3. NumPy left fold (oracle-exact, block at a time)
+# ---------------------------------------------------------------------------
+
+def fold_distances(
+    vt: np.ndarray, qm: np.ndarray, space: str, out: np.ndarray, tmp: np.ndarray
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """``distance_col`` of every query row of ``qm`` (|Q|, d) against
+    every vector column of ``vt`` (d, n), both float64, written into
+    ``out`` ((|Q|, n) float64, returned; ``tmp`` is a same-shaped work
+    buffer), plus the cosine pairs whose norm product is 0 as a boolean
+    matrix (None when there are none, or for the other spaces).
+
+    The doubles are the expression's bit for bit: per dimension, in
+    order, ``acc = acc + term`` from 0.0 with the expression's term,
+    then ``sqrt`` (euclidean) or ``abs(1.0 - dot / (na * nb))``
+    (cosine).  At a zero-norm pair Spark's division gives NULL (or
+    raises under ANSI); the caller applies that from the returned mask,
+    the matrix holds NumPy's quotient there."""
+    space = _check_space(space)
+    with np.errstate(all="ignore"):  # inf - inf, 0 / 0: IEEE results, as in the JVM
+        return _fold(vt, qm, space, out, tmp)
+
+
+def _fold(vt, qm, space, acc, t):
+    acc.fill(0.0)
+    for j in range(vt.shape[0]):
+        x, y = vt[j][None, :], qm[:, j][:, None]
+        if space == "cosine":
+            np.multiply(x, y, out=t)
+        else:
+            np.subtract(x, y, out=t)
+            if space == "euclidean":
+                np.multiply(t, t, out=t)
+            else:
+                np.abs(t, out=t)
+        np.add(acc, t, out=acc)
+    if space == "euclidean":
+        return np.sqrt(acc, out=acc), None
+    if space == "manhattan":
+        return acc, None
+    na, nb = np.zeros(vt.shape[1]), np.zeros(qm.shape[0])
+    for j in range(vt.shape[0]):
+        na += vt[j] * vt[j]
+        nb += qm[:, j] * qm[:, j]
+    np.multiply(np.sqrt(na)[None, :], np.sqrt(nb)[:, None], out=t)
+    zero = t == 0.0 if np.count_nonzero(t) < t.size else None
+    np.divide(acc, t, out=acc)
+    np.subtract(1.0, acc, out=acc)
+    return np.abs(acc, out=acc), zero
+
+
+# ---------------------------------------------------------------------------
+# 4. NumPy float32 kernels (perf path, reference-SIMD analogue)
 # ---------------------------------------------------------------------------
 
 def np_distances(mat: np.ndarray, query: np.ndarray, space: str) -> np.ndarray:

@@ -1,1 +1,1 @@
-from anndb_spark.operators.knn import knn_exact, knn_search, partial_topk  # noqa: F401
+from anndb_spark.operators.knn import knn_exact, knn_search  # noqa: F401

@@ -39,6 +39,7 @@ reference's SIMD kernels) on hosts without a C compiler.
 
 from __future__ import annotations
 
+import functools
 import heapq
 import json
 import math
@@ -1919,6 +1920,36 @@ def get_index_config(index: DataFrame) -> HnswConfig | None:
     return config_from_json(rows[0][0]) if rows else None
 
 
+def stored_config(path: str, part_files: dict) -> HnswConfig | None:
+    """The persisted build config of the index saved at ``path``, read
+    with pyarrow from the files of its `fsutil.list_parts` listing
+    (``part_files``) — no Spark job.  Every part holds the config row;
+    None for pre-config indexes."""
+    for files in part_files.values():
+        for i in files:
+            src = _config_src(
+                path, i.path, int(i.size or 0), int(getattr(i, "mtime_ns", 0) or 0)
+            )
+            if src is not None:
+                return config_from_json(src)
+    return None
+
+
+@functools.lru_cache(maxsize=1024)
+def _config_src(path: str, file: str, size: int, mtime_ns: int) -> str | None:
+    """The ``src`` of the ``kind == 'config'`` row of one index file
+    (memoized per file version, like `fsutil.footers`)."""
+    import pyarrow.parquet as pq
+
+    from anndb_spark.sources import fsutil
+
+    f, _ = fsutil.resolve_fs(path)
+    t = pq.read_table(
+        file, columns=["kind", "src"], filters=[("kind", "==", "config")], filesystem=f
+    )
+    return t.column("src")[0].as_py() if t.num_rows else None
+
+
 def _check_config(idx_pdf: pd.DataFrame, cfg: HnswConfig) -> None:
     """Raise if the search config's space disagrees with the index's
     persisted build config (task-side: no extra driver job per search)."""
@@ -2571,21 +2602,21 @@ def _search_path(
     regimes."""
     from anndb_spark.sources import fsutil
 
-    cfg = config or get_index_config(load_index(spark, path)) or HnswConfig()
+    # ONE listing through pyarrow.fs (plain paths, file://, s3://,
+    # hdfs:// — not a shared-local-FS assumption, ADVICE r4) gives the
+    # parts, their files for the config header and the local rule, and
+    # the version of every cached graph: the host-shared /dev/shm graph
+    # cache outlives the Spark session, so a graph cached without the
+    # content fingerprint would be served for a PREVIOUS index version at
+    # the same path (measured: a cluster-routed index re-trained across
+    # runs answered probes with the prior run's cells — recall degraded
+    # to ~nprobe/n_cells)
+    index_ver, part_files = fsutil.list_parts(path, "partition_id=")
+    cfg = config or stored_config(path, part_files) or HnswConfig()
     ef = max(ef or cfg.ef, k)
     routed = centroids is not None and nprobe > 0
     cents = centroids if routed else locality_centroids
     qid_arr, qmat = _serve.parse_queries(queries, 0 if cents is None else np.shape(cents)[1])
-    # ONE listing through pyarrow.fs (plain paths, file://, s3://,
-    # hdfs:// — not a shared-local-FS assumption, ADVICE r4) gives the
-    # parts, their files for the local rule, and the version of every
-    # cached graph: the host-shared /dev/shm graph cache outlives the
-    # Spark session, so a graph cached without the content fingerprint
-    # would be served for a PREVIOUS index version at the same path
-    # (measured: a cluster-routed index re-trained across runs answered
-    # probes with the prior run's cells — recall degraded to
-    # ~nprobe/n_cells)
-    index_ver, part_files = fsutil.list_parts(path, "partition_id=")
     by_pid = _serve.route(_pairwise(qmat, centroids, cfg.space), nprobe) if routed else None
     pids = [p for p in part_files if by_pid is None or p in by_pid]
     # ONE graph partition → every query is answered completely by its
@@ -2774,8 +2805,29 @@ def load_index(spark, path: str) -> DataFrame:
     Column order is normalized back to INDEX_SCHEMA order (partitionBy
     moves the partition column to the end on disk).  Indexes saved
     before vectors were embedded load without a ``vec`` column;
-    `search_index` rejects them — rebuild with `build_index`."""
-    df = spark.read.parquet(path)
+    `search_index` rejects them — rebuild with `build_index`.
+
+    The columns come from one memoized parquet footer (`fsutil.footers`,
+    the Spark schema Spark writes into it) and the read takes them as its
+    schema, so loading runs no Spark job (schema inference runs one); a
+    path without such a footer reads as plain parquet, failing as that
+    does."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from anndb_spark.sources import fsutil
+
+    try:
+        files = [f for fs in fsutil.list_parts(path, "partition_id=")[1].values() for f in fs]
+    except (OSError, ValueError):
+        files = []
+    meta = (fsutil.footers(path, files[:1])[0].metadata or {}) if files else {}
+    written = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if written is None:
+        df = spark.read.parquet(path)
+    else:
+        fields = StructType.fromJson(json.loads(written)).fields
+        schema = StructType([StructField("partition_id", IntegerType()), *fields])
+        df = spark.read.schema(schema).parquet(path)
     cols = ["partition_id", "kind", "src", "level", "dsts"]
     for opt in ("vec", "meta"):
         if opt in df.columns:

@@ -10,25 +10,32 @@ scatter/gather search shape:
 
 Spark shape (100 TB-minded):
 
-    vectors ⨯ broadcast(queries)                -- no shuffle of the big side
-      → score = distance_col(...)               -- dual-dialect expression
-      → Sort + WindowGroupLimit (pre-shuffle)   -- JVM partial top-k:
-                                                   survivors ≤ |Q|·k per part
+    queries → driver (one bounded collect: limit(cap + 1), ≤ cap rows)
+    vectors scan                                -- no shuffle of the big side
+      → MapInArrow(_gemm_partial_topk)          -- per-task top-k per query:
+                                                   survivors ≤ |Q|·k per task
       → Exchange(query_id)                      -- survivors only
-      → Window row_number ≤ k                   -- final top-k
+      → Window row_number ≤ k over (score, id)  -- final top-k
 
-Spark ≥3.5 plants the pre-shuffle WindowGroupLimit itself, so the
-partial/final split the reference hand-codes
-(`storage/dataset.go:374-431`) falls out of the plain window query; the
-shuffle moves |Q|·k·P rows, never |V|·|Q|.  An optional Arrow partial
-top-k (`two_stage=True`) remains for many-key shapes.
+The query side rides the task closure, so every task scores its Arrow
+batches against all queries in one NumPy kernel and keeps only each
+query's k best — the partial/final split the reference hand-codes
+(`storage/dataset.go:374-431`); the shuffle moves |Q|·k·P rows, never
+|V|·|Q|.
 
-Two score kernels: the default dual-dialect *expression* is
-bit-identical to the DuckDB oracle (use for checked queries) but
-interpreted per element (higher-order functions don't whole-stage
-codegen); the *gemm* kernel scores a whole Arrow batch with one BLAS
-call — measured 33× on a 2k×2k 64-d self-join — and matches the
-expression path's ids/ranks with ~1-ulp score drift.
+Two scorers run in that kernel.  The default, ``fold``
+(`spaces.fold_distances`), repeats the dual-dialect expression's
+operations in its order, so its scores are bit-identical to
+`distance_col` and to the DuckDB oracle (use it for checked queries);
+``gemm`` scores a batch with one BLAS call (`ivf._pairwise`) and
+matches fold's ids/ranks with ~1-ulp score drift.
+
+The ``distance_col`` cross join (vectors ⨯ broadcast(queries) → Sort +
+WindowGroupLimit → Exchange → Window) is kept as the escape hatch for
+what the kernel cannot take: a query side over ``gemm_collect_cap``, a
+caller's ``score_expr``, and `knn_join` with ``broadcast_left=False``.
+Its higher-order functions are interpreted per element, so it is the
+slow form.
 
 The single-query path is simply orderBy(score).limit(k), which Spark
 executes as TakeOrderedAndProject — the same partial+final top-k the
@@ -40,128 +47,252 @@ from __future__ import annotations
 import warnings
 from typing import Iterator, Sequence
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, DoubleType, StructField, StructType
 
 from anndb_spark.functions.spaces import distance_col
 
-# Driver-collect guard for the GEMM kernels: the query/left side rides
-# the task closure, so it must fit the driver.  100k × 128-d float64 is
-# ~100 MB — far below driver memory, far above any sane "queries" batch.
+# Driver-collect guard for the kernel's small side: the query/left side
+# rides the task closure, so it must fit the driver.  100k × 128-d
+# float64 is ~100 MB — far below driver memory, far above any sane
+# "queries" batch.
 GEMM_COLLECT_CAP = 100_000
 
+# Bytes of one (queries × vectors) float64 score block: a batch's
+# queries are scored in chunks of this size, so a task's scratch stays
+# bounded whatever |Q| is.
+_BLOCK_BYTES = 16 << 20
 
-def partial_topk(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str],
-    k: int,
-) -> DataFrame:
-    """Per-input-partition top-k per key — a filtering pre-aggregation.
 
-    Keeps at most k rows per key from every input partition without any
-    shuffle; a final global top-k still has to run afterwards.  Values
-    pass through Arrow untouched, so this is safe to insert into an
-    oracle-checked plan.
-    """
-    key_cols = list(key_cols)
-    order_cols = list(order_cols)
-    schema = df.schema
+def _collect_small(df: DataFrame, cap: int):
+    """``df`` as a pyarrow Table in one Spark job, or None when it holds
+    more than ``cap`` rows (at most cap + 1 rows reach the driver)."""
+    t = df.limit(cap + 1).toArrow()
+    return None if t.num_rows > cap else t
 
-    def keep_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: pd.DataFrame | None = None
-        for pdf in batches:
-            cand = pdf if acc is None else pd.concat([acc, pdf], ignore_index=True)
-            acc = (
-                cand.sort_values(order_cols, kind="mergesort")
-                .groupby(key_cols, sort=False)
-                .head(k)
-            )
-        if acc is not None and len(acc):
-            yield acc
 
-    return df.mapInPandas(keep_topk, schema=schema)
+def _decode(col):
+    """(rows' element counts, with -1 for a NULL list or a list holding
+    a NULL; start of each row in the values; the flattened values as a
+    NumPy array) of an Arrow list column."""
+    import pyarrow.compute as pc
+
+    sizes = pc.list_value_length(col).fill_null(0).to_numpy().astype(np.int64)
+    lens = np.where(col.is_valid().to_numpy(zero_copy_only=False), sizes, -1)
+    flat = col.flatten()
+    if flat.null_count:
+        parent = np.repeat(np.arange(len(col)), sizes)
+        lens[parent[flat.is_null().to_numpy(zero_copy_only=False)]] = -1
+        flat = flat.fill_null(0)
+    return lens, np.cumsum(sizes) - sizes, flat.to_numpy(zero_copy_only=False)
+
+
+def _rows_of_dim(decoded, d: int):
+    """(indices of the rows with exactly ``d`` non-NULL elements, their
+    (m, d) values)."""
+    lens, starts, vals = decoded
+    rows = np.flatnonzero(lens == d)
+    if len(rows) == len(lens) and len(vals) == len(rows) * d:
+        return rows, vals.reshape(len(rows), d)
+    return rows, vals[starts[rows][:, None] + np.arange(d)]
+
+
+def _select(block: np.ndarray, k: int, idrank: np.ndarray, excl):
+    """(row, column) of each row's ≤ k first entries of ``block`` in
+    Spark's order — score ascending with NULL (-inf here) first and NaN
+    last, then id rank — sorted by row, then in that order.  ``excl``
+    (bool, or None) marks entries that are no candidates; ``block`` is
+    scratch and is overwritten."""
+    from anndb_spark.operators._scratch import scratch_mat
+
+    kk = k
+    if excl is not None:
+        block[excl] = np.nan
+        kk += int(excl.sum(axis=1).max())
+    if block.shape[1] > kk:
+        # every entry at or below the row's kk-th score (ties included)
+        part = scratch_mat("knn_part", *block.shape, np.float64)
+        np.copyto(part, block)
+        part.partition(kk - 1, axis=1)
+        kth = part[:, kk - 1]
+        mask = block <= kth[:, None]
+        mask[np.isnan(kth)] = True
+    else:
+        mask = np.ones(block.shape, dtype=bool)
+    if excl is not None:
+        mask &= ~excl
+    r, c = np.nonzero(mask)
+    order = np.lexsort((idrank[c], block[r, c], r))
+    r, c = r[order], c[order]
+    keep = np.arange(len(r)) - np.searchsorted(r, r) < k
+    return r[keep], c[keep]
+
+
+def _id_rank(ids) -> np.ndarray:
+    """Dense rank of ids in Spark's ascending order (NULL first; strings
+    by their UTF-8 bytes)."""
+    import pyarrow.compute as pc
+
+    return pc.rank(
+        ids, sort_keys="ascending", null_placement="at_start", tiebreaker="dense"
+    ).to_numpy()
+
+
+def _merge(parts, k: int):
+    """Each query's k first candidates over ``parts`` — (query index,
+    score key, rows Table) triples — as one such triple."""
+    import pyarrow as pa
+
+    qi = np.concatenate([p[0] for p in parts])
+    key = np.concatenate([p[1] for p in parts])
+    rows = pa.concat_tables([p[2] for p in parts]).combine_chunks()
+    order = np.lexsort((_id_rank(rows.column(0).combine_chunks()), key, qi))
+    sq = qi[order]
+    keep = order[np.arange(len(sq)) - np.searchsorted(sq, sq) < k]
+    return qi[keep], key[keep], rows.take(keep)
 
 
 def _gemm_partial_topk(
     vectors: DataFrame,
-    qids: list,
-    qmat,
+    queries,
+    qid_type: DataType,
     k: int,
     space: str,
-    id_col: str,
-    vec_col: str,
+    scorer: str,
     exclude_self: bool = False,
-    min_parallelism: int | None = None,
 ) -> DataFrame:
-    """Per-task exact top-k via one BLAS GEMM per Arrow batch.
+    """Per-task exact top-k of every query over ``vectors`` — the one
+    scoring kernel of `knn_exact` and `knn_join` (exact and gemm).
 
-    The fast physical path for wide vectors: `zip_with`/`aggregate`
-    higher-order functions are NOT whole-stage-codegen'd (Catalyst
-    interprets them per element), so at ≥64 dims a float64 GEMM in an
-    Arrow batch is ~50-100× the expression path.  Emits ≤ |Q|·k rows per
-    task; the caller still applies the global window top-k.
+    ``vectors`` has the columns (id, vector, *payload); ``queries`` is a
+    pyarrow Table (query id, query vector) of the collected small side,
+    whose id column has the Spark type ``qid_type``.  Returns
+    (query id, id, score, *payload) named as the inputs are, with the
+    ids and payload in their input types, at most k rows per query and
+    task; the caller applies the global (score, id) window.
 
-    Guards against the degenerate 1-task layout (a small cached or
-    `limit`ed table collapses to one partition and serializes the whole
-    cross product): if the scan has fewer partitions than
-    ``min_parallelism`` the vectors are repartitioned first.  At real
-    scale the scan already has plenty of partitions and this never
-    fires.
-    """
-    import numpy as np
+    Each Arrow batch's vectors are decoded with one flatten + reshape
+    and scored against chunks of queries in `_scratch` blocks of at most
+    ``_BLOCK_BYTES``: ``fold`` (`spaces.fold_distances`, bit-identical
+    to `distance_col`) or ``gemm`` (`ivf._pairwise`, ~1 ulp off).
+    Scoring keeps `distance_col`'s edge rows: a NULL vector, one with a
+    NULL element or of another length than the query scores NULL (kept
+    first, as Spark's ascending order puts NULL first), a NaN element
+    scores NaN (kept last), and a zero-norm cosine pair scores NULL —
+    or, under ``spark.sql.ansi.enabled``, fails the query with
+    DIVIDE_BY_ZERO as the expression does.  ``exclude_self`` drops the
+    pairs whose ids are equal or NULL (the expression path's
+    ``left_id != right_id`` filter)."""
+    import pyarrow as pa
 
-    from anndb_spark.operators._scratch import argpart_rows
+    from anndb_spark.operators._scratch import scratch_mat
+
+    ansi = scorer == "fold" and space == "cosine" and (
+        vectors.sparkSession.conf.get("spark.sql.ansi.enabled", "false").lower()
+        == "true"
+    )
+    vfields = vectors.schema.fields
+    names = [queries.column_names[0], vfields[0].name, "score"]
+    names += [f.name for f in vfields[2:]]
+    schema = StructType(
+        [StructField(names[0], qid_type), vfields[0], StructField("score", DoubleType())]
+        + vfields[2:]
+    )
+    qids = queries.column(0).combine_chunks()
+    qdec = _decode(queries.column(1).combine_chunks())
+    # (dimension, query indices, their values) per query dimension, then
+    # the NULL queries, which score NULL against every vector
+    work = []
+    for d in np.unique(qdec[0][qdec[0] >= 0]):
+        qidx, qvals = _rows_of_dim(qdec, d)
+        work.append((d, qidx, np.asarray(qvals, dtype=np.float64)))
+    work.append((None, np.flatnonzero(qdec[0] < 0), None))
+    if exclude_self:
+        qkey = qids.to_numpy(zero_copy_only=False)
+        qnull = ~qids.is_valid().to_numpy(zero_copy_only=False)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        kept = None
+        for b in batches:
+            n = b.num_rows
+            if not n or not len(qids) or k <= 0:
+                continue
+            vdec = _decode(b.column(1))
+            idrank = _id_rank(b.column(0))
+            if exclude_self:
+                bid = b.column(0).to_numpy(zero_copy_only=False)
+                bnull = ~b.column(0).is_valid().to_numpy(zero_copy_only=False)
+            chunk = max(1, _BLOCK_BYTES // (8 * n))
+            qs, cs, ks = [], [], []
+            for d, qidx, qvals in work:
+                rows, vals = _rows_of_dim(vdec, d) if d is not None else ([], None)
+                if len(rows) and scorer == "fold":  # dimension-major float64
+                    vt = scratch_mat("knn_vt", d, len(rows), np.float64)
+                    vt[...] = vals.T
+                    vals = vt
+                for c0 in range(0, len(qidx), chunk):
+                    qi = qidx[c0:c0 + chunk]
+                    excl = None
+                    if exclude_self:
+                        excl = (bid[None, :] == qkey[qi][:, None]) | bnull[None, :]
+                        excl |= qnull[qi][:, None]
+                    block = scratch_mat("knn_block", len(qi), n, np.float64)
+                    block.fill(-np.inf)  # NULL
+                    if len(rows):
+                        _score(block, rows, vals, qvals[c0:c0 + chunk], space,
+                               scorer, excl, ansi)
+                    r, c = _select(block, k, idrank, excl)
+                    qs.append(qi[r])
+                    cs.append(c)
+                    ks.append(block[r, c])
+            table = pa.Table.from_batches([b]).select([0, *range(2, b.num_columns)])
+            cand = (np.concatenate(qs), np.concatenate(ks), table.take(np.concatenate(cs)))
+            kept = cand if kept is None else _merge([kept, cand], k)
+        if kept is None or not len(kept[0]):
+            return
+        qi, key, rows = kept
+        rows = rows.combine_chunks()
+        cols = [qids.take(pa.array(qi)), rows.column(0)]
+        cols.append(pa.array(key, mask=np.isneginf(key)))
+        cols += rows.columns[1:]
+        yield from pa.Table.from_arrays(cols, names=names).to_batches()
+
+    return vectors.mapInArrow(run, schema)
+
+
+def _score(block, rows, vals, q, space, scorer, excl, ansi) -> None:
+    """Write the scores of the queries ``q`` against the batch rows
+    ``rows`` (their values ``vals``: (d, m) for fold, (m, d) for gemm)
+    into those columns of ``block``."""
+    from anndb_spark.functions.spaces import fold_distances
+    from anndb_spark.operators._scratch import scratch_mat
     from anndb_spark.operators.ivf import _pairwise
 
-    from anndb_spark.utils import ensure_parallelism
-
-    src = ensure_parallelism(
-        vectors.select(
-            F.col(id_col).cast("string").alias("id"),
-            F.col(vec_col).alias("vector"),
-        ),
-        min_parallelism,
-    )
-    qm = np.ascontiguousarray(qmat, dtype=np.float64)
-    qid_arr = [str(q) for q in qids]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cand_scores: list = []
-        cand_ids: list = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vm = np.array(pdf["vector"].tolist(), dtype=np.float64)
-            d = _pairwise(qm, vm, space)  # |Q| × n
-            ids_b = pdf["id"].to_numpy()
-            if exclude_self:
-                # self-join: mask pairs with equal ids (vectorized).
-                # In-place masked assign on the scratch-backed matrix
-                # (r13): np.where here copied the full (|Q|, n) matrix
-                # per batch; the masked scores are identical
-                eq = ids_b[None, :] == np.array(qid_arr)[:, None]
-                d[eq] = np.inf
-            nb = min(k, d.shape[1])
-            part = argpart_rows(d, nb)
-            cand_scores.append(np.take_along_axis(d, part, axis=1))
-            cand_ids.append(ids_b[part])
-        if not cand_scores:
-            return
-        sc = np.concatenate(cand_scores, axis=1)  # |Q| × (nb·batches)
-        ci = np.concatenate(cand_ids, axis=1)
-        out_q, out_i, out_s = [], [], []
-        for qi in range(sc.shape[0]):
-            # deterministic (score, id) order, matching the oracle sort
-            order = np.lexsort((ci[qi], sc[qi]))[:k]
-            keep = sc[qi][order] != np.inf
-            out_q.extend([qid_arr[qi]] * int(keep.sum()))
-            out_i.extend(ci[qi][order][keep].tolist())
-            out_s.extend(sc[qi][order][keep].tolist())
-        yield pd.DataFrame({"query_id": out_q, "id": out_i, "score": out_s})
-
-    return src.mapInPandas(run, schema="query_id STRING, id STRING, score DOUBLE")
+    dense = len(rows) == block.shape[1]
+    if scorer == "gemm":
+        acc, zero = _pairwise(q, vals, space), None
+    else:
+        shape = (len(q), len(rows))
+        out = block if dense else scratch_mat("knn_acc", *shape, np.float64)
+        tmp = scratch_mat("knn_tmp", *shape, np.float64)
+        acc, zero = fold_distances(vals, q, space, out, tmp)
+    if zero is not None:
+        if excl is not None:
+            zero &= ~(excl if dense else excl[:, rows])
+        if ansi and zero.any():
+            raise ArithmeticError(
+                "[DIVIDE_BY_ZERO] Division by zero: the cosine distance of a "
+                "zero-norm vector or query (distance_col fails the same way "
+                "under spark.sql.ansi.enabled)"
+            )
+        acc[zero] = -np.inf  # NULL
+    if dense:
+        if acc is not block:
+            np.copyto(block, acc)
+    else:
+        block[:, rows] = acc
 
 
 def knn_exact(
@@ -175,7 +306,6 @@ def knn_exact(
     query_id_col: str = "query_id",
     payload_cols: Sequence[str] = (),
     score_expr: Column | None = None,
-    two_stage: bool = False,
     kernel: str = "expr",
     gemm_collect_cap: int = GEMM_COLLECT_CAP,
 ) -> DataFrame:
@@ -183,83 +313,63 @@ def knn_exact(
 
     Returns (query_id, rank, id, score [, payload...]) with rank 1..k,
     ascending by (score, id) — id tiebreak makes results deterministic,
-    matching FIXTURES.md F5.
+    matching FIXTURES.md F5.  Ids, query ids and payload keep their
+    input types.
+
+    The query side is collected once (at most ``gemm_collect_cap``
+    rows) and every task scores its vectors against it in
+    `_gemm_partial_topk`.  ``kernel``: ``'expr'`` (default) scores with
+    the ``fold`` scorer — bit-identical to the dual-dialect expression
+    and so to the DuckDB oracle, use for checked queries; ``'gemm'``
+    scores with a per-batch BLAS GEMM — same ids/ranks, scores equal to
+    ~1 ulp (different float summation order).
 
     ``score_expr`` lets the caller substitute a custom scoring Column
-    (e.g. a literal-query unrolled expression for oracle parity).
-
-    ``two_stage`` inserts an Arrow partial-top-k filter before the
-    window.  Default off: Spark ≥3.5 already plants a pre-shuffle
-    WindowGroupLimit, so the partial filtering happens JVM-side for
-    free — measured 6× faster than routing |Q|·N rows through Python
-    (sf0.1, 3 queries: 0.9-1.8 s window vs 6-11 s two-stage).  The flag
-    remains for many-key shapes where the pandas heap beats the
-    pre-shuffle sort (see `knn_join`).
-
-    ``kernel``: ``'expr'`` (default) scores with the dual-dialect column
-    expression — bit-identical to the DuckDB oracle, use for checked
-    queries.  ``'gemm'`` scores with a per-batch BLAS GEMM
-    (`_gemm_partial_topk`) — the fast path for wide vectors (the HOF
-    expression is interpreted, not codegen'd); same ids/ranks, scores
-    equal to ~1 ulp (different float summation order).  gemm ignores
-    payload_cols/score_expr/two_stage.
+    (e.g. a literal-query unrolled expression for oracle parity); it,
+    like a query side over ``gemm_collect_cap``, runs the
+    ``distance_col`` cross join instead (the escape hatch, no driver
+    collect).
     """
-    if kernel == "gemm":
-        # the gemm kernel collects the QUERY side to the driver; a
-        # queries-DataFrame bigger than the cap silently OOMing the
-        # driver is the failure mode this guards (VERDICT r2 wrong #2)
-        n_q = queries.count()
-        if n_q > gemm_collect_cap:
+    if kernel not in ("expr", "gemm"):
+        raise ValueError(f"unknown kernel {kernel!r}")
+    payload_cols = list(payload_cols)
+    small = None
+    if score_expr is None:
+        small = _collect_small(
+            queries.select(query_id_col, query_vec_col), gemm_collect_cap
+        )
+        if small is None and kernel == "gemm":
             warnings.warn(
-                f"knn_exact(kernel='gemm'): {n_q:,} queries exceed "
-                f"gemm_collect_cap={gemm_collect_cap:,}; falling back to "
-                "kernel='expr' (no driver collect, same exact results)",
+                f"knn_exact(kernel='gemm'): more than gemm_collect_cap="
+                f"{gemm_collect_cap:,} queries; falling back to kernel='expr' "
+                "(no driver collect, same exact results)",
                 stacklevel=2,
             )
-            kernel = "expr"
-    if kernel == "gemm":
-        import numpy as np
+    if small is not None:
+        src = vectors.select(id_col, vec_col, *payload_cols)
+        if kernel == "gemm":
+            from anndb_spark.utils import ensure_parallelism
 
-        qrows = queries.select(query_id_col, query_vec_col).collect()
-        partials = _gemm_partial_topk(
-            vectors,
-            [r[0] for r in qrows],
-            np.array([r[1] for r in qrows], dtype=np.float64),
-            k,
-            space,
+            src = ensure_parallelism(src)
+        scored = _gemm_partial_topk(
+            src, small, queries.schema[query_id_col].dataType, k, space,
+            "fold" if kernel == "expr" else "gemm",
+        )
+    else:
+        joined = vectors.crossJoin(
+            F.broadcast(queries.select(query_id_col, query_vec_col))
+        )
+        score = (
+            score_expr
+            if score_expr is not None
+            else distance_col(F.col(vec_col), F.col(query_vec_col), space)
+        )
+        scored = joined.select(
+            query_id_col,
             id_col,
-            vec_col,
+            score.alias("score"),
+            *[F.col(c) for c in payload_cols],
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").asc(), F.col("id").asc()
-        )
-        return (
-            partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                F.col("query_id").alias(query_id_col),
-                "rank",
-                F.col("id").alias(id_col),
-                "score",
-            )
-        )
-    if kernel != "expr":
-        raise ValueError(f"unknown kernel {kernel!r}")
-    qcols = [F.col(query_id_col), F.col(query_vec_col)]
-    joined = vectors.crossJoin(F.broadcast(queries.select(*qcols)))
-    score = (
-        score_expr
-        if score_expr is not None
-        else distance_col(F.col(vec_col), F.col(query_vec_col), space)
-    )
-    scored = joined.select(
-        query_id_col,
-        id_col,
-        score.alias("score"),
-        *[F.col(c) for c in payload_cols],
-    )
-    if two_stage:
-        scored = partial_topk(scored, [query_id_col], ["score", id_col], k)
     w = Window.partitionBy(query_id_col).orderBy(F.col("score").asc(), F.col(id_col).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -289,8 +399,9 @@ def knn_sq8(
     table — and exactly re-ranked to the final top-k.
 
     ``encoded`` is the `quantize.sq8_encode_table` layout
-    (id, {vec}_codes, {vec}_rmin, {vec}_scale).  All scoring is the
-    dual-dialect expression kernel, so results stay oracle-exact.
+    (id, {vec}_codes, {vec}_rmin, {vec}_scale).  All scoring computes
+    the dual-dialect expression's doubles (`knn_exact`'s fold scorer,
+    then `distance_col` in the rerank), so results stay oracle-exact.
     Returns (query_id, rank, id, score); score is the EXACT distance
     when reranked, else the decoded-approximation distance."""
     from anndb_spark.functions.quantize import sq8_decode
@@ -566,7 +677,6 @@ def knn_join(
     centroids=None,
     nprobe: int = 8,
     broadcast_left: bool = True,
-    two_stage: bool = True,
     gemm_collect_cap: int = GEMM_COLLECT_CAP,
     pq_codebooks=None,
     pq_codes: DataFrame | None = None,
@@ -586,17 +696,18 @@ def knn_join(
 
     Modes (the physical strategies):
 
-    - ``'exact'`` — cross join + partial/final top-k, the same shape as
-      `knn_exact`.  With ``broadcast_left`` (default) the left side rides
-      the broadcast and the big right side never shuffles; set it False
-      when *both* sides are large and let AQE pick the join (the honest
-      cost of an exact big✕big join is O(|L|·|R|) scores — at that scale
-      use ``mode='ivf'``).
-    - ``'gemm'`` — exact scores via the per-batch BLAS kernel
-      (`_gemm_partial_topk`): same ids/ranks as 'exact', ~50-100× faster
-      at ≥64 dims (the HOF distance expression is interpreted, not
-      codegen'd).  Scores differ from the SQL formulation by ~1 ulp, so
-      use 'exact' for oracle-checked queries.
+    - ``'exact'`` — the same shape as `knn_exact`: with
+      ``broadcast_left`` (default) the left side is collected once and
+      rides the task closure, the big right side never shuffles, and the
+      per-task kernel (`_gemm_partial_topk`, ``fold`` scorer) keeps each
+      left row's k best, scores bit-identical to the expression.  A left
+      side over ``gemm_collect_cap``, or ``broadcast_left=False`` (both
+      sides large: let AQE pick the join — the honest cost of an exact
+      big✕big join is O(|L|·|R|) scores, at that scale use
+      ``mode='ivf'``), runs the ``distance_col`` cross join instead.
+    - ``'gemm'`` — the same kernel with the per-batch BLAS scorer: same
+      ids/ranks as 'exact'; scores differ from the SQL formulation by
+      ~1 ulp, so use 'exact' for oracle-checked queries.
     - ``'ivf'`` — route left rows to their nprobe nearest coarse
       centroids and score only those clusters of right (see
       `operators/ivf.py`): O(|L|·nprobe·cluster_size) scores, the 100 TB
@@ -682,8 +793,6 @@ def knn_join(
         # restored on a per-query shortlist rerank against the float
         # rows.  Pass ``pq_codes``/``pq_codebooks`` to amortize the
         # encode across calls (the artifacts round-trip via pq.save_pq).
-        import numpy as np
-
         from anndb_spark.operators.pq import (
             pq_encode,
             pq_search_batch,
@@ -692,8 +801,8 @@ def knn_join(
 
         if space not in ("euclidean", "cosine"):
             raise ValueError("mode='pq' supports euclidean/cosine")
-        n_left = left.count()
-        if n_left > gemm_collect_cap:
+        lrows = _collect_small(left.select(left_id_col, left_vec_col), gemm_collect_cap)
+        if lrows is None:
             # same failure contract as mode='gemm' (VERDICT r6 Wrong
             # #4): a big left side reroutes to the bucketed ivf path
             # instead of raising
@@ -707,8 +816,8 @@ def knn_join(
                     space=space,
                 )
             warnings.warn(
-                f"knn_join(mode='pq'): left has {n_left:,} rows (> "
-                f"gemm_collect_cap={gemm_collect_cap:,}); the driver "
+                "knn_join(mode='pq'): left has more than "
+                f"gemm_collect_cap={gemm_collect_cap:,} rows; the driver "
                 "collect would OOM — falling back to the bucketed "
                 "mode='ivf' path (approximate, nprobe-bounded)",
                 stacklevel=2,
@@ -728,13 +837,12 @@ def knn_join(
         if books is None:
             books = train_pq(rvecs, m=pq_m, n_centroids=pq_centroids)
         codes = pq_codes if pq_codes is not None else pq_encode(rvecs, books)
-        lrows = left.select(left_id_col, left_vec_col).collect()
         inner_k = k + 1 if exclude_self else k
         res = pq_search_batch(
             codes,
             (
-                [r[0] for r in lrows],
-                np.array([r[1] for r in lrows], dtype=np.float32),
+                lrows.column(0).to_pylist(),
+                np.array(lrows.column(1).to_pylist(), dtype=np.float32),
             ),
             books,
             inner_k,
@@ -756,82 +864,64 @@ def knn_join(
             .filter(F.col("rank") <= k)
             .select("left_id", "rank", "right_id", "score")
         )
-    if mode == "gemm":
-        # exact scores via the BLAS kernel: left rides the task closure
-        # (it is the "queries" side — small by contract; at big×big
-        # scale use mode='ivf'), right streams through Arrow batches.
-        # Guard the driver collect (VERDICT r2 wrong #2): a big×big call
-        # reroutes to the bucketed IVF path instead of OOMing.
-        import numpy as np
-
-        n_left = left.count()
-        if n_left > gemm_collect_cap:
-            if centroids is None:
-                from anndb_spark.operators.ivf import train_centroids
-
-                rc = right.count()
-                centroids = train_centroids(
-                    right.select(F.col(right_vec_col).alias("vector")),
-                    n_clusters=max(1, min(32, rc // 4)),
-                    space=space,
-                )
-            warnings.warn(
-                f"knn_join(mode='gemm'): left has {n_left:,} rows (> "
-                f"gemm_collect_cap={gemm_collect_cap:,}); the driver "
-                "collect would OOM — falling back to the bucketed "
-                "mode='ivf' path (approximate, nprobe-bounded)",
-                stacklevel=2,
-            )
-            return knn_join(
-                left, right, k, space=space,
-                left_id_col=left_id_col, left_vec_col=left_vec_col,
-                right_id_col=right_id_col, right_vec_col=right_vec_col,
-                exclude_self=exclude_self, mode="ivf",
-                centroids=centroids, nprobe=nprobe,
-            )
-        lrows = left.select(left_id_col, left_vec_col).collect()
-        partials = _gemm_partial_topk(
-            right,
-            [r[0] for r in lrows],
-            np.array([r[1] for r in lrows], dtype=np.float64),
-            k,
-            space,
-            right_id_col,
-            right_vec_col,
-            exclude_self=exclude_self,
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").asc(), F.col("id").asc()
-        )
-        return (
-            partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                F.col("query_id").alias("left_id"),
-                "rank",
-                F.col("id").alias("right_id"),
-                "score",
-            )
-        )
-    if mode != "exact":
+    if mode not in ("exact", "gemm"):
         raise ValueError(f"unknown mode {mode!r}")
-
     qdf = left.select(
         F.col(left_id_col).alias("left_id"), F.col(left_vec_col).alias("__qvec")
     )
     vdf = right.select(
         F.col(right_id_col).alias("right_id"), F.col(right_vec_col).alias("__vvec")
     )
-    joined = vdf.crossJoin(F.broadcast(qdf) if broadcast_left else qdf)
-    if exclude_self:
-        joined = joined.filter(F.col("left_id") != F.col("right_id"))
-    scored = joined.select(
-        "left_id",
-        "right_id",
-        distance_col(F.col("__vvec"), F.col("__qvec"), space).alias("score"),
+    # left is the "queries" side: small by contract, collected once; at
+    # big×big scale use mode='ivf'
+    small = (
+        _collect_small(qdf, gemm_collect_cap)
+        if broadcast_left or mode == "gemm" else None
     )
-    if two_stage:
-        scored = partial_topk(scored, ["left_id"], ["score", "right_id"], k)
+    if small is None and mode == "gemm":
+        # a big×big gemm call reroutes to the bucketed IVF path instead
+        # of OOMing the driver
+        if centroids is None:
+            from anndb_spark.operators.ivf import train_centroids
+
+            rc = right.count()
+            centroids = train_centroids(
+                right.select(F.col(right_vec_col).alias("vector")),
+                n_clusters=max(1, min(32, rc // 4)),
+                space=space,
+            )
+        warnings.warn(
+            "knn_join(mode='gemm'): left has more than "
+            f"gemm_collect_cap={gemm_collect_cap:,} rows; the driver "
+            "collect would OOM — falling back to the bucketed "
+            "mode='ivf' path (approximate, nprobe-bounded)",
+            stacklevel=2,
+        )
+        return knn_join(
+            left, right, k, space=space,
+            left_id_col=left_id_col, left_vec_col=left_vec_col,
+            right_id_col=right_id_col, right_vec_col=right_vec_col,
+            exclude_self=exclude_self, mode="ivf",
+            centroids=centroids, nprobe=nprobe,
+        )
+    if small is not None:
+        if mode == "gemm":
+            from anndb_spark.utils import ensure_parallelism
+
+            vdf = ensure_parallelism(vdf)
+        scored = _gemm_partial_topk(
+            vdf, small, qdf.schema["left_id"].dataType, k, space,
+            "fold" if mode == "exact" else "gemm", exclude_self=exclude_self,
+        )
+    else:
+        joined = vdf.crossJoin(F.broadcast(qdf) if broadcast_left else qdf)
+        if exclude_self:
+            joined = joined.filter(F.col("left_id") != F.col("right_id"))
+        scored = joined.select(
+            "left_id",
+            "right_id",
+            distance_col(F.col("__vvec"), F.col("__qvec"), space).alias("score"),
+        )
     w = Window.partitionBy("left_id").orderBy(F.col("score").asc(), F.col("right_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))

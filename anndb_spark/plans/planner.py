@@ -5,7 +5,7 @@ scan vs approximate index (`SURVEY.md §4`).  Catalyst owns everything
 relational (pushdown, pruning, join strategy); this module owns the one
 decision Catalyst can't see — which physical kNN kernel to run:
 
-- ``exact``  — broadcast cross join + partial/final top-k (`knn.knn_exact`);
+- ``exact``  — per-task top-k kernel + final window top-k (`knn.knn_exact`);
   the semantic ground truth, right answer for small tables and for oracle
   checks.
 - ``ann``    — HNSW graph walk over a materialized index: an index

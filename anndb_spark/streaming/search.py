@@ -57,15 +57,14 @@ def stream_search_transform(
     from anndb_spark.operators.hnsw import (
         HnswConfig,
         _result_layout,
-        get_index_config,
-        load_index,
+        stored_config,
     )
     from anndb_spark.sources import fsutil
 
     spark = queries.sparkSession
-    cfg = config or get_index_config(load_index(spark, index_path)) or HnswConfig()
-    eff_ef = max(ef or cfg.ef, k)
     index_ver, part_files = fsutil.list_parts(index_path, "partition_id=")
+    cfg = config or stored_config(index_path, part_files) or HnswConfig()
+    eff_ef = max(ef or cfg.ef, k)
     pids = list(part_files)
     if not pids:
         raise ValueError(f"no index partitions under {index_path!r}")

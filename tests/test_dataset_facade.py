@@ -102,6 +102,32 @@ def test_update_merges_metadata_and_remove_tombstones(spark, db):
     assert ds.get("a") is None and ds.len() == 0
 
 
+def test_index_loads_without_a_job(spark, db):
+    """`Dataset.index()` is None before any index is saved; a saved
+    index loads with no Spark job (its columns come from a parquet
+    footer, not a schema-inference job) and reads what plain parquet
+    reads."""
+    import uuid
+
+    ds = db.create_dataset("noinfer", dimension=8, partition_count=2)
+    assert ds.index() is None
+    _, df = _vec_rows(spark, 80, 8, seed=21)
+    ds.insert(df)
+    ds.compact()
+    ds.build_index()
+    sc = spark.sparkContext
+    group = f"load-index-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_index")
+    try:
+        idx = ds.index()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    inferred = spark.read.parquet(ds.index_path).select(*idx.columns)
+    assert idx.schema == inferred.schema
+    assert sorted(map(repr, idx.collect())) == sorted(map(repr, inferred.collect()))
+
+
 def test_ann_search_after_build_index(spark, db):
     ds = db.create_dataset("ann", dimension=16, partition_count=2)
     rows, df = _vec_rows(spark, 300, 16, seed=3)

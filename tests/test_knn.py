@@ -1,11 +1,15 @@
 """Exact kNN tests — differential vs NumPy brute force, the reference's
 key test pattern (`index/hnsw_test.go:21-54`)."""
 
+import struct
+import uuid
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from anndb_spark.operators.knn import knn_exact, knn_search, partial_topk
+from anndb_spark.functions.spaces import distance_col
+from anndb_spark.operators.knn import knn_exact, knn_search
 
 
 @pytest.fixture(scope="module")
@@ -65,30 +69,6 @@ def test_knn_search_single_query(spark, small_vectors):
     got = knn_search(df, [1.0] * 16, 5).collect()
     want = _brute(rows, [1.0] * 16, 5)
     assert [r["id"] for r in got] == [i for i, _ in want]
-
-
-def test_partial_topk_is_superset_filter(spark, small_vectors):
-    df, rows = small_vectors
-    scored = df.select(F.lit(0).alias("query_id"), "id", F.element_at("vector", 1).alias("score"))
-    survivors = partial_topk(scored, ["query_id"], ["score", "id"], 5)
-    rows_out = survivors.collect()
-    # global top-5 must be contained in the survivors
-    want = sorted(((r["score"], r["id"]) for r in scored.collect()))[:5]
-    got = {(r["score"], r["id"]) for r in rows_out}
-    assert all(w in got for w in want)
-
-
-def test_two_stage_equals_single_stage(spark, small_vectors):
-    df, _ = small_vectors
-    queries = spark.createDataFrame(
-        [(0, [2.0] * 16), (1, [-3.0] * 16)], "query_id INT, query_vector ARRAY<DOUBLE>"
-    )
-    a = knn_exact(df, queries, 7, two_stage=True).collect()
-    b = knn_exact(df, queries, 7, two_stage=False).collect()
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    assert sorted([(r["query_id"], r["rank"], r["id"], r["score"]) for r in a]) == sorted(
-        [(r["query_id"], r["rank"], r["id"], r["score"]) for r in b]
-    )
 
 
 # --- knn_join --------------------------------------------------------------
@@ -366,3 +346,214 @@ def test_knn_binary_rerank_direction_is_size_adaptive(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
     assert hinted == base
+
+
+# --- the per-task kernel against the distance_col escape hatch -------------
+
+
+def _bits(rows):
+    """Rows as sorted tuples, each float as its bits (NULL stays None)."""
+    return sorted(
+        tuple(struct.pack("<d", x) if isinstance(x, float) else x for x in r)
+        for r in rows
+    )
+
+
+def _hatch(vecs, queries, k, space, **kw):
+    """knn_exact through the distance_col cross join (a score_expr is one
+    of its three cases)."""
+    score = distance_col(F.col("vector"), F.col("query_vector"), space)
+    return knn_exact(vecs, queries, k, space=space, score_expr=score, **kw)
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"knn-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "knn kernel test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def tie_rows():
+    """Small-integer vectors: many equal scores, so ids break ties."""
+    rng = np.random.default_rng(5)
+    return rng.integers(-2, 3, (300, 6)).astype(float).tolist()
+
+
+@pytest.mark.parametrize("id_type", ["STRING", "INT"])
+@pytest.mark.parametrize("vec_type", ["FLOAT", "DOUBLE"])
+@pytest.mark.parametrize("space", ["euclidean", "manhattan", "cosine"])
+def test_kernel_scores_equal_escape_hatch_bitwise(
+    spark, tie_rows, space, vec_type, id_type
+):
+    ids = [f"v{i}" if id_type == "STRING" else 1000 - i for i in range(len(tie_rows))]
+    rows = [(i, v, j % 7) for j, (i, v) in enumerate(zip(ids, tie_rows))]
+    vecs = spark.createDataFrame(
+        rows, f"id {id_type}, vector ARRAY<{vec_type}>, tag INT"
+    ).repartition(3)
+    rng = np.random.default_rng(6)
+    queries = spark.createDataFrame(
+        [(f"q{i}", rng.integers(-2, 3, 6).astype(float).tolist()) for i in range(9)],
+        "query_id STRING, query_vector ARRAY<DOUBLE>",
+    )
+    for k in (1, 8, len(rows) + 5):  # k > n keeps every row
+        got = knn_exact(vecs, queries, k, space=space, payload_cols=["tag"])
+        want = _hatch(vecs, queries, k, space, payload_cols=["tag"])
+        assert got.schema == want.schema
+        assert _bits(got.collect()) == _bits(want.collect()), k
+    assert got.count() == 9 * len(rows)
+
+
+def test_kernel_chunks_and_batches_keep_rows(spark, tie_rows, monkeypatch):
+    """One query per score block and 40-row Arrow batches (the kernel
+    merges each query's candidates across batches by id) return the
+    one-block rows."""
+    from anndb_spark.operators import knn
+
+    vecs = spark.createDataFrame(
+        [(f"v{i}", v) for i, v in enumerate(tie_rows)], "id STRING, vector ARRAY<DOUBLE>"
+    ).coalesce(2)
+    queries = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(tie_rows[:7])], "query_id INT, query_vector ARRAY<DOUBLE>"
+    )
+    want = _bits(_hatch(vecs, queries, 6, "euclidean").collect())
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    monkeypatch.setattr(knn, "_BLOCK_BYTES", 1)
+    try:
+        spark.conf.set(conf, "40")
+        got = _bits(knn_exact(vecs, queries, 6).collect())
+    finally:
+        spark.conf.set(conf, old)
+    assert got == want
+
+
+def test_kernel_empty_sides(spark):
+    vecs = spark.createDataFrame([("a", [1.0, 2.0])], "id STRING, vector ARRAY<DOUBLE>")
+    queries = spark.createDataFrame(
+        [(0, [1.0, 1.0])], "query_id INT, query_vector ARRAY<DOUBLE>"
+    )
+    no_vecs, no_queries = vecs.limit(0), queries.limit(0)
+    for v, q in ((no_vecs, queries), (vecs, no_queries)):
+        got = knn_exact(v, q, 3)
+        assert got.schema == _hatch(v, q, 3, "euclidean").schema
+        assert got.collect() == []
+
+
+def test_kernel_edge_rows_rank_as_spark(spark):
+    """NULL, NULL-element and wrong-length vectors score NULL and rank
+    first (ascending puts NULL first); a NaN element scores NaN and
+    ranks last; equal to the escape hatch for every space."""
+    rows = [
+        ("a", [3.0, 4.0]), ("b", None), ("c", [1.0, None]), ("d", [1.0, 2.0, 3.0]),
+        ("e", [float("nan"), 1.0]), ("f", [0.0, 1.0]), ("g", []),
+    ]
+    vecs = spark.createDataFrame(rows, "id STRING, vector ARRAY<DOUBLE>")
+    queries = spark.createDataFrame(
+        [(0, [1.0, 1.0]), (1, None), (2, [2.0, None])],
+        "query_id INT, query_vector ARRAY<DOUBLE>",
+    )
+    for space in ("euclidean", "manhattan", "cosine"):
+        got = knn_exact(vecs, queries, 7, space=space).collect()
+        assert _bits(got) == _bits(_hatch(vecs, queries, 7, space).collect()), space
+        q0 = [(r["id"], r["score"]) for r in sorted(got, key=lambda r: r["rank"])
+              if r["query_id"] == 0]
+        assert [i for i, _ in q0][:4] == ["b", "c", "d", "g"], space
+        assert q0[-1][0] == "e"
+        assert [s is None for _, s in q0] == [True] * 4 + [False] * 3
+        assert np.isnan(q0[-1][1])
+        # a NULL query, or one with a NULL element, scores NULL everywhere
+        # and ranks the vectors by id alone
+        for qid in (1, 2):
+            q = sorted((r for r in got if r["query_id"] == qid), key=lambda r: r["rank"])
+            assert [r["id"] for r in q] == list("abcdefg")
+            assert all(r["score"] is None for r in q)
+
+
+def test_kernel_zero_norm_cosine_follows_ansi(spark):
+    """A zero-norm cosine pair is NULL with ANSI off and fails the query
+    with DIVIDE_BY_ZERO with it on — as the expression does."""
+    vecs = spark.createDataFrame(
+        [("a", [0.0, 0.0]), ("b", [1.0, 2.0])], "id STRING, vector ARRAY<FLOAT>"
+    )
+    queries = spark.createDataFrame(
+        [(0, [1.0, 1.0]), (1, [0.0, 0.0])], "query_id INT, query_vector ARRAY<DOUBLE>"
+    )
+    conf = "spark.sql.ansi.enabled"
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "false")
+        got = knn_exact(vecs, queries, 2, space="cosine").collect()
+        assert _bits(got) == _bits(_hatch(vecs, queries, 2, "cosine").collect())
+        assert {(r["query_id"], r["id"]) for r in got if r["score"] is None} == {
+            (0, "a"), (1, "a"), (1, "b")
+        }
+        spark.conf.set(conf, "true")
+        for df in (knn_exact(vecs, queries, 2, space="cosine"),
+                   _hatch(vecs, queries, 2, "cosine")):
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                df.collect()
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_kernel_join_exclude_self_bitwise(spark, join_sides):
+    """knn_join(mode='exact') through the kernel equals its cross join
+    (broadcast_left=False), self-exclusion included, bit for bit."""
+    from anndb_spark.operators.knn import knn_join
+
+    ldf, _, rdf, _ = join_sides
+    for space in ("euclidean", "cosine"):
+        for left, excl in ((ldf, False), (rdf, True)):
+            got = knn_join(left, rdf, 4, space=space, exclude_self=excl)
+            want = knn_join(left, rdf, 4, space=space, exclude_self=excl,
+                            broadcast_left=False)
+            assert "MapInArrow" in _plan(got) and "MapInArrow" not in _plan(want)
+            assert _bits(got.collect()) == _bits(want.collect())
+
+
+def test_query_side_over_cap_takes_escape_hatch(spark, small_vectors):
+    df, _ = small_vectors
+    queries = spark.createDataFrame(
+        [(i, [float(i)] * 16) for i in range(3)], "query_id INT, query_vector ARRAY<DOUBLE>"
+    )
+    over = knn_exact(df, queries, 4, gemm_collect_cap=2)
+    assert "MapInArrow" not in _plan(over) and "NestedLoopJoin" in _plan(over)
+    assert "MapInArrow" in _plan(knn_exact(df, queries, 4, gemm_collect_cap=3))
+    assert _bits(over.collect()) == _bits(knn_exact(df, queries, 4).collect())
+
+
+def test_small_side_collected_in_one_job(spark, small_vectors, join_sides):
+    """Each kernel call collects its small side once: one Spark job to
+    build the DataFrame (count-then-collect was two)."""
+    from anndb_spark.operators.knn import knn_join
+
+    df, _ = small_vectors
+    _, _, rdf, _ = join_sides
+    # four scan partitions: a bounded collect() would scan them in
+    # growing rounds, one job each
+    queries = spark.range(0, 3, 1, 4).select(
+        F.col("id").cast("int").alias("query_id"),
+        F.array_repeat(F.col("id").cast("double"), 16).alias("query_vector"),
+    )
+    left = spark.range(0, 40, 1, 4).select(
+        F.concat(F.lit("L"), F.col("id").cast("string")).alias("id"),
+        F.array_repeat(F.col("id").cast("double"), 8).alias("vector"),
+    )
+    for build in (
+        lambda: knn_exact(df, queries, 4),
+        lambda: knn_exact(df, queries, 4, kernel="gemm"),
+        lambda: knn_join(left, rdf, 3),
+        lambda: knn_join(left, rdf, 3, mode="gemm"),
+    ):
+        _, jobs = _jobs(spark, build)
+        assert jobs == 1
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()

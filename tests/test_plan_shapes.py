@@ -102,6 +102,10 @@ def test_decontaminate_corpus_side_never_shuffles(spark):
 
 
 def test_knn_exact_broadcasts_queries(spark):
+    """The query side rides the kernel's task closure: the plan is the
+    vectors scan → MapInArrow (per-task top-k) → the (score, id)
+    window, with no cross join and no Exchange below the Python node —
+    the big side never shuffles."""
     from anndb_spark.sources.tables import lineitem_vec
 
     vecs = lineitem_vec(spark, SF)
@@ -111,7 +115,13 @@ def test_knn_exact_broadcasts_queries(spark):
         [("q0", [1.0] * 8)], "query_id STRING, query_vector ARRAY<DOUBLE>"
     )
     plan = _plan(knn_exact(vecs, qdf, k=5, space="euclidean"))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    at = next(i for i, line in enumerate(tree) if "MapInArrow" in line)
+    assert any("Window " in line for line in tree[:at]), plan
+    below = tree[at + 1:]
+    assert any("Scan parquet" in line for line in below), plan
+    assert not any("Exchange" in line for line in below), plan
+    assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan
 
 
 def test_range_join_is_hash_join_not_nested_loop(spark):

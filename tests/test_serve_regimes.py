@@ -360,6 +360,24 @@ def test_one_listing_per_search(spark, monkeypatch, hnsw_paths, corpus, dataset)
     assert reads == []
 
 
+def test_configless_search_reads_the_config_without_a_job(
+    spark, monkeypatch, corpus, hnsw_paths
+):
+    """Without ``config`` the server reads the index's persisted config
+    row with pyarrow from its one listing: a driver-regime batch still
+    launches no job (cold config read included), and answers as with
+    the config passed."""
+    from anndb_spark.operators import hnsw
+
+    _, _, queries = corpus
+    hnsw._config_src.cache_clear()
+    a, b = _both(spark, monkeypatch, lambda: search_index_path(
+        spark, hnsw_paths["four"], queries, 6, ef=40))
+    c, _ = _both(spark, monkeypatch, lambda: search_index_path(
+        spark, hnsw_paths["four"], queries, 6, ef=40, config=CFG))
+    assert a == b == c and len(a) == 6 * len(queries)
+
+
 def test_driver_blas_threads_do_not_change_scores(spark, monkeypatch, tmp_path):
     """At a GEMM size where OpenBLAS splits work over threads (4 parts ×
     1,000 × 64, 50-query brute chunks), the driver regime's scores equal
@@ -370,14 +388,13 @@ def test_driver_blas_threads_do_not_change_scores(spark, monkeypatch, tmp_path):
     rows = [(f"r{i}", rng.normal(0, 1, 64).tolist(), i % 4) for i in range(4000)]
     df = spark.createDataFrame(rows, "id STRING, vector ARRAY<FLOAT>, partition_id INT")
     hnsw_dir, ivf_dir = str(tmp_path / "hnsw"), str(tmp_path / "ivf")
-    cfg = HnswConfig(m=4, ef_construction=16)
-    save_index(build_index(df, cfg), hnsw_dir)
+    save_index(build_index(df, HnswConfig(m=4, ef_construction=16)), hnsw_dir)
     vecs = df.drop("partition_id")
     cent = train_centroids(vecs, 4, seed=5)
     save_assigned(assign_clusters(vecs, cent), ivf_dir)
     queries = [(f"q{i}", v.tolist()) for i, v in enumerate(rng.normal(0, 1, (50, 64)))]
     a, b = _both(spark, monkeypatch, lambda: search_index_path(
-        spark, hnsw_dir, queries, 10, config=cfg, strategy="brute", queries_per_task=50))
+        spark, hnsw_dir, queries, 10, strategy="brute", queries_per_task=50))
     assert a == b and len(a) == 500
     a, b = _both(spark, monkeypatch, lambda: search_ivf_path(
         spark, ivf_dir, queries, 10, cent, nprobe=4, queries_per_task=50))
