@@ -19,32 +19,22 @@ ordered by ``seq``; compaction folds it into the base snapshot exactly
 like the reference's periodic index snapshots truncate the WAL
 (`storage/raft/group.go:275-300`).
 
-Execution shape (100 TB-minded): repartition by id, sort within
-partitions by (id, seq), then a single ``mapInPandas`` pass runs the
-per-id state machine with id-boundary carry across Arrow batches — one
-shuffle, bounded memory, no per-group pandas DataFrame overhead for
-millions of tiny groups.
+Execution shape (100 TB-minded): ``apply_changes_sql`` is the one
+compactor — window functions keyed by id over the seq-ordered ops, then
+one groupBy(id) that folds each live id's last insert segment into its
+state row.  No Python in the row loop; the exchanges carry the ops'
+own columns, partitioned by id.
 """
 
 from __future__ import annotations
 
-import json
 import math
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 ITEM_ALREADY_EXISTS = "ItemAlreadyExistsError"
 ITEM_NOT_FOUND = "ItemNotFoundError"
-
-# output schema of the compaction pass (metadata JSON-encoded across the
-# Arrow boundary; decoded back to MAP by apply_changes)
-_OUT_SCHEMA = (
-    "kind STRING, id STRING, vector ARRAY<DOUBLE>, metadata_json STRING, "
-    "level INT, seq LONG, op STRING, error STRING"
-)
 
 DEFAULT_M = 16
 
@@ -62,57 +52,10 @@ def assign_level(id_col: Column, m: int = DEFAULT_M) -> Column:
     return F.floor(-F.log(u) * F.lit(ml)).cast("int")
 
 
-def _fold_group(gid: str, rows: list[dict], state: dict | None, out: list[dict]):
-    """Run the reference state machine over one id's ops (sorted by seq)."""
-
-    def emit_reject(r, err):
-        out.append(
-            dict(kind="reject", id=gid, vector=None, metadata_json=None,
-                 level=None, seq=r["seq"], op=r["op"], error=err)
-        )
-
-    for r in rows:
-        op = r["op"]
-        if op == "base":
-            state = dict(vector=r["vector"], metadata=r["metadata"], level=r["level"])
-        elif op == "insert":
-            if state is not None:
-                emit_reject(r, ITEM_ALREADY_EXISTS)
-            else:
-                state = dict(vector=r["vector"], metadata=r["metadata"], level=r["level"])
-        elif op == "update":
-            if state is None:
-                emit_reject(r, ITEM_NOT_FOUND)
-            else:
-                # metadata merge: old keys kept unless overwritten
-                # (storage/partition.go:359-364); level preserved (:357)
-                md = dict(state["metadata"] or {})
-                md.update(r["metadata"] or {})
-                state = dict(
-                    vector=r["vector"] if r["vector"] is not None else state["vector"],
-                    metadata=md,
-                    level=state["level"],
-                )
-        elif op == "delete":
-            if state is None:
-                emit_reject(r, ITEM_NOT_FOUND)
-            else:
-                state = None  # tombstone
-        else:
-            emit_reject(r, f"UnknownOp:{op}")
-    if state is not None:
-        out.append(
-            dict(kind="state", id=gid, vector=state["vector"],
-                 metadata_json=json.dumps(state["metadata"] or {}, sort_keys=True),
-                 level=state["level"], seq=None, op=None, error=None)
-        )
-
-
-def apply_changes(
+def apply_changes_sql(
     base: DataFrame | None,
     changes: DataFrame,
     m: int = DEFAULT_M,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Compact a changelog into item state, emitting per-item rejects.
 
@@ -124,77 +67,9 @@ def apply_changes(
     compacted snapshot, 'reject' rows the per-item errors (the batch
     analogue of the reference's ``map[id]error``).  Split with
     ``split_state`` / ``split_rejects``.
-    """
-    if "level" not in changes.columns:
-        changes = changes.withColumn(
-            "level", F.when(F.col("op") == "insert", assign_level(F.col("id"), m))
-        )
-    changes = changes.select(
-        "seq", "id", "op", "vector",
-        F.to_json(F.col("metadata")).alias("metadata_json"), "level",
-    )
-    if base is not None:
-        if "level" not in base.columns:
-            base = base.withColumn("level", assign_level(F.col("id"), m))
-        base_rows = base.select(
-            F.lit(-(1 << 62)).cast("long").alias("seq"),
-            F.col("id"),
-            F.lit("base").alias("op"),
-            F.col("vector").cast("array<double>"),
-            F.to_json(F.col("metadata")).alias("metadata_json"),
-            F.col("level").cast("int"),
-        )
-        changes = base_rows.unionByName(changes)
 
-    n = shuffle_partitions or changes.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    parted = changes.repartition(int(n), "id").sortWithinPartitions("id", "seq")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry_id, carry_rows, carry_state = None, [], None
-        out: list[dict] = []
-
-        def rowdicts(pdf):
-            for t in pdf.itertuples(index=False):
-                md = json.loads(t.metadata_json) if isinstance(t.metadata_json, str) else None
-                vec = list(t.vector) if t.vector is not None else None
-                lvl = int(t.level) if pd.notna(t.level) else None
-                yield dict(seq=int(t.seq), op=t.op, vector=vec, metadata=md, level=lvl)
-
-        for pdf in batches:
-            for id_val, grp in pdf.groupby("id", sort=False):
-                rows = list(rowdicts(grp))
-                if id_val == carry_id:
-                    carry_rows.extend(rows)
-                else:
-                    if carry_id is not None:
-                        _fold_group(carry_id, carry_rows, carry_state, out)
-                    carry_id, carry_rows, carry_state = id_val, rows, None
-            if len(out) > 50000:
-                yield pd.DataFrame(out, columns=list(_schema_cols()))
-                out = []
-        if carry_id is not None:
-            _fold_group(carry_id, carry_rows, carry_state, out)
-        if out:
-            yield pd.DataFrame(out, columns=list(_schema_cols()))
-
-    result = parted.mapInPandas(run, schema=_OUT_SCHEMA)
-    return result.withColumn(
-        "metadata", F.from_json(F.col("metadata_json"), "MAP<STRING,STRING>")
-    ).drop("metadata_json")
-
-
-def _schema_cols():
-    return ("kind", "id", "vector", "metadata_json", "level", "seq", "op", "error")
-
-
-def apply_changes_sql(
-    base: DataFrame | None,
-    changes: DataFrame,
-    m: int = DEFAULT_M,
-) -> DataFrame:
-    """Fully relational changelog compaction — same semantics as
-    ``apply_changes`` but zero Python in the row loop (Catalyst windows +
-    explode/regroup only), the 100 TB default.
+    Fully relational: zero Python in the row loop (Catalyst windows +
+    one regrouping aggregation).
 
     The automaton collapses to window functions because an op's validity
     depends only on the *last preceding structural op* (base/insert/
@@ -213,10 +88,9 @@ def apply_changes_sql(
     The final value of a live id comes from its last insert segment:
     the last valid insert plus every later update — vector = last
     non-null vector, level = the insert's level, metadata = per-key
-    last value (explode → window → map regroup).
+    last value (a seq-ordered fold over the ops' map entries, later
+    keys overwriting earlier ones).
     """
-    from pyspark.sql import Window
-
     if "level" not in changes.columns:
         changes = changes.withColumn(
             "level", F.when(F.col("op") == "insert", assign_level(F.col("id"), m))

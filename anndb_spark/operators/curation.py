@@ -261,26 +261,24 @@ def _hex_len(buckets: int) -> int:
     return h
 
 
-def _dsir_grams(w: Column) -> Column:
-    """DSIR's feature set: unigrams ++ bigrams of the token array
-    (hashed n-gram bag, Xie et al. 2023 §3.1)."""
-    return F.concat(w, _word_ngrams(w, 2))
-
-
-def _dsir_doc_bucket_counts_fast(
+def _dsir_doc_bucket_counts(
     df: DataFrame, text_col: str, id_col: str, hex_len: int,
     flag_col: str | None = None,
 ) -> DataFrame:
     """(id, b, n[, flag]) — the per-(doc, bucket) gram-occurrence
-    counts, computed in an Arrow-batched Python kernel: hashlib's C md5
-    + an in-task Counter replace the exploded 20x-row stream through an
-    interpreted bigram HOF, a JVM md5 projection and a corpus-sized
-    groupBy exchange (the `minhash_signatures_fast` device; r13
-    optimization, guide §4.2).  Bit-identical to the expression path:
-    same split-on-space tokens (Java split keeps interior+trailing
-    empties exactly like str.split(" ")), same space-joined bigrams,
-    same lowercase md5-hex prefix, same exact counts — pinned by
-    tests/test_curation.py kernel-parity test."""
+    counts over DSIR's feature set, the unigrams ++ bigrams of the
+    token array (hashed n-gram bag, Xie et al. 2023 §3.1), computed in
+    an Arrow-batched Python kernel: hashlib's C md5 + an in-task
+    Counter replace the exploded 20x-row stream through an interpreted
+    bigram HOF, a JVM md5 projection and a corpus-sized groupBy
+    exchange (the `minhash_signatures_fast` device; r13 optimization,
+    guide §4.2).  Bit-identical to that expression form and the SQL
+    oracle: same split-on-space tokens (Java split keeps
+    interior+trailing empties exactly like str.split(" ")), same
+    space-joined bigrams, same lowercase md5-hex prefix, same exact
+    counts — pinned against the expression form in
+    tests/test_curation.py.  ``flag_col`` (optional) is carried
+    through per doc — the target_filter form's in-target marker."""
     import hashlib
     from collections import Counter
 
@@ -296,8 +294,8 @@ def _dsir_doc_bucket_counts_fast(
                 zip(pdf[id_col], pdf[text_col])
             ):
                 if text is None:
-                    # expr path: explode(split(NULL)) emits no rows —
-                    # the doc drops from the model and the per-doc sum
+                    # as explode(split(NULL)), which emits no rows: the
+                    # doc drops from the model and the per-doc sum
                     continue
                 words = text.split(" ")
                 grams = list(words)
@@ -333,27 +331,6 @@ def _dsir_doc_bucket_counts_fast(
     )
 
 
-def _dsir_doc_buckets(
-    df: DataFrame, text_col: str, id_col: str, hex_len: int,
-    flag_col: str | None = None,
-) -> DataFrame:
-    """(id, bucket-hex[, flag]) — one row per gram OCCURRENCE (not
-    distinct): the hashed n-gram bag both DSIR models count over.
-    ``flag_col`` (optional) is carried through the explode — the
-    target_filter form's per-doc in-target marker."""
-    w = F.split(F.col(text_col), " ")
-    carry = [F.col(flag_col)] if flag_col else []
-    return df.select(
-        F.col(id_col),
-        *carry,
-        F.explode(_dsir_grams(w)).alias("g"),
-    ).select(
-        id_col,
-        *carry,
-        F.substring(F.md5(F.col("g")), 1, hex_len).alias("b"),
-    )
-
-
 def dsir_weights(
     raw: DataFrame,
     target: DataFrame | None = None,
@@ -364,7 +341,6 @@ def dsir_weights(
     id_col: str = "doc_id",
     state_dir: str | None = None,
     target_filter: Column | None = None,
-    kernel: str = "fast",
 ) -> DataFrame:
     """Per-document DSIR importance weight (Xie et al. 2023, "Data
     Selection for Language Models via Importance Resampling"): score
@@ -448,23 +424,11 @@ def dsir_weights(
         raw = raw.withColumn(
             "_t", F.when(target_filter, F.lit(1)).otherwise(F.lit(0))
         )
-    if kernel == "fast":
-        # Arrow md5 kernel: per-doc counts computed in-task — no gram
-        # explode, no JVM md5, no corpus-sized groupBy exchange
-        # (bit-identical; `minhash_signatures_fast` device, r13)
-        dbc = _dsir_doc_bucket_counts_fast(
-            raw, text_col, id_col, hl, flag_col=flag
-        ).localCheckpoint()
-    else:
-        dbc_agg = [F.count("*").cast("long").alias("n")]
-        if flag:
-            dbc_agg.append(F.min("_t").alias("_t"))
-        dbc = (
-            _dsir_doc_buckets(raw, text_col, id_col, hl, flag_col=flag)
-            .groupBy(id_col, "b")
-            .agg(*dbc_agg)
-            .localCheckpoint()
-        )
+    # Arrow md5 kernel: per-doc counts computed in-task — no gram
+    # explode, no JVM md5, no corpus-sized groupBy exchange
+    dbc = _dsir_doc_bucket_counts(
+        raw, text_col, id_col, hl, flag_col=flag
+    ).localCheckpoint()
     if target_filter is not None:
         # FUSED model pass (r14, guide §2.4): the raw and target bucket
         # models were two separate aggregation passes (two exchanges)
@@ -503,16 +467,11 @@ def dsir_weights(
         # and tgt_total: un-checkpointed, Catalyst duplicates the
         # subtree and the target corpus would tokenize twice (target
         # can be a large corpus slice, not just a tiny eval set)
-        if kernel == "fast":
-            tgt_base = _dsir_doc_bucket_counts_fast(
-                target, text_col, id_col, hl
-            )
-            tgt_ct = F.sum("n").cast("long").alias("ct")
-        else:
-            tgt_base = _dsir_doc_buckets(target, text_col, id_col, hl)
-            tgt_ct = F.count("*").cast("long").alias("ct")
         tgt_model = (
-            tgt_base.groupBy("b").agg(tgt_ct).localCheckpoint()
+            _dsir_doc_bucket_counts(target, text_col, id_col, hl)
+            .groupBy("b")
+            .agg(F.sum("n").cast("long").alias("ct"))
+            .localCheckpoint()
         )
     if target_filter is None:
         # the target model can hold buckets absent from raw (a separate
@@ -608,10 +567,10 @@ def write_dsir_state(
       buckets hashed at another.
     """
     hl = _hex_len(buckets)
-    # fast kernel (r13): summing per-doc bucket counts == counting the
-    # exploded gram rows (identical longs)
+    # summing per-doc bucket counts == counting the exploded gram rows
+    # (identical longs)
     model = (
-        _dsir_doc_bucket_counts_fast(target, text_col, id_col, hl)
+        _dsir_doc_bucket_counts(target, text_col, id_col, hl)
         .groupBy("b")
         .agg(F.sum("n").cast("long").alias("ct"))
     )

@@ -164,8 +164,10 @@ def minhash_signatures_fast(
     min), but hashlib's C md5 replaces the Catalyst-interpreted
     per-shingle HOF expression — higher-order functions don't
     whole-stage-codegen, which made the expression path the single
-    largest bench leg (VERDICT r2 wrong #5).  Keep the expression path
-    for dual-dialect SQL surface parity; this is the perf default.
+    largest bench leg (VERDICT r2 wrong #5).  Every MinHash operator
+    signs with this kernel; `minhash_signatures` stays as the
+    dual-dialect expression form the SQL oracle mirrors, and the tests
+    pin the two signature tables equal.
 
     ``include_shingles=False`` emits (id, sig) only: the shingle
     arrays are ~10-15x the corpus text bytes, so a consumer that only
@@ -219,6 +221,36 @@ def minhash_signatures_fast(
     )
 
 
+def _band_rows(num_hashes: int, bands: int) -> int:
+    """Signature entries per LSH band.  ``bands`` must divide
+    ``num_hashes``: a larger band count leaves zero-entry bands whose
+    empty value collides for every pair (an O(N²) verify), and a
+    non-divisor silently drops the trailing hashes."""
+    if not (1 <= bands <= num_hashes and num_hashes % bands == 0):
+        raise ValueError(
+            f"bands must divide num_hashes with 1 <= bands <= num_hashes, "
+            f"got bands={bands}, num_hashes={num_hashes}"
+        )
+    return num_hashes // bands
+
+
+def _banded(sigs: DataFrame, rows: int, bands: int) -> DataFrame:
+    """(id, band, val): each band's value is its ``rows`` signature
+    entries concatenated."""
+    band_exprs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat(
+                *[F.element_at("sig", b * rows + r + 1) for r in range(rows)]
+            ).alias("val"),
+        )
+        for b in range(bands)
+    ]
+    return sigs.select(
+        "id", F.explode(F.array(*band_exprs)).alias("bv")
+    ).select("id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -227,28 +259,22 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     shingle_n: int = 3,
-    kernel: str = "fast",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH banding + exact-jaccard check.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold,
     considering only pairs that collide in at least one band — the scalable
-    (non-O(N²)) candidate generation.
+    (non-O(N²)) candidate generation.  ``bands`` must divide
+    ``num_hashes``.
 
-    ``kernel='fast'`` (default) computes signatures with the Arrow md5
-    kernel; ``'expr'`` uses the dual-dialect column expression.  Both are
-    bit-identical, so either is oracle-checkable.
+    Signatures come from the Arrow md5 kernel
+    (`minhash_signatures_fast`), bit-identical to the dual-dialect
+    expression `minhash_signatures`, so the pairs are oracle-checkable.
     """
-    rows = num_hashes // bands
-    if kernel == "fast":
-        sigs = minhash_signatures_fast(
-            df, text_col, id_col, num_hashes, shingle_n,
-            include_shingles=False,
-        )
-    else:
-        sigs = minhash_signatures(
-            df, text_col, id_col, num_hashes, shingle_n
-        ).select("id", "sig")
+    rows = _band_rows(num_hashes, bands)
+    sigs = minhash_signatures_fast(
+        df, text_col, id_col, num_hashes, shingle_n, include_shingles=False
+    )
     # localCheckpoint: the band self-join consumes sigs twice, and when
     # the planner picks a broadcast join there is no exchange above the
     # kernel for ReuseExchange to unify — the signature kernel executed
@@ -271,13 +297,7 @@ def minhash_lsh_pairs(
     # times per query (once per non-canonical-matching consumer
     # subtree) — guide §2.3 "shuffle keys and metadata instead of
     # payloads" / §4.1 column minimization.
-    band_exprs = []
-    for b in range(bands):
-        parts = [F.element_at("sig", b * rows + r + 1) for r in range(rows)]
-        band_exprs.append(F.struct(F.lit(b).alias("band"), F.concat(*parts).alias("val")))
-    banded = sigs.select(
-        "id", F.explode(F.array(*band_exprs)).alias("bv")
-    ).select("id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
+    banded = _banded(sigs, rows, bands)
 
     a = banded.alias("a")
     b = banded.alias("b")
@@ -313,8 +333,15 @@ def minhash_lsh_pairs(
     # the two extra driver round-trips cost MORE than the second scan
     # (measured 2.045 → 2.363 s at sf0.1), so the direct two-scan form
     # stays below the threshold.  Identical rows either way
-    # (parity-pinned).
+    # (parity-pinned).  The candidate set grows with the corpus and its
+    # duplicate rate, so each candidate-bounded frame is hinted only
+    # when its own estimate (taken over the checkpoint) fits the
+    # threshold; a larger one joins un-hinted instead of overrunning
+    # the broadcast cap.
     from anndb_spark.utils import plan_size_over_broadcast_threshold
+
+    def broadcast_if_fits(d: DataFrame) -> DataFrame:
+        return d if plan_size_over_broadcast_threshold(d) else F.broadcast(d)
 
     if plan_size_over_broadcast_threshold(df):
         cand = cand.localCheckpoint()
@@ -323,13 +350,13 @@ def minhash_lsh_pairs(
             .union(cand.select(F.col("id_b").alias("id")))
             .distinct()
         )
-        ctext = texts.join(F.broadcast(cand_ids), "id").localCheckpoint()
-        side_a = F.broadcast(
+        ctext = texts.join(broadcast_if_fits(cand_ids), "id").localCheckpoint()
+        side_a = broadcast_if_fits(
             ctext.select(
                 F.col("id").alias("id_a"), F.col("_txt").alias("_txt_a")
             )
         )
-        side_b = F.broadcast(
+        side_b = broadcast_if_fits(
             ctext.select(
                 F.col("id").alias("id_b"), F.col("_txt").alias("_txt_b")
             )
@@ -375,32 +402,15 @@ def minhash_banded(
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
-    kernel: str = "fast",
 ) -> tuple[DataFrame, DataFrame]:
     """((id, shingles), (id, band, val)) — the reusable LSH ingest
     state for one side of an incremental near-dup check.  Persist (or
     write at ingest) both frames to amortize signature cost across
-    many batches — `stream_neardup` does exactly that."""
-    rows = num_hashes // bands
-    make_sigs = (
-        minhash_signatures_fast if kernel == "fast" else minhash_signatures
-    )
-    sigs = make_sigs(df, text_col, id_col, num_hashes, shingle_n)
-    band_exprs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat(
-                *[F.element_at("sig", b * rows + r + 1) for r in range(rows)]
-            ).alias("val"),
-        )
-        for b in range(bands)
-    ]
-    bd = sigs.select(
-        "id", F.explode(F.array(*band_exprs)).alias("bv")
-    ).select(
-        "id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val")
-    )
-    return sigs.select("id", "shingles"), bd
+    many batches — `stream_neardup` does exactly that.  ``bands`` must
+    divide ``num_hashes``."""
+    rows = _band_rows(num_hashes, bands)
+    sigs = minhash_signatures_fast(df, text_col, id_col, num_hashes, shingle_n)
+    return sigs.select("id", "shingles"), _banded(sigs, rows, bands)
 
 
 def minhash_incremental_pairs(
@@ -412,7 +422,6 @@ def minhash_incremental_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     shingle_n: int = 3,
-    kernel: str = "fast",
     corpus_state: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Incremental-ingest near-dup check: (new_id, corpus_id, jaccard)
@@ -442,13 +451,13 @@ def minhash_incremental_pairs(
             "shadow the DataFrame"
         )
     new_sh, new_bd = minhash_banded(
-        new_df, text_col, id_col, num_hashes, bands, shingle_n, kernel
+        new_df, text_col, id_col, num_hashes, bands, shingle_n
     )
     if corpus_state is not None:
         old_sh, old_bd = corpus_state
     else:
         old_sh, old_bd = minhash_banded(
-            corpus_df, text_col, id_col, num_hashes, bands, shingle_n, kernel
+            corpus_df, text_col, id_col, num_hashes, bands, shingle_n
         )
     cand = (
         new_bd.alias("a")
@@ -512,10 +521,13 @@ def simhash_col(text: Column, bits: int = 16, salt: str = "") -> Column:
     Hex-digit trick keeps it portable: digit >= '8' ⇔ high bit of that
     nibble is 1 (bits limited to 32 = md5 hex length).  ``salt`` prefixes
     the hashed word — independent salts give independent 32-bit halves,
-    which is how `simhash64_cols` reaches 64 bits without leaving
-    md5-hex portability."""
+    which is how the 64-bit signature (`simhash64_signatures_fast`)
+    reaches 64 bits without leaving md5-hex portability."""
     if bits > 32:
-        raise ValueError("simhash_col is limited to 32 bits (one md5); use simhash64_cols")
+        raise ValueError(
+            "simhash_col is limited to 32 bits (one md5); "
+            "use simhash64_signatures_fast"
+        )
     w = F.array_distinct(words_col(text))
     total = F.lit(0)
     for j in range(bits):
@@ -531,27 +543,21 @@ def simhash_col(text: Column, bits: int = 16, salt: str = "") -> Column:
     return total.cast("long")
 
 
-def simhash64_cols(text: Column) -> tuple[Column, Column]:
-    """64-bit SimHash as two independent 32-bit halves ``(lo, hi)``.
-
-    lo hashes the bare word, hi hashes ``'1:' || word`` — two md5-hex
-    signatures, each BIGINT-safe (no sign-bit issues in either Spark or
-    the SQL oracle), combined only at band-extraction / hamming time.
-    16 bits saturates on any real corpus (~40% of all pairs collided at
-    hamming ≤2 on a 500-doc sample — VERDICT r3 wrong #3); 64 bits is
-    the reference class for corpus-scale near-dup detection."""
-    return simhash_col(text, 32, salt=""), simhash_col(text, 32, salt="1:")
-
-
 def simhash64_signatures_fast(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, lo, hi) 64-bit SimHash signatures via an Arrow-batched
-    hashlib kernel — bit-identical to `simhash64_cols` (same md5-hex
-    scheme: char j of md5(word) / md5('1:'+word), '≥8' ⇔ byte ≥ 56 on
-    lowercase hex, sum of ±1 over DISTINCT words), but one C md5 per
-    word instead of 64 Catalyst-interpreted aggregate expressions.
-    The expression path stays as the dual-dialect oracle surface."""
+    hashlib kernel: two independent 32-bit halves, lo hashing the bare
+    word and hi ``'1:' || word``, each BIGINT-safe (no sign-bit issues
+    in Spark or the SQL oracle) and combined only at band-extraction /
+    hamming time.  Each half is ``simhash_col(text, 32, salt)``
+    bit for bit (same md5-hex scheme: char j of md5(word), '≥8' ⇔
+    byte ≥ 56 on lowercase hex, sum of ±1 over DISTINCT words), but
+    one C md5 per word instead of 64 Catalyst-interpreted aggregate
+    expressions.  16 bits saturates on any real corpus (~40% of all
+    pairs collided at hamming ≤2 on a 500-doc sample — VERDICT r3
+    wrong #3); 64 bits is the reference class for corpus-scale
+    near-dup detection."""
     import hashlib
 
     id_type = df.schema[id_col].dataType.simpleString()
@@ -622,7 +628,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     bits: int = 64,
     max_hamming: int = 3,
-    kernel: str = "fast",
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance.
 
@@ -633,24 +638,16 @@ def simhash_pairs(
     the same banded equi-join shape (SMJ + AQE skew split at scale) as
     MinHash-LSH.
 
-    Default is the 64-bit two-half signature (`simhash64_cols`) — 16
-    bits saturate on any real corpus (VERDICT r3 wrong #3); bits ≤ 32
-    selects the single-md5 signature (kept for the compact oracle).
-    ``kernel='fast'`` (64-bit only) computes signatures with the
-    bit-identical Arrow hashlib kernel; ``'expr'`` uses the
-    dual-dialect column expression — either is oracle-checkable."""
+    Default is the 64-bit two-half signature
+    (`simhash64_signatures_fast`) — 16 bits saturate on any real corpus
+    (VERDICT r3 wrong #3); bits ≤ 32 selects the single-md5 signature
+    (`simhash_col`, kept for the compact oracle)."""
     df = ensure_parallelism(df)
     bounds = simhash_band_bounds(bits, max_hamming)
     if bits > 32:
         if bits != 64:
             raise ValueError("simhash_pairs supports bits <= 32 or bits == 64")
-        if kernel == "fast":
-            sigs = simhash64_signatures_fast(df, text_col, id_col)
-        else:
-            lo, hi = simhash64_cols(F.col(text_col))
-            sigs = df.select(
-                F.col(id_col).alias("id"), lo.alias("lo"), hi.alias("hi")
-            )
+        sigs = simhash64_signatures_fast(df, text_col, id_col)
         band_exprs = [
             F.struct(
                 F.lit(b).alias("band"),

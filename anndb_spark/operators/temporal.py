@@ -169,15 +169,14 @@ def funnel(
     key_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
-    form: str = "fold",
 ) -> DataFrame:
     """Ordered-funnel analysis: how many keys reached each stage of
     ``stages`` IN ORDER (each stage's event strictly after the
     previous stage's earliest qualifying event).  Returns
     (step, stage, n_keys) with step 1-based.
 
-    ``form="fold"`` (default, r13): ONE filtered scan + ONE groupBy
-    exchange — per key the relevant events are gathered sorted
+    Scale shape: ONE filtered scan + ONE groupBy exchange — per key
+    the relevant events are gathered sorted
     (``array_sort(collect_list(struct(ts, type)))``) and a left fold
     (``aggregate``) walks them once, setting stage k's reach
     timestamp from the first type-k event strictly after stage k-1's
@@ -185,123 +184,96 @@ def funnel(
     first qualifying event IS the min; equal-ts ties fail the strict
     ``>`` whichever side of the sort they land on, so the struct
     tiebreak order is immaterial).  Per-stage counts then reduce in
-    one ≤|stages|-cell final agg.  The pre-r13 ``form="join"``
-    encoding — stage 1 a grouped min(ts), stage k a grouped min over
-    events equi-joined to stage k-1 — re-scans the event table per
-    stage and shuffles each stage's per-key table (executed plan: 5
-    scans / 4 exchanges at 3 stages); at 100 TB that is |stages|
-    passes over the stream vs one.  Null-ts events are ignored in
-    both forms (min skips nulls / the fold's guard skips them).
+    one ≤|stages|-cell final agg.  A relational encoding — stage 1 a
+    grouped min(ts), stage k a grouped min over events equi-joined to
+    stage k-1 — gives the same counts but re-scans the event table
+    per stage and shuffles each stage's per-key table (executed plan:
+    5 scans / 4 exchanges at 3 stages); at 100 TB that is |stages|
+    passes over the stream vs one.  Null-ts events are ignored (the
+    fold's guard skips them).
     """
     if len(stages) < 1:
         raise ValueError("need at least one stage")
-    if form == "fold":
-        k = len(stages)
-        stage_arr = F.array(*[F.lit(s) for s in stages])
-        evs = events.filter(F.col(type_col).isin(stages)).select(
-            F.col(key_col).alias("_k"),
-            F.col(ts_col).alias("_t"),
-            F.col(type_col).alias("_y"),
-        )
-        ts_type = evs.schema["_t"].dataType
-        acc0 = F.array_repeat(F.lit(None).cast(ts_type), k)
+    k = len(stages)
+    stage_arr = F.array(*[F.lit(s) for s in stages])
+    evs = events.filter(F.col(type_col).isin(stages)).select(
+        F.col(key_col).alias("_k"),
+        F.col(ts_col).alias("_t"),
+        F.col(type_col).alias("_y"),
+    )
+    ts_type = evs.schema["_t"].dataType
+    acc0 = F.array_repeat(F.lit(None).cast(ts_type), k)
 
-        def step_fn(acc: Column, e: Column) -> Column:
-            # stages fill strictly in order, so the count of set cells
-            # IS the 0-based index of the next unreached stage
-            j = F.size(F.filter(acc, lambda x: x.isNotNull()))
-            target = F.get(stage_arr, j)  # null once all stages reached
-            prev_rt = F.get(acc, j - F.lit(1))  # null at j == 0
-            cond = (
-                e["t"].isNotNull()
-                & (e["y"] == target)
-                & ((j == F.lit(0)) | (e["t"] > prev_rt))
-            )
-            upd = F.transform(
-                acc, lambda x, i: F.when(i == j, e["t"]).otherwise(x)
-            )
-            return F.when(cond, upd).otherwise(acc)
+    def step_fn(acc: Column, e: Column) -> Column:
+        # stages fill strictly in order, so the count of set cells
+        # IS the 0-based index of the next unreached stage
+        j = F.size(F.filter(acc, lambda x: x.isNotNull()))
+        target = F.get(stage_arr, j)  # null once all stages reached
+        prev_rt = F.get(acc, j - F.lit(1))  # null at j == 0
+        cond = (
+            e["t"].isNotNull()
+            & (e["y"] == target)
+            & ((j == F.lit(0)) | (e["t"] > prev_rt))
+        )
+        upd = F.transform(
+            acc, lambda x, i: F.when(i == j, e["t"]).otherwise(x)
+        )
+        return F.when(cond, upd).otherwise(acc)
 
-        reach = (
-            evs.groupBy("_k")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("_t").alias("t"), F.col("_y").alias("y"))
-                    )
-                ).alias("es"),
-                # join-form stage 1 is a bare groupBy: a key with ONLY
-                # null-ts stage-1 events still forms a group (min=null)
-                # and is counted, though it can never advance further
-                F.max(F.col("_y") == F.lit(stages[0])).alias("_has_s1"),
-            )
-            .select(
-                F.size(
-                    F.filter(
-                        F.aggregate(F.col("es"), acc0, step_fn),
-                        lambda x: x.isNotNull(),
-                    )
-                ).alias("_max_step"),
-                F.col("_has_s1"),
-            )
-        )
-        counts = reach.agg(
-            *[
-                F.coalesce(
-                    F.sum(
-                        (
-                            F.col("_has_s1")
-                            if s == 1
-                            else (F.col("_max_step") >= s)
-                        ).cast("long")
-                    ),
-                    F.lit(0),
+    reach = (
+        evs.groupBy("_k")
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(F.col("_t").alias("t"), F.col("_y").alias("y"))
                 )
-                .cast("long")
-                .alias(f"_c{s}")
-                for s in range(1, k + 1)
-            ]
+            ).alias("es"),
+            # stage 1 counts every key with a stage-1 event: a key
+            # with ONLY null-ts stage-1 events is counted (as a
+            # grouped min(ts) counts it), though it can never
+            # advance further
+            F.max(F.col("_y") == F.lit(stages[0])).alias("_has_s1"),
         )
-        steps = F.array(
-            *[
-                F.struct(
-                    F.lit(s).cast("int").alias("step"),
-                    F.lit(stages[s - 1]).alias("stage"),
-                    F.col(f"_c{s}").alias("n_keys"),
+        .select(
+            F.size(
+                F.filter(
+                    F.aggregate(F.col("es"), acc0, step_fn),
+                    lambda x: x.isNotNull(),
                 )
-                for s in range(1, k + 1)
-            ]
+            ).alias("_max_step"),
+            F.col("_has_s1"),
         )
-        return counts.select(
-            F.explode(steps).alias("_r")
-        ).select("_r.step", "_r.stage", "_r.n_keys")
-    out = []
-    prev = None  # (key, reach_ts) of the previous stage
-    for step, stage in enumerate(stages, start=1):
-        ev = events.filter(F.col(type_col) == stage).select(
-            F.col(key_col).alias("_k"), F.col(ts_col).alias("_t")
-        )
-        if prev is None:
-            cur = ev.groupBy("_k").agg(F.min("_t").alias("_rt"))
-        else:
-            cur = (
-                ev.join(prev, on="_k")
-                .filter(F.col("_t") > F.col("_rt"))
-                .groupBy("_k")
-                .agg(F.min("_t").alias("_rt"))
+    )
+    counts = reach.agg(
+        *[
+            F.coalesce(
+                F.sum(
+                    (
+                        F.col("_has_s1")
+                        if s == 1
+                        else (F.col("_max_step") >= s)
+                    ).cast("long")
+                ),
+                F.lit(0),
             )
-        out.append(
-            cur.agg(
-                F.lit(step).cast("int").alias("step"),
-                F.lit(stage).alias("stage"),
-                F.count("*").alias("n_keys"),
+            .cast("long")
+            .alias(f"_c{s}")
+            for s in range(1, k + 1)
+        ]
+    )
+    steps = F.array(
+        *[
+            F.struct(
+                F.lit(s).cast("int").alias("step"),
+                F.lit(stages[s - 1]).alias("stage"),
+                F.col(f"_c{s}").alias("n_keys"),
             )
-        )
-        prev = cur
-    res = out[0]
-    for d in out[1:]:
-        res = res.unionByName(d)
-    return res
+            for s in range(1, k + 1)
+        ]
+    )
+    return counts.select(
+        F.explode(steps).alias("_r")
+    ).select("_r.step", "_r.stage", "_r.n_keys")
 
 
 def range_join(

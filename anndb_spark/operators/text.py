@@ -257,148 +257,71 @@ def repetition_signals(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    kernel: str = "fast",
 ) -> DataFrame:
     """Gopher-style repetition filters for LLM corpora (Rae et al. 2021,
     arXiv:2112.11446 §A1.1): per document the duplicate-word fraction
     and the fraction of all word 2-grams / 3-grams taken by the single
     most frequent one.  High values flag boilerplate / degenerate text.
 
-    The statistic is per-document — no cross-document state — so
-    ``kernel="fast"`` (default, r13) computes all three gram levels in
-    one Arrow-batched pass: tokenize once, count 1/2/3-grams with an
-    in-task Counter, emit the finished row.  The corpus is read ONCE
-    with ZERO shuffles, versus the relational form's 3 Generates +
-    3 two-level aggregations + 2 id joins (6 exchanges), whose shuffled
-    gram rows are ~6x the corpus token count (guide §2.4, §4.2).
-    Outputs are bit-identical (parity-pinned: same split-on-space
-    tokens — words carry no spaces, so tuple n-gram counts equal the
-    expression form's space-joined string counts; fractions are the
-    same two-long IEEE divisions).  ``kernel="expr"`` keeps the
-    relational plan for the SQL surface.
+    The statistic is per-document — no cross-document state — so all
+    three gram levels are computed in one Arrow-batched pass: tokenize
+    once, count 1/2/3-grams with an in-task Counter, emit the finished
+    row.  The corpus is read ONCE with ZERO shuffles, versus a
+    relational form's 3 Generates + 3 two-level aggregations + 2 id
+    joins (6 exchanges), whose shuffled gram rows are ~6x the corpus
+    token count (guide §2.4, §4.2).  Outputs are bit-identical to that
+    form and to the SQL oracle (same split-on-space tokens — words
+    carry no spaces, so tuple n-gram counts equal space-joined string
+    counts; fractions are the same two-long IEEE divisions)."""
+    from collections import Counter
 
-    Scale shape (expr form): explode → two keyed aggregations — each
-    n-gram row is seen once (linear work, partial aggregation
-    map-side), unlike the per-row ``array_max(transform(...))``
-    formulation whose quadratic per-document cost blows up on long
-    documents.  All three aggregates share the id key, so AQE plans
-    broadcast-free co-partitioned joins."""
-    if kernel == "fast":
-        from collections import Counter
+    import pandas as pd
 
-        import pandas as pd
+    from anndb_spark.utils import ensure_parallelism
 
-        from anndb_spark.utils import ensure_parallelism
+    id_type = df.schema[id_col].dataType.simpleString()
 
-        id_type = df.schema[id_col].dataType.simpleString()
-
-        def run(batches):
-            for pdf in batches:
-                ids, ntok, dupf, bif, trif = [], [], [], [], []
-                for did, text in zip(pdf["id"], pdf["t"]):
-                    if text is None:
-                        continue  # split(NULL) explodes to no rows
-                    words = text.split(" ")
-                    tot1 = len(words)  # never 0: ''.split(' ') == ['']
-                    ids.append(did)
-                    ntok.append(tot1)
-                    dupf.append(1.0 - len(set(words)) / tot1)
-                    if tot1 >= 2:
-                        c2 = Counter(zip(words, words[1:]))
-                        bif.append(max(c2.values()) / (tot1 - 1))
-                    else:
-                        bif.append(0.0)
-                    if tot1 >= 3:
-                        c3 = Counter(zip(words, words[1:], words[2:]))
-                        trif.append(max(c3.values()) / (tot1 - 2))
-                    else:
-                        trif.append(0.0)
-                yield pd.DataFrame(
-                    {
-                        "id": pd.Series(ids, dtype=pdf["id"].dtype),
-                        "n_tokens": pd.Series(ntok, dtype="int64"),
-                        "dup_word_fraction": pd.Series(
-                            dupf, dtype="float64"
-                        ),
-                        "top_bigram_fraction": pd.Series(
-                            bif, dtype="float64"
-                        ),
-                        "top_trigram_fraction": pd.Series(
-                            trif, dtype="float64"
-                        ),
-                    }
-                )
-
-        return (
-            ensure_parallelism(df)
-            .select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-            .mapInPandas(
-                run,
-                schema=(
-                    f"id {id_type}, n_tokens LONG,"
-                    " dup_word_fraction DOUBLE,"
-                    " top_bigram_fraction DOUBLE,"
-                    " top_trigram_fraction DOUBLE"
-                ),
+    def run(batches):
+        for pdf in batches:
+            ids, ntok, dupf, bif, trif = [], [], [], [], []
+            for did, text in zip(pdf["id"], pdf["t"]):
+                if text is None:
+                    continue  # split(NULL) explodes to no rows
+                words = text.split(" ")
+                tot1 = len(words)  # never 0: ''.split(' ') == ['']
+                ids.append(did)
+                ntok.append(tot1)
+                dupf.append(1.0 - len(set(words)) / tot1)
+                if tot1 >= 2:
+                    c2 = Counter(zip(words, words[1:]))
+                    bif.append(max(c2.values()) / (tot1 - 1))
+                else:
+                    bif.append(0.0)
+                if tot1 >= 3:
+                    c3 = Counter(zip(words, words[1:], words[2:]))
+                    trif.append(max(c3.values()) / (tot1 - 2))
+                else:
+                    trif.append(0.0)
+            yield pd.DataFrame(
+                {
+                    "id": pd.Series(ids, dtype=pdf["id"].dtype),
+                    "n_tokens": pd.Series(ntok, dtype="int64"),
+                    "dup_word_fraction": pd.Series(dupf, dtype="float64"),
+                    "top_bigram_fraction": pd.Series(bif, dtype="float64"),
+                    "top_trigram_fraction": pd.Series(trif, dtype="float64"),
+                }
             )
-        )
-    t = F.col(text_col)
-    w = _tokens(t)
-    words = df.select(F.col(id_col).alias("id"), w.alias("w"))
 
-    def gram_stats(n: int, out: str) -> DataFrame:
-        if n == 1:
-            grams = F.col("w")
-        else:
-            # zip the array against its n-1 shifted selves
-            glen = F.greatest(
-                F.size(F.col("w")) - F.lit(n - 1), F.lit(0)
-            )  # docs shorter than n have no n-grams (negative slice len throws)
-            parts = [F.slice(F.col("w"), k + 1, glen) for k in range(n)]
-            grams = parts[0]
-            for p in parts[1:]:
-                grams = F.zip_with(
-                    grams, p, lambda a, b: F.concat_ws(" ", a, b)
-                )
-        return (
-            words.select("id", F.explode(grams).alias("gram"))
-            .groupBy("id", "gram")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .groupBy("id")
-            .agg(
-                F.sum("cnt").alias(f"_tot{n}"),
-                F.max("cnt").alias(f"_top{n}"),
-                F.count(F.lit(1)).alias(f"_uniq{n}"),
-            )
-            .select(
-                "id",
-                F.col(f"_tot{n}").alias(f"tot{n}"),
-                (
-                    F.col(f"_top{n}").cast("double")
-                    / F.col(f"_tot{n}").cast("double")
-                ).alias(out),
-                F.col(f"_uniq{n}").alias(f"uniq{n}"),
-            )
-        )
-
-    uni = gram_stats(1, "_f1")
-    bi = gram_stats(2, "top_bigram_fraction")
-    tri = gram_stats(3, "top_trigram_fraction")
     return (
-        uni.join(bi, "id", "left")
-        .join(tri, "id", "left")
-        .select(
-            "id",
-            F.col("tot1").cast("long").alias("n_tokens"),
-            (
-                F.lit(1.0)
-                - F.col("uniq1").cast("double") / F.col("tot1").cast("double")
-            ).alias("dup_word_fraction"),
-            F.coalesce(F.col("top_bigram_fraction"), F.lit(0.0)).alias(
-                "top_bigram_fraction"
-            ),
-            F.coalesce(F.col("top_trigram_fraction"), F.lit(0.0)).alias(
-                "top_trigram_fraction"
+        ensure_parallelism(df)
+        .select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
+        .mapInPandas(
+            run,
+            schema=(
+                f"id {id_type}, n_tokens LONG,"
+                " dup_word_fraction DOUBLE,"
+                " top_bigram_fraction DOUBLE,"
+                " top_trigram_fraction DOUBLE"
             ),
         )
     )
@@ -1075,12 +998,41 @@ def bm25_search_indexed_batch(
     )
 
 
+def _bigram_stream(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id_col, pos, tok, prev): every token of every non-null text
+    with its predecessor (null at position 0), built scan-side by a
+    transform-with-index over the token array (``prev = get(toks,
+    i-1)``) — no window, so the token stream is never shuffled or
+    sorted by id."""
+    arr = df.select(F.col(id_col), _tokens(F.col(text_col)).alias("_a"))
+    # posexplode_OUTER + null-drop: a plain posexplode makes
+    # InferFiltersFromGenerate add `size(transform(...)) > 0`,
+    # re-evaluating the whole transform once more per row (the
+    # dup_span_coverage lesson); split() never yields an empty array,
+    # so only null-text rows drop
+    return (
+        arr.select(
+            F.col(id_col),
+            F.posexplode_outer(
+                F.transform(
+                    F.col("_a"),
+                    lambda x, i: F.struct(
+                        x.alias("tok"),
+                        F.get(F.col("_a"), i - 1).alias("prev"),
+                    ),
+                )
+            ).alias("pos", "_s"),
+        )
+        .filter(F.col("pos").isNotNull())
+        .select(F.col(id_col), "pos", "_s.tok", "_s.prev")
+    )
+
+
 def bigram_logprob(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     round_digits: int = 10,
-    form: str = "zip",
 ) -> DataFrame:
     """Per-document fluency under the corpus's OWN bigram LM — the
     order-2 upgrade of `unigram_logprob` (CCNet-style filtering: word
@@ -1097,48 +1049,18 @@ def bigram_logprob(
     to ``round_digits`` (absorbs the 1-ULP JVM/libm ln disagreement),
     per-doc sum as a POSITION-ORDERED left fold.
 
-    Scale shape: ``form="zip"`` (default, r13) builds each token's
-    predecessor SCAN-SIDE — a transform-with-index over the staged
-    token array (``prev = get(toks, i-1)``, null at position 0 exactly
-    like ``lag``) — so the (pos, tok, prev) stream needs NO window:
-    the pre-r13 ``form="lag"`` ran an id-keyed lag window, i.e. a full
-    shuffle + sort of the TOKEN STREAM (the largest relation in the
-    plan) before any aggregation.  Remaining exchanges are the token /
-    bigram / context count aggregations (vocab-sized — AQE broadcasts
-    them back) and the final per-doc fold groupBy.  Nothing quadratic;
-    exchanges carry tokens and counts, never documents.
+    Scale shape: each token's predecessor is built SCAN-SIDE
+    (`_bigram_stream`, null at position 0 exactly like ``lag``), so
+    the (pos, tok, prev) stream needs NO window: an id-keyed lag
+    window would be a full shuffle + sort of the TOKEN STREAM (the
+    largest relation in the plan) before any aggregation.  The
+    exchanges are the token / bigram / context count aggregations
+    (vocab-sized — AQE broadcasts them back) and the final per-doc
+    fold groupBy.  Nothing quadratic; exchanges carry tokens and
+    counts, never documents.
     """
-    t = F.col(text_col)
-    if form == "zip":
-        arr = df.select(F.col(id_col), _tokens(t).alias("_a"))
-        # posexplode_OUTER + null-drop: a plain posexplode makes
-        # InferFiltersFromGenerate add `size(transform(...)) > 0`,
-        # re-evaluating the whole transform once more per row (the
-        # dup_span_coverage lesson); split() never yields an empty
-        # array, so only null-text rows drop — same as lag's explode
-        seq = (
-            arr.select(
-                F.col(id_col),
-                F.posexplode_outer(
-                    F.transform(
-                        F.col("_a"),
-                        lambda x, i: F.struct(
-                            x.alias("tok"),
-                            F.get(F.col("_a"), i - 1).alias("prev"),
-                        ),
-                    )
-                ).alias("pos", "_s"),
-            )
-            .filter(F.col("pos").isNotNull())
-            .select(F.col(id_col), "pos", "_s.tok", "_s.prev")
-        )
-        toks = seq.select(F.col(id_col), "pos", "tok")
-    else:
-        toks = df.select(
-            F.col(id_col), F.posexplode(_tokens(t)).alias("pos", "tok")
-        )
-        w = Window.partitionBy(id_col).orderBy("pos")
-        seq = toks.withColumn("prev", F.lag("tok").over(w))
+    seq = _bigram_stream(df, text_col, id_col)
+    toks = seq.select(F.col(id_col), "pos", "tok")
     uni = toks.groupBy("tok").agg(F.count("*").alias("c"))
     total = uni.agg(F.sum("c").alias("t"))
     uni_lp = uni.crossJoin(F.broadcast(total)).select(

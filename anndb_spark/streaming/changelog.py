@@ -10,8 +10,8 @@ index as they arrive (`storage/partition.go:435-474`,
   ``readStream`` (exactly-once via the checkpoint, which replaces the
   Raft hard-state),
 - every micro-batch folds new changes into the base snapshot with the
-  same ``apply_changes`` state machine used in batch (one semantics,
-  two execution modes),
+  same ``apply_changes_sql`` compactor ``Dataset.compact`` uses in batch
+  (one semantics, two execution modes),
 - windowed/watermarked aggregation over the events stream shows the
   standard watermark pattern for late data.
 """

@@ -45,18 +45,17 @@ def write_neardup_state(
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
-    kernel: str = "fast",
 ) -> None:
     """Write the corpus LSH state (`minhash_banded` output) to parquet
     under ``state_dir/{shingles,bands}`` — the ingest-time step of the
     100 TB streaming near-dup pipeline.  The stream then reads this
     on-disk state per micro-batch (`stream_neardup(state_dir=...)`)
     instead of pinning corpus-sized frames in executor memory for the
-    stream's lifetime."""
+    stream's lifetime.  ``bands`` must divide ``num_hashes``."""
     from anndb_spark.operators.dedup import minhash_banded
 
     sh, bd = minhash_banded(
-        corpus, text_col, id_col, num_hashes, bands, shingle_n, kernel
+        corpus, text_col, id_col, num_hashes, bands, shingle_n
     )
     sh.write.mode("overwrite").parquet(f"{state_dir}/shingles")
     bd.write.mode("overwrite").parquet(f"{state_dir}/bands")

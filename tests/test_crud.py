@@ -9,7 +9,6 @@ from hypothesis import strategies as st
 from anndb_spark.operators.crud import (
     ITEM_ALREADY_EXISTS,
     ITEM_NOT_FOUND,
-    apply_changes,
     apply_changes_sql,
     split_rejects,
     split_state,
@@ -47,12 +46,12 @@ def model(base, ops):
     return state, rejects
 
 
-def run_spark(spark, base, ops, impl=apply_changes):
+def run_spark(spark, base, ops):
     base_df = (
         spark.createDataFrame(base, BASE_SCHEMA) if base else None
     )
     changes_df = spark.createDataFrame(ops, CHANGES_SCHEMA)
-    applied = impl(base_df, changes_df).cache()
+    applied = apply_changes_sql(base_df, changes_df).cache()
     state = {
         r["id"]: (list(r["vector"]) if r["vector"] else None, dict(r["metadata"] or {}))
         for r in split_state(applied).collect()
@@ -108,7 +107,7 @@ def test_update_preserves_level(spark):
         ],
         CHANGES_SCHEMA + ", level INT",
     )
-    applied = apply_changes(None, ops_df)
+    applied = apply_changes_sql(None, ops_df)
     row = split_state(applied).collect()[0]
     assert row["level"] == 3 and row["vector"] == [2.0]
 
@@ -127,26 +126,13 @@ op_strategy = st.lists(
 
 @settings(max_examples=12, deadline=None)
 @given(ops=op_strategy)
-def test_property_matches_model(spark, ops):
-    seq_ops = [
-        (i, ident, op, vec if op != "delete" else None, md if op != "delete" else None)
-        for i, (op, ident, vec, md) in enumerate(ops)
-    ]
-    want_state, want_rejects = model([], seq_ops)
-    got_state, got_rejects = run_spark(spark, [], seq_ops)
-    assert got_state == {k: (v, md) for k, (v, md) in want_state.items()}
-    assert sorted(got_rejects) == sorted(want_rejects)
-
-
-@settings(max_examples=12, deadline=None)
-@given(ops=op_strategy)
 def test_property_sql_impl_matches_model(spark, ops):
     seq_ops = [
         (i, ident, op, vec if op != "delete" else None, md if op != "delete" else None)
         for i, (op, ident, vec, md) in enumerate(ops)
     ]
     want_state, want_rejects = model([], seq_ops)
-    got_state, got_rejects = run_spark(spark, [], seq_ops, impl=apply_changes_sql)
+    got_state, got_rejects = run_spark(spark, [], seq_ops)
     assert got_state == {k: (v, md) for k, (v, md) in want_state.items()}
     assert sorted(got_rejects) == sorted(want_rejects)
 
@@ -160,7 +146,7 @@ def test_sql_impl_with_base(spark):
         (4, "b", "insert", [4.0], {"r": "s"}),
         (5, "c", "delete", None, None),
     ]
-    state, rejects = run_spark(spark, base, ops, impl=apply_changes_sql)
+    state, rejects = run_spark(spark, base, ops)
     assert state["a"] == ([1.0], {"k": "v"})
     assert state["b"] == ([4.0], {"r": "s"})  # re-insert resets metadata
     assert sorted(rejects) == [

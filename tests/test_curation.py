@@ -332,11 +332,20 @@ def test_decontaminate_bench_gram_size_guard(spark):
 
 
 def test_dsir_fast_kernel_matches_expr_kernel(spark):
-    """The r13 Arrow md5 kernel (`_dsir_doc_bucket_counts_fast`) must
-    be bit-identical to the explode+JVM-md5 expression path on every
-    form — including texts with doubled/trailing spaces (Java split
-    and str.split(' ') both keep the empty tokens) and sub-bigram
-    docs."""
+    """The Arrow md5 kernel (`_dsir_doc_bucket_counts`) must produce
+    the same per-(doc, bucket) counts as the explode + JVM md5 +
+    groupBy expression form
+    (`tests.operator_oracle.dsir_doc_bucket_counts_expr`), with and
+    without the target_filter flag column — including texts with
+    doubled/trailing spaces (Java split and str.split(' ') both keep
+    the empty tokens), sub-bigram docs and NULL text (dropped by both).
+    The count table is the one intermediate where the two forms
+    differ: both DSIR models and the per-doc scoring read it."""
+    from pyspark.sql import functions as F
+
+    from anndb_spark.operators.curation import _dsir_doc_bucket_counts
+    from tests.operator_oracle import dsir_doc_bucket_counts_expr
+
     rows = [
         (1, "alpha beta gamma alpha beta", "en"),
         (2, "alpha  beta  zz yy ", "de"),   # doubled + trailing spaces
@@ -346,19 +355,23 @@ def test_dsir_fast_kernel_matches_expr_kernel(spark):
         (6, None, "en"),                     # NULL text: both paths drop it
     ]
     raw = spark.createDataFrame(rows, "doc_id LONG, text STRING, lang STRING")
-    from pyspark.sql import functions as F
-
-    for kwargs in (
-        dict(target_filter=F.col("lang") == "en"),
-        dict(target=raw.filter(F.col("lang") == "en")),
-    ):
-        fast = sorted(
-            map(tuple, dsir_weights(raw, buckets=16, kernel="fast", **kwargs).collect())
-        )
-        expr = sorted(
-            map(tuple, dsir_weights(raw, buckets=16, kernel="expr", **kwargs).collect())
-        )
-        assert fast == expr, kwargs.keys()
+    flagged = raw.withColumn(
+        "_t", F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(0))
+    )
+    for df, flag in ((raw, None), (flagged, "_t")):
+        for hex_len in (1, 3):
+            fast = sorted(
+                map(tuple, _dsir_doc_bucket_counts(
+                    df, "text", "doc_id", hex_len, flag_col=flag
+                ).collect())
+            )
+            expr = sorted(
+                map(tuple, dsir_doc_bucket_counts_expr(
+                    df, "text", "doc_id", hex_len, flag_col=flag
+                ).collect())
+            )
+            assert fast == expr, (flag, hex_len)
+            assert all(r[0] != 6 for r in fast)
 
 
 def test_dsir_target_filter_form_identical_output(spark):

@@ -141,10 +141,10 @@ def test_simhash64_sparse_and_banding_lossless(spark):
     signatures, including bands straddling the 32-bit half boundary."""
     from anndb_spark.operators.dedup import (
         simhash64_band_val,
-        simhash64_cols,
         simhash_band_bounds,
         simhash_pairs,
     )
+    from tests.operator_oracle import simhash64_cols
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     lo, hi = simhash64_cols(F.col("text"))
@@ -202,9 +202,11 @@ def test_simhash64_sparse_and_banding_lossless(spark):
 def test_minhash_fast_kernel_bit_identical(spark):
     """The Arrow md5 kernel must reproduce the expression path's
     signatures exactly (same md5-hex definition) — that's what makes it
-    safe as the default under oracle-checked queries."""
+    safe under oracle-checked queries.  The signature table is the one
+    intermediate where the kernel and the expression form differ:
+    `minhash_lsh_pairs`, `minhash_banded` and everything downstream of
+    the signatures is shared code."""
     from anndb_spark.operators.dedup import (
-        minhash_lsh_pairs,
         minhash_signatures,
         minhash_signatures_fast,
     )
@@ -219,24 +221,22 @@ def test_minhash_fast_kernel_bit_identical(spark):
         for r in minhash_signatures_fast(docs).collect()
     }
     assert slow == fast
-    p_slow = sorted(
-        map(tuple, minhash_lsh_pairs(docs, threshold=0.5, kernel="expr").collect())
-    )
-    p_fast = sorted(
-        map(tuple, minhash_lsh_pairs(docs, threshold=0.5, kernel="fast").collect())
-    )
-    assert p_slow == p_fast
+    # the lsh path's (id, sig)-only kernel output signs identically
+    lean = {
+        r["id"]: tuple(r["sig"])
+        for r in minhash_signatures_fast(docs, include_shingles=False).collect()
+    }
+    assert lean == {k: sig for k, (_, sig) in slow.items()}
 
 
 def test_simhash64_fast_kernel_bit_identical(spark):
     """The Arrow hashlib kernel must reproduce the 64-bit expression
-    signatures exactly — that makes it safe as the default under the
-    oracle-checked pairs query (same guarantee as the MinHash kernel)."""
-    from anndb_spark.operators.dedup import (
-        simhash64_cols,
-        simhash64_signatures_fast,
-        simhash_pairs,
-    )
+    signatures exactly — that makes it safe under the oracle-checked
+    pairs query (same guarantee as the MinHash kernel).  The signature
+    table is the one intermediate where the two forms differ; the band
+    join and hamming filter of `simhash_pairs` are shared code."""
+    from anndb_spark.operators.dedup import simhash64_signatures_fast
+    from tests.operator_oracle import simhash64_cols
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     lo, hi = simhash64_cols(F.col("text"))
@@ -251,9 +251,6 @@ def test_simhash64_fast_kernel_bit_identical(spark):
         for r in simhash64_signatures_fast(docs).collect()
     }
     assert expr == fast
-    p_expr = sorted(map(tuple, simhash_pairs(docs, kernel="expr").collect()))
-    p_fast = sorted(map(tuple, simhash_pairs(docs, kernel="fast").collect()))
-    assert p_expr == p_fast
 
 
 def test_dedup_clusters_chain_converges_fast(spark):
@@ -331,8 +328,8 @@ def test_repetition_signals_known_values(spark):
 
 
 def test_repetition_signals_kernel_expr_parity(spark):
-    """The r13 Arrow kernel form must be BIT-identical to the
-    relational form: same rows, exact long counts, exact IEEE doubles
+    """The Arrow kernel must be BIT-identical to the relational form
+    (`tests.operator_oracle.repetition_signals_expr`): same rows, exact long counts, exact IEEE doubles
     (same two-long divisions).  Edges: empty text (split('') == ['']),
     doubled/leading/trailing spaces (empty tokens count), 1- and
     2-token docs (no bi/trigrams -> coalesced 0.0), heavy repetition,
@@ -340,6 +337,7 @@ def test_repetition_signals_kernel_expr_parity(spark):
     import random
 
     from anndb_spark.operators.text import repetition_signals
+    from tests.operator_oracle import repetition_signals_expr
 
     rng = random.Random(1307)
     vocab = ["a", "b", "cc", "d d".replace(" ", ""), "é", "x1", ""]
@@ -356,8 +354,8 @@ def test_repetition_signals_kernel_expr_parity(spark):
         k = rng.randint(1, 40)
         rows.append((f"r{i}", " ".join(rng.choice(vocab) for _ in range(k))))
     df = spark.createDataFrame(rows, "doc_id STRING, text STRING")
-    fast = {r["id"]: r for r in repetition_signals(df, kernel="fast").collect()}
-    expr = {r["id"]: r for r in repetition_signals(df, kernel="expr").collect()}
+    fast = {r["id"]: r for r in repetition_signals(df).collect()}
+    expr = {r["id"]: r for r in repetition_signals_expr(df).collect()}
     assert set(fast) == set(expr)
     assert "e5" not in fast  # null text dropped in both forms
     for key, er in expr.items():
@@ -595,20 +593,64 @@ def test_dedup_exact_survivors_matches_join_form(spark):
 
 
 def test_minhash_text_attach_is_size_adaptive(spark):
-    """r14: over the broadcast threshold the candidate texts are
-    fetched once into a checkpoint and attached by broadcast; results
-    must be identical to the small-corpus two-scan form."""
+    """Over the broadcast threshold the candidate texts are fetched
+    once into a checkpoint; each candidate-bounded frame is broadcast
+    only when its own estimate fits the threshold.  Rows must be
+    identical at a 1-byte threshold (fetched, joined un-hinted), at
+    half the corpus estimate (fetched, the candidate texts can fit),
+    at the session default (two-scan form) and with auto-broadcast off
+    (-1), where no join may be forced to broadcast."""
     from anndb_spark.operators.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
+    key = "spark.sql.autoBroadcastJoinThreshold"
     base = sorted(map(tuple, minhash_lsh_pairs(docs).collect()))
-    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    assert len(base) > 0
+    corpus_est = int(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    old_thr = spark.conf.get(key)
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
-        fetched = sorted(map(tuple, minhash_lsh_pairs(docs).collect()))
+        for thr in ("1b", str(corpus_est // 2), "-1"):
+            spark.conf.set(key, thr)
+            pairs = minhash_lsh_pairs(docs)
+            assert sorted(map(tuple, pairs.collect())) == base, thr
+            if thr == "-1":
+                plan = pairs._jdf.queryExecution().executedPlan().toString()
+                assert "Broadcast" not in plan, plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
-    assert fetched == base and len(base) > 0
+        spark.conf.set(key, old_thr)
+
+
+def test_minhash_rejects_bands_not_dividing_hashes(spark, tmp_path):
+    """A band count must divide the hash count: more bands than hashes
+    would leave empty band values that collide for every pair (an
+    O(N²) verify), and a non-divisor would drop the trailing hashes.
+    Every MinHash entry point refuses both before running a job."""
+    from anndb_spark.operators.dedup import (
+        minhash_banded,
+        minhash_incremental_pairs,
+    )
+    from anndb_spark.streaming.dedup import write_neardup_state
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id LONG, text STRING"
+    )
+    calls = (
+        lambda nh, b: minhash_lsh_pairs(df, num_hashes=nh, bands=b),
+        lambda nh, b: minhash_banded(df, num_hashes=nh, bands=b),
+        lambda nh, b: minhash_incremental_pairs(df, df, num_hashes=nh, bands=b),
+        lambda nh, b: write_neardup_state(
+            df, str(tmp_path / "state"), num_hashes=nh, bands=b
+        ),
+    )
+    for nh, b in ((8, 16), (8, 3), (8, 0), (8, -2)):
+        for call in calls:
+            with pytest.raises(ValueError, match="bands"):
+                call(nh, b)
+    assert not (tmp_path / "state").exists()
+    # dividing counts still run, 1 <= bands <= num_hashes inclusive
+    for nh, b in ((8, 1), (8, 8), (16, 8)):
+        _, bands = minhash_banded(df, num_hashes=nh, bands=b)
+        assert bands.count() == 2 * b
 
 
 def test_winnow_guarantee_shared_run(spark):
@@ -762,14 +804,18 @@ def test_bigram_logprob_detects_word_salad(spark):
 
 
 def test_bigram_logprob_zip_lag_parity(spark):
-    """The r13 window-free form (prev built scan-side by
-    transform-with-index) must match the lag-window form BIT-exactly:
-    same docs, same exact longs, same rounded-log doubles — including
-    single-token docs (no bigram rows), repeated tokens, empty text
-    (one empty-string token) and null text (dropped)."""
+    """The window-free token stream (prev built scan-side by
+    transform-with-index, `text._bigram_stream`) must equal the
+    lag-window stream (`tests.operator_oracle.bigram_stream_lag`) row
+    for row — including single-token docs (null prev only), repeated
+    tokens, empty text (one empty-string token) and null text
+    (dropped).  The stream is the one intermediate where the two forms
+    differ; the LM counts and the per-doc fold downstream of it are
+    shared code."""
     import random
 
-    from anndb_spark.operators.text import bigram_logprob
+    from anndb_spark.operators.text import _bigram_stream, bigram_logprob
+    from tests.operator_oracle import bigram_stream_lag
 
     rng = random.Random(1313)
     vocab = ["the", "a", "of", "fox", "dog", "x", ""]
@@ -785,14 +831,15 @@ def test_bigram_logprob_zip_lag_parity(spark):
             (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 30))))
         )
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    zf = {r["id"]: r for r in bigram_logprob(df, form="zip").collect()}
-    lf = {r["id"]: r for r in bigram_logprob(df, form="lag").collect()}
-    assert set(zf) == set(lf)
-    assert 103 not in zf
-    for key, lr in lf.items():
-        zr = zf[key]
-        for c in ("n_tokens", "sum_logprob", "mean_logprob"):
-            assert zr[c] == lr[c], (key, c, zr[c], lr[c])
+    cols = ["doc_id", "pos", "tok", "prev"]
+    zs = sorted(map(tuple, _bigram_stream(df, "text", "doc_id").select(cols).collect()))
+    ls = sorted(map(tuple, bigram_stream_lag(df).select(cols).collect()))
+    assert zs == ls
+    assert all(r[0] != 103 for r in zs)
+    assert (100, 0, "", None) in zs and (101, 0, "solo", None) in zs
+    out = {r["id"]: r["n_tokens"] for r in bigram_logprob(df).collect()}
+    assert out == {k: sum(1 for r in zs if r[0] == k) for k in out}
+    assert set(out) == {r[0] for r in zs}
 
 
 def test_bm25_indexed_matches_direct(spark, tmp_path):

@@ -180,13 +180,15 @@ def test_funnel_counts_never_increase(spark):
 
 
 def test_funnel_fold_join_parity(spark):
-    """The r13 single-pass fold form must match the relational
-    join-per-stage form row-for-row: random event streams with ties,
+    """The single-pass fold must match the relational join-per-stage
+    form (`tests.operator_oracle.funnel_join`) row-for-row: random
+    event streams with ties,
     out-of-order stages, repeated stage names, absent keys, null ts
     and non-stage event types."""
     import random
 
     from anndb_spark.operators.temporal import funnel
+    from tests.operator_oracle import funnel_join
 
     rng = random.Random(131)
     types = ["view", "click", "purchase", "noise"]
@@ -204,12 +206,8 @@ def test_funnel_fold_join_parity(spark):
         ["purchase"],
         ["view", "absent_type", "purchase"],
     ):
-        fold = sorted(
-            tuple(r) for r in funnel(df, stages, form="fold").collect()
-        )
-        join = sorted(
-            tuple(r) for r in funnel(df, stages, form="join").collect()
-        )
+        fold = sorted(tuple(r) for r in funnel(df, stages).collect())
+        join = sorted(tuple(r) for r in funnel_join(df, stages).collect())
         assert fold == join, (stages, fold, join)
 
 
