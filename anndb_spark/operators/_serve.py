@@ -16,7 +16,7 @@ kernel:
 - `scatter`       — the task regime: one plan row per task via
                     shuffle-free ``parallelize``, the query batch as a
                     broadcast, and the drain-before-yield
-                    ``mapInPandas`` loop that calls the server's kernel;
+                    ``mapInArrow`` loop that calls the server's kernel;
 - `merge_topk`    — the global ``(score asc, id asc)`` row-number merge;
 - `serve`         — the driver regime beside `scatter`, for HNSW and
                     IVF: `serve_locally` is the one rule (the touched
@@ -26,7 +26,9 @@ kernel:
                     in the driver and merges like `merge_topk`, and the
                     answer is a local relation — collecting it runs no
                     Spark job, as the reference's coordinator merges
-                    partition results itself;
+                    partition results itself; the streaming transform
+                    (`streaming.search`) answers each micro-batch with
+                    `run_local` in its executor;
 - `exact_rerank`  — re-scoring an approximate shortlist against the
                     float table (IVFADC+R and PQ+R);
 - `CACHE`         — the byte-capped LRU that keeps loaded index parts
@@ -36,6 +38,10 @@ kernel:
                     versioned by the index's content fingerprint
                     (`fsutil.list_parts`), as the reference's partitions
                     version the graphs they hold (`storage/partition.go`).
+
+Every kernel returns its rows as a ``pa.Table`` (or None); `to_layout`
+casts them to the declared layout, in a task and in the driver alike, so
+Arrow is the only row format between a kernel and Spark.
 """
 
 from __future__ import annotations
@@ -45,7 +51,6 @@ import os
 from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -61,9 +66,11 @@ def parse_queries(queries, dim: int = 0, dtype=np.float32) -> tuple[np.ndarray, 
     """A query batch → (query-id strings, (nq, dim) ``dtype`` matrix).
 
     Accepts ``[(query_id, vector)]`` or the zero-copy ``(ids, matrix)``
-    form for large batches.  An empty batch parses to a (0, dim) matrix
-    (``np.array([])`` is (0,), which no distance kernel can multiply);
-    callers pass the width their kernel needs."""
+    form for large batches.  Ids must be unique: the merge ranks rows
+    per id, so two queries sharing one would get one mixed top-k, and a
+    repeated id raises ``ValueError``.  An empty batch parses to a
+    (0, dim) matrix (``np.array([])`` is (0,), which no distance kernel
+    can multiply); callers pass the width their kernel needs."""
     if isinstance(queries, tuple):
         qids, qmat = queries
         qmat = np.ascontiguousarray(qmat, dtype=dtype)
@@ -71,6 +78,13 @@ def parse_queries(queries, dim: int = 0, dtype=np.float32) -> tuple[np.ndarray, 
         qids = [qid for qid, _ in queries]
         qmat = np.array([v for _, v in queries], dtype=dtype)
     qid_arr = np.array([str(q) for q in qids], dtype=object)
+    seen: set = set()
+    for q in qid_arr:
+        if q in seen:
+            raise ValueError(
+                f"duplicate query_id {q!r}: each query in a batch needs its own id"
+            )
+        seen.add(q)
     if not len(qid_arr):
         qmat = np.empty((0, dim), dtype=dtype)
     return qid_arr, qmat
@@ -126,13 +140,19 @@ def query_chunks(
     ]
 
 
+def to_layout(out: pa.Table, schema: pa.Schema) -> pa.Table:
+    """A kernel's rows in the declared ``schema``: its columns, in order,
+    cast to their types — the one cast between a kernel and Spark."""
+    return out.select(schema.names).cast(schema)
+
+
 def scatter(
     spark,
     parts: list[int],
     by_part: dict[int, list[int]] | None,
     qid_arr: np.ndarray,
     qmat: np.ndarray,
-    search_chunk: Callable[..., pd.DataFrame | None],
+    search_chunk: Callable[..., pa.Table | None],
     out_ddl: str,
     queries_per_task: int | None = None,
     items_per_task: int = 1,
@@ -140,9 +160,13 @@ def scatter(
     """Partial top-k of every `query_chunks` chunk as one Spark job.
 
     ``search_chunk(part, qids, Q)`` runs in a task and returns the
-    chunk's partial rows as pandas (or None); ``items_per_task`` packs several
-    chunks into one task for indexes whose parts are too small to pay a
-    task launch each."""
+    chunk's partial rows as an Arrow table (or None), cast to
+    ``out_ddl`` by `to_layout`; ``items_per_task`` packs several chunks
+    into one task for indexes whose parts are too small to pay a task
+    launch each."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
     chunks = query_chunks(spark, parts, by_part, qmat.shape[0], queries_per_task)
     # createDataFrame + repartition is a 2-stage shuffle that cost ~0.2 s
     # of fixed wall per search call (measured); parallelize with
@@ -160,10 +184,11 @@ def scatter(
     bq = spark.sparkContext.broadcast(
         (qid_arr, qmat, {(p, c): rows for p, c, rows in chunks})
     )
+    schema = to_arrow_schema(StructType.fromDDL(out_ddl))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         qid_arr, qmat, rows_of = bq.value
-        # drain the input stream BEFORE yielding: a pandas UDF that
+        # drain the input stream BEFORE yielding: an Arrow UDF that
         # yields interleaved with unconsumed input gets its python
         # worker KILLED by the runner instead of reused (measured —
         # worker pids churn every job), which destroys the
@@ -171,7 +196,7 @@ def scatter(
         work = [
             (part, chunk)
             for b in batches
-            for part, chunk in zip(b["part"].tolist(), b["chunk"].tolist())
+            for part, chunk in zip(b.column("part").to_pylist(), b.column("chunk").to_pylist())
         ]
         for part, chunk in work:
             qsel = rows_of[(part, chunk)]
@@ -180,10 +205,10 @@ def scatter(
             if isinstance(qsel, range):  # a flat plan: a view, not a copy
                 qsel = slice(qsel.start, qsel.stop)
             out = search_chunk(part, qid_arr[qsel], qmat[qsel])
-            if out is not None:
-                yield out
+            if out is not None and len(out):
+                yield from to_layout(out, schema).to_batches()
 
-    return plan.mapInPandas(run, schema=out_ddl)
+    return plan.mapInArrow(run, schema=out_ddl)
 
 
 def serve_locally(
@@ -226,15 +251,15 @@ def run_local(
     chunks: list[tuple[int, int, "list[int] | range"]],
     qid_arr: np.ndarray,
     qmat: np.ndarray,
-    search_chunk: Callable[..., pd.DataFrame | pa.Table | None],
+    search_chunk: Callable[..., pa.Table | None],
     schema: pa.Schema,
     k: int | None,
     is_brute: Callable[[int, int], bool],
 ) -> pa.Table:
     """The driver regime: the chunks through the server's own kernel,
-    here (``local=True``: an OpenMP thread per core for graph walks, and
-    Arrow rows where the kernel can build them), with numpy's BLAS on
-    one thread as in a task; then, for ``k``, the global top-k merge.
+    here (``local=True``: an OpenMP thread per core for graph walks),
+    with numpy's BLAS on one thread as in a task; then, for ``k``, the
+    global top-k merge.
     ``k=None`` keeps the kernel's partial rows as final (their ``rank``
     included) — a one-graph index's scatter skips the merge too.
 
@@ -263,11 +288,7 @@ def run_local(
                 rows = np.concatenate([np.asarray(r) for r in runs])
             out = search_chunk(part, qid_arr[rows], qmat[rows], local=True)
             if out is not None and len(out):
-                outs.append(
-                    out.select(partial.names).cast(partial) if isinstance(out, pa.Table)
-                    else pa.Table.from_pandas(out[partial.names], schema=partial,
-                                              preserve_index=False)
-                )
+                outs.append(to_layout(out, partial))
     if not outs:
         return schema.empty_table()
     tbl = pa.concat_tables(outs)
@@ -303,7 +324,7 @@ def serve(
     by_part: dict[int, list[int]] | None,
     qid_arr: np.ndarray,
     qmat: np.ndarray,
-    search_chunk: Callable[..., pd.DataFrame | pa.Table | None],
+    search_chunk: Callable[..., pa.Table | None],
     out_ddl: str,
     k: int | None,
     is_brute: Callable[[int, int], bool],
@@ -399,9 +420,8 @@ class PartCache:
     cell stay distinct — and carry a ``version``, the index's content
     fingerprint: `get` hits only on an equal version, and `put` drops
     the path's entries of every other version, so a rewritten index is
-    reloaded and its superseded parts free their bytes at once.  A None
-    key disables caching for that call; an entry larger than the whole
-    budget is not stored."""
+    reloaded and its superseded parts free their bytes at once.  An
+    entry larger than the whole budget is not stored."""
 
     def __init__(self, max_bytes: int):
         self.max_bytes = max_bytes
@@ -410,14 +430,12 @@ class PartCache:
 
     def get(self, kind: str, key, version):
         hit = self.entries.get((kind, key))
-        if key is None or hit is None or hit[0] != version:
+        if hit is None or hit[0] != version:
             return None
         self.entries[(kind, key)] = self.entries.pop((kind, key))  # most recent
         return hit[1]
 
     def put(self, kind: str, key, version, value, nbytes: int) -> None:
-        if key is None:
-            return
         for old in [
             e for e, (v, _, _) in self.entries.items()
             if e[1][0] == key[0] and v != version

@@ -2379,53 +2379,42 @@ def _result_layout(with_rank: bool, with_metadata: bool) -> tuple[list[str], str
     return cols, ", ".join(f"{c} {types[c]}" for c in cols)
 
 
-def _assemble_hits(qids, hits, ids, g, with_metadata: bool, columns=None, arrow=False):
+def _assemble_hits(qids, hits, ids, g, with_metadata: bool, columns=None):
     """The one result assembler: one kernel call's ``(ids, dists)``
-    over the query batch ``qids`` → the ``columns`` (default: all) of
-    ``query_id, rank, id, score[, metadata]``, one row per non-pad hit
-    in (query, rank) order.  Pads are a row suffix, so a hit's rank is
-    its column + 1 — final for a single graph, partial before a
-    multi-graph merge.  ``id`` and ``metadata`` index the graph's id
-    list and ``g.item_meta``.
+    over the query batch ``qids`` → an Arrow table of the ``columns``
+    (default: all) of ``query_id, rank, id, score[, metadata]``, one row
+    per non-pad hit in (query, rank) order.  Pads are a row suffix, so a
+    hit's rank is its column + 1 — final for a single graph, partial
+    before a multi-graph merge.  ``id`` and ``metadata`` index the
+    graph's id list and ``g.item_meta``; ``query_id`` takes its type
+    from ``qids`` (the servers' strings, or the streaming transform's
+    batch rows) and callers cast the table to their layout
+    (`_serve.to_layout`).
 
-    Tasks get pandas.  The driver regime gets Arrow (``arrow=True``):
-    its string columns are Arrow ``take``s over small dictionaries — the
+    The string columns are Arrow ``take``s over small dictionaries — the
     graph's id array (converted once per resident graph, kept on it) and
     the call's query ids — instead of fancy-indexed object arrays whose
     python strings are converted again on every call (measured: that
     assembly cost more than the 10k-query kernel walk on a 1M-row
     graph)."""
+    import pyarrow as pa
+
     hit_ids, hit_d = hits
     valid = hit_ids >= 0
     qrow, col = np.nonzero(valid)
     nid = hit_ids[valid]
-    meta = None
-    if with_metadata:
-        im = g.item_meta
-        meta = [im[i] for i in nid] if im is not None else [None] * len(nid)
-    if not arrow:
-        data = {
-            "query_id": qids[qrow],
-            "rank": (col + 1).astype(np.int32),
-            "id": np.asarray(ids, dtype=object)[nid],
-            "score": hit_d[valid],
-        }
-        if with_metadata:
-            # object dtype even when empty (pandas types an empty list float64)
-            data["metadata"] = pd.Series(meta, dtype=object)
-        return pd.DataFrame(data, columns=columns)
-    import pyarrow as pa
-
     pa_ids = getattr(g, "_pa_ids", None)
     if pa_ids is None or len(pa_ids) != len(ids):
         pa_ids = g._pa_ids = pa.array(ids, type=pa.string())
     data = {
-        "query_id": pa.array(qids, type=pa.string()).take(pa.array(qrow)),
+        "query_id": pa.array(qids).take(pa.array(qrow)),
         "rank": pa.array((col + 1).astype(np.int32)),
         "id": pa_ids.take(pa.array(nid)),
         "score": pa.array(hit_d[valid], type=pa.float32()),
     }
     if with_metadata:
+        im = g.item_meta
+        meta = [im[i] for i in nid] if im is not None else [None] * len(nid)
         data["metadata"] = pa.array(meta, type=pa.map_(pa.string(), pa.string()))
     return pa.table({c: data[c] for c in (columns or data)})
 
@@ -2437,7 +2426,6 @@ def search_index(
     ef: int | None = None,
     config: HnswConfig | None = None,
     strategy: str = "auto",
-    cache_token: str | None = None,
     with_metadata: bool = False,
     centroids=None,
     nprobe: int = 0,
@@ -2454,12 +2442,11 @@ def search_index(
     or 'auto' (`_use_brute`).
 
     ``queries``: [(query_id, vector)] or the ``(ids, matrix)`` form —
-    broadcast in the task closure.
-    ``cache_token``: stable string enabling the reused-worker graph
-    cache for serving workloads.  A DataFrame carries no content
-    fingerprint to version that cache by, so pass a new token whenever
-    the index changes (the saved-index servers need none: they version
-    their caches by the index's fingerprint).
+    broadcast in the task closure.  Each group's graph is rebuilt from
+    its rows on every call: a DataFrame carries no content fingerprint
+    to key a cache by, so serving workloads should save the index and
+    use `search_index_path`, whose caches are versioned by the index's
+    fingerprint.
 
     ``config=None`` restores the config persisted in the index (the
     snapshot header); an explicit config whose space disagrees with the
@@ -2477,6 +2464,9 @@ def search_index(
     `search_index_path`, ``nprobe=0`` is the flat search, and
     ``nprobe >= n_cells`` returns the flat search's rows.
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
     if "vec" not in index.columns:
         raise ValueError(
             "index has no 'vec' column (vertex vectors); rebuild it with "
@@ -2494,18 +2484,15 @@ def search_index(
         # scan-time pruning: only probed partitions are read at all
         index = index.filter(F.col("partition_id").isin(sorted(by_pid)))
     out_cols, out_ddl = _result_layout(False, with_metadata)
+    schema = to_arrow_schema(StructType.fromDDL(out_ddl))
 
-    def search_part(key, idx_pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        qsel = None if by_pid is None else by_pid.get(pid)
-        if not len(idx_pdf) or (by_pid is not None and not qsel):
-            return pd.DataFrame(columns=out_cols)
-        ckey = (cache_token, pid) if cache_token is not None else None
-        hit = _serve.CACHE.get("hnsw", ckey, None)
-        if hit is None:
-            hit = _graph_from_index(idx_pdf, cfg)
-            _serve.CACHE.put("hnsw", ckey, None, hit, _graph_bytes(hit[1]))
-        ids, g = hit
+    # (partition_id scalar,), pa.Table → pa.Table; unannotated, because
+    # applyInArrow fails on this module's (postponed, string) annotations
+    def search_part(key, idx):
+        qsel = None if by_pid is None else by_pid.get(key[0].as_py())
+        if not idx.num_rows or (by_pid is not None and not qsel):
+            return schema.empty_table()
+        ids, g = _graph_from_index(idx.to_pandas(), cfg)
         sub, sub_qids = (
             (qmat, qid_arr) if qsel is None else (qmat[qsel], qid_arr[qsel])
         )
@@ -2513,9 +2500,11 @@ def search_index(
             hits = g.search_brute(sub, k)
         else:
             hits = g.search_fast_batch(sub, k, ef)
-        return _assemble_hits(sub_qids, hits, ids, g, with_metadata, out_cols)
+        return _serve.to_layout(
+            _assemble_hits(sub_qids, hits, ids, g, with_metadata, out_cols), schema
+        )
 
-    partials = index.groupBy("partition_id").applyInPandas(
+    partials = index.groupBy("partition_id").applyInArrow(
         search_part, schema=out_ddl
     )
     return _serve.merge_topk(partials, k, _result_layout(True, with_metadata)[0])
@@ -2592,6 +2581,30 @@ def _acquire_partition_graph(
     return ids, g, False
 
 
+def _path_kernel(path, cfg, strategy, index_ver, k, ef, with_metadata, columns):
+    """The per-part kernel of a saved index: ``search_chunk(pid, qids,
+    Q, local=False)`` acquires part ``pid``'s graph (`_acquire_partition_graph`),
+    searches it by `_use_brute`'s choice and returns the ``columns`` of
+    `_assemble_hits`.  ``local`` only sets the walk's thread count: an
+    OpenMP thread per core when the driver answers the batch
+    (`_serve.run_local`), one in a task.  `_search_path` and the
+    streaming transform (`streaming.search`) serve through it."""
+
+    def search_chunk(pid: int, qids: np.ndarray, sub: np.ndarray, local: bool = False):
+        ids, g, use_brute = _acquire_partition_graph(
+            path, pid, cfg, strategy, index_ver, len(sub),
+        )
+        hits = (
+            g.search_brute(sub, k) if use_brute
+            else g.search_fast_batch(
+                sub, k, ef, threads=(_os_mod.cpu_count() or 1) if local else 1
+            )
+        )
+        return _assemble_hits(qids, hits, ids, g, with_metadata, columns)
+
+    return search_chunk
+
+
 def _search_path(
     spark, path, queries, k, ef, config, strategy,
     with_metadata, centroids, nprobe, queries_per_task, locality_centroids,
@@ -2637,20 +2650,7 @@ def _search_path(
         qmat = np.ascontiguousarray(qmat[order])
         qid_arr = qid_arr[order]
     out_cols, out_ddl = _result_layout(final_ranks, with_metadata)
-
-    def search_chunk(pid: int, qids: np.ndarray, sub: np.ndarray, local: bool = False):
-        # in the driver (`_serve.run_local`) the walk owns every core and
-        # the rows are built as Arrow
-        ids, g, use_brute = _acquire_partition_graph(
-            path, pid, cfg, strategy, index_ver, len(sub),
-        )
-        hits = (
-            g.search_brute(sub, k) if use_brute
-            else g.search_fast_batch(
-                sub, k, ef, threads=(_os_mod.cpu_count() or 1) if local else 1
-            )
-        )
-        return _assemble_hits(qids, hits, ids, g, with_metadata, out_cols, arrow=local)
+    search_chunk = _path_kernel(path, cfg, strategy, index_ver, k, ef, with_metadata, out_cols)
 
     def part_size(pid: int) -> tuple[int, float]:
         # vertex rows are the rows with a vector; the top level bounds

@@ -35,6 +35,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -243,7 +244,9 @@ def search_ivf(
 
     If ``vectors`` lacks ``cluster_col`` it is assigned on the fly; for
     repeated querying assign once and persist partitioned by cluster.
+    ``nprobe`` must be at least 1.
     """
+    _check_nprobe(nprobe)
     if cluster_col not in vectors.columns:
         vectors = assign_clusters(vectors, centroids, space, vec_col, cluster_col)
     # route ONCE: the routed frame feeds BOTH the probe prune and the
@@ -354,9 +357,11 @@ def search_ivf_path(
     the chunks itself and returns a local relation (collecting it runs
     no Spark job); otherwise one task per chunk, merged by a window over
     ``hashpartitioning(query_id)``.  Same rows, score bits included.
+    ``nprobe`` must be at least 1.
     """
     from anndb_spark.sources import fsutil
 
+    _check_nprobe(nprobe)
     cent = np.ascontiguousarray(centroids, dtype=np.float64)
     # float64 end to end: scores stay bit-identical to `search_ivf`
     qid_arr, qmat = _serve.parse_queries(queries, cent.shape[1], np.float64)
@@ -386,7 +391,7 @@ def search_ivf_path(
 
     def score_chunk(
         cid: int, qids: np.ndarray, Q: np.ndarray, local: bool = False
-    ) -> pd.DataFrame | None:
+    ) -> pa.Table | None:
         # the same in the driver regime (``local``): the GEMM runs on the
         # caller's BLAS threads
         hit = _serve.CACHE.get("ivf", (path, cid), index_ver)
@@ -399,7 +404,7 @@ def search_ivf_path(
             # Python object per element
             flat = pc.list_flatten(tbl.column(vec_col)).to_numpy()
             hit = (
-                tbl.column(id_col).to_numpy(),
+                tbl.column(id_col).combine_chunks(),
                 flat.astype(np.float64).reshape(tbl.num_rows, Q.shape[1]),
             )
             _serve.CACHE.put("ivf", (path, cid), index_ver, hit,
@@ -410,10 +415,10 @@ def search_ivf_path(
         dm = _pairwise(Q, vmat, space)
         kk = min(k, vmat.shape[0])
         part = argpart_rows(dm, kk)
-        return pd.DataFrame(
+        return pa.table(
             {
-                "query_id": np.repeat(qids, kk),
-                "id": ids[part.reshape(-1)],
+                "query_id": pa.array(np.repeat(qids, kk), pa.string()),
+                "id": ids.take(pa.array(part.reshape(-1))),
                 "score": np.take_along_axis(dm, part, axis=1).reshape(-1),
             }
         )
@@ -427,6 +432,12 @@ def search_ivf_path(
         f"query_id STRING, id {id_type}, score DOUBLE", k,
         lambda n, nq: True, queries_per_task=queries_per_task,
     )
+
+
+def _check_nprobe(nprobe: int) -> None:
+    """A probe count below 1 routes no query to any cell."""
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be at least 1, got nprobe={nprobe}")
 
 
 def _cell_bytes(n: int, dim: int) -> int:

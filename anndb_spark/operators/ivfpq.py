@@ -52,17 +52,16 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from anndb_spark.operators import _serve
-from anndb_spark.operators._scratch import argpart_rows, scratch_mat
 from anndb_spark.operators.pq import (
     save_pq,
-    load_pq,
     load_pq_meta,
     codes_matrix,
-    topn_fold,
+    _adc_fold,
     _kmeans,
 )
 
@@ -312,8 +311,12 @@ def search_ivfpq(
     task.  1 = maximal parallelism, the right default when cells are
     large; raise it for small-cell indexes where per-task fixed costs
     would otherwise dominate (e.g. 1M rows / 1024 cells ≈ 1k rows per
-    cell: scheduling 1024 tiny tasks costs more than the ADC math)."""
+    cell: scheduling 1024 tiny tasks costs more than the ADC math).
+    ``nprobe`` must be at least 1."""
+    from anndb_spark.operators.ivf import _check_nprobe
     from anndb_spark.sources import fsutil
+
+    _check_nprobe(nprobe)
 
     meta: dict = {}
     if centroids is None or codebooks is None:
@@ -342,7 +345,7 @@ def search_ivfpq(
     top_n = k if rerank_with is None else max(shortlist or 5 * k, k)
     bn2 = np.einsum("mkd,mkd->mk", books, books, dtype=np.float32)
 
-    def score_chunk(cid: int, qids: np.ndarray, Qc: np.ndarray) -> pd.DataFrame | None:
+    def score_chunk(cid: int, qids: np.ndarray, Qc: np.ndarray) -> pa.Table | None:
         hit = _serve.CACHE.get("ivfpq", (codes_root, cid), index_ver)
         if hit is None:
             tbl = fsutil.read_parquet_dir(
@@ -368,42 +371,22 @@ def search_ivfpq(
         # fold per-query top-n in bounded row chunks — never a full
         # (nq × cell_rows) score matrix for a big cell
         row_chunk = 1 << 16
-        best_s: np.ndarray | None = None
-        best_ids: np.ndarray | None = None
+        best: tuple = (None, None)
         for s0 in range(0, C.shape[0], row_chunk):
-            Cc = C[s0 : s0 + row_chunk]
-            n = Cc.shape[0]
-            # scratch discipline (operators/_scratch.py):
-            # elementwise-identical to the fresh-allocation form
-            S = scratch_mat("ivfpq_S", nq, n)
-            S.fill(np.float32(0.0))
-            g = scratch_mat("ivfpq_g", nq, n)
-            for j in range(m):
-                np.take(lut[:, j, :], Cc[:, j], axis=1, out=g)
-                S += g
-            np.maximum(S, np.float32(0.0), out=S)
-            np.sqrt(S, out=S)
-            t = min(top_n, n)
-            part = (
-                argpart_rows(S, t)
-                if n > t
-                else np.tile(np.arange(n), (nq, 1))
+            best = _adc_fold(
+                best, lut, None, None, C[s0 : s0 + row_chunk],
+                ids[s0 : s0 + row_chunk], "euclidean", top_n,
             )
-            best_ids, best_s = topn_fold(
-                (best_ids, best_s),
-                ids[s0 : s0 + row_chunk][part],
-                np.take_along_axis(S, part, axis=1),
-                top_n,
-            )
+        best_ids, best_s = best
         if best_s is None:
             return None
         if cosine:
             # unit sphere: L2² = 2(1−cos) → cosine distance s²/2
             best_s = best_s * best_s / np.float32(2.0)
-        return pd.DataFrame(
+        return pa.table(
             {
-                "query_id": np.repeat(qids, best_s.shape[1]),
-                "id": best_ids.reshape(-1),
+                "query_id": pa.array(np.repeat(qids, best_s.shape[1]), pa.string()),
+                "id": pa.array(best_ids.reshape(-1), pa.string()),
                 "score": best_s.reshape(-1),
             }
         )

@@ -15,11 +15,12 @@ Spark shape:
 - ``pq_encode``     — one Arrow-batched ``mapInPandas`` pass; each task
                       encodes its rows with GEMM argmin against the
                       broadcast codebooks.  No shuffle.
-- ``pq_search``     — per-partition ADC scan (LUT build is q·m·k_c
-                      flops ONCE per task, scoring is one ``np.take``
-                      sum per subspace), map-side partial top-k, global
-                      top-k merge — the same partial/final shape as the
-                      exact kNN operator.
+- ``pq_search_batch`` — per-partition ADC scan of a query batch (LUT
+                      build is q·m·k_c flops ONCE per task, scoring is
+                      one ``np.take`` sum per subspace, folded in
+                      bounded row chunks by `_adc_fold`), map-side
+                      partial top-k, global top-k merge — the same
+                      partial/final shape as the exact kNN operator.
 
 The reference stores raw float32 vectors only (its snapshot format,
 index/hnsw_persistence.go:71-95) — PQ is a north-star extension; the
@@ -153,97 +154,6 @@ def pq_encode(
     return vectors.mapInPandas(enc, "id STRING, codes BINARY")
 
 
-def pq_search(
-    codes: DataFrame,
-    query: list[float] | np.ndarray,
-    codebooks: np.ndarray,
-    k: int = 10,
-    id_col: str = "id",
-    codes_col: str = "codes",
-    rerank_with: DataFrame | None = None,
-    shortlist: int | None = None,
-) -> DataFrame:
-    """ADC top-k over a codes table: per-task LUT + np.take scoring +
-    partial top-k, then a global top-k merge (one tiny shuffle).
-
-    PQ distances are coarse (subspace centroids blur intra-cluster
-    ranks — the standard PQ contract); pass ``rerank_with`` (the
-    original vectors table) to re-score an ADC shortlist
-    (default 5·k) with exact distances — the classic
-    shortlist-then-rerank shape: the 3 KB/row float column is read for
-    only ``shortlist`` rows per query instead of the whole table."""
-    m, kc, sub = codebooks.shape
-    books = np.ascontiguousarray(codebooks, dtype=np.float32)
-    q = np.asarray(query, dtype=np.float32)
-    # LUT[j, c] = ||q_j - book[j][c]||² — built once, shipped in closure
-    lut = np.stack(
-        [
-            np.einsum(
-                "kd,kd->k",
-                books[j] - q[j * sub : (j + 1) * sub],
-                books[j] - q[j * sub : (j + 1) * sub],
-                dtype=np.float32,
-            )
-            for j in range(m)
-        ]
-    )
-
-    top_n = k if rerank_with is None else max(shortlist or 5 * k, k)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # drain-then-yield: interleaved yield kills the python worker
-        # (see _serve.scatter).  Per-batch partial top-n is
-        # folded DURING the drain, so worker memory holds one batch
-        # plus a top_n shortlist — not the whole partition (ADVICE r5)
-        best_ids: np.ndarray | None = None
-        best_s: np.ndarray | None = None
-        for b in batches:
-            if not len(b):
-                continue
-            C = codes_matrix(b[codes_col], m)  # (n, m)
-            s = np.zeros(C.shape[0], dtype=np.float32)
-            for j in range(m):
-                s += lut[j][C[:, j]]
-            top = np.argsort(s, kind="stable")[:top_n]
-            bid = b[id_col].iloc[top].astype(str).to_numpy()
-            bs = s[top]
-            if best_ids is None:
-                best_ids, best_s = bid, bs
-            else:
-                best_ids = np.concatenate([best_ids, bid])
-                best_s = np.concatenate([best_s, bs])
-                keep = np.argsort(best_s, kind="stable")[:top_n]
-                best_ids, best_s = best_ids[keep], best_s[keep]
-        if best_ids is not None:
-            order = np.argsort(best_s, kind="stable")[:top_n]
-            yield pd.DataFrame(
-                {
-                    "id": best_ids[order],
-                    "score": np.sqrt(np.maximum(best_s[order], 0.0)),
-                }
-            )
-
-    partial = codes.mapInPandas(score, "id STRING, score FLOAT")
-    cand = partial.orderBy(F.col("score").asc(), F.col("id").asc()).limit(top_n)
-    if rerank_with is None:
-        return cand.limit(k)
-    # exact rerank of the shortlist: broadcast-join the (tiny) candidate
-    # id set against the vectors table, score with the exact distance
-    # column expression, final top-k
-    from anndb_spark.functions.spaces import distance_col
-
-    qlit = F.array(*[F.lit(float(x)) for x in np.asarray(query, dtype=np.float32)])
-    exact = (
-        rerank_with.withColumn("id", F.col("id").cast("string"))
-        .join(F.broadcast(cand.select("id")), "id")
-        .select(
-            "id",
-            distance_col(F.col("vector"), qlit).cast("float").alias("score"),
-        )
-    )
-    return exact.orderBy(F.col("score").asc(), F.col("id").asc()).limit(k)
-
-
 def _build_luts(
     Q: np.ndarray, books: np.ndarray, space: str
 ) -> tuple[np.ndarray, np.ndarray | None]:
@@ -298,6 +208,56 @@ def topn_fold(
     )
 
 
+def _adc_fold(
+    best: tuple[np.ndarray | None, np.ndarray | None],
+    lut: np.ndarray,
+    n2lut: np.ndarray | None,
+    qn: np.ndarray | None,
+    C: np.ndarray,
+    ids: np.ndarray,
+    space: str,
+    top_n: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Score one row chunk of codes ``C`` (ids ``ids``) for every query
+    from its LUTs and fold the chunk's per-query top-n into ``best``
+    (`topn_fold`) — the ADC step of the flat (`_adc_partition_topn`) and
+    IVF (`ivfpq.search_ivfpq`) scanners.  ``n2lut`` and ``qn`` are only
+    read for cosine.
+
+    Scratch discipline (r13, see operators/_scratch.py): the (nq, n)
+    score/gather matrices and the hidden argpartition index matrix were
+    the package's largest per-call fresh allocations; every op below is
+    elementwise-identical to the fresh-allocation form (pytest-pinned)."""
+    nq, n = lut.shape[0], C.shape[0]
+    S = scratch_mat("pq_adc_S", nq, n)
+    S.fill(np.float32(0.0))
+    g = scratch_mat("pq_adc_g", nq, n)
+    for j in range(C.shape[1]):
+        np.take(lut[:, j, :], C[:, j], axis=1, out=g)
+        S += g
+    if space == "euclidean":
+        np.maximum(S, np.float32(0.0), out=S)
+        np.sqrt(S, out=S)
+    elif space == "ip":
+        np.negative(S, out=S)
+    else:  # cosine: |1 - ip / (||q|| * ||x̂||)|, x̂ from codes
+        xn2 = np.zeros(n, dtype=np.float32)
+        for j in range(C.shape[1]):
+            xn2 += n2lut[j][C[:, j]]
+        den = scratch_mat("pq_adc_den", nq, n)
+        np.multiply(
+            np.sqrt(np.maximum(xn2, 1e-30))[None, :],
+            np.maximum(qn[:, None], 1e-30),
+            out=den,
+        )
+        S /= den
+        np.subtract(np.float32(1.0), S, out=S)
+        np.abs(S, out=S)
+    t = min(top_n, n)
+    part = argpart_rows(S, t) if n > t else np.tile(np.arange(n), (nq, 1))
+    return topn_fold(best, ids[part], np.take_along_axis(S, part, axis=1), top_n)
+
+
 def _adc_partition_topn(
     batches: Iterator[pd.DataFrame],
     lut: np.ndarray,
@@ -311,7 +271,8 @@ def _adc_partition_topn(
     row_chunk: int = 1 << 16,
 ) -> tuple[np.ndarray | None, np.ndarray | None]:
     """Scan a partition's code batches, folding a per-query top_n in
-    bounded row chunks → (best_ids, best_s), each (nq, ≤top_n).
+    bounded row chunks (`_adc_fold`) → (best_ids, best_s), each
+    (nq, ≤top_n).
 
     Peak memory is O(nq·(top_n + row_chunk)) — NEVER the full
     (nq × partition_rows) score matrix, which at 1k queries × 1M-row
@@ -319,7 +280,6 @@ def _adc_partition_topn(
     Module-level so the memory contract is directly pytest-measurable
     (tests/test_pq.py drives it with a synthetic batch stream under
     tracemalloc)."""
-    nq = lut.shape[0]
     best: tuple[np.ndarray | None, np.ndarray | None] = (None, None)
     for b in batches:
         if not len(b):
@@ -327,46 +287,9 @@ def _adc_partition_topn(
         bids_all = b[id_col].astype(str).to_numpy()
         call = codes_matrix(b[codes_col], m)
         for s0 in range(0, call.shape[0], row_chunk):
-            C = call[s0 : s0 + row_chunk]
-            bids = bids_all[s0 : s0 + row_chunk]
-            n = C.shape[0]
-            # scratch discipline (r13, see operators/_scratch.py): the
-            # (nq, n) score/gather matrices and the hidden argpartition
-            # index matrix were the package's largest per-call fresh
-            # allocations; every op below is elementwise-identical to
-            # the fresh-allocation form (pytest-pinned)
-            S = scratch_mat("pq_adc_S", nq, n)
-            S.fill(np.float32(0.0))
-            g = scratch_mat("pq_adc_g", nq, n)
-            for j in range(m):
-                np.take(lut[:, j, :], C[:, j], axis=1, out=g)
-                S += g
-            if space == "euclidean":
-                np.maximum(S, np.float32(0.0), out=S)
-                np.sqrt(S, out=S)
-            elif space == "ip":
-                np.negative(S, out=S)
-            else:  # cosine: |1 - ip / (||q|| * ||x̂||)|, x̂ from codes
-                xn2 = np.zeros(n, dtype=np.float32)
-                for j in range(m):
-                    xn2 += n2lut[j][C[:, j]]
-                den = scratch_mat("pq_adc_den", nq, n)
-                np.multiply(
-                    np.sqrt(np.maximum(xn2, 1e-30))[None, :],
-                    np.maximum(qn[:, None], 1e-30),
-                    out=den,
-                )
-                S /= den
-                np.subtract(np.float32(1.0), S, out=S)
-                np.abs(S, out=S)
-            t = min(top_n, n)
-            part = (
-                argpart_rows(S, t)
-                if n > t
-                else np.tile(np.arange(n), (nq, 1))
-            )
-            best = topn_fold(
-                best, bids[part], np.take_along_axis(S, part, axis=1), top_n
+            best = _adc_fold(
+                best, lut, n2lut, qn, call[s0 : s0 + row_chunk],
+                bids_all[s0 : s0 + row_chunk], space, top_n,
             )
     return best
 
@@ -383,8 +306,7 @@ def pq_search_batch(
     shortlist: int | None = None,
     row_chunk: int = 1 << 16,
 ) -> DataFrame:
-    """Batched ADC top-k: every query in one distributed pass — the
-    query-batch shape `pq_search` lacked (VERDICT r5 Missing #1; the
+    """Batched ADC top-k: every query in one distributed pass (the
     reference's batch fan-out analogue is `storage/dataset.go:390-432`).
 
     → (query_id, rank, id, score), rank 1..k, score ascending per query

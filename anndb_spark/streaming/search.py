@@ -3,17 +3,19 @@
 resident graphs) re-expressed as a streaming transform.
 
 Shape: a (possibly unbounded) DataFrame of queries flows through
-``mapInPandas``; every executor answers its Arrow batches against ALL
-partitions of the saved index — graphs acquired through the same
-L1/shm-L2 worker cache ladder as batch serving
-(`hnsw._acquire_partition_graph`), searched through the same kernel
-entry (`HnswGraph.search_fast_batch` / `search_brute`, chosen by
-`hnsw._use_brute`) and result assembler (`hnsw._assemble_hits`) — and
-merges to the final top-k locally.  That is exactly the reference's
-node protocol (O17 per-node multi-partition search + local aggregate,
+``mapInArrow``; every executor answers each Arrow batch with
+`_serve.run_local` — the driver regime of the saved-index servers, run
+where the batch is — over a plan of one chunk per partition of the
+saved index.  Each chunk runs the kernel `hnsw.search_index_path`
+serves with (`hnsw._path_kernel`: graphs acquired through the same
+L1/shm-L2 worker cache ladder, the same `hnsw._use_brute` choice, the
+same assembler, one walk thread), and `run_local`'s one ``(score, id)``
+merge keeps each query's top-k.  That is exactly the reference's node
+protocol (O17 per-node multi-partition search + local aggregate,
 `storage/dataset.go:390-432`; O18 global merge, `:374-387`) with the
 executor playing the node: no shuffle, no state store, results stream
-out append-only.
+out append-only.  The merge is keyed by batch row, so a micro-batch that
+repeats a ``query_id`` answers each of its rows on its own.
 
 Scale note: this transform replicates the index per executor (each
 worker's cache eventually holds every partition it is asked about) —
@@ -28,7 +30,8 @@ across the cluster.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 STREAM_QUERIES_DDL = "query_id STRING, vector ARRAY<DOUBLE>"
@@ -49,86 +52,63 @@ def stream_search_transform(
     composes with any source, sink, and trigger.
 
     Values are identical to `hnsw.search_index_path` over the same
-    index (pytest-enforced): same kernels, same auto brute/beam
+    index (pytest-enforced): same kernel, same auto brute/beam
     routing, same ascending (score, id) merge order.  Cached graphs are
     held for the index's content fingerprint as listed here, when the
     transform is built.
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from anndb_spark.operators import _serve
     from anndb_spark.operators.hnsw import (
         HnswConfig,
+        _path_kernel,
         _result_layout,
         stored_config,
     )
     from anndb_spark.sources import fsutil
 
-    spark = queries.sparkSession
     index_ver, part_files = fsutil.list_parts(index_path, "partition_id=")
     cfg = config or stored_config(index_path, part_files) or HnswConfig()
-    eff_ef = max(ef or cfg.ef, k)
     pids = list(part_files)
     if not pids:
         raise ValueError(f"no index partitions under {index_path!r}")
+    kernel = _path_kernel(
+        index_path, cfg, strategy, index_ver, k, max(ef or cfg.ef, k),
+        with_metadata, _result_layout(False, with_metadata)[0],
+    )
     out_ddl = _result_layout(True, with_metadata)[1]
+    schema = to_arrow_schema(StructType.fromDDL(out_ddl))
+    # the merge's key is the batch row; each row's query_id is put back after
+    by_row = schema.set(0, pa.field("query_id", pa.int64()))
 
     def run(batches):
-        from anndb_spark.operators.hnsw import (
-            _acquire_partition_graph,
-            _assemble_hits,
-        )
-
         # drain before yielding: interleaved yields get the python
         # worker killed instead of reused, destroying the graph cache
         # (same measured constraint as the batch serving task)
-        pdfs = [b for b in batches if len(b)]
-        for pdf in pdfs:
-            qids = pdf["query_id"].to_numpy(dtype=object)
-            qmat = np.array(
-                [np.asarray(v, dtype=np.float32) for v in pdf["vector"]],
-                dtype=np.float32,
+        for b in [b for b in batches if b.num_rows]:
+            nq = b.num_rows
+            qmat = (
+                pc.list_flatten(b.column("vector"))
+                .to_numpy(zero_copy_only=False)
+                .astype(np.float32)
+                .reshape(nq, -1)
             )
-            nq = qmat.shape[0]
-            parts = []
-            for pid in pids:
-                ids, g, use_brute = _acquire_partition_graph(
-                    index_path, pid, cfg, strategy, index_ver, nq,
-                )
-                hits = (
-                    g.search_brute(qmat, k)
-                    if use_brute
-                    else g.search_fast_batch(qmat, k, eff_ef)
-                )
-                # query_id holds the batch row until the merge below
-                parts.append(
-                    _assemble_hits(np.arange(nq), hits, ids, g, with_metadata)
-                )
-            cand = pd.concat(parts, ignore_index=True)
-            qrow = cand["query_id"].to_numpy(dtype=np.int64)
-            rid = cand["id"].to_numpy(dtype=object)
-            score = cand["score"].to_numpy()
-            # local final merge (O18): ascending (score, id) per query,
-            # truncate to k — same order as the batch path's Window
-            order = np.lexsort(
-                (np.asarray(rid, dtype=str), score, qrow)
+            # one chunk per part, so there are no walk runs to join
+            # (``is_brute``); ``local`` is dropped: in an executor the
+            # walk keeps one thread, as in a task
+            tbl = _serve.run_local(
+                [(pid, 0, range(nq)) for pid in pids], np.arange(nq), qmat,
+                lambda pid, rows, Q, local: kernel(pid, rows, Q),
+                by_row, k, lambda pid, n: True,
             )
-            qs = qrow[order]
-            pos = np.arange(len(qs))
-            first = np.zeros(nq + 1, dtype=np.int64)
-            np.add.at(first, qs + 1, 1)
-            rank = (pos - np.cumsum(first)[:-1][qs] + 1).astype(np.int32)
-            keep = rank <= k
-            sel = order[keep]
-            data = {
-                "query_id": qids[qrow[sel]],
-                "rank": rank[keep],
-                "id": rid[sel],
-                "score": score[sel],
-            }
-            if with_metadata:
-                flat_meta = cand["metadata"].tolist()
-                data["metadata"] = [flat_meta[i] for i in sel]
-            yield pd.DataFrame(data)
+            tbl = tbl.set_column(
+                0, "query_id", b.column("query_id").take(tbl.column("query_id"))
+            )
+            yield from tbl.cast(schema).to_batches()
 
-    return queries.mapInPandas(run, schema=out_ddl)
+    return queries.mapInArrow(run, schema=out_ddl)
 
 
 def stream_search(

@@ -1,4 +1,4 @@
-"""Reference forms of the curation operators for the parity tests.
+"""Reference forms of operators for the parity tests.
 
 Each operator in ``anndb_spark`` has one implementation.  The forms
 here are the relational encodings they replaced; the tests compare the
@@ -13,17 +13,24 @@ intermediate, compare that intermediate):
   `text._bigram_stream` (everything downstream is shared);
 * ``dsir_doc_bucket_counts_expr`` — the explode + JVM md5 + groupBy
   per-(doc, bucket) counts, against `curation._dsir_doc_bucket_counts`;
-* ``funnel_join`` — the join-per-stage form of `temporal.funnel`.
+* ``funnel_join`` — the join-per-stage form of `temporal.funnel`;
+* ``pq_search`` — single-query ADC top-k (its own LUT, per-batch
+  argsort fold and rerank), against `pq.pq_search_batch`.
 
 The MinHash signature reference, `dedup.minhash_signatures`, stays in
 the package: the oracle registry calls it.
 """
 
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from anndb_spark.operators.curation import _word_ngrams
 from anndb_spark.operators.dedup import simhash_col
+from anndb_spark.operators.pq import codes_matrix
 
 
 def simhash64_cols(text: Column) -> tuple[Column, Column]:
@@ -177,3 +184,93 @@ def funnel_join(
     for d in out[1:]:
         res = res.unionByName(d)
     return res
+
+
+def pq_search(
+    codes: DataFrame,
+    query: list[float] | np.ndarray,
+    codebooks: np.ndarray,
+    k: int = 10,
+    id_col: str = "id",
+    codes_col: str = "codes",
+    rerank_with: DataFrame | None = None,
+    shortlist: int | None = None,
+) -> DataFrame:
+    """ADC top-k over a codes table: per-task LUT + np.take scoring +
+    partial top-k, then a global top-k merge (one tiny shuffle).
+
+    PQ distances are coarse (subspace centroids blur intra-cluster
+    ranks — the standard PQ contract); pass ``rerank_with`` (the
+    original vectors table) to re-score an ADC shortlist
+    (default 5·k) with exact distances — the classic
+    shortlist-then-rerank shape: the 3 KB/row float column is read for
+    only ``shortlist`` rows per query instead of the whole table."""
+    m, kc, sub = codebooks.shape
+    books = np.ascontiguousarray(codebooks, dtype=np.float32)
+    q = np.asarray(query, dtype=np.float32)
+    # LUT[j, c] = ||q_j - book[j][c]||² — built once, shipped in closure
+    lut = np.stack(
+        [
+            np.einsum(
+                "kd,kd->k",
+                books[j] - q[j * sub : (j + 1) * sub],
+                books[j] - q[j * sub : (j + 1) * sub],
+                dtype=np.float32,
+            )
+            for j in range(m)
+        ]
+    )
+
+    top_n = k if rerank_with is None else max(shortlist or 5 * k, k)
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # drain-then-yield: interleaved yield kills the python worker.
+        # Per-batch partial top-n is folded DURING the drain, so worker
+        # memory holds one batch plus a top_n shortlist
+        best_ids: np.ndarray | None = None
+        best_s: np.ndarray | None = None
+        for b in batches:
+            if not len(b):
+                continue
+            C = codes_matrix(b[codes_col], m)  # (n, m)
+            s = np.zeros(C.shape[0], dtype=np.float32)
+            for j in range(m):
+                s += lut[j][C[:, j]]
+            top = np.argsort(s, kind="stable")[:top_n]
+            bid = b[id_col].iloc[top].astype(str).to_numpy()
+            bs = s[top]
+            if best_ids is None:
+                best_ids, best_s = bid, bs
+            else:
+                best_ids = np.concatenate([best_ids, bid])
+                best_s = np.concatenate([best_s, bs])
+                keep = np.argsort(best_s, kind="stable")[:top_n]
+                best_ids, best_s = best_ids[keep], best_s[keep]
+        if best_ids is not None:
+            order = np.argsort(best_s, kind="stable")[:top_n]
+            yield pd.DataFrame(
+                {
+                    "id": best_ids[order],
+                    "score": np.sqrt(np.maximum(best_s[order], 0.0)),
+                }
+            )
+
+    partial = codes.mapInPandas(score, "id STRING, score FLOAT")
+    cand = partial.orderBy(F.col("score").asc(), F.col("id").asc()).limit(top_n)
+    if rerank_with is None:
+        return cand.limit(k)
+    # exact rerank of the shortlist: broadcast-join the (tiny) candidate
+    # id set against the vectors table, score with the exact distance
+    # column expression, final top-k
+    from anndb_spark.functions.spaces import distance_col
+
+    qlit = F.array(*[F.lit(float(x)) for x in np.asarray(query, dtype=np.float32)])
+    exact = (
+        rerank_with.withColumn("id", F.col("id").cast("string"))
+        .join(F.broadcast(cand.select("id")), "id")
+        .select(
+            "id",
+            distance_col(F.col("vector"), qlit).cast("float").alias("score"),
+        )
+    )
+    return exact.orderBy(F.col("score").asc(), F.col("id").asc()).limit(k)

@@ -304,22 +304,6 @@ def test_config_persisted_and_restored(spark, tmp_path):
         ).collect()
 
 
-def test_cache_token_serving_path(spark, spark_index):
-    """Repeated searches with a cache_token reuse worker-resident graphs
-    and stay correct (same results as the uncached path)."""
-    emb, idx, cfg = spark_index
-    rng = np.random.default_rng(23)
-    queries = [(f"q{i}", rng.normal(0, 1, 64).tolist()) for i in range(3)]
-    cold = search_index(idx, queries, k=5, ef=60, config=cfg).collect()
-    warm1 = search_index(
-        idx, queries, k=5, ef=60, config=cfg, cache_token="t1"
-    ).collect()
-    warm2 = search_index(
-        idx, queries, k=5, ef=60, config=cfg, cache_token="t1"
-    ).collect()
-    assert sorted(map(tuple, cold)) == sorted(map(tuple, warm1)) == sorted(map(tuple, warm2))
-
-
 def test_tombstone_delete_never_returned(spark, spark_index):
     """Tombstoned ids are excluded from results by every search kernel
     (brute AND beam), without a graph rebuild; re-deleting is idempotent;
@@ -847,12 +831,12 @@ def test_local_serve_matches_task_path(spark, tmp_path):
         for strategy in ("beam", "brute"):
             a = search_index(
                 load_index(spark, p), queries, 6, ef=60, config=cfg,
-                strategy=strategy, cache_token="t-local",
+                strategy=strategy,
             ).collect()
             local = search_index_path(
                 spark, p, queries, 6, ef=60, config=cfg, strategy=strategy,
             )
-            assert "MapInPandas" not in _plan_text(local)  # no task plan
+            assert "MapInArrow" not in _plan_text(local)  # no task plan
             b = local.collect()
             # equal score bits too: the driver regime runs its GEMMs on
             # one BLAS thread, as the workers do
@@ -897,26 +881,26 @@ def test_local_serve_big_brute_falls_back_to_tasks(spark, tmp_path, monkeypatch)
 
     queries = [(f"q{i}", v.tolist()) for i, v in enumerate(rng.normal(0, 1, (40, dim)))]
     local = search_index_path(spark, path, queries, 5, config=cfg, strategy="brute")
-    assert "MapInPandas" not in _plan_text(local)
+    assert "MapInArrow" not in _plan_text(local)
     # the estimated 300·40·16 flops exceed a cap of 1 → the task plan
     monkeypatch.setattr(_serve, "LOCAL_BRUTE_FLOPS_MAX", 1.0)
     via_tasks = search_index_path(spark, path, queries, 5, config=cfg, strategy="brute")
-    assert "MapInPandas" in _plan_text(via_tasks)
+    assert "MapInArrow" in _plan_text(via_tasks)
     assert sorted(via_tasks.collect()) == sorted(local.collect())
     assert len(local.collect()) == 200
     # beam is kernel-bound, not BLAS-bound: the same cap keeps it local
     beam = search_index_path(spark, path, queries, 5, config=cfg, strategy="beam")
-    assert "MapInPandas" not in _plan_text(beam)
+    assert "MapInArrow" not in _plan_text(beam)
     assert len(beam.collect()) == 200
     # 'auto' is counted by the kernel's own choice on the part's real
     # vertex count (from its parquet footers): at a kernel threshold of
     # exactly 300·40·16 flops the chunk runs brute, so the cap declines it
     monkeypatch.setattr(hnsw_mod, "_BRUTE_FLOPS_MAX", n * len(queries) * dim)
     auto = search_index_path(spark, path, queries, 5, config=cfg)
-    assert "MapInPandas" in _plan_text(auto)
+    assert "MapInArrow" in _plan_text(auto)
     assert sorted(auto.collect()) == sorted(local.collect())
     monkeypatch.setattr(hnsw_mod, "_BRUTE_FLOPS_MAX", n * len(queries) * dim - 1)
-    assert "MapInPandas" not in _plan_text(search_index_path(spark, path, queries, 5, config=cfg))
+    assert "MapInArrow" not in _plan_text(search_index_path(spark, path, queries, 5, config=cfg))
 
 
 def test_local_serve_metadata_single_partition(spark, tmp_path):

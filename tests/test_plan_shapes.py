@@ -514,7 +514,7 @@ def test_bm25_indexed_batch_plan_shape(spark, tmp_path):
 
 def test_saved_index_servers_scatter_then_one_merge_shuffle(spark, tmp_path, monkeypatch):
     """The saved-index servers share one scatter/gather shape: a
-    shuffle-free ``parallelize`` plan scan feeding ONE MapInPandas (each
+    shuffle-free ``parallelize`` plan scan feeding ONE MapInArrow (each
     task reads its own index part from storage), then exactly one
     shuffle — the merge's hashpartitioning(query_id).  Index bytes never
     cross a shuffle.  HNSW and IVF take that shape when the driver
@@ -562,7 +562,7 @@ def test_saved_index_servers_scatter_then_one_merge_shuffle(spark, tmp_path, mon
         assert tree.strip().splitlines()[-1].strip().startswith("LocalTableScan"), (name, plan)
         assert tree.count("LocalTableScan") == 1, (name, plan)
         assert _exchanges(plan) == 0, (name, plan)
-        assert "MapInPandas" not in tree, (name, plan)
+        assert "MapInArrow" not in tree, (name, plan)
 
     monkeypatch.setattr(_serve.CACHE, "max_bytes", -1)
     servers = {
@@ -573,7 +573,7 @@ def test_saved_index_servers_scatter_then_one_merge_shuffle(spark, tmp_path, mon
     for name, res in servers.items():
         plan = _plan(res)
         tree = plan.split("\n\n(1)")[0]
-        assert tree.count("MapInPandas") == 1, (name, plan)
+        assert tree.count("MapInArrow") == 1, (name, plan)
         assert "Scan ExistingRDD" in tree, (name, plan)
         assert "FileScan" not in tree, (name, plan)  # index parts are read in-task
         assert _exchanges(plan) == 1, (name, plan)

@@ -3,7 +3,8 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from anndb_spark.operators.pq import pq_encode, pq_search, train_pq
+from anndb_spark.operators.pq import pq_encode, train_pq
+from tests.operator_oracle import pq_search
 
 
 def _clustered(spark, n=800, dim=32, seed=5):

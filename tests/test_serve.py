@@ -31,9 +31,6 @@ def test_part_cache_lru_by_bytes_and_kind():
     # re-putting a key replaces it without counting it twice
     cache.put("hnsw", ("p", 3), "v", "graph2", 5)
     assert sum(nb for _, _, nb in cache.entries.values()) == 95
-    # a None key disables caching
-    cache.put("hnsw", None, "v", "x", 1)
-    assert cache.get("hnsw", None, "v") is None
 
 
 def test_part_cache_keeps_one_version_per_path():

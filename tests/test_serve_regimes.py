@@ -58,14 +58,14 @@ def _both(spark, monkeypatch, search):
     and 0 jobs, search and collect), then in the forced scatter regime
     (asserting its task plan); returns both as sorted keys."""
     local, jobs = _jobs(spark, search)
-    assert "MapInPandas" not in _plan(local)
+    assert "MapInArrow" not in _plan(local)
     assert "LocalTableScan" in _plan(local)
     rows_local, more = _jobs(spark, local.collect)
     assert jobs + more == 0
     with monkeypatch.context() as m:
         m.setattr(_serve.CACHE, "max_bytes", -1)
         tasks = search()
-        assert "MapInPandas" in _plan(tasks)
+        assert "MapInArrow" in _plan(tasks)
         rows_tasks, jobs = _jobs(spark, tasks.collect)
         assert jobs > 0  # the job counter sees the task regime
     return sorted(map(_key, rows_local)), sorted(map(_key, rows_tasks))
@@ -225,10 +225,10 @@ def test_rule_declines_over_budget(spark, monkeypatch, corpus, hnsw_paths):
     assert sorted(n for n, _ in seen.values()) == [N // 4] * 4  # vertices, from footers
     need = sum(b for _, b in seen.values())
     monkeypatch.setattr(_serve.CACHE, "max_bytes", need - 1)
-    assert "MapInPandas" in plan()
+    assert "MapInArrow" in plan()
     monkeypatch.setattr(_serve.CACHE, "max_bytes", need)
     monkeypatch.setattr(_serve.CACHE, "entries", {})
-    assert "MapInPandas" not in plan()
+    assert "MapInArrow" not in plan()
     assert 0 < _cached_bytes("hnsw") <= need
 
 
@@ -274,10 +274,10 @@ def test_ivf_rule_counts_resident_not_listed_bytes(spark, monkeypatch, corpus, t
     need = sum(b for _, b in seen.values())
     assert need > 2 * listed
     monkeypatch.setattr(_serve.CACHE, "max_bytes", listed)
-    assert "MapInPandas" in plan()
+    assert "MapInArrow" in plan()
     monkeypatch.setattr(_serve.CACHE, "max_bytes", need)
     monkeypatch.setattr(_serve.CACHE, "entries", {})
-    assert "MapInPandas" not in plan()
+    assert "MapInArrow" not in plan()
     assert _cached_bytes("ivf") == need  # the rule's bytes are the cache's
 
 
@@ -399,3 +399,57 @@ def test_driver_blas_threads_do_not_change_scores(spark, monkeypatch, tmp_path):
     a, b = _both(spark, monkeypatch, lambda: search_ivf_path(
         spark, ivf_dir, queries, 10, cent, nprobe=4, queries_per_task=50))
     assert a == b and len(a) == 500
+
+
+def _rejected_before_a_job(spark, fn, match):
+    """``fn()`` raises ``ValueError`` matching ``match`` and launches no
+    Spark job."""
+    sc = spark.sparkContext
+    group = f"serve-regimes-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "serve regime test")
+    try:
+        with pytest.raises(ValueError, match=match):
+            fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_duplicate_query_ids_rejected_before_a_job(spark, corpus, hnsw_paths, tmp_path):
+    """Two queries sharing an id would be merged into one mixed top-k:
+    the query parser rejects the batch, naming the id, before any job."""
+    from anndb_spark.operators.hnsw import search_index_local
+
+    df, mat, _ = corpus
+    cent = mat[:4]
+    ivf = str(tmp_path / "ivf")
+    save_assigned(assign_clusters(df.select("id", "vector"), cent), ivf)
+    dup = [("q", mat[0].tolist()), ("q", mat[1].tolist())]
+    for search in (
+        lambda: search_index_local(spark, hnsw_paths["four"], dup, 3, config=CFG),
+        lambda: search_ivf_path(spark, ivf, dup, 3, cent, nprobe=2),
+    ):
+        _rejected_before_a_job(spark, search, "duplicate query_id 'q'")
+
+
+@pytest.mark.parametrize("nprobe", [0, -1])
+def test_nprobe_below_one_rejected_before_a_job(spark, corpus, tmp_path, nprobe):
+    """A probe count below 1 routes no query anywhere (0 used to return no
+    rows, -1 to fail inside NumPy): every IVF search rejects it, naming
+    ``nprobe``, before any job."""
+    from anndb_spark.operators.ivf import search_ivf
+    from anndb_spark.operators.ivfpq import search_ivfpq
+    from anndb_spark.operators.knn import knn_join
+
+    df, mat, queries = corpus
+    cent = mat[:4]
+    vecs = df.select("id", "vector")
+    qdf = spark.createDataFrame(queries, "query_id STRING, query_vector ARRAY<DOUBLE>")
+    missing = str(tmp_path / "missing")
+    for search in (
+        lambda: search_ivf(vecs, qdf, 3, cent, nprobe=nprobe),
+        lambda: knn_join(vecs, vecs, 3, mode="ivf", centroids=cent, nprobe=nprobe),
+        lambda: search_ivf_path(spark, missing, queries, 3, cent, nprobe=nprobe),
+        lambda: search_ivfpq(spark, missing, queries, 3, nprobe=nprobe),
+    ):
+        _rejected_before_a_job(spark, search, f"nprobe={nprobe}")

@@ -4,6 +4,8 @@ exactly once across restarts (checkpointed file source) — the
 reference's gRPC search stream (`services/search.go:20-46`) as a
 Structured Streaming pipeline."""
 
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +14,7 @@ from anndb_spark.operators.hnsw import (
     HnswConfig,
     build_index,
     save_index,
+    search_index_local,
     search_index_path,
 )
 from anndb_spark.streaming.search import (
@@ -74,6 +77,34 @@ def test_stream_transform_metadata(spark, tmp_path):
     assert len(got) == 15
     for r in got:
         assert r["metadata"]["g"] == str(int(r["id"][1:]) % 4)
+
+
+def test_stream_transform_repeated_query_id_answers_each_row(spark, tmp_path):
+    """A micro-batch that repeats a query_id answers each of its rows on
+    its own: the transform's rows are the per-row `search_index_local`
+    rows, ranks, score bits and metadata included.  Beam walks score
+    each query alone, so the batch around a row cannot change its bits."""
+    path, cfg, qs = _saved_index(spark, tmp_path)
+    batch = [("q", qs[0][1]), ("q", qs[1][1]), ("r", qs[2][1])]
+    got = stream_search_transform(
+        spark.createDataFrame(batch, STREAM_QUERIES_DDL).coalesce(1),
+        path, 4, ef=60, config=cfg, strategy="beam", with_metadata=True,
+    ).collect()
+    want = [
+        r
+        for qid, vec in batch
+        for r in search_index_local(
+            spark, path, [(qid, vec)], 4, ef=60, config=cfg,
+            strategy="beam", with_metadata=True,
+        ).to_pylist()
+    ]
+
+    def key(r):
+        return (r["query_id"], r["rank"], r["id"], struct.pack("<f", r["score"]),
+                sorted(dict(r["metadata"]).items()))
+
+    assert len(got) == 12
+    assert sorted(map(key, got)) == sorted(map(key, want))
 
 
 def test_stream_search_end_to_end_exactly_once(spark, tmp_path):
