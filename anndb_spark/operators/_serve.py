@@ -32,9 +32,12 @@ kernel:
 - `exact_rerank`  — re-scoring an approximate shortlist against the
                     float table (IVFADC+R and PQ+R);
 - `CACHE`         — the byte-capped LRU that keeps loaded index parts
-                    (HNSW graphs, IVF cells, IVF-PQ codes) resident in
-                    the reused python worker, and in the driver for the
-                    driver regime, keyed by (index path, part) and
+                    (HNSW graphs, IVF cells, IVF-PQ codes, BM25 postings
+                    buckets) resident in the reused python worker, and
+                    in the driver for the driver regime; `fits_cache` is
+                    the one budget test of every driver-or-Spark choice
+                    (`serve_locally`, `text.bm25_search_indexed_batch`);
+                    entries are keyed by (index path, part) and
                     versioned by the index's content fingerprint
                     (`fsutil.list_parts`), as the reference's partitions
                     version the graphs they hold (`storage/partition.go`).
@@ -78,16 +81,23 @@ def parse_queries(queries, dim: int = 0, dtype=np.float32) -> tuple[np.ndarray, 
         qids = [qid for qid, _ in queries]
         qmat = np.array([v for _, v in queries], dtype=dtype)
     qid_arr = np.array([str(q) for q in qids], dtype=object)
-    seen: set = set()
-    for q in qid_arr:
-        if q in seen:
-            raise ValueError(
-                f"duplicate query_id {q!r}: each query in a batch needs its own id"
-            )
-        seen.add(q)
+    check_unique(qid_arr)
     if not len(qid_arr):
         qmat = np.empty((0, dim), dtype=dtype)
     return qid_arr, qmat
+
+
+def check_unique(ids, what: str = "query_id") -> None:
+    """Raise ``ValueError`` naming the first repeated value of ``ids``:
+    a top-k ranks rows per id, so two queries sharing one would get one
+    mixed top-k."""
+    seen: set = set()
+    for q in ids:
+        if q in seen:
+            raise ValueError(
+                f"duplicate {what} {q!r}: each query in a batch needs its own id"
+            )
+        seen.add(q)
 
 
 def route(dist: np.ndarray, nprobe: int) -> dict[int, list[int]]:
@@ -211,6 +221,15 @@ def scatter(
     return plan.mapInArrow(run, schema=out_ddl)
 
 
+def fits_cache(nbytes) -> bool:
+    """Whether parts of these resident bytes (in `CACHE`'s own
+    accounting) fit the driver's cache budget together — the budget
+    test of every driver-or-Spark choice (`serve_locally`,
+    `text.bm25_search_indexed_batch`).  A budget of -1 declines even a
+    batch that touches nothing."""
+    return sum(nbytes) <= CACHE.max_bytes
+
+
 def serve_locally(
     chunks: list[tuple[int, int, "list[int] | range"]],
     part_size: Callable[[int], tuple[int, float]],
@@ -238,7 +257,7 @@ def serve_locally(
     workers, while the driver runs them on one BLAS thread."""
     touched = sorted({p for p, _, rows in chunks if len(rows)})
     size = {p: part_size(p) for p in touched}
-    if sum(b for _, b in size.values()) > CACHE.max_bytes:
+    if not fits_cache(b for _, b in size.values()):
         return False
     flops = 0
     for p, _, rows in chunks:

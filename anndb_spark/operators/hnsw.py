@@ -2807,27 +2807,17 @@ def load_index(spark, path: str) -> DataFrame:
     before vectors were embedded load without a ``vec`` column;
     `search_index` rejects them — rebuild with `build_index`.
 
-    The columns come from one memoized parquet footer (`fsutil.footers`,
-    the Spark schema Spark writes into it) and the read takes them as its
-    schema, so loading runs no Spark job (schema inference runs one); a
-    path without such a footer reads as plain parquet, failing as that
-    does."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
+    The columns come from one memoized parquet footer
+    (`fsutil.read_partitioned`), so loading runs no Spark job (schema
+    inference runs one); a path without such a footer reads as plain
+    parquet, failing as that does."""
     from anndb_spark.sources import fsutil
 
     try:
         files = [f for fs in fsutil.list_parts(path, "partition_id=")[1].values() for f in fs]
     except (OSError, ValueError):
         files = []
-    meta = (fsutil.footers(path, files[:1])[0].metadata or {}) if files else {}
-    written = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
-    if written is None:
-        df = spark.read.parquet(path)
-    else:
-        fields = StructType.fromJson(json.loads(written)).fields
-        schema = StructType([StructField("partition_id", IntegerType()), *fields])
-        df = spark.read.schema(schema).parquet(path)
+    df = fsutil.read_partitioned(spark, path, files, "partition_id")
     cols = ["partition_id", "kind", "src", "level", "dsts"]
     for opt in ("vec", "meta"):
         if opt in df.columns:

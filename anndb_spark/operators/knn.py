@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, DoubleType, StructField, StructType
 
 from anndb_spark.functions.spaces import distance_col
+from anndb_spark.operators import _serve
 
 # Driver-collect guard for the kernel's small side: the query/left side
 # rides the task closure, so it must fit the driver.  100k × 128-d
@@ -314,7 +315,11 @@ def knn_exact(
     Returns (query_id, rank, id, score [, payload...]) with rank 1..k,
     ascending by (score, id) — id tiebreak makes results deterministic,
     matching FIXTURES.md F5.  Ids, query ids and payload keep their
-    input types.
+    input types.  Query ids must be unique: each is ranked as one query.
+    A collected query side with a repeated id raises ``ValueError``
+    naming it; the cross join (``score_expr``, or more than
+    ``gemm_collect_cap`` queries) does not check, and merges such
+    queries into one top-k.
 
     The query side is collected once (at most ``gemm_collect_cap``
     rows) and every task scores its vectors against it in
@@ -346,6 +351,7 @@ def knn_exact(
                 stacklevel=2,
             )
     if small is not None:
+        _serve.check_unique(small.column(0).to_pylist(), query_id_col)
         src = vectors.select(id_col, vec_col, *payload_cols)
         if kernel == "gemm":
             from anndb_spark.utils import ensure_parallelism
@@ -688,7 +694,12 @@ def knn_join(
 
     Returns (left_id, rank, right_id, score), rank 1..k ascending by
     (score, right_id).  ``exclude_self`` drops pairs with equal ids (for
-    self-joins: "each item's k nearest *other* items").
+    self-joins: "each item's k nearest *other* items").  Left ids must
+    be unique: each is ranked as one query.  The modes that collect the
+    left side ('exact' and 'gemm' under ``gemm_collect_cap``, 'pq')
+    raise ``ValueError`` naming a repeated id; 'ivf' and the cross join
+    (``broadcast_left=False``) do not check, and merge the rows sharing
+    an id into one top-k.
 
     The symmetric generalization of the reference's search path — every
     left row plays the role of a query in
@@ -869,6 +880,7 @@ def knn_join(
     if small is None and mode == "gemm":
         return big_left_via_ivf()
     if small is not None:
+        _serve.check_unique(small.column(0).to_pylist(), left_id_col)
         if mode == "gemm":
             from anndb_spark.utils import ensure_parallelism
 

@@ -95,6 +95,27 @@ def _footer(path: str, file: str, size: int, mtime_ns: int):
         return pq.read_metadata(fh)
 
 
+def read_partitioned(spark, path: str, files: list, part_col: str):
+    """``spark.read.parquet(path)`` of a directory hive-partitioned by the
+    INT column ``part_col``, given ``files`` (its `list_parts` files).
+
+    The read takes the Spark schema that Spark wrote into the footer of
+    ``files[0]`` (memoized, `footers`) as its schema, so it runs no
+    schema-inference job; without such a footer it reads as plain
+    parquet, failing as that does."""
+    import json
+
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    meta = (footers(path, files[:1])[0].metadata or {}) if files else {}
+    written = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if written is None:
+        return spark.read.parquet(path)
+    fields = StructType.fromJson(json.loads(written)).fields
+    schema = StructType([StructField(part_col, IntegerType()), *fields])
+    return spark.read.schema(schema).parquet(path)
+
+
 def column_stats(metas: list, column: str) -> tuple:
     """(null count, max) of the top-level ``column`` over the footers
     ``metas``, from their statistics; each is None where a footer lacks

@@ -919,13 +919,15 @@ def test_bm25_indexed_legacy_index_without_dl(spark, tmp_path):
     assert legacy_batch == fresh_batch
 
 
-def test_bm25_batch_termdf_matches_query_time_aggregate(spark, tmp_path):
-    """r14: the batch reader takes per-term document frequency from the
-    index's termdf table; results must be bit-identical to the legacy
-    query-time aggregate (simulated by deleting the termdf directory),
-    and a termdf-less index must still work."""
+def test_bm25_batch_termdf_matches_query_time_aggregate(spark, tmp_path, monkeypatch):
+    """r14: the batch reader's Spark regime takes per-term document
+    frequency from the index's termdf table; results must be
+    bit-identical to the legacy query-time aggregate (simulated by
+    deleting the termdf directory), and a termdf-less index must still
+    work.  (The driver regime counts each term's postings itself.)"""
     import shutil
 
+    from anndb_spark.operators import _serve
     from anndb_spark.operators.text import (
         bm25_search_indexed,
         bm25_search_indexed_batch,
@@ -935,6 +937,7 @@ def test_bm25_batch_termdf_matches_query_time_aggregate(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     d = str(tmp_path / "idx")
     write_bm25_index(docs, d, buckets=8)
+    monkeypatch.setattr(_serve.CACHE, "max_bytes", -1)  # the Spark regime
     probes = [
         ("p0", ["batch", "merge", "vector"]),
         ("p1", ["stream", "the"]),
@@ -948,17 +951,16 @@ def test_bm25_batch_termdf_matches_query_time_aggregate(spark, tmp_path):
         map(tuple, bm25_search_indexed_batch(spark, d, probes, k=15).collect())
     )
     assert with_tdf == without_tdf
-    # the single-probe reader never depended on termdf
+    # the single-probe reader is a batch of one: the same fallback
     single = bm25_search_indexed(spark, d, ["batch", "merge"], k=15).collect()
     assert len(single) == 15
 
 
 def test_bm25_indexed_batch_matches_per_probe(spark, tmp_path):
     """Each probe's slice of bm25_search_indexed_batch must be
-    bit-identical to the single-probe bm25_search_indexed — same
-    scores (the batch's sorted fold vs the single-probe pivot), same
-    n_terms, same tie-broken ranks — while the batch pays its two
-    driver round-trips ONCE for all probes."""
+    bit-identical to the single-probe bm25_search_indexed (a batch of
+    one) — same scores, same n_terms, same tie-broken ranks: a probe's
+    rows do not depend on the probes beside it."""
     from anndb_spark.operators.text import (
         bm25_search_indexed,
         bm25_search_indexed_batch,

@@ -557,3 +557,32 @@ def test_small_side_collected_in_one_job(spark, small_vectors, join_sides):
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("mode", ["exact", "gemm"])
+def test_repeated_left_id_raises(spark, join_sides, mode):
+    """A left side that repeats an id would get one mixed top-k for two
+    vectors; the collecting modes raise naming it, as mode='pq' does."""
+    from anndb_spark.operators.knn import knn_join
+
+    _, lrows, right, _ = join_sides
+    left = spark.createDataFrame(
+        [("a", lrows[0][1]), ("b", lrows[1][1]), ("a", lrows[2][1])],
+        "id STRING, vector ARRAY<DOUBLE>",
+    )
+
+    def join():
+        with pytest.raises(ValueError, match="duplicate id 'a'"):
+            knn_join(left, right, 3, mode=mode)
+
+    assert _jobs(spark, join)[1] <= 1  # at most the left side's collect
+
+
+@pytest.mark.parametrize("kernel", ["expr", "gemm"])
+def test_knn_exact_repeated_query_id_raises(spark, small_vectors, kernel):
+    vecs, rows = small_vectors
+    queries = spark.createDataFrame(
+        [(7, rows[0][1]), (7, rows[1][1])], "query_id INT, query_vector ARRAY<DOUBLE>"
+    )
+    with pytest.raises(ValueError, match="duplicate query_id 7"):
+        knn_exact(vecs, queries, 3, kernel=kernel)

@@ -449,12 +449,14 @@ def test_winnow_selfjoin_reuses_sketch_stage(spark):
             )
 
 
-def test_bm25_indexed_prunes_buckets_and_pushes_terms(spark, tmp_path):
-    """The inverted-index read must touch only the query terms'
+def test_bm25_indexed_prunes_buckets_and_pushes_terms(spark, tmp_path, monkeypatch):
+    """The inverted-index read of the Spark regime (forced here: a tiny
+    index is answered in the driver) must touch only the query terms'
     buckets (PartitionFilters on the bucket IN-list) and push the term
     IN-list into the parquet scan (row-group min/max skipping inside a
     bucket — postings are written term-sorted).  Without both, the
     'index' degenerates to a corpus-wide postings scan per query."""
+    from anndb_spark.operators import _serve
     from anndb_spark.operators.text import (
         bm25_search_indexed,
         write_bm25_index,
@@ -463,6 +465,7 @@ def test_bm25_indexed_prunes_buckets_and_pushes_terms(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     d = str(tmp_path / "idx")
     write_bm25_index(docs, d, buckets=16)
+    monkeypatch.setattr(_serve.CACHE, "max_bytes", -1)
     df = bm25_search_indexed(spark, d, ["batch", "merge"], k=5)
     plan = _plan(df)
     import re
@@ -473,8 +476,9 @@ def test_bm25_indexed_prunes_buckets_and_pushes_terms(spark, tmp_path):
     assert "In(term, [batch,merge])" in plan, "term IN-list not pushed"
 
 
-def test_bm25_indexed_batch_plan_shape(spark, tmp_path):
-    """The batched probe form: (1) a small batch's bucket IN-list and
+def test_bm25_indexed_batch_plan_shape(spark, tmp_path, monkeypatch):
+    """The batched probe form's Spark regime (forced here: a tiny index
+    is answered in the driver): (1) a small batch's bucket IN-list and
     term IN-list reach the postings scan (same pruning as the
     single-probe form); (2) a batch covering most buckets SKIPS the
     bucket IN-list (pruning buys nothing, the plan must not bloat);
@@ -483,6 +487,7 @@ def test_bm25_indexed_batch_plan_shape(spark, tmp_path):
     one reducer."""
     import re
 
+    from anndb_spark.operators import _serve
     from anndb_spark.operators.text import (
         bm25_search_indexed_batch,
         write_bm25_index,
@@ -491,6 +496,7 @@ def test_bm25_indexed_batch_plan_shape(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     d = str(tmp_path / "idx")
     write_bm25_index(docs, d, buckets=16)
+    monkeypatch.setattr(_serve.CACHE, "max_bytes", -1)
     small = bm25_search_indexed_batch(
         spark, d, [("p0", ["batch", "merge"])], k=5
     )
