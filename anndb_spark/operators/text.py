@@ -775,14 +775,18 @@ def bm25_search_indexed_batch(
     `_serve.serve` picks for the vector indexes:
 
     * the driver (`_bm25_local`), when the postings carry ``dl``, their
-      ids hold no NULL, and the touched buckets' resident bytes — from
-      the memoized parquet footers, ``_POSTING_BYTES`` a row — fit the
-      cache budget (`_serve.fits_cache`).  Loaded buckets stay in
-      `_serve.CACHE` under the postings' content fingerprint, so a warm
-      batch reads no index bytes; the answer is a local relation, and
-      collecting it runs no Spark job;
+      ids hold no NULL, the touched buckets' resident bytes — bounded
+      from the memoized parquet footers (`_bucket_bytes`) — fit the
+      cache budget (`_serve.fits_cache`), and, once those buckets are
+      loaded, the batch's (probe, posting) pairs number at most
+      `LOCAL_FANOUT_MAX`.  Loaded buckets stay in `_serve.CACHE` under
+      the postings' content fingerprint, so a warm batch reads no index
+      bytes; the answer is a local relation, and collecting it runs no
+      Spark job;
     * else one Spark plan (`_bm25_plan`, where ``prune_buckets_frac``
-      and ``term_inlist_max`` apply), the 100 TB shape.
+      and ``term_inlist_max`` apply), the 100 TB shape, which spreads
+      the fan-out over tasks and cuts it per probe with
+      WindowGroupLimit.
 
     Neither regime runs a job before scoring (but the doclens read of
     a pre-``dl`` index): the stats are read with pyarrow, each term's
@@ -817,33 +821,32 @@ def bm25_search_indexed_batch(
     first = [f for fs in files.values() for f in fs][:1]
     layout = fsutil.footers(post_dir, first)[0].schema.to_arrow_schema() if first else None
     has_dl = layout is None or "dl" in layout.names
+    sizes = [_bucket_bytes(m, layout) for m in metas.values()] if has_dl else [None]
     if (
         layout is not None
-        and has_dl
+        and None not in sizes
         and all(fsutil.column_stats(m, "id")[0] == 0 for m in metas.values())
-        and _serve.fits_cache(
-            _POSTING_BYTES * sum(md.num_rows for md in m) for m in metas.values()
-        )
+        and _serve.fits_cache(sizes)
     ):
-        from pyspark.sql.pandas.types import from_arrow_type
-        from pyspark.sql.types import (
-            DoubleType, IntegerType, LongType, StringType, StructField, StructType,
-        )
+        post = _batch_postings(index_dir, ver, list(metas), all_terms, bucket_of)
+        tdf = dict(zip(all_terms, post[0].tolist()))
+        if sum(tdf[t] for _, terms in batch for t in terms) <= LOCAL_FANOUT_MAX:
+            from pyspark.sql.pandas.types import from_arrow_type
+            from pyspark.sql.types import (
+                DoubleType, IntegerType, LongType, StringType, StructField, StructType,
+            )
 
-        id_type = layout.field("id").type
-        tbl = _bm25_local(
-            index_dir, ver, list(metas), batch, all_terms, bucket_of,
-            n_docs, sdl, k, k1, b, round_digits, id_type,
-        )
-        # the Spark plan's schema, nullability included
-        schema = StructType([
-            StructField("probe_id", StringType()),
-            StructField(id_col, from_arrow_type(id_type)),
-            StructField("rank", IntegerType(), False),
-            StructField("score", DoubleType()),
-            StructField("n_terms", LongType(), False),
-        ])
-        return spark.createDataFrame(tbl.rename_columns(schema.names), schema=schema)
+            id_type = layout.field("id").type
+            tbl = _bm25_local(post, batch, all_terms, n_docs, sdl, k, k1, b, round_digits, id_type)
+            # the Spark plan's schema, nullability included
+            schema = StructType([
+                StructField("probe_id", StringType()),
+                StructField(id_col, from_arrow_type(id_type)),
+                StructField("rank", IntegerType(), False),
+                StructField("score", DoubleType()),
+                StructField("n_terms", LongType(), False),
+            ])
+            return spark.createDataFrame(tbl.rename_columns(schema.names), schema=schema)
     return _bm25_plan(
         spark, index_dir, files, batch, all_terms, bucket_of, n_docs, sdl,
         buckets, has_dl, k, k1, b, round_digits, id_col, prune_buckets_frac,
@@ -851,17 +854,52 @@ def bm25_search_indexed_batch(
     )
 
 
-# `_serve.CACHE` bytes of one cached posting row: its id, tf and dl, and
-# its share of the bucket's term list (`_bucket_postings`)
-_POSTING_BYTES = 64
+# the driver regime declines a batch of more (probe, posting) pairs than
+# this: `_bm25_local` peaked at 94 B a pair (tracemalloc, a synthetic
+# 10M-pair batch), so this caps it near 190 MB
+LOCAL_FANOUT_MAX = 2_000_000
+
+# parquet encodings that store each value of a column chunk whole (a
+# string with its 4-byte length), so the chunk's uncompressed size is at
+# least the bytes of its distinct values (`_bucket_bytes`)
+_WHOLE_VALUE_ENCODINGS = frozenset(
+    {"PLAIN", "PLAIN_DICTIONARY", "RLE_DICTIONARY", "RLE", "BIT_PACKED"}
+)
+
+
+def _bucket_bytes(metas: list, layout: pa.Schema) -> int | None:
+    """An upper bound, from one postings bucket's parquet footers alone,
+    on the `_serve.CACHE` bytes of that bucket as `_bucket_postings` holds
+    it; None when a ``term`` or ``id`` chunk has an encoding outside
+    `_WHOLE_VALUE_ENCODINGS` (a delta encoding can store a value in fewer
+    bytes than Arrow holds it in).
+
+    Each row costs its term offset (8 B), its id's dictionary index
+    (4 B), tf and dl at their widths, and a byte of slack for validity
+    bitmaps.  The distinct terms and ids, with their Arrow offsets, cost
+    at most the uncompressed size of their column chunks, which store
+    each distinct value whole at least once."""
+    per_row = 8 + 4 + 1 + sum(layout.field(c).type.bit_width // 8 for c in ("tf", "dl"))
+    total = 16  # the final offsets of the term, offset and id arrays
+    for md in metas:
+        total += md.num_rows * per_row
+        for rg in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(rg).column(c)
+                if col.path_in_schema in ("term", "id"):
+                    if not set(col.encodings) <= _WHOLE_VALUE_ENCODINGS:
+                        return None
+                    total += col.total_uncompressed_size
+    return total
 
 
 def _bucket_postings(index_dir: str, ver: str, bucket: int):
     """One postings bucket, its rows grouped by term: (the bucket's
     distinct terms, sorted; each term's first row, then the row count;
-    ids as Arrow; tf; dl).  Held in `_serve.CACHE` under ``(index_dir,
-    bucket)`` for the postings' content fingerprint ``ver``, or read
-    here and put there."""
+    the distinct ids; each row's index into them; tf; dl).  Held in
+    `_serve.CACHE` under ``(index_dir, bucket)`` for the postings' content
+    fingerprint ``ver`` at the arrays' own size, or read here and put
+    there."""
     import pyarrow.compute as pc
 
     from anndb_spark.operators import _serve
@@ -878,52 +916,37 @@ def _bucket_postings(index_dir: str, ver: str, bucket: int):
         new = np.ones(len(terms), dtype=bool)
         new[1:] = pc.not_equal(terms[1:], terms[:-1]).to_numpy(zero_copy_only=False)
         starts = np.flatnonzero(new)
+        ids = pc.dictionary_encode(tbl.column("id").combine_chunks())
         hit = (
             terms.take(pa.array(starts)),
             np.r_[starts, len(terms)],
-            tbl.column("id").combine_chunks(),
+            ids.dictionary,
+            ids.indices.to_numpy(),
             tbl.column("tf").to_numpy(),
             tbl.column("dl").to_numpy(),
         )
-        _serve.CACHE.put("bm25", (index_dir, bucket), ver, hit, _POSTING_BYTES * len(terms))
+        _serve.CACHE.put("bm25", (index_dir, bucket), ver, hit, sum(a.nbytes for a in hit))
     return hit
 
 
-def _bm25_local(
+def _batch_postings(
     index_dir: str,
     ver: str,
     touched: list[int],
-    batch: list[tuple[str, list[str]]],
     all_terms: list[str],
     bucket_of: dict[str, int],
-    n_docs: int,
-    sdl: int,
-    k: int,
-    k1: float,
-    b: float,
-    round_digits: int,
-    id_type,
-) -> pa.Table:
-    """The driver regime of `bm25_search_indexed_batch`: the plan's
-    arithmetic in NumPy over the touched buckets' postings
-    (`_bucket_postings`) → (probe_id, id, rank, score, n_terms).
-
-    Bit-identical to `_bm25_plan`: each term's document frequency is its
-    posting-list row count (what ``termdf`` stores); idf and each
-    contribution mirror `_bm25_contrib` operation for operation, rounded
-    by `_spark_round`; a (probe, doc) score is the left fold from 0.0
-    over the probe's sorted terms, one addition per term position
-    across all groups at once (a pairwise sum would reorder the
-    additions); top-k is by (score desc, id asc), ids in Spark's order
-    (strings by their UTF-8 bytes)."""
+) -> tuple:
+    """Every posting of the batch's terms in the touched buckets
+    (`_bucket_postings`), grouped by term in ``all_terms`` order: (each
+    term's document frequency, its posting-list row count, as ``termdf``
+    stores it; each posting's term position; ids as Arrow; tf; dl)."""
     import pyarrow.compute as pc
 
     pos = {t: i for i, t in enumerate(all_terms)}
-    # every posting of every batch term, with its term's position
     tpos, ids, tf, dl = [], [], [], []
     tdf = np.zeros(len(all_terms), dtype=np.int64)
     for bk in touched:
-        uterms, starts, bids, btf, bdl = _bucket_postings(index_dir, ver, bk)
+        uterms, starts, id_dict, id_idx, btf, bdl = _bucket_postings(index_dir, ver, bk)
         mine = [t for t in all_terms if bucket_of[t] == bk]
         at = pc.index_in(pa.array(mine, uterms.type), value_set=uterms)
         at = at.fill_null(-1).to_numpy()
@@ -933,21 +956,54 @@ def _bm25_local(
         tdf[ti] = hi - lo
         rows = _ranges(lo, hi)
         tpos.append(np.repeat(ti, hi - lo))
-        ids.append(bids.take(pa.array(rows)))
+        ids.append(id_dict.take(pa.array(id_idx[rows])))
         tf.append(btf[rows])
         dl.append(bdl[rows])
+    if not tpos:
+        return tdf, np.zeros(0, dtype=np.int64), None, None, None
+    order = np.argsort(np.concatenate(tpos), kind="stable")
+    return (
+        tdf,
+        np.concatenate(tpos)[order],
+        pa.concat_arrays(ids).take(pa.array(order)),
+        np.concatenate(tf)[order].astype(np.float64),
+        np.concatenate(dl)[order].astype(np.float64),
+    )
+
+
+def _bm25_local(
+    post: tuple,
+    batch: list[tuple[str, list[str]]],
+    all_terms: list[str],
+    n_docs: int,
+    sdl: int,
+    k: int,
+    k1: float,
+    b: float,
+    round_digits: int,
+    id_type,
+) -> pa.Table:
+    """The driver regime of `bm25_search_indexed_batch`: the plan's
+    arithmetic in NumPy over the batch's postings (`_batch_postings`)
+    → (probe_id, id, rank, score, n_terms).
+
+    Bit-identical to `_bm25_plan`: idf and each contribution mirror
+    `_bm25_contrib` operation for operation, rounded by `_spark_round`;
+    a (probe, doc) score is the left fold from 0.0 over the probe's
+    sorted terms, one addition per term position across all groups at
+    once (a pairwise sum would reorder the additions); top-k is by
+    (score desc, id asc), ids in Spark's order (strings by their UTF-8
+    bytes)."""
+    import pyarrow.compute as pc
+
+    tdf, tpos, ids, tf, dl = post
     out = pa.schema([
         ("probe_id", pa.string()), ("id", id_type), ("rank", pa.int32()),
         ("score", pa.float64()), ("n_terms", pa.int64()),
     ])
-    tpos = np.concatenate(tpos) if tpos else np.zeros(0, dtype=np.int64)
     if not len(tpos):
         return out.empty_table()
-    order = np.argsort(tpos, kind="stable")
-    tpos = tpos[order]
-    tf = np.concatenate(tf)[order].astype(np.float64)
-    dl = np.concatenate(dl)[order].astype(np.float64)
-    ids = pa.concat_arrays(ids).take(pa.array(order))
+    pos = {t: i for i, t in enumerate(all_terms)}
     toff = np.searchsorted(tpos, np.arange(len(all_terms) + 1))
     # `_bm25_contrib`, operation for operation
     q = ((n_docs - tdf).astype(np.float64) + 0.5) / (tdf.astype(np.float64) + 0.5)
@@ -1009,40 +1065,30 @@ def _spark_round(x: np.ndarray, digits: int) -> np.ndarray:
     ``BigDecimal.valueOf(x).setScale(digits, HALF_UP).doubleValue()``
     (NaN and infinities pass through; a result of zero is +0.0).
 
-    ``valueOf`` rounds the decimal string ``Double.toString`` gives, which
-    on JDK 17 is not always the shortest one.  Any decimal that parses
-    back to ``x`` lies within an ulp of it, so where no rounding tie
-    (an odd multiple of half a unit in the last kept digit) lies that
-    close, every such string rounds alike and the result is computed
-    here exactly in floating point.  The rest — ties and near-ties —
-    round the shortest string (``repr``) with ``decimal``; the two
-    strings differ only for rare values near powers of two, and
+    ``valueOf`` rounds the decimal string ``Double.toString`` gives; this
+    rounds the shortest one (``repr``) with ``decimal``.  On JDK 17 the
+    two strings differ only for rare values near powers of two, where a
+    rounding tie would have to fall between them;
     tests/test_bm25_regimes.py pins the mirror against ``F.round`` on
     exact ties."""
-    x = np.asarray(x, dtype=np.float64)
-    out = x.copy()
-    fast = np.zeros(x.shape, dtype=bool)
-    if 0 <= digits <= 22:  # 10**digits is an exact double
-        scale = 10.0**digits
-        with np.errstate(invalid="ignore"):  # NaN and infinities
-            y = np.abs(x) * scale
-            n = np.floor(y)
-            frac = y - n
-            # y is within half an ulp of |x|·10**digits, and every
-            # decimal parsing to x within an ulp of y: a tie farther
-            # than 4 ulps is on the same side of all of them
-            fast = (y < 2.0**52) & (np.abs(frac - 0.5) > 4 * np.spacing(y))
-            r = (n + (frac > 0.5)) / scale
-        out[fast] = np.where(r == 0, 0.0, np.copysign(r, x))[fast]
-    slow = np.flatnonzero(np.isfinite(x) & ~fast)
-    if len(slow):
-        import decimal
+    import decimal
 
-        ctx = decimal.Context(prec=800, rounding=decimal.ROUND_HALF_UP)
-        unit = decimal.Decimal(1).scaleb(-digits)
-        for i in slow:
-            out[i] = float(decimal.Decimal(repr(float(x[i]))).quantize(unit, context=ctx)) + 0.0
-    return out
+    ctx = decimal.Context(prec=800, rounding=decimal.ROUND_HALF_UP)
+    unit = decimal.Decimal(1).scaleb(-digits)
+    x = np.asarray(x, dtype=np.float64)
+    # each distinct value once: a batch's contributions repeat (~10x on
+    # 800k synthetic BM25 contributions, 1.6 → 0.3 CPU-s)
+    u, inv = np.unique(x, return_inverse=True)
+    r = np.array(
+        [
+            float(decimal.Decimal(repr(v)).quantize(unit, context=ctx)) + 0.0
+            if math.isfinite(v)
+            else v
+            for v in u.tolist()
+        ],
+        dtype=np.float64,
+    )
+    return r[inv].reshape(x.shape)
 
 
 def _bm25_plan(

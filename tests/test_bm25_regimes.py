@@ -2,8 +2,9 @@
 (`text.bm25_search_indexed_batch`): the driver regime must return the
 Spark regime's rows — (probe_id, doc_id, rank, score bits, n_terms) —
 launch no Spark job, and step aside for the Spark plan exactly when the
-touched buckets do not fit the cache budget, or the index predates the
-denormalized ``dl`` column.
+touched buckets do not fit the cache budget, the batch fans out to more
+(probe, posting) pairs than `text.LOCAL_FANOUT_MAX`, or the index
+predates the denormalized ``dl`` column.
 
 The Spark regime is forced by setting the driver's cache budget to -1."""
 
@@ -16,9 +17,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from anndb_spark.functions.xxhash import term_bucket
-from anndb_spark.operators import _serve
+from anndb_spark.operators import _serve, text
 from anndb_spark.operators.text import (
-    _POSTING_BYTES,
+    _bucket_bytes,
     _spark_round,
     bm25_search_indexed,
     bm25_search_indexed_batch,
@@ -159,28 +160,63 @@ def test_bm25_legacy_index_takes_spark_regime(spark, tmp_path):
     assert sorted(map(_key, legacy.collect())) == fresh
 
 
-def test_bm25_rule_bound_covers_cache(spark, tmp_path, monkeypatch):
-    """The rule sizes the touched buckets from their footers in the
-    cache's own accounting: what the cold call leaves in `CACHE` is at
-    most that bound, and a budget of exactly the bound keeps the batch
-    in the driver while one byte less sends it to Spark."""
+@pytest.mark.parametrize("id_type", ["LONG", "STRING", "long STRING"])
+def test_bm25_rule_bound_covers_cache(spark, tmp_path, monkeypatch, id_type):
+    """The rule bounds the touched buckets' resident bytes from their
+    footers (`_bucket_bytes`: column widths and uncompressed sizes); what
+    the cold call leaves in `CACHE` is the held arrays' own ``nbytes``, at
+    most that bound, ids of 70 bytes included.  A budget of exactly the
+    bound keeps the batch in the driver while one byte less sends it to
+    Spark."""
+    docs = _docs(spark, id_type.split()[-1])
+    if id_type == "long STRING":
+        docs = docs.withColumn("doc_id", F.concat(F.lit("x" * 68), "doc_id"))
     d = str(tmp_path / "idx")
-    write_bm25_index(_docs(spark, "STRING"), d, buckets=4)
+    write_bm25_index(docs, d, buckets=4)
     post = fsutil.join(d, "postings")
     _, files = fsutil.list_parts(post, "bucket=")
     touched = {term_bucket(t, 4) for t in VOCAB} & set(files)
-    bound = sum(
-        _POSTING_BYTES * md.num_rows for bk in touched for md in fsutil.footers(post, files[bk])
-    )
+    metas = {bk: fsutil.footers(post, files[bk]) for bk in touched}
+    layout = next(iter(metas.values()))[0].schema.to_arrow_schema()
+    bound = sum(_bucket_bytes(m, layout) for m in metas.values())
     probes = [("all", VOCAB)]
     monkeypatch.setattr(_serve, "CACHE", _serve.PartCache(bound))
     df = bm25_search_indexed_batch(spark, d, probes, k=K)
     assert "FileScan" not in _plan(df)
-    held = sum(nb for (kind, key), (_, _, nb) in _serve.CACHE.entries.items() if kind == "bm25")
+    entries = [e for (kind, _), e in _serve.CACHE.entries.items() if kind == "bm25"]
+    held = sum(nb for _, _, nb in entries)
+    assert held == sum(a.nbytes for _, value, _ in entries for a in value)
     assert 0 < held <= bound
     assert {key for kind, key in _serve.CACHE.entries} == {(d, bk) for bk in touched}
     _serve.CACHE.max_bytes = bound - 1
     assert "FileScan" in _plan(bm25_search_indexed_batch(spark, d, probes, k=K))
+
+
+def test_bm25_fanout_over_cap_takes_spark_regime(spark, tmp_path, monkeypatch):
+    """Many probes sharing a frequent term fit the byte budget yet fan out
+    to one (probe, posting) pair per probe and posting of each of their
+    terms: a batch of more pairs than `LOCAL_FANOUT_MAX` takes the Spark
+    plan, a batch of exactly that many stays in the driver, and both
+    return the same rows."""
+    d = str(tmp_path / "idx")
+    write_bm25_index(_docs(spark, "LONG"), d, buckets=4)
+    post = fsutil.read_parquet_dir(fsutil.join(d, "postings"), columns=["term"])
+    counts = post.group_by("term").aggregate([("term", "count")]).to_pydict()
+    df_of = dict(zip(counts["term"], counts["term_count"]))
+    probes = [(f"q{i}", ["alpha", VOCAB[i % len(VOCAB)]]) for i in range(60)]
+    pairs = sum(df_of.get(t, 0) for _, terms in probes for t in set(terms))
+    assert pairs > 60 * df_of["alpha"]
+
+    def search():
+        return bm25_search_indexed_batch(spark, d, probes, k=K)
+
+    monkeypatch.setattr(text, "LOCAL_FANOUT_MAX", pairs)
+    local, plan = _both(spark, monkeypatch, search)
+    assert local == plan
+    monkeypatch.setattr(text, "LOCAL_FANOUT_MAX", pairs - 1)
+    over = search()
+    assert "FileScan" in _plan(over)
+    assert sorted(map(_key, over.collect())) == local
 
 
 def test_bm25_rewritten_index_holds_only_live_version(spark, tmp_path, monkeypatch):
