@@ -192,6 +192,31 @@ def test_bm25_rule_bound_covers_cache(spark, tmp_path, monkeypatch, id_type):
     assert "FileScan" in _plan(bm25_search_indexed_batch(spark, d, probes, k=K))
 
 
+def test_bucket_bytes_declines_delta_encoded_chunks(tmp_path):
+    """A delta-encoded term column can store a value in fewer bytes than
+    Arrow holds it in, so its chunk size bounds nothing: `_bucket_bytes`
+    declines the bucket (None), and sizes a dictionary-encoded one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.table({
+        "id": pa.array(range(200), pa.int64()),
+        "term": [f"prefix-shared-by-all-{i:04d}" for i in range(200)],
+        "tf": pa.array([1] * 200, pa.int64()),
+        "dl": pa.array([7] * 200, pa.int64()),
+    })
+    sizes = []
+    for name, opts in [
+        ("dict.parquet", {}),
+        ("delta.parquet", {"use_dictionary": False, "column_encoding": {"term": "DELTA_BYTE_ARRAY"}}),
+    ]:
+        pq.write_table(tbl, tmp_path / name, **opts)
+        md = pq.read_metadata(tmp_path / name)
+        sizes.append(_bucket_bytes([md], tbl.schema))
+    assert sizes[0] >= 200 * (8 + 4 + 1 + 16) + tbl.column("term").nbytes
+    assert sizes[1] is None
+
+
 def test_bm25_fanout_over_cap_takes_spark_regime(spark, tmp_path, monkeypatch):
     """Many probes sharing a frequent term fit the byte budget yet fan out
     to one (probe, posting) pair per probe and posting of each of their
